@@ -37,7 +37,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    from the directory listing, no CREATE ever required.
   *
   * Scale: `loadTable` costs one bounded schema peek (an avro header /
-  * xlsx sheet probe — the footer-read equivalent); listings are one
+  * xlsx sheet probe — the footer-read equivalent; the sheet probe is
+  * the connector's memoized `Xlsx.peekFleetSchema`, revalidated
+  * against the file's listed status on every load); listings are one
   * directory listing. Nothing is cached catalog-side, so an external
   * writer's new fleet is visible on the next query, and the fleets'
   * own `_SUCCESS`/sidecar contracts keep reads consistent.
@@ -192,19 +194,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         require(versionAsOf.isEmpty,
           "VERSION AS OF applies to avro fleets only (workbook sheets " +
             "carry no manifest history)")
-        val p = hPath(xlsxFile(wb))
-        if (!fs.exists(p)) noSuchTable(ident)
-        // ONE whole-file read serves both the existence check (a
-        // name-level miss is NoSuchTable, not a codec failure from
-        // deep inside the sheet parser) and the schema inference
-        val bytes = readAll(p)
-        if (!Xlsx.sheetNames(bytes).contains(ident.name()))
-          noSuchTable(ident)
-        val (header, data) = Xlsx.readSheet(bytes, ident.name())
-        val schema = StructType(header.zipWithIndex.map { case (n, c) =>
-          org.apache.spark.sql.types.StructField(n,
-            Xlsx.inferType(data.map(_(c))), nullable = true)
-        })
+        if (!fs.exists(hPath(xlsxFile(wb)))) noSuchTable(ident)
+        // the connector's memoized peek; a name-level miss is
+        // NoSuchTable, not a codec failure from inside the parser
+        val schema =
+          try Xlsx.peekFleetSchema(spark, xlsxFile(wb), ident.name())
+          catch { case _: Xlsx.NoSuchSheetException => noSuchTable(ident) }
         new XlsxFleetTable(schema, xlsxFile(wb), ident.name())
       case _ => noSuchTable(ident)
     }

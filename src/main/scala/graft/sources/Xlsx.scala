@@ -454,6 +454,12 @@ object Xlsx {
       out.toIndexedSeq
     }
 
+  /** A read named a sheet the workbook does not have (the catalog maps
+    * it to NoSuchTable; every other caller sees the plain
+    * `NoSuchElementException` it always threw). */
+  private[sources] final class NoSuchSheetException(msg: String)
+      extends NoSuchElementException(msg)
+
   /** One fully-parsed workbook: zip entries, sheet-name→part map, and
     * shared strings, decoded ONCE so multi-sheet reads don't
     * re-decompress the archive per sheet. */
@@ -465,7 +471,7 @@ object Xlsx {
     def sheet(name: String, maxDataRows: Int = Int.MaxValue)
         : (Array[String], Seq[Array[String]]) = {
       val part = targets.getOrElse(name,
-        throw new NoSuchElementException(
+        throw new NoSuchSheetException(
           s"no sheet '$name'; workbook has: ${targets.keys.toSeq.sorted.mkString(", ")}"))
       parseSheetPart(entries(part), sst, name, maxDataRows)
     }
@@ -638,16 +644,42 @@ object Xlsx {
     * lexicographically FIRST workbook (deterministic; type inference
     * needs the sheet's DATA, so unlike Avro's header-only peek the
     * whole first workbook is read on the driver — bounded by
-    * `listWorkbooks`' per-file guard). */
+    * `listWorkbooks`' per-file guard).
+    *
+    * MEMOIZED process-wide, the `FleetManifest` snapshot-cache
+    * contract: keyed by (qualified path of that first workbook, sheet)
+    * and validated against the (modificationTime, len) of its status
+    * in the listing, which still runs on EVERY call — so the
+    * `_SUCCESS` and size guards keep firing, and a rewritten or
+    * replaced first workbook re-peeks. A hit reads zero bytes. Only
+    * successful peeks are remembered (a missing sheet fails again, and
+    * reads once the sheet exists); each call gets a fresh schema. */
   private[sources] def peekFleetSchema(s: SparkSession, glob: String,
-      sheet: String): (Array[String], IndexedSeq[DataType]) = {
+      sheet: String): StructType = {
     val first = listWorkbooks(s, glob).minBy(_.getPath.toString)
     val fs = first.getPath.getFileSystem(s.sessionState.newHadoopConf())
-    val in = fs.open(first.getPath)
-    val bytes = try in.readAllBytes() finally in.close()
-    val (header, data) = readSheet(bytes, sheet)
-    (header, header.indices.map(c => inferType(data.map(_(c)))))
+    val key = (fs.makeQualified(first.getPath).toString, sheet)
+    val hit = peekCache.get(key)
+    val (header, types) =
+      if (hit != null && hit._1 == first.getModificationTime &&
+          hit._2 == first.getLen) (hit._3, hit._4)
+      else {
+        val in = fs.open(first.getPath)
+        val bytes = try in.readAllBytes() finally in.close()
+        val (header, data) = readSheet(bytes, sheet)
+        val types = header.indices.map(c => inferType(data.map(_(c))))
+        if (peekCache.size > 4096) peekCache.clear() // tiny entries; rare
+        peekCache.put(key,
+          (first.getModificationTime, first.getLen, header, types))
+        (header, types)
+      }
+    StructType(header.zip(types).map {
+      case (n, t) => StructField(n, t, nullable = true)
+    })
   }
+
+  private val peekCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), (Long, Long, Array[String], IndexedSeq[DataType])]()
 
   /** Distributed ingest of MANY workbooks — a thin veneer over the
     * `graft-xlsx` DataSource V2 connector (`XlsxFleetSource`): one

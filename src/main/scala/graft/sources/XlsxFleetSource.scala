@@ -25,6 +25,12 @@ import graft.util.SerializableHadoopConf
   * unavoidable (SpreadsheetML is row-major, nothing to seek past), so
   * unlike avro the pruning here saves materialization, not bytes:
   * documented floor, visible in the BatchScan ReadSchema either way.
+  *
+  * Every `load()` re-lists the fleet (guards included), but the peek
+  * is memoized per (first workbook's qualified path, sheet) and
+  * validated against that workbook's listed (modificationTime, len)
+  * (`Xlsx.peekFleetSchema`): repeated queries over an unchanged fleet
+  * read no workbook bytes on the driver until their action runs.
   */
 class XlsxFleetSource extends TableProvider with DataSourceRegister {
 
@@ -46,13 +52,9 @@ class XlsxFleetSource extends TableProvider with DataSourceRegister {
     sh
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val (header, types) = Xlsx.peekFleetSchema(SparkSession.active,
-      pathOf(options), sheetOf(options))
-    StructType(header.zip(types).map {
-      case (n, t) => StructField(n, t, nullable = true)
-    })
-  }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    Xlsx.peekFleetSchema(SparkSession.active, pathOf(options),
+      sheetOf(options))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {

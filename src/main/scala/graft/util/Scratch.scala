@@ -11,21 +11,33 @@ import java.nio.file.{Files, Path, Paths}
   */
 object Scratch {
 
-  private val hooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** Every scratch path handed out in this JVM, deleted by ONE exit
+    * hook: a hook per path (or per unique CDC checkpoint) would grow
+    * the JVM's hook table without bound in a long-lived driver. */
+  private val exitPaths =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+
+  private[graft] val ExitHookName = "graft-scratch-cleanup"
+
+  private lazy val exitHook: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      exitPaths.forEach(p =>
+        try deleteRecursively(p) catch { case _: Throwable => () }),
+      ExitHookName))
+
+  private def deleteOnExit(p: Path): String = {
+    exitHook
+    exitPaths.add(p)
+    p.toString
+  }
 
   /** tmpdir path for roundtrip scratch data, deleted on JVM exit. The
     * returned DataFrames of the roundtrip queries read from it lazily,
     * so deletion must not happen before the JVM is done — an exit hook
     * (not an eager delete) is the correct lifetime. */
-  def dir(name: String): String = {
-    val p = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_${name}_${ProcessHandle.current().pid()}")
-    if (hooked.add(p.toString))
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try deleteRecursively(p) catch { case _: Throwable => () }))
-    p.toString
-  }
+  def dir(name: String): String =
+    deleteOnExit(Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_${name}_${ProcessHandle.current().pid()}"))
 
   /** Floor of usable `/dev/shm` bytes below which [[ephemeralDir]]
     * falls back to disk (default 4 GiB, `graft.scratch.shmMinBytes`
@@ -60,12 +72,8 @@ object Scratch {
            catch { case _: Throwable => false })) shm.toString
       else System.getProperty("java.io.tmpdir", "/tmp")
     val suffix = if (unique) s"_${invocation.incrementAndGet()}" else ""
-    val p = Paths.get(base,
-      s"graft_${name}_${ProcessHandle.current().pid()}$suffix")
-    if (hooked.add(p.toString))
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try deleteRecursively(p) catch { case _: Throwable => () }))
-    p.toString
+    deleteOnExit(Paths.get(base,
+      s"graft_${name}_${ProcessHandle.current().pid()}$suffix"))
   }
 
   private val invocation = new java.util.concurrent.atomic.AtomicLong

@@ -89,6 +89,26 @@ class CatalogSpec extends SparkSpec {
     assert(got == want)
   }
 
+  test("a sheet resolves to the connector's schema; a missing one is NoSuchTable") {
+    val root = graft.util.Scratch.dir("cat_wb_peek")
+    import spark.implicits._
+    graft.sources.Xlsx.write(spark, s"$root/books.xlsx", Seq(
+      "nations" -> graft.util.Tables.nation(spark, sfDir)
+        .orderBy($"n_nationkey")))
+    val cat = new graft.sources.GraftCatalog
+    cat.initialize("graft", new org.apache.spark.sql.util
+      .CaseInsensitiveStringMap(java.util.Map.of("root", root)))
+    import org.apache.spark.sql.connector.catalog.Identifier
+    intercept[org.apache.spark.sql.catalyst.analysis.NoSuchTableException] {
+      cat.loadTable(Identifier.of(Array("books"), "nope"))
+    }
+    val viaFmt = graft.sources.Xlsx.readDistributed(spark,
+      s"$root/books.xlsx", "nations").schema
+    assert(cat.loadTable(Identifier.of(Array("books"), "nations"))
+      .schema() == viaFmt)
+    assert(catSession(root).table("graft.books.nations").schema == viaFmt)
+  }
+
   test("CTAS + INSERT INTO + RENAME + DROP go through the fleet committer") {
     val root = graft.util.Scratch.dir("cat_write")
     writeEventsFleet(root)

@@ -71,9 +71,64 @@ class UtilGuardsSpec extends AnyFunSuite {
     // same content interns to the SAME instance (the r21 win this
     // seal protects: a thousand tasks share one parsed conf)
     assert(roundtrip(wrapper).value eq task.value)
-    // driver-side staleness sentinel: an entry added after first
-    // serialization reaches later task binaries (no silent drop)
+    // every serialization re-encodes: an entry added, or an existing
+    // key rewritten in place, after an earlier round-trip reaches
+    // later task binaries (no stale payload)
     conf.set("graft.test.added", "later")
     assert(roundtrip(wrapper).value.get("graft.test.added") == "later")
+    conf.set("graft.test.key", "v3")
+    assert(roundtrip(wrapper).value.get("graft.test.key") == "v3")
+    // values past writeUTF's 64 KiB cap survive the pair encoding
+    val big = "\u00e9" * 70000
+    conf.set("graft.test.big", big)
+    assert(roundtrip(wrapper).value.get("graft.test.big") == big)
+  }
+
+  test("scratch dirs share one exit hook that still deletes every path") {
+    // a fresh JVM: the hook only runs at exit, and this one's scratch
+    // (the shared session's spark.local.dir among it) must outlive it
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"),
+      "bin", "java").toString
+    val proc = new ProcessBuilder(javaBin,
+      "--add-opens", "java.base/java.lang=ALL-UNNAMED",
+      "-cp", System.getProperty("java.class.path"),
+      "graft.ScratchHookProbe").redirectErrorStream(true).start()
+    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+      .linesIterator.toSeq
+    assert(proc.waitFor() == 0, out.mkString("\n"))
+    assert(out.head == "hooks 1 1", s"hook count (scratch, added): ${out.head}")
+    val paths = out.tail
+    assert(paths.size == 100 && paths.distinct.size == 100)
+    paths.foreach(p =>
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p)),
+        s"$p survived JVM exit"))
+  }
+}
+
+/** Child-JVM half of the shared-exit-hook spec: 100 unique scratch
+  * dirs, each populated, then a normal exit. Prints the scratch-hook
+  * count and the hooks added overall, then every path. */
+object ScratchHookProbe {
+  private def hooks(): Seq[Thread] = {
+    val f = Class.forName("java.lang.ApplicationShutdownHooks")
+      .getDeclaredField("hooks")
+    f.setAccessible(true)
+    f.get(null).asInstanceOf[java.util.Map[Thread, Thread]].keySet
+      .toArray(Array.empty[Thread]).toSeq
+  }
+
+  def main(args: Array[String]): Unit = {
+    val before = hooks().size
+    val paths = (1 to 100).map(_ =>
+      graft.util.Scratch.ephemeralDir("hook_probe", unique = true))
+    paths.foreach { p =>
+      val d = java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(p))
+      java.nio.file.Files.write(d.resolve("f"), Array[Byte](1))
+    }
+    val now = hooks()
+    println(s"hooks ${now.count(_.getName == graft.util.Scratch.ExitHookName)} " +
+      s"${now.size - before}")
+    paths.foreach(println)
   }
 }

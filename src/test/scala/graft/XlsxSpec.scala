@@ -307,6 +307,55 @@ class XlsxSpec extends SparkSpec {
     assert(e.getMessage.contains("absent"), e.getMessage)
   }
 
+  test("schema peek memo re-peeks a first workbook rewritten in place") {
+    import spark.implicits._
+    val dir = tmp("xlsx_peek_rewrite")
+    Xlsx.write(spark, s"$dir/part0.xlsx",
+      Seq("data" -> Seq((1L, 10L), (2L, 20L)).toDF("id", "code")))
+    assert(Xlsx.readDistributed(spark, dir, "data").schema("code")
+      .dataType.typeName == "long")
+    // same path, `code` now text (and the file longer, so its listed
+    // (mtime, len) moves): the next read must see the new schema
+    Xlsx.write(spark, s"$dir/part0.xlsx", Seq("data" ->
+      Seq((1L, "ten as text"), (2L, "twenty as text")).toDF("id", "code")))
+    val back = Xlsx.readDistributed(spark, dir, "data")
+    assert(back.schema("code").dataType.typeName == "string")
+    assert(back.orderBy($"id").select($"code").as[String].collect().toSeq ==
+      Seq("ten as text", "twenty as text"))
+  }
+
+  test("a failed schema peek is not remembered") {
+    import spark.implicits._
+    val dir = tmp("xlsx_peek_fail")
+    val a = Seq((1L, "x")).toDF("id", "name")
+    Xlsx.write(spark, s"$dir/wb.xlsx", Seq("a" -> a))
+    val e = intercept[Exception](Xlsx.readDistributed(spark, dir, "b"))
+    assert(e.getMessage.contains("no sheet 'b'"), e.getMessage)
+    Xlsx.write(spark, s"$dir/wb.xlsx",
+      Seq("a" -> a, "b" -> Seq((7L, 2.5)).toDF("k", "v")))
+    assert(Xlsx.readDistributed(spark, dir, "b").as[(Long, Double)]
+      .collect().toSeq == Seq((7L, 2.5)))
+  }
+
+  test("a repeated distributed read reads no workbook bytes before its action") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val dir = tmp("xlsx_peek_bytes")
+    (0 until 2).foreach { i =>
+      Xlsx.write(spark, s"$dir/part$i.xlsx",
+        Seq("data" -> spark.range(i * 10, i * 10 + 10).toDF("id")))
+    }
+    def fileBytesRead(): Long =
+      org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+        .filter(_.getScheme == "file").map(_.getBytesRead).sum
+    val first = Xlsx.readDistributed(spark, dir, "data")
+    val before = fileBytesRead()
+    val again = Xlsx.readDistributed(spark, dir, "data")
+    assert(fileBytesRead() == before, "the memoized peek re-read a workbook")
+    assert(again.schema == first.schema)
+    assert(again.agg(sum($"id")).head().getLong(0) == (0 until 20).sum)
+  }
+
   test("distributed write shards a sheet into committed part workbooks") {
     import spark.implicits._
     val dir = tmp("xlsx_dist_write") + "/big.xlsx"
