@@ -244,11 +244,6 @@ object Crud {
   /** Stage a clone of the golden customer fleet and hand back a
     * catalog-bound child session — the common setup of the SQL
     * row-level verbs below. */
-  /** [[stagedFleetSession]] exposed for the ProfileVerb attribution
-    * tool only. */
-  private[graft] def profileStage(s: SparkSession, dir: String,
-      tag: String): SparkSession = stagedFleetSession(s, dir, tag)
-
   private def stagedFleetSession(s: SparkSession, dir: String,
       tag: String, clustered: Boolean = false): SparkSession = {
     val root = cloneFleet(s, goldenDir(s, dir, clustered), tag)

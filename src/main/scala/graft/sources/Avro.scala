@@ -407,25 +407,6 @@ object Avro {
         "writeDistributed emits) or convert to parquet for a splittable " +
         "columnar scan")
 
-  /** HEADER-ONLY schema peek for `readDistributed`: resolve the glob
-    * (or list the directory) via the Hadoop FS, pick the
-    * lexicographically FIRST file — deterministic across runs, unlike
-    * a binaryFile `head()`, whose listing order is no contract — and
-    * read just the OCF header (magic + metadata block): DataFileStream
-    * parses the schema at construction and we never iterate rows, so
-    * the driver pulls O(header) bytes, never the whole file. */
-  /** Resolve a glob (or directory) to its DATA files: hidden temps and
-    * markers filtered, the `_SUCCESS` commit contract enforced on any
-    * part-file directory, and every file bounded (each becomes one
-    * whole-file task). Shared by the RDD reader, the schema peek, and
-    * the DataSource V2 fleet connector so the three can never drift.
-    *
-    * `glob` may be a COMMA-separated list of globs/paths (the classic
-    * Hadoop multi-path spelling) — each resolves independently and the
-    * union is deduplicated by path. This is what lets a maintenance
-    * pass (e.g. [[FleetMerge]]'s sidecar-pruned copy-on-write) load
-    * exactly the files it proved touched, through the same connector
-    * and contract as a whole-fleet read. */
   /** Split a multi-path spec on TOP-LEVEL commas only: commas inside
     * `{...}` belong to Hadoop brace-alternation globs
     * (`/data/{a,b}.avro`) and must reach globStatus intact. */
@@ -443,54 +424,25 @@ object Avro {
     out.result().map(_.trim).filter(_.nonEmpty)
   }
 
-  private[graft] def listFleet(s: SparkSession, glob: String,
-      maxFileBytes: Long, enforceBound: Boolean = true,
-      versionAsOf: Option[Long] = None,
-      branch: Option[String] = None)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    val parts = splitGlobs(glob)
-    require(parts.nonEmpty, s"no avro files match: $glob")
-    val all = parts.toSeq
-      .flatMap(g => listOneGlob(s, g, versionAsOf, branch))
-      .groupBy(_.getPath.toString).map(_._2.head).toSeq
-    require(all.nonEmpty, s"no avro files match: $glob")
-    if (enforceBound) all.foreach(requireIngestSized(_, maxFileBytes))
-    all
-  }
-
-  private def listOneGlob(s: SparkSession, glob: String,
-      versionAsOf: Option[Long] = None,
-      branch: Option[String] = None)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    val p = new org.apache.hadoop.fs.Path(glob)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    val matched = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
-    val files = matched.flatMap {
-      // a TRANSACTIONAL fleet (committed `_manifest/`) resolves its
-      // file set from the current — or `versionAsOf` / per-read
-      // `branch` — snapshot: an in-flight append's task-committed
-      // files and a half-swapped copy-on-write generation are
-      // invisible until their one manifest commit lands. The
-      // `_SUCCESS` gate is superseded by the manifest (which only
-      // ever names job-committed files).
-      case d if d.isDirectory =>
-        FleetManifest.resolve(fs, d.getPath, versionAsOf, branch) match {
-          case Some(resolved) => resolved
-          case None => listLegacyDir(fs, d)
-        }
-      case f => Seq(f)
-    }
-    // bound enforcement lives in the multi-glob wrapper: the V2 fleet
-    // scan passes enforceBound=false there and SPLITS oversized
-    // container files on sync markers instead (maxFileBytes becomes
-    // the per-split guard); the whole-file driver parse keeps the hard
-    // bound because it holds one file in one JVM
-    files
-  }
+  /** Resolve a glob (or directory) to its DATA files: hidden temps and
+    * markers filtered, the `_SUCCESS` commit contract enforced on any
+    * part-file directory — the file projection of
+    * [[FleetView.resolve]], which the DataSource V2 fleet scans plan
+    * from directly, so the listing contracts can never drift.
+    *
+    * `glob` may be a COMMA-separated list of globs/paths (the classic
+    * Hadoop multi-path spelling) — each resolves independently and the
+    * union is deduplicated by path. This is what lets a maintenance
+    * pass (e.g. [[FleetMerge]]'s sidecar-pruned copy-on-write) load
+    * exactly the files it proved touched, through the same connector
+    * and contract as a whole-fleet read. */
+  private[graft] def listFleet(s: SparkSession, glob: String)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    FleetView.resolve(s, glob).files
 
   /** Raw-listing contract for manifest-less directories (interchange
     * drops, `writeDistributed` output, externally-produced fleets). */
-  private def listLegacyDir(fs: org.apache.hadoop.fs.FileSystem,
+  private[sources] def listLegacyDir(fs: org.apache.hadoop.fs.FileSystem,
       d: org.apache.hadoop.fs.FileStatus)
       : Seq[org.apache.hadoop.fs.FileStatus] = {
     val all = fs.listStatus(d.getPath).toSeq
@@ -510,10 +462,15 @@ object Avro {
     data
   }
 
-  private[graft] def peekSchema(s: SparkSession, glob: String,
-      maxFileBytes: Long): Schema = {
-    // header-only read: the per-file bound is irrelevant here
-    val files = listFleet(s, glob, maxFileBytes, enforceBound = false)
+  /** HEADER-ONLY schema peek for `readDistributed`: resolve the glob
+    * (or list the directory) via the Hadoop FS, pick the
+    * lexicographically FIRST file — deterministic across runs, unlike
+    * a binaryFile `head()`, whose listing order is no contract — and
+    * read just the OCF header (magic + metadata block): DataFileStream
+    * parses the schema at construction and we never iterate rows, so
+    * the driver pulls O(header) bytes, never the whole file. */
+  private[graft] def peekSchema(s: SparkSession, glob: String): Schema = {
+    val files = listFleet(s, glob)
     val first = files.map(_.getPath).minBy(_.toString)
     val fs = first.getFileSystem(s.sessionState.newHadoopConf())
     val in = fs.open(first)
@@ -531,9 +488,9 @@ object Avro {
     * costs one distributed pass, not a driver loop. Schemas travel
     * as JSON strings (Avro `Schema` is not serializable-stable) and
     * dedupe before parsing. */
-  private[graft] def peekAllSchemas(s: SparkSession, glob: String,
-      maxFileBytes: Long): Seq[Schema] = {
-    val files = listFleet(s, glob, maxFileBytes, enforceBound = false)
+  private[graft] def peekAllSchemas(s: SparkSession, glob: String)
+      : Seq[Schema] = {
+    val files = listFleet(s, glob)
       .map(_.getPath.toString).sorted
     def peekOne(conf: org.apache.hadoop.conf.Configuration)(
         p: String): String = {

@@ -164,7 +164,7 @@ private[sources] class AvroFleetCdcApplySink(sqlContext: SQLContext,
       // a MERGE analysis error deep in the engine
       val targetCols = FleetSchemaMarker.resolve(f, p, None)
         .map(_.schema).getOrElse(Avro.toSparkSchema(
-          Avro.peekSchema(s, path, Avro.MaxIngestFileBytes)))
+          Avro.peekSchema(s, path)))
         .fieldNames.toSet
       val added = images.schema.fields
         .filter(fd => fd.name != ct && !targetCols(fd.name))

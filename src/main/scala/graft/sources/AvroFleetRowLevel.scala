@@ -140,8 +140,13 @@ private[sources] class AvroFleetRowLevelScanBuilder(fullSchema: StructType,
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
     groupFilters
 
+  // one resolved snapshot: the replaced group set and the vector
+  // bindings reported for the commit's compare-and-set come from the
+  // same manifest read the tasks decode under
+  private lazy val view = FleetView.resolve(SparkSession.active, path)
+
   override def build(): Scan =
-    new AvroFleetScan(fullSchema, required, path, maxFileBytes,
+    new AvroFleetScan(fullSchema, required, path, maxFileBytes, view,
       limit = None, pushedFilters = groupFilters,
       evolve = evolve,
       groupFilterOnly = true,

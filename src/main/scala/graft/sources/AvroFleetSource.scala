@@ -19,7 +19,7 @@ import graft.util.SerializableHadoopConf
 
 /** DataSource V2 connector for the Avro fleet codec
   * (`spark.read.format("graft-avro").load(dirOrGlob)`): the same
-  * listing contract as `Avro.listFleet` (hidden temps/markers
+  * listing contract as [[FleetView]] (hidden temps/markers
   * filtered, `_SUCCESS` required on part-file directories, per-file
   * size bound), one `InputPartition` per container file, and — the
   * point of going through Catalyst instead of an RDD — REAL column
@@ -246,8 +246,7 @@ class AvroFleetSource extends TableProvider with DataSourceRegister
     * addressed. */
   private def markerOf(path: String,
       branch: Option[String] = None,
-      versionAsOf: Option[String] = None,
-      timestampAsOf: Option[String] = None)
+      asOf: Option[FleetView.AsOf] = None)
       : Option[FleetSchemaMarker.Marker] = {
     val p = new org.apache.hadoop.fs.Path(Avro.splitGlobs(path).head)
     val fs = p.getFileSystem(
@@ -274,28 +273,19 @@ class AvroFleetSource extends TableProvider with DataSourceRegister
         // session's active branch when it exists here — resolves the
         // fork's STAGED marker first (a schema evolution staged on a
         // branch is invisible to main until fast_forward, r19); a
-        // versioned read resolves the schema stamped AS OF that
-        // generation (numbers directly, anything else as a tag —
-        // the option's documented spelling; an unresolvable tag
-        // defers to the scan builder's loud error)
+        // versioned read — any AS OF spelling, through the one
+        // addressing rule the scan builder uses — resolves the schema
+        // stamped AS OF that generation, so a pre-ALTER generation
+        // never shows the post-ALTER marker. Resolution failures
+        // (unknown tag, unparseable or too-early time) defer to the
+        // scan builder's loud errors.
         val effBranch = branch.filter(b =>
           FleetManifest.branchBase(fs, dirP, b).isDefined)
           .orElse(FleetManifest.activeBranchAt(fs, dirP))
-        // timestampAsOf resolves to a version HERE too (same
-        // commit-time index the scan builder uses), so both AS OF
-        // spellings see the generation-stamped declared schema — a
-        // timestamp read of a pre-ALTER generation must not show the
-        // post-ALTER marker. Resolution failures (unparseable,
-        // predates history) defer to the scan builder's loud errors.
-        val effVersion = versionAsOf.flatMap(v =>
-          v.toLongOption.orElse(FleetManifest.tagVersion(fs, dirP, v)))
-          .orElse(timestampAsOf.flatMap { raw =>
-            try {
-              val ts = AvroFleetTable.parseTsOption("timestampAsOf", raw)
-              FleetManifest.versionsWithTimes(fs, dirP)
-                .filter(_._2 <= ts).map(_._1).maxOption
-            } catch { case _: IllegalArgumentException => None }
-          })
+        val effVersion = asOf.flatMap { a =>
+          try Some(FleetView.versionAt(fs, dirP, a))
+          catch { case _: IllegalArgumentException => None }
+        }
         FleetSchemaMarker.resolveAt(fs, dirP, effBranch, effVersion)
       } else None
     } catch {
@@ -305,17 +295,17 @@ class AvroFleetSource extends TableProvider with DataSourceRegister
     }
   }
 
-  /** The session pin's version for this load, as the string spelling
-    * [[markerOf]] resolves — so a pinned read's DECLARED SCHEMA is the
-    * pinned generation's, matching the data the scan serves. Explicit
-    * AS-OF options and change-feed reads bypass (same rule as the
-    * scan builder's pin injection). */
-  private def pinnedVersionString(options: CaseInsensitiveStringMap)
-      : Option[String] =
-    if (cdcOf(options) || options.containsKey("branch") ||
-        options.containsKey("timestampAsOf")) None
-    else FleetPin.versionForLoad(SparkSession.active, pathOf(options))
-      .map(_.toString)
+  /** The generation this load's DECLARED SCHEMA is read at: an
+    * explicit AS OF option, else the session pin's version — so a
+    * pinned read's schema is the pinned generation's, matching the
+    * data the scan serves. Branch and change-feed reads bypass the pin
+    * (same rule as the scan builder's pin injection). */
+  private def schemaAsOf(options: CaseInsensitiveStringMap)
+      : Option[FleetView.AsOf] =
+    AvroFleetTable.asOfOption(options).orElse(
+      if (cdcOf(options) || options.containsKey("branch")) None
+      else FleetPin.versionForLoad(SparkSession.active, pathOf(options))
+        .map(v => FleetView.VersionOrTag("versionAsOf", v.toString)))
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     // the CDC-apply sink's schema is its per-batch input, not the
@@ -324,15 +314,13 @@ class AvroFleetSource extends TableProvider with DataSourceRegister
     // option only answers the STREAMING_WRITE capability probe
     if (applyKeyCols(options).nonEmpty) return new StructType()
     val base = markerOf(pathOf(options), branchOf(options),
-      Option(options.get("versionAsOf")).orElse(
-        pinnedVersionString(options)),
-      Option(options.get("timestampAsOf"))).map(_.schema).getOrElse {
+      schemaAsOf(options)).map(_.schema).getOrElse {
       if (evolveOf(options))
         SchemaEvolution.merge(Avro.peekAllSchemas(SparkSession.active,
-          pathOf(options), maxBytesOf(options)).map(Avro.toSparkSchema))
+          pathOf(options)).map(Avro.toSparkSchema))
       else
         Avro.toSparkSchema(Avro.peekSchema(SparkSession.active,
-          pathOf(options), maxBytesOf(options)))
+          pathOf(options)))
     }
     // the change feed reads the fleet schema plus the trailing
     // `_change_type` tag ([[FleetCDC.ChangeTypeCol]])
@@ -351,9 +339,7 @@ class AvroFleetSource extends TableProvider with DataSourceRegister
       // STREAMING_WRITE probe so the V1 sink fallback engages
       return new AvroFleetTable(schema, pathOf(opts), maxBytesOf(opts),
         cdcApply = true)
-    val marker = markerOf(pathOf(opts), branchOf(opts),
-      Option(opts.get("versionAsOf")).orElse(pinnedVersionString(opts)),
-      Option(opts.get("timestampAsOf")))
+    val marker = markerOf(pathOf(opts), branchOf(opts), schemaAsOf(opts))
     new AvroFleetTable(schema, pathOf(opts), maxBytesOf(opts),
       evolveOf(opts) || marker.isDefined,
       aliases = marker.map(_.aliases).getOrElse(Map.empty),
@@ -458,88 +444,15 @@ private[sources] class AvroFleetTable(tableSchema: StructType, path: String,
         Option(options.get("offsetInlineLimit")).map(_.toInt)
           .getOrElse(1000),
       versionAsOf =
-        // a number is a manifest version; anything else resolves as a
-        // TAG — the same spelling rule as SQL `VERSION AS OF`. A tag
-        // resolves against the MATCHED fleet directory, not the raw
-        // load string (a glob spelling that matches one directory
-        // still finds its tag); a multi-directory load cannot carry
-        // one tag spelling — the same name may pin DIFFERENT version
-        // numbers per fleet and a single resolved number would
-        // silently misread the others — so it fails with the explicit
-        // remedy instead (r16 ADVICE).
-        Option(options.get("versionAsOf")).map { v =>
-          require(!options.containsKey("timestampAsOf"),
-            "versionAsOf and timestampAsOf are mutually exclusive")
-          v.toLongOption.getOrElse {
-            val conf = SparkSession.active.sessionState.newHadoopConf()
-            val dirs = Avro.splitGlobs(path).toSeq.flatMap { g =>
-              val gp = new org.apache.hadoop.fs.Path(g)
-              val gfs = gp.getFileSystem(conf)
-              Option(gfs.globStatus(gp)).map(_.toSeq).getOrElse(Seq.empty)
-                .filter(_.isDirectory).map(_.getPath)
-            }
-            dirs match {
-              case Seq(d) =>
-                val pfs = d.getFileSystem(conf)
-                FleetManifest.tagVersion(pfs, d, v).getOrElse(
-                  throw new IllegalArgumentException(
-                    s"versionAsOf: '$v' is neither a manifest version " +
-                      s"number nor a tag at $d (tags: ${FleetManifest
-                        .tags(pfs, d).map(_._1).mkString(", ")})"))
-              case Seq() =>
-                throw new IllegalArgumentException(
-                  s"versionAsOf: '$v' is not a version number, and the " +
-                    s"load path matches no fleet directory to resolve " +
-                    s"it as a tag ($path)")
-              case many =>
-                throw new IllegalArgumentException(
-                  s"versionAsOf: tag '$v' cannot address a " +
-                    s"multi-directory load (${many.size} fleets match " +
-                    s"$path) — the same tag may pin different versions " +
-                    "per fleet; load each fleet with its tag separately")
-            }
-          }
-        }.orElse {
-          // option("timestampAsOf", ...) — the DataFrame spelling of
-          // SQL TIMESTAMP AS OF (r19): newest generation committed at
-          // or before the timestamp, via the same commit-time index
-          Option(options.get("timestampAsOf")).map(_.trim)
-            .filter(_.nonEmpty).map { raw =>
-              require(!options.containsKey("versionAsOf"),
-                "versionAsOf and timestampAsOf are mutually exclusive")
-              val conf =
-                SparkSession.active.sessionState.newHadoopConf()
-              val dirs = Avro.splitGlobs(path).toSeq.flatMap { g =>
-                val gp = new org.apache.hadoop.fs.Path(g)
-                val gfs = gp.getFileSystem(conf)
-                Option(gfs.globStatus(gp)).map(_.toSeq)
-                  .getOrElse(Seq.empty)
-                  .filter(_.isDirectory).map(_.getPath)
-              }
-              dirs match {
-                case Seq(d) =>
-                  val pfs = d.getFileSystem(conf)
-                  val ts = AvroFleetTable.parseTsOption("timestampAsOf", raw)
-                  val withTimes =
-                    FleetManifest.versionsWithTimes(pfs, d)
-                  require(withTimes.nonEmpty,
-                    s"timestampAsOf: fleet at $d has no manifest " +
-                      "history")
-                  withTimes.filter(_._2 <= ts).map(_._1).maxOption
-                    .getOrElse(throw new IllegalArgumentException(
-                      s"timestampAsOf '$raw' predates the first " +
-                        s"commit at $d (${java.time.Instant
-                          .ofEpochMilli(withTimes.head._2)})"))
-                case Seq() => throw new IllegalArgumentException(
-                  s"timestampAsOf: the load path matches no fleet " +
-                    s"directory ($path)")
-                case many => throw new IllegalArgumentException(
-                  s"timestampAsOf cannot address a multi-directory " +
-                    s"load (${many.size} fleets match $path) — commit " +
-                    "times differ per fleet; load each separately")
-              }
-            }
-        }.orElse(versionAsOf).orElse {
+        // option("versionAsOf", number-or-tag) / option("timestampAsOf")
+        // — the DataFrame spellings of SQL VERSION / TIMESTAMP AS OF —
+        // through the one addressing rule: a tag or time resolves
+        // against the MATCHED fleet directory (a glob matching one
+        // directory still finds its tag), and a multi-directory load
+        // cannot carry one (r16 ADVICE)
+        AvroFleetTable.asOfOption(options).map(
+          FleetView.versionAtLoad(SparkSession.active, path, _))
+          .orElse(versionAsOf).orElse {
           // session snapshot pin ([[FleetPin]]): a pinned fleet reads
           // its captured version. EXPLICIT addressing — versionAsOf /
           // timestampAsOf / branch — and the change feed override the
@@ -595,7 +508,7 @@ private[sources] class AvroFleetTable(tableSchema: StructType, path: String,
       : Option[Seq[(org.apache.hadoop.fs.FileStatus, Boolean)]] = {
     import org.apache.spark.sql.sources.{AlwaysFalse, AlwaysTrue}
     val s = SparkSession.active
-    val fleet = Avro.listFleet(s, path, maxFileBytes, enforceBound = false)
+    val fleet = Avro.listFleet(s, path)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(s.sessionState.newHadoopConf())
     val stats = FleetStats.forFleet(fs, fleet)
@@ -863,108 +776,62 @@ private[sources] object AvroFleetTable {
     }
   }
 
-  /** A timestamp option value → epoch millis: a bare long, an
-    * ISO-8601 instant (`2026-08-15T12:00:00Z`), or a local-zone
-    * `yyyy-MM-dd HH:mm:ss[.fff]` (the JDBC timestamp spelling). */
-  private[sources] def parseTsOption(opt: String, raw: String): Long =
-    raw.toLongOption.getOrElse {
-      try java.time.Instant.parse(raw).toEpochMilli
-      catch {
-        case _: java.time.format.DateTimeParseException =>
-          try java.sql.Timestamp.valueOf(raw).getTime
-          catch {
-            case _: IllegalArgumentException =>
-              throw new IllegalArgumentException(
-                s"$opt: '$raw' is neither epoch millis, " +
-                  "an ISO-8601 instant, nor 'yyyy-MM-dd HH:mm:ss[.fff]'")
-          }
-      }
-    }
+  /** A plain read's AS OF option — `versionAsOf` (number or tag) or
+    * `timestampAsOf` — as the one addressing rule's spelling. */
+  def asOfOption(options: CaseInsensitiveStringMap)
+      : Option[FleetView.AsOf] = {
+    require(!options.containsKey("versionAsOf") ||
+      !options.containsKey("timestampAsOf"),
+      "versionAsOf and timestampAsOf are mutually exclusive")
+    Option(options.get("versionAsOf"))
+      .map(FleetView.VersionOrTag("versionAsOf", _))
+      .orElse(Option(options.get("timestampAsOf")).map(_.trim)
+        .filter(_.nonEmpty).map(FleetView.AtOrBefore("timestampAsOf", _)))
+  }
 
   /** The exclusive version FLOOR a change feed / fleet stream starts
     * after: `startingVersion` verbatim, or `startingTimestamp`
-    * resolved against the manifest's commit-time index — the floor is
-    * the newest version committed BEFORE the timestamp, so the first
-    * streamed change is the first commit AT or AFTER it (the
+    * resolved to the newest version committed BEFORE the timestamp, so
+    * the first streamed change is the first commit AT or AFTER it (the
     * TIMESTAMP AS OF index run in the opposite direction); a
     * timestamp predating the first commit replays the full retained
-    * history, one past the newest commit streams only future ones.
-    * Mutually exclusive with each other and (for the timestamp
-    * spelling) with `branch` — a fork's staged commits carry their
-    * own times, so a time-based seek across the fork point would
-    * silently mix two clocks; seek a branch feed by version. */
+    * history, one past the newest commit streams only future ones. */
   def resolveStartingVersion(options: CaseInsensitiveStringMap,
-      path: String): Option[Long] = {
-    val sv = Option(options.get("startingVersion")).map(_.toLong)
-    val stRaw = Option(options.get("startingTimestamp")).map(_.trim)
-      .filter(_.nonEmpty)
-    if (sv.isDefined && stRaw.isDefined)
-      throw new IllegalArgumentException(
-        "startingVersion and startingTimestamp are mutually exclusive")
-    stRaw.fold(sv) { raw =>
-      if (Option(options.get("branch")).exists(_.trim.nonEmpty))
-        throw new IllegalArgumentException(
-          "startingTimestamp does not compose with a branch feed — a " +
-            "fork's staged commits carry their own commit times; seek " +
-            "a branch feed with startingVersion")
-      val ts = parseTsOption("startingTimestamp", raw)
-      val conf = SparkSession.active.sessionState.newHadoopConf()
-      val dirs = Avro.splitGlobs(path).toSeq.flatMap { g =>
-        val gp = new org.apache.hadoop.fs.Path(g)
-        val gfs = gp.getFileSystem(conf)
-        Option(gfs.globStatus(gp)).map(_.toSeq).getOrElse(Seq.empty)
-          .filter(_.isDirectory).map(_.getPath)
-      }
-      dirs match {
-        case Seq(d) =>
-          val pfs = d.getFileSystem(conf)
-          val withTimes = FleetManifest.versionsWithTimes(pfs, d)
-          require(withTimes.nonEmpty,
-            s"startingTimestamp: fleet at $d has no manifest history " +
-              "(only transactionally-committed fleets are versioned)")
-          Some(withTimes.filter(_._2 < ts).map(_._1).maxOption
-            .getOrElse(0L))
-        case Seq() => throw new IllegalArgumentException(
-          s"startingTimestamp: the load path matches no fleet " +
-            s"directory ($path)")
-        case many => throw new IllegalArgumentException(
-          s"startingTimestamp cannot address a multi-directory load " +
-            s"(${many.size} fleets match $path) — commit times differ " +
-            "per fleet; load each fleet separately")
-      }
-    }
-  }
+      path: String): Option[Long] =
+    rangeBound(options, path, "startingVersion", "startingTimestamp",
+      FleetView.Before)
 
   /** The inclusive version CEILING of a batch change-feed range:
     * `endingVersion` verbatim, or `endingTimestamp` resolved to the
     * newest version committed AT or BEFORE the timestamp (the
-    * TIMESTAMP AS OF direction). Same exclusions as the start
-    * spelling. */
+    * TIMESTAMP AS OF direction). */
   def resolveEndingVersion(options: CaseInsensitiveStringMap,
-      path: String): Option[Long] = {
-    val ev = Option(options.get("endingVersion")).map(_.toLong)
-    val etRaw = Option(options.get("endingTimestamp")).map(_.trim)
-      .filter(_.nonEmpty)
-    if (ev.isDefined && etRaw.isDefined)
+      path: String): Option[Long] =
+    rangeBound(options, path, "endingVersion", "endingTimestamp",
+      FleetView.AtOrBefore)
+
+  /** One change-feed range bound: the version option verbatim, or the
+    * timestamp option through the one addressing rule. The two are
+    * mutually exclusive, and the timestamp spelling does not compose
+    * with `branch` — a fork's staged commits carry their own times, so
+    * a time-based seek across the fork point would silently mix two
+    * clocks; seek a branch feed by version. */
+  private def rangeBound(options: CaseInsensitiveStringMap, path: String,
+      versionOpt: String, tsOpt: String,
+      asOf: (String, String) => FleetView.AsOf): Option[Long] = {
+    val v = Option(options.get(versionOpt)).map(_.toLong)
+    val raw = Option(options.get(tsOpt)).map(_.trim).filter(_.nonEmpty)
+    if (v.isDefined && raw.isDefined)
       throw new IllegalArgumentException(
-        "endingVersion and endingTimestamp are mutually exclusive")
-    etRaw.fold(ev) { raw =>
+        s"$versionOpt and $tsOpt are mutually exclusive")
+    raw.fold(v) { r =>
       if (Option(options.get("branch")).exists(_.trim.nonEmpty))
         throw new IllegalArgumentException(
-          "endingTimestamp does not compose with a branch feed — seek " +
-            "a branch range with endingVersion")
-      val ts = parseTsOption("endingTimestamp", raw)
-      val conf = SparkSession.active.sessionState.newHadoopConf()
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(conf)
-      val withTimes = FleetManifest.versionsWithTimes(fs, p)
-      require(withTimes.nonEmpty,
-        s"endingTimestamp: fleet at $path has no manifest history")
-      Some(withTimes.filter(_._2 <= ts).map(_._1).maxOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"endingTimestamp '$raw' predates the first commit at $path " +
-            s"(${java.time.Instant.ofEpochMilli(withTimes.head._2)}) " +
-            "— the range is empty")))
+          s"$tsOpt does not compose with a branch feed — a fork's " +
+            "staged commits carry their own commit times; seek a " +
+            s"branch feed with $versionOpt")
+      Some(FleetView.versionAtLoad(SparkSession.active, path,
+        asOf(tsOpt, r)))
     }
   }
 }
@@ -1783,13 +1650,12 @@ private[sources] class AvroFleetScanBuilder(fullSchema: StructType,
   private var metaCountColAdjust: Map[String, Long] = Map.empty
   private var topN: Option[(Seq[TopNOrder], Int)] = None
 
-  // does the resolved snapshot (or a caller-passed dvSpec) bind any
-  // deletion vector? gates the metadata aggregate tiers (their
-  // sidecar/block-header numbers include deleted rows)
-  private lazy val fleetHasDvs: Boolean =
-    dvSpecs.nonEmpty ||
-      FleetDv.forPath(SparkSession.active, path, versionAsOf,
-        branch).nonEmpty
+  // the ONE resolved snapshot every scan this builder builds plans
+  // from (files, vector bindings, counts — see [[FleetView]]); lazy,
+  // so the streaming and change-feed paths, which plan from offsets,
+  // never force it
+  private lazy val view =
+    FleetView.resolve(SparkSession.active, path, versionAsOf, branch)
 
   // Catalyst hands us the projected subset; empty projections (pure
   // count(*)) arrive as an empty struct — decode zero fields, keep rows
@@ -1880,9 +1746,9 @@ private[sources] class AvroFleetScanBuilder(fullSchema: StructType,
     // a per-read BRANCH scan gets the full tier treatment (r19 — the
     // blanket decline was backwards: the branch surface exists for
     // audit passes, which are COUNT/MIN/MAX-shaped): a branch HEAD is
-    // just a snapshot, so every tier below resolves its file list and
-    // vector bindings through `branch` (snapshotAtRef addressing) and
-    // its sidecar stats by file name exactly as on main
+    // just a snapshot, so every tier below plans from the builder's one
+    // view of the branch head and its sidecar stats by file name
+    // exactly as on main
     // COLUMN-dependent tiers emit values in per-file carrier spelling
     // (sidecar stats, decode-time hashes) typed by a SINGLE pinned
     // schema; an evolved fleet mixes carriers across generations, so
@@ -1898,17 +1764,6 @@ private[sources] class AvroFleetScanBuilder(fullSchema: StructType,
         pushed.isEmpty
       if (!countStarOnly) return false
     }
-    // DELETION VECTORS make the metadata tiers stale: sidecar
-    // min/max/null counts and block-header counts include deleted
-    // rows. The ONE aggregate whose staleness is exactly correctable
-    // is the unfiltered, ungrouped COUNT(*): raw count − total
-    // vectored positions (each a distinct existing row), so it keeps
-    // the block-header tier plus a constant correction partial
-    // (CountAdjustPartition) — `SELECT count(*)` stays O(headers) on
-    // a vectored fleet. Everything else stays with Spark's row path
-    // (which skips vectored positions per task) until compaction
-    // materializes the vectors. One manifest read, only on fleets
-    // that COULD push.
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[String] = e match {
       case nr: NamedReference if nr.fieldNames.length == 1 =>
@@ -1928,7 +1783,7 @@ private[sources] class AvroFleetScanBuilder(fullSchema: StructType,
     // caller-passed per-file vector instructions (`dvSpec`: the
     // change-feed image reads, FleetMerge touched loads) address
     // EXPLICIT file paths the manifest-derived handling below cannot
-    // see — FleetDv.forPath yields nothing for them — and a deltaOnly
+    // see — the view binds no vector to them — and a deltaOnly
     // spec serves a position DIFFERENCE no tier can represent.
     // Spec-carrying reads keep the row path, which applies each spec
     // per task (r16 ADVICE).
@@ -1971,142 +1826,47 @@ private[sources] class AvroFleetScanBuilder(fullSchema: StructType,
       return false
     }
 
-    if (fleetHasDvs) {
-      val s = SparkSession.active
-      val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-        s.sessionState.newHadoopConf())
-      val dvWithMeta = FleetDv.forPathWithMeta(s, path, versionAsOf,
-        branch)
-      val dvByFull = dvWithMeta.map { case (f, (dv, _)) => f -> dv }
-      // counts ride the manifest binding (r18): planning a COUNT(*) on
-      // a 100k-vectored-file fleet is zero vector-file I/O; only a
-      // LEGACY binding (pre-meta commit) pays its one header read
-      lazy val totalDeleted = dvWithMeta.valuesIterator.map {
-        case (_, Some(m)) => m.count
-        case (dvp, None) =>
-          FleetDv.countAt(fs, new org.apache.hadoop.fs.Path(dvp))
-      }.sum
-      // DV-AWARE METADATA TIER (r17, the r16 verdict's #5): vectors
-      // make sidecar numbers stale, but two shapes stay exactly
-      // answerable without opening a file —
-      //  - COUNT(*): raw row total − total vectored positions (each a
-      //    distinct existing row);
-      //  - MIN/MAX(c): the sidecar extremum stands whenever SOME file
-      //    ATTAINING it carries no vector — that file still holds a
-      //    live row equal to the extremum, and deletions elsewhere
-      //    only remove candidates, never add them. A delete that
-      //    touches every attaining file could have removed the
-      //    extremum itself, so the tier declines (the row path, which
-      //    applies vectors per task, answers).
-      // COUNT(col) corrects by the bindings' captured per-column
-      // non-null deleted counts (r18) — decidable exactly when EVERY
-      // vectored binding carries captured stats; otherwise it declines
-      // (the deleted rows' null profile is unknown).
-      val flatAll = specs.flatten
-      val countColsWanted = flatAll.collect {
-        case MetaAggSpec.CountCol(c) => c }.distinct
-      val countColsOk = countColsWanted.isEmpty ||
-        dvWithMeta.valuesIterator.forall(_._2.exists(_.stats.isDefined))
-      if (agg.groupByExpressions.isEmpty && pushed.isEmpty &&
-          specs.forall(_.isDefined) && countColsOk) {
-        val flat = specs.flatten
-        val fleet = Avro.listFleet(s, path, maxFileBytes,
-          enforceBound = false, versionAsOf = versionAsOf,
-          branch = branch)
-        val stats = FleetStats.forFleet(fs, fleet)
-        val entries = fleet.map(f => stats.get(f.getPath.toString))
-        val cols = flat.collect {
-          case MetaAggSpec.CountCol(c) => c
-          case MetaAggSpec.MinCol(c) => c
-          case MetaAggSpec.MaxCol(c) => c
-        }.distinct
-        val covered = entries.forall(_.isDefined) &&
-          entries.flatten.forall(e => cols.forall(e.cols.contains))
-        if (covered) {
-          val vectored = dvByFull.keySet
-          val withStats = fleet.zip(entries.flatten).map { case (st, e) =>
-            (fs.makeQualified(st.getPath).toString, e)
-          }
-          // a VECTORED attaining file still proves the extremum live
-          // when its binding's manifest meta captured the deleted
-          // values and they are STRICTLY interior — the delete
-          // provably removed no extremum-attaining row (r18: the tier
-          // stands through surgical merge-on-read deletes). Deleted
-          // max == extremum is the unknowable boundary: decline.
-          def vectorMissedExtremum(fp: String, c: String,
-              isMin: Boolean, ext: Any): Boolean =
-            dvWithMeta.get(fp).flatMap(_._2).flatMap(_.stats).exists {
-              st => st.get(c) match {
-                case None => true // no non-null deleted value of c
-                case Some(cs) =>
-                  val v = if (isMin) cs.min else cs.max
-                  FleetStats.comparable(v, ext) &&
-                    (if (isMin) FleetFilters.cmp(v, ext) > 0
-                     else FleetFilters.cmp(v, ext) < 0)
-              }
-            }
-          def extremumSurvives(c: String, isMin: Boolean): Boolean = {
-            val bounds = withStats.flatMap { case (fp, e) =>
-              (if (isMin) e.cols(c).min else e.cols(c).max).map(fp -> _)
-            }
-            bounds.isEmpty || {
-              // an all-null-c fleet answers NULL regardless of vectors
-              val ext = bounds.map(_._2).reduce((a, b) =>
-                if ((FleetFilters.cmp(a, b) <= 0) == isMin) a else b)
-              bounds.exists { case (fp, v) =>
-                FleetFilters.cmp(v, ext) == 0 && (!vectored(fp) ||
-                  vectorMissedExtremum(fp, c, isMin, ext)) }
-            }
-          }
-          val minMaxOk = flat.forall {
-            case MetaAggSpec.MinCol(c) => extremumSurvives(c, isMin = true)
-            case MetaAggSpec.MaxCol(c) => extremumSurvives(c, isMin = false)
-            case _ => true
-          }
-          if (minMaxOk) {
-            metaAgg = Some((flat, entries.flatten))
-            metaCountAdjust = totalDeleted
-            // per-column COUNT(col) correction: total deleted NON-NULL
-            // values of c across every binding's captured stats (an
-            // absent column = 0 — no non-null value was deleted)
-            metaCountColAdjust = countColsWanted.map { c =>
-              c -> dvWithMeta.valuesIterator.map {
-                case (_, Some(m)) => m.stats
-                  .flatMap(_.get(c)).map(_.nonNull).getOrElse(0L)
-                case _ => 0L
-              }.sum
-            }.toMap
-            return true
-          }
-        }
-      }
-      // block-header COUNT(*) tier with the constant correction —
-      // distributed over splits, O(headers) on any vectored fleet
-      val allCounts = agg.groupByExpressions.isEmpty &&
-        pushed.isEmpty &&
-        agg.aggregateExpressions.forall(_.isInstanceOf[CountStar])
-      if (!allCounts) return false
-      dvCountAdjust = totalDeleted
-      countStars = agg.aggregateExpressions.length
-      return true
-    }
-
     // the ungrouped tiers answer from sidecars / block headers alone —
     // neither can honor a filter, so they require an unfiltered scan
     // (a filtered ungrouped aggregate takes the absorbed-filter row
     // path and aggregates above it)
     if (pushed.nonEmpty) return false
 
-    if (specs.forall(_.isDefined)) {
-      val flat = specs.flatten
-      val s = SparkSession.active
-      val fleet = Avro.listFleet(s, path, maxFileBytes,
-        enforceBound = false, versionAsOf = versionAsOf,
-        branch = branch)
-      val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-        s.sessionState.newHadoopConf())
-      val stats = FleetStats.forFleet(fs, fleet)
-      val entries = fleet.map(f => stats.get(f.getPath.toString))
+    // DELETION VECTORS make sidecar min/max/null counts and
+    // block-header counts stale (they include deleted rows). The
+    // view's bindings carry each vector's count (r18): planning a
+    // COUNT(*) on a 100k-vectored-file fleet is zero vector-file I/O;
+    // only a LEGACY binding (pre-meta commit) pays its one header read.
+    val dvs = view.dvs
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
+      SparkSession.active.sessionState.newHadoopConf())
+    lazy val totalDeleted =
+      dvs.keysIterator.map(view.deletedRows(fs, _)).sum
+    // METADATA tier — one coverage check, with or without vectors:
+    // every file's sidecar entry covers every referenced column. On a
+    // vectored fleet (r17, the r16 verdict's #5) three shapes stay
+    // exactly answerable without opening a file —
+    //  - COUNT(*): raw row total − total vectored positions (each a
+    //    distinct existing row);
+    //  - MIN/MAX(c): the sidecar extremum stands whenever SOME file
+    //    ATTAINING it carries no vector — that file still holds a live
+    //    row equal to the extremum, and deletions elsewhere only
+    //    remove candidates, never add them — or its binding's captured
+    //    deleted values are strictly interior (r18). A delete that may
+    //    have removed the extremum declines (the row path, which
+    //    applies vectors per task, answers);
+    //  - COUNT(col): corrected by the bindings' captured per-column
+    //    non-null deleted counts (r18) — decidable exactly when EVERY
+    //    binding carries captured stats; otherwise it declines (the
+    //    deleted rows' null profile is unknown).
+    val flat = specs.flatten
+    val countColsWanted = flat.collect {
+      case MetaAggSpec.CountCol(c) => c }.distinct
+    val countColsOk = countColsWanted.isEmpty ||
+      dvs.valuesIterator.forall(_._2.exists(_.stats.isDefined))
+    if (specs.forall(_.isDefined) && countColsOk) {
+      val stats = FleetStats.forFleet(fs, view.files)
+      val entries = view.files.map(f => stats.get(f.getPath.toString))
       val cols = flat.collect {
         case MetaAggSpec.CountCol(c) => c
         case MetaAggSpec.MinCol(c) => c
@@ -2114,15 +1874,67 @@ private[sources] class AvroFleetScanBuilder(fullSchema: StructType,
       }.distinct
       val covered = entries.forall(_.isDefined) &&
         entries.flatten.forall(e => cols.forall(e.cols.contains))
-      if (covered) {
+      // a VECTORED attaining file still proves the extremum live when
+      // its binding's manifest meta captured the deleted values and
+      // they are STRICTLY interior. Deleted max == extremum is the
+      // unknowable boundary: decline.
+      def vectorMissedExtremum(fp: String, c: String,
+          isMin: Boolean, ext: Any): Boolean =
+        dvs.get(fp).flatMap(_._2).flatMap(_.stats).exists {
+          st => st.get(c) match {
+            case None => true // no non-null deleted value of c
+            case Some(cs) =>
+              val v = if (isMin) cs.min else cs.max
+              FleetStats.comparable(v, ext) &&
+                (if (isMin) FleetFilters.cmp(v, ext) > 0
+                 else FleetFilters.cmp(v, ext) < 0)
+          }
+        }
+      def extremumSurvives(c: String, isMin: Boolean): Boolean = {
+        val bounds = view.files.zip(entries.flatten).flatMap {
+          case (st, e) =>
+            (if (isMin) e.cols(c).min else e.cols(c).max)
+              .map(st.getPath.toString -> _)
+        }
+        bounds.isEmpty || {
+          // an all-null-c fleet answers NULL regardless of vectors
+          val ext = bounds.map(_._2).reduce((a, b) =>
+            if ((FleetFilters.cmp(a, b) <= 0) == isMin) a else b)
+          bounds.exists { case (fp, v) =>
+            FleetFilters.cmp(v, ext) == 0 && (!dvs.contains(fp) ||
+              vectorMissedExtremum(fp, c, isMin, ext)) }
+        }
+      }
+      def minMaxOk = dvs.isEmpty || flat.forall {
+        case MetaAggSpec.MinCol(c) => extremumSurvives(c, isMin = true)
+        case MetaAggSpec.MaxCol(c) => extremumSurvives(c, isMin = false)
+        case _ => true
+      }
+      if (covered && minMaxOk) {
         metaAgg = Some((flat, entries.flatten))
+        metaCountAdjust = totalDeleted
+        // per-column COUNT(col) correction: total deleted NON-NULL
+        // values of c across every binding's captured stats (an
+        // absent column = 0 — no non-null value was deleted)
+        metaCountColAdjust = countColsWanted.map { c =>
+          c -> dvs.valuesIterator.map {
+            case (_, Some(m)) => m.stats
+              .flatMap(_.get(c)).map(_.nonNull).getOrElse(0L)
+            case _ => 0L
+          }.sum
+        }.toMap
         return true
       }
     }
-    // block-header tier: counts need no stats, only OCF framing
+    // BLOCK-HEADER tier: counts need no stats, only OCF framing; on a
+    // vectored fleet it adds one constant correction partial
+    // (CountAdjustPartition) — distributed over splits, O(headers)
     val allCounts =
       agg.aggregateExpressions.forall(_.isInstanceOf[CountStar])
-    if (allCounts) countStars = agg.aggregateExpressions.length
+    if (allCounts) {
+      countStars = agg.aggregateExpressions.length
+      dvCountAdjust = totalDeleted
+    }
     allCounts
   }
 
@@ -2133,22 +1945,20 @@ private[sources] class AvroFleetScanBuilder(fullSchema: StructType,
   override def build(): Scan = (groupAgg, metaAgg) match {
     case (Some((gcols, specs)), _) =>
       new AvroFleetGroupAggScan(fullSchema, path, maxFileBytes, gcols,
-        specs, pushed, versionAsOf = versionAsOf, branch = branch)
+        specs, pushed, view)
     case (_, Some((specs, entries))) =>
       new AvroFleetMetaAggScan(fullSchema, path, specs, entries,
         countAdjust = metaCountAdjust,
         countColAdjust = metaCountColAdjust)
     case _ if countStars > 0 =>
       new AvroFleetCountScan(fullSchema, path, maxFileBytes, countStars,
-        versionAsOf = versionAsOf, dvAdjust = dvCountAdjust,
-        branch = branch)
+        view, dvAdjust = dvCountAdjust)
     case _ =>
-      new AvroFleetScan(fullSchema, required, path, maxFileBytes, limit,
-        pushed, topN, evolve, clusterBy, clusterAuto = clusterAuto,
+      new AvroFleetScan(fullSchema, required, path, maxFileBytes, view,
+        limit, pushed, topN, evolve, clusterBy, clusterAuto = clusterAuto,
         maxFilesPerTrigger = maxFilesPerTrigger,
         maxVersionsPerTrigger = maxVersionsPerTrigger,
         offsetInlineLimit = offsetInlineLimit,
-        versionAsOf = versionAsOf,
         maxFileAgeMs = maxFileAgeMs,
         ignoreMissingFiles = ignoreMissingFiles,
         startingVersion = startingVersion,
@@ -2291,6 +2101,7 @@ private[sources] object AvroFleetMetaAggScan {
 
 private[sources] class AvroFleetScan(fullSchema: StructType,
     required: StructType, path: String, maxFileBytes: Long,
+    resolveView: => FleetView,
     limit: Option[Int],
     pushedFilters: Array[org.apache.spark.sql.sources.Filter],
     topN: Option[(Seq[TopNOrder], Int)] = None,
@@ -2303,7 +2114,6 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
     maxFilesPerTrigger: Option[Int] = None,
     maxVersionsPerTrigger: Option[Long] = None,
     offsetInlineLimit: Int = 1000,
-    versionAsOf: Option[Long] = None,
     maxFileAgeMs: Option[Long] = None,
     ignoreMissingFiles: Option[Boolean] = None,
     startingVersion: Option[Long] = None,
@@ -2426,53 +2236,34 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
       .planInputPartitions(FleetCdcOffset(from), FleetCdcOffset(to))
   }
 
-  // one driver-side listing shared by stats + partition planning;
-  // oversized files are not rejected here — they are SPLIT below
-  private lazy val fleet = Avro.listFleet(SparkSession.active, path,
-    maxFileBytes, enforceBound = false, versionAsOf = versionAsOf,
-    branch = branch)
+  // the builder's ONE resolved snapshot: the files (oversized ones are
+  // not rejected here — they are SPLIT below), the reader's vector
+  // instructions (dvByPath), the row-count math (dvCounts) and the
+  // commit-time compare-and-set report (dvRelByName) all derive from
+  // it. Deriving them from separate reads would let a merge-on-read
+  // delete land in between — the tasks would read under the old
+  // binding while the CAS validates the new one, and the swap would
+  // silently drop the delete
+  private lazy val view = resolveView
 
   // per-file stats from the fleet's `_stats.json` sidecars (one small
   // driver-side read per directory; empty where no sidecar exists)
   private lazy val fleetStats = {
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       SparkSession.active.sessionState.newHadoopConf())
-    FleetStats.forFleet(fs, fleet)
+    FleetStats.forFleet(fs, view.files)
   }
 
-  // ONE manifest read per directory part serves BOTH the reader
-  // instructions (dvByPath) and the commit-time compare-and-set
-  // report (dvRelByName): deriving them from separate reads would
-  // let a merge-on-read delete land in between — the tasks would
-  // read under the old binding while the CAS validates the new one,
-  // and the swap would silently drop the delete
-  private lazy val dvSnapshot
-      : Seq[(org.apache.hadoop.fs.Path, Option[FleetManifest.Snapshot])] =
-    Avro.splitGlobs(path).toSeq.flatMap { g =>
-      val gp = new org.apache.hadoop.fs.Path(g)
-      val gfs = gp.getFileSystem(
-        SparkSession.active.sessionState.newHadoopConf())
-      Option(gfs.globStatus(gp)).map(_.toSeq).getOrElse(Seq.empty)
-        .filter(_.isDirectory).map { d =>
-          gfs.makeQualified(d.getPath) ->
-            FleetManifest.snapshotFor(gfs, d.getPath, versionAsOf, branch)
-        }
-    }
-
-  // deletion-vector instructions per full data path: the resolved
-  // snapshot's bindings (exclude mode) plus any caller-passed
-  // `dvSpec` entries (keyed by file NAME — the change-feed reads
-  // address explicit files whose vectors the CURRENT manifest no
-  // longer names); empty on vector-less fleets, costing nothing
+  // deletion-vector instructions per full data path: the view's
+  // bindings (exclude mode) plus any caller-passed `dvSpec` entries
+  // (keyed by file NAME — the change-feed reads address explicit
+  // files whose vectors the CURRENT manifest no longer names); empty
+  // on vector-less fleets, costing nothing
   private lazy val dvByPath: Map[String, DvPartSpec] = {
-    val fromManifest = dvSnapshot.flatMap { case (d, snap) =>
-      snap.map(_.dvs).getOrElse(Map.empty).map { case (n, rel) =>
-        new org.apache.hadoop.fs.Path(d, n).toString ->
-          DvPartSpec(new org.apache.hadoop.fs.Path(d, rel).toString)
-      }
-    }.toMap
+    val fromManifest = view.dvs.map { case (f, (dv, _)) =>
+      f -> DvPartSpec(dv) }
     if (dvSpecs.isEmpty) fromManifest
-    else fromManifest ++ fleet.flatMap { st =>
+    else fromManifest ++ view.files.flatMap { st =>
       dvSpecs.get(st.getPath.getName).map(st.getPath.toString -> _)
     }
   }
@@ -2486,34 +2277,18 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
   private lazy val dvCounts: Map[String, Long] = {
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       SparkSession.active.sessionState.newHadoopConf())
-    val metaCounts: Map[String, Long] = dvSnapshot.flatMap {
-      case (d, snap) => snap.toSeq.flatMap(_.dvMeta.map { case (n, m) =>
-        new org.apache.hadoop.fs.Path(d, n).toString -> m.count
-      })
-    }.toMap
     dvByPath.collect { case (f, spec) if !spec.deltaOnly =>
       // a caller-passed dvSpec may bind a DIFFERENT vector than the
       // manifest's (the CDC image reads) — its count must come from
       // its own header, never the manifest meta
-      val specOverride =
-        dvSpecs.contains(new org.apache.hadoop.fs.Path(f).getName)
-      f -> (if (specOverride) FleetDv.countAt(fs,
-              new org.apache.hadoop.fs.Path(spec.newDv))
-            else metaCounts.getOrElse(f, FleetDv.countAt(fs,
-              new org.apache.hadoop.fs.Path(spec.newDv))))
+      f -> (if (dvSpecs.contains(new org.apache.hadoop.fs.Path(f).getName))
+              FleetDv.countAt(fs, new org.apache.hadoop.fs.Path(spec.newDv))
+            else view.deletedRows(fs, f))
     }
   }
 
   private lazy val anyDeltaOnly: Boolean =
     dvByPath.valuesIterator.exists(_.deltaOnly)
-
-  // the resolved snapshot's RAW bindings (file name → relative vector
-  // name) — what a copy-on-write rewrite must compare-and-set against
-  // at commit so a mid-job merge-on-read delete conflicts instead of
-  // silently resurrecting (reported through onPlannedDvs; derived
-  // from the SAME snapshot read as dvByPath)
-  private lazy val dvRelByName: Map[String, String] =
-    dvSnapshot.flatMap(_._2.toSeq.flatMap(_.dvs.toSeq)).toMap
 
   /** Planning-time data skipping: when filters were pushed, every part
     * file whose recorded min/max/null profile PROVES a pushed conjunct
@@ -2527,8 +2302,8 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
     * partition planning so the planner prices the scan it will run. */
   private def surviving(
       filters: Seq[org.apache.spark.sql.sources.Filter]) =
-    if (filters.isEmpty) fleet
-    else fleet.filterNot { st =>
+    if (filters.isEmpty) view.files
+    else view.files.filterNot { st =>
       fleetStats.get(st.getPath.toString).exists(ps =>
         filters.exists(FleetStats.neverMatches(_, ps)))
     }
@@ -2796,7 +2571,7 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
         if (onPlanned != null) onPlanned(files.map(_.getPath.toString))
         if (onPlannedDvs != null) onPlannedDvs(files.map(st =>
           st.getPath.getName ->
-            dvRelByName.get(st.getPath.getName)).toMap)
+            view.dvRelByName.get(st.getPath.getName)).toMap)
         AvroFleetScan.planSplits(files, maxFileBytes, dvByPath)
     }
 
@@ -2857,9 +2632,8 @@ private[sources] object AvroFleetScan {
   * `fleet.count()` costs one header walk per split at any fleet size. */
 private[sources] class AvroFleetCountScan(tableSchema: StructType,
     path: String, maxFileBytes: Long, countStars: Int,
-    versionAsOf: Option[Long] = None,
-    dvAdjust: Long = 0L,
-    branch: Option[String] = None)
+    resolveView: => FleetView,
+    dvAdjust: Long = 0L)
     extends Scan with Batch with SupportsReportStatistics {
 
   // one LongType partial per pushed COUNT(*) (names are free — Spark
@@ -2873,9 +2647,9 @@ private[sources] class AvroFleetCountScan(tableSchema: StructType,
 
   override def toBatch: Batch = this
 
-  private lazy val fleet = Avro.listFleet(SparkSession.active, path,
-    maxFileBytes, enforceBound = false, versionAsOf = versionAsOf,
-    branch = branch)
+  // the builder's view — the SAME snapshot `dvAdjust` was summed from
+  // at pushdown, so the correction always matches the planned files
+  private lazy val fleet = resolveView.files
 
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong =
@@ -2889,8 +2663,7 @@ private[sources] class AvroFleetCountScan(tableSchema: StructType,
     val splits = AvroFleetScan.planSplits(fleet, maxFileBytes)
     // deletion-vector correction: block headers count RAW rows, so a
     // vectored fleet contributes one constant partial of −(total
-    // vectored positions) — count(*) stays a header walk (plus one
-    // tiny JSON read per vectored file at plan time) instead of
+    // vectored positions) — count(*) stays a header walk instead of
     // falling back to a full decode
     if (dvAdjust == 0L) splits
     else splits :+ (CountAdjustPartition(-dvAdjust): InputPartition)
@@ -2987,9 +2760,8 @@ private[sources] class AvroFleetCountReaderFactory(
 private[sources] class AvroFleetGroupAggScan(tableSchema: StructType,
     path: String, maxFileBytes: Long, groupCols: Seq[String],
     specs: Seq[MetaAggSpec],
-    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    versionAsOf: Option[Long] = None,
-    branch: Option[String] = None)
+    filters: Array[org.apache.spark.sql.sources.Filter],
+    resolveView: => FleetView)
     extends Scan with Batch with SupportsReportStatistics {
 
   import MetaAggSpec._
@@ -3020,14 +2792,16 @@ private[sources] class AvroFleetGroupAggScan(tableSchema: StructType,
 
   override def toBatch: Batch = this
 
-  private lazy val fleet = Avro.listFleet(SparkSession.active, path,
-    maxFileBytes, enforceBound = false, versionAsOf = versionAsOf,
-    branch = branch)
+  // ONE snapshot for the size estimate, the files and their vector
+  // bindings: estimateStatistics and planInputPartitions run at
+  // different times, and a commit retiring vectored files in between
+  // must not pair the old files with the new (absent) bindings
+  private lazy val view = resolveView
 
   private lazy val fleetStats = {
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       SparkSession.active.sessionState.newHadoopConf())
-    FleetStats.forFleet(fs, fleet)
+    FleetStats.forFleet(fs, view.files)
   }
 
   /** The sidecar single-group proof for one file, and the partial-row
@@ -3112,13 +2886,8 @@ private[sources] class AvroFleetGroupAggScan(tableSchema: StructType,
     // vector per record. Skip-proofs stay sound (deletion only shrinks
     // a file's value set, so neverMatches can't wrongly drop a live
     // row).
-    val s = SparkSession.active
-    val dvWithMeta = FleetDv.forPathWithMeta(s, path, versionAsOf,
-      branch)
-    val fs2 = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      s.sessionState.newHadoopConf())
     def binding(st: org.apache.hadoop.fs.FileStatus) =
-      dvWithMeta.get(fs2.makeQualified(st.getPath).toString)
+      view.dvs.get(st.getPath.toString)
     def provenRow(st: org.apache.hadoop.fs.FileStatus)
         : Option[Array[Any]] =
       binding(st) match {
@@ -3128,7 +2897,7 @@ private[sources] class AvroFleetGroupAggScan(tableSchema: StructType,
       }
     // skip tier first: a file the filter provably can't match
     // contributes no partial row and is never scheduled
-    val surviving = fleet.sortBy(_.getPath.toString).filterNot(st =>
+    val surviving = view.files.sortBy(_.getPath.toString).filterNot(st =>
       filters.nonEmpty &&
         fleetStats.get(st.getPath.toString).exists(ps =>
           filters.exists(FleetStats.neverMatches(_, ps))))
@@ -3146,7 +2915,7 @@ private[sources] class AvroFleetGroupAggScan(tableSchema: StructType,
 
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(math.max(1L, fleet.map(_.getLen).sum *
+      java.util.OptionalLong.of(math.max(1L, view.files.map(_.getLen).sum *
         math.max(1, groupCols.size + specs.size) /
         math.max(1, tableSchema.size)))
     override def numRows(): java.util.OptionalLong =

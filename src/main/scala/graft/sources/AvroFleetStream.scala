@@ -178,7 +178,7 @@ private[graft] class AvroFleetMicroBatchStream(tableSchema: StructType,
       else {
         val fleetP = new org.apache.hadoop.fs.Path(path)
         val f = fs
-        val bound = FleetManifest.snapshotFor(f, fleetP, None, branch)
+        val bound = FleetManifest.select(f, fleetP, None, branch)
           .map(_.dvs).getOrElse(Map.empty)
         if (bound.isEmpty) Map.empty
         else admitted.flatMap { case (ap, _) =>

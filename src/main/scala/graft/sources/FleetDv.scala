@@ -407,41 +407,6 @@ private[graft] object FleetDv {
         s"malformed deletion vector $p: deleted = $other")
     }
 
-  /** Deletion-vector bindings for every transactional-fleet DIRECTORY
-    * in a (possibly multi-glob) load path, as FULL data-file path →
-    * FULL vector path under the `versionAsOf` (None = current)
-    * snapshot. Explicit FILE paths contribute nothing — a surgical
-    * per-file load (the CDC image reads) is a RAW read by design. */
-  def forPath(s: org.apache.spark.sql.SparkSession, glob: String,
-      versionAsOf: Option[Long],
-      branch: Option[String] = None): Map[String, String] =
-    forPathWithMeta(s, glob, versionAsOf, branch)
-      .map { case (f, (dv, _)) => f -> dv }
-
-  /** [[forPath]] plus each binding's manifest-carried metadata
-    * ([[FleetManifest.DvMeta]]: exact count, optional deleted-value
-    * stats) — what lets aggregate PLANNING on a vectored fleet stay
-    * zero-I/O (no per-vector header read; r17 verdict #1). `None` meta
-    * = a legacy binding; callers fall back to [[countAt]]. */
-  def forPathWithMeta(s: org.apache.spark.sql.SparkSession, glob: String,
-      versionAsOf: Option[Long],
-      branch: Option[String] = None)
-      : Map[String, (String, Option[FleetManifest.DvMeta])] =
-    Avro.splitGlobs(glob).toSeq.flatMap { g =>
-      val p = new Path(g)
-      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-      Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
-        .filter(_.isDirectory).flatMap { d =>
-          FleetManifest.snapshotFor(fs, d.getPath, versionAsOf, branch)
-            .toSeq
-            .flatMap(snap => snap.dvs.toSeq.map { case (f, dvRel) =>
-              fs.makeQualified(new Path(d.getPath, f)).toString ->
-                (fs.makeQualified(new Path(d.getPath, dvRel)).toString,
-                  snap.dvMeta.get(f))
-            })
-        }
-    }.toMap
-
   /** Just the deleted-row count — a dozen HEADER bytes for a binary
     * leaf, one tiny JSON for a chain/legacy vector; never positions.
     * Lets driver-side count math stay O(1) per vector. */

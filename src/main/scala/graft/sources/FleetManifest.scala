@@ -402,23 +402,33 @@ private[graft] object FleetManifest {
     catch { case _: java.io.FileNotFoundException => None }
   }
 
-  /** The snapshot a reader of `versionAsOf` (None = current) sees —
-    * the selection rule [[resolve]] applies, without the
-    * file-statusing. `branch` — the PER-READ spelling
+  /** THE read-side snapshot selection: the generation a reader of
+    * `versionAsOf` (None = current) sees, or None when the directory
+    * is manifest-less (the caller falls back to the raw-listing
+    * contract). A missing `versionAsOf` generation is a loud "no such
+    * manifest version" error. `branch` — the PER-READ spelling
     * (`option("branch", name)`, r18): resolve that branch's HEAD
     * explicitly, overriding the session conf; the branch must exist at
     * `dir` (an explicit option deserves a loud miss, unlike the
     * session conf's opt-in fall-through). Mutually exclusive with
     * `versionAsOf` — a branch has its own version sequence. */
-  def snapshotFor(fs: FileSystem, dir: Path,
-      versionAsOf: Option[Long],
+  def select(fs: FileSystem, dir: Path, versionAsOf: Option[Long],
       branch: Option[String] = None): Option[Snapshot] =
     (versionAsOf, branch) match {
       case (Some(_), Some(_)) => throw new IllegalArgumentException(
         s"versionAsOf and branch are mutually exclusive at $dir — a " +
           "branch has its own version sequence")
       case (_, Some(b)) => Some(requireBranchHead(fs, dir, b))
-      case (Some(v), None) => snapshotAt(fs, dir, v)
+      case (Some(v), None) =>
+        snapshotAt(fs, dir, v).orElse {
+          val avail = versions(fs, dir)
+          throw new IllegalArgumentException(
+            if (avail.isEmpty)
+              s"versionAsOf=$v: fleet at $dir has no manifest history " +
+                "(only transactionally-committed fleets are versioned)"
+            else s"versionAsOf=$v: no such manifest version at $dir " +
+              s"(available: ${avail.mkString(", ")})")
+        }
       case (None, None) => current(fs, dir)
     }
 
@@ -961,10 +971,6 @@ private[graft] object FleetManifest {
     * [[CheckpointEvery]]-th) always write full — the reconstruction
     * depth bound. */
   private def renderDelta(next: Snapshot, base: Snapshot): Option[String] = {
-    // kill switch for A/B measurement and emergency rollback — full
-    // snapshots are always a valid (just O(files)) encoding
-    if (System.getProperty("graft.manifest.delta", "true") == "false")
-      return None
     if (next.version % CheckpointEvery == 0L) return None
     if (next.version != base.version + 1L) return None
     val nextSet = next.files.toSet
@@ -1383,49 +1389,34 @@ private[graft] object FleetManifest {
                 catch { case NonFatal(_) => false })
   }
 
-  /** Reader-side resolution: the file set of the current (or
-    * `versionAsOf`) snapshot as live `FileStatus`es, or None when the
-    * directory is manifest-less (caller falls back to the raw-listing
-    * contract). A manifest-listed file that no longer exists is a
-    * HARD error — it means a retained generation was GC'd or
-    * externally deleted, and silently dropping it would be silent row
-    * loss (upstream Spark's ignoreMissingFiles=false posture). */
+  /** Reader-side resolution: the file set of the [[select]]ed snapshot
+    * as live `FileStatus`es, or None when the directory is
+    * manifest-less (caller falls back to the raw-listing contract). */
   def resolve(fs: FileSystem, dir: Path, versionAsOf: Option[Long],
       branch: Option[String] = None)
-      : Option[Seq[FileStatus]] = {
-    val snap = (versionAsOf, branch) match {
-      case (Some(_), Some(_)) => throw new IllegalArgumentException(
-        s"versionAsOf and branch are mutually exclusive at $dir — a " +
-          "branch has its own version sequence")
-      case (_, Some(b)) => Some(requireBranchHead(fs, dir, b))
-      case (Some(v), None) =>
-        val avail = versions(fs, dir)
-        if (avail.isEmpty)
-          throw new IllegalArgumentException(
-            s"versionAsOf=$v: fleet at $dir has no manifest history " +
-              "(only transactionally-committed fleets are versioned)")
-        Some(snapshotAt(fs, dir, v).getOrElse(
-          throw new IllegalArgumentException(
-            s"versionAsOf=$v: no such manifest version at $dir " +
-              s"(available: ${avail.mkString(", ")})")))
-      case (None, None) => current(fs, dir)
-    }
-    snap.map { sn =>
-      // one listing serves every lookup; manifest names absent from it
-      // get one direct probe before the hard error (listing races)
-      val listed = fs.listStatus(dir).iterator
-        .filter(_.isFile).map(st => st.getPath.getName -> st).toMap
-      sn.files.map { n =>
-        listed.getOrElse(n,
-          try fs.getFileStatus(new Path(dir, n))
-          catch {
-            case _: java.io.FileNotFoundException =>
-              throw new java.io.FileNotFoundException(
-                s"fleet manifest v${sn.version} at $dir references " +
-                  s"missing file $n — generation expired " +
-                  "(FleetCompact.expireVersions) or externally deleted")
-          })
-      }
+      : Option[Seq[FileStatus]] =
+    select(fs, dir, versionAsOf, branch).map(statuses(fs, dir, _))
+
+  /** One snapshot's files as live `FileStatus`es from ONE listing of
+    * `dir`. A manifest-listed file that no longer exists is a HARD
+    * error — it means a retained generation was GC'd or externally
+    * deleted, and silently dropping it would be silent row loss
+    * (upstream Spark's ignoreMissingFiles=false posture). */
+  def statuses(fs: FileSystem, dir: Path, sn: Snapshot): Seq[FileStatus] = {
+    // one listing serves every lookup; manifest names absent from it
+    // get one direct probe before the hard error (listing races)
+    val listed = fs.listStatus(dir).iterator
+      .filter(_.isFile).map(st => st.getPath.getName -> st).toMap
+    sn.files.map { n =>
+      listed.getOrElse(n,
+        try fs.getFileStatus(new Path(dir, n))
+        catch {
+          case _: java.io.FileNotFoundException =>
+            throw new java.io.FileNotFoundException(
+              s"fleet manifest v${sn.version} at $dir references " +
+                s"missing file $n — generation expired " +
+                "(FleetCompact.expireVersions) or externally deleted")
+        })
     }
   }
 }

@@ -63,10 +63,8 @@ object FleetMerge {
       retainOld: Boolean = false): CowResult = {
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val fs = dirPath.getFileSystem(s.sessionState.newHadoopConf())
-    val fleet = Avro.listFleet(s, dir, Avro.MaxIngestFileBytes,
-      enforceBound = false)
-    val schema = Avro.toSparkSchema(
-      Avro.peekSchema(s, dir, Avro.MaxIngestFileBytes))
+    val fleet = Avro.listFleet(s, dir)
+    val schema = Avro.toSparkSchema(Avro.peekSchema(s, dir))
     require(schema.fieldNames.contains(key),
       s"merge key '$key' not in fleet schema ${schema.fieldNames.toSeq}")
     val keyDt = schema(key).dataType

@@ -123,16 +123,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * pinned — retention retains tagged versions, so the name stays
     * readable until the tag is dropped). */
   override def loadTable(ident: Identifier, version: String): Table =
-    loadAt(ident, versionAsOf = Some(version.toLongOption.getOrElse {
-      require(ident.namespace().isEmpty,
-        "VERSION AS OF applies to avro fleets only")
-      val dir = hPath(avroDir(ident.name()))
-      FleetManifest.tagVersion(fs, dir, version).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft VERSION AS OF: '$version' is neither a manifest " +
-            s"version number nor a tag of '${ident.name()}' (tags: " +
-            s"${FleetManifest.tags(fs, dir).map(_._1).mkString(", ")})"))
-    }))
+    loadAt(ident, versionAsOf = Some(versionAt(ident,
+      FleetView.VersionOrTag("VERSION AS OF", version))))
 
   /** SQL `TIMESTAMP AS OF` — binds the timestamp (Spark hands it in
     * MICROSECONDS) to the newest manifest generation committed at or
@@ -140,26 +132,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * mtime fallback for pre-stamp legacy versions — so a
     * copied/moved fleet keeps its time-travel index). The resolved
     * read is exactly the `VERSION AS OF` read of that generation. */
-  override def loadTable(ident: Identifier, timestamp: Long): Table = {
+  override def loadTable(ident: Identifier, timestamp: Long): Table =
+    loadAt(ident, versionAsOf = Some(versionAt(ident,
+      FleetView.AtOrBefore("TIMESTAMP AS OF",
+        java.time.Instant.ofEpochMilli(timestamp / 1000L).toString))))
+
+  /** One fleet's AS OF version through the shared addressing rule. */
+  private def versionAt(ident: Identifier, asOf: FleetView.AsOf): Long = {
     require(ident.namespace().isEmpty,
-      "TIMESTAMP AS OF applies to avro fleets only")
+      s"${asOf.opt} applies to avro fleets only")
     val dir = hPath(avroDir(ident.name()))
     if (!fs.exists(dir) || !fs.getFileStatus(dir).isDirectory)
       noSuchTable(ident)
-    val tsMs = timestamp / 1000L
-    val withTimes = FleetManifest.versionsWithTimes(fs, dir)
-    require(withTimes.nonEmpty,
-      s"TIMESTAMP AS OF: fleet '${ident.name()}' has no manifest " +
-        "history (only transactionally-committed fleets are versioned)")
-    // filter-then-max, not takeWhile: robust to clock skew between
-    // committers (version order is authoritative, mtimes advisory)
-    val resolved = withTimes.filter(_._2 <= tsMs)
-      .map(_._1).maxOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"TIMESTAMP AS OF ${java.time.Instant.ofEpochMilli(tsMs)}: " +
-            s"before fleet '${ident.name()}'s first commit at " +
-            s"${java.time.Instant.ofEpochMilli(withTimes.head._2)}"))
-    loadAt(ident, versionAsOf = Some(resolved))
+    FleetView.versionAt(fs, dir, asOf)
   }
 
   private def loadAt(ident: Identifier, versionAsOf: Option[Long]): Table =
@@ -185,7 +170,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         val marker = FleetSchemaMarker.resolveAt(fs, p,
           FleetManifest.activeBranchAt(fs, p), effVersion)
         val schema = marker.map(_.schema).getOrElse(Avro.toSparkSchema(
-          Avro.peekSchema(spark, dir, Avro.MaxIngestFileBytes)))
+          Avro.peekSchema(spark, dir)))
         new AvroFleetTable(schema, dir, Avro.MaxIngestFileBytes,
           evolve = marker.isDefined,
           versionAsOf = effVersion,
@@ -258,7 +243,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val branch = FleetManifest.activeBranchAt(fs, p)
     val existing = FleetSchemaMarker.resolve(fs, p, branch)
     var schema = existing.map(_.schema).getOrElse(Avro.toSparkSchema(
-      Avro.peekSchema(spark, dir, Avro.MaxIngestFileBytes)))
+      Avro.peekSchema(spark, dir)))
     var aliases = existing.map(_.aliases)
       .getOrElse(Map.empty[String, Seq[String]])
     var dropped = existing.map(_.dropped).getOrElse(Seq.empty)

@@ -507,10 +507,7 @@ private[graft] object ParquetFleet {
     * Some(versionOfTag(s, dir, "release-7")))`. */
   def versionOfTag(s: SparkSession, dir: String, name: String): Long = {
     val (fs, p) = fsp(s, dir)
-    FleetManifest.tagVersion(fs, p, name).getOrElse(
-      throw new IllegalArgumentException(
-        s"no tag '$name' at $dir (tags: ${
-          FleetManifest.tags(fs, p).map(_._1).sorted.mkString(", ")})"))
+    FleetView.versionAt(fs, p, FleetView.Tag("versionOfTag", name))
   }
 
   /** TIER MIGRATION: materialize an avro fleet's CURRENT snapshot
@@ -541,18 +538,12 @@ private[graft] object ParquetFleet {
   /** TIMESTAMP addressing, in parity with the avro tier's two AS OF
     * spellings: resolve `raw` (any spelling the fleet options accept —
     * ISO instant/date-time/date or epoch millis) to the LATEST version
-    * committed at-or-before it, through the same commit-time index
-    * (`FleetManifest.versionsWithTimes`). Compose with `read`/`scan`:
+    * committed at-or-before it, through the avro tier's addressing
+    * rule ([[FleetView.versionAt]]). Compose with `read`/`scan`:
     * `read(s, dir, Some(versionAtTimestamp(s, dir, ts)))`. */
   def versionAtTimestamp(s: SparkSession, dir: String, raw: String): Long = {
     val (fs, p) = fsp(s, dir)
-    val withTimes = FleetManifest.versionsWithTimes(fs, p)
-    require(withTimes.nonEmpty, s"no parquet fleet at $dir (no manifest)")
-    val ts = AvroFleetTable.parseTsOption("timestampAsOf", raw)
-    withTimes.filter(_._2 <= ts).map(_._1).maxOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"timestampAsOf '$raw' predates the first commit at $dir " +
-          s"(${java.time.Instant.ofEpochMilli(withTimes.head._2)})"))
+    FleetView.versionAt(fs, p, FleetView.AtOrBefore("timestampAsOf", raw))
   }
 
   /** METADATA-TIER COUNT(*): the snapshot's row count from sidecar

@@ -67,7 +67,6 @@ private[graft] object ParquetFleetStats {
   def capture(s: SparkSession, dir: String, names: Seq[String]): Unit =
     try {
       if (names.isEmpty) return
-      if (!s.conf.get("spark.graft.parquet.stats", "true").toBoolean) return
       val hconf = s.sessionState.newHadoopConf()
       val entries: Seq[(String, FleetStats.PartStats)] =
         if (names.size <= 16)

@@ -12,13 +12,11 @@ import org.apache.spark.sql.SparkSession
   * Pure driver-side measurement (manifest commits launch no jobs):
   * grows one fleet to `files` via 1-file append commits and reports
   * the mean commit latency per 1k-file window, plus the bytes of the
-  * newest version file. Run both postures:
+  * newest version file:
   *
   *   sbt "runMain graft.tools.ManifestBench 10000"
-  *   sbt -Dgraft.manifest.delta=false "runMain graft.tools.ManifestBench 10000"
   *
-  * (The JVM prop rides sbt's fork; window means are robust to GC
-  * blips at these sub-ms scales.) */
+  * (Window means are robust to GC blips at these sub-ms scales.) */
 object ManifestBench {
   def main(args: Array[String]): Unit = {
     val files = if (args.length > 0) args(0).toInt else 10000
@@ -30,8 +28,7 @@ object ManifestBench {
     val dir = new org.apache.hadoop.fs.Path(s"$root/t.avro")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     fs.mkdirs(dir)
-    val delta = System.getProperty("graft.manifest.delta", "true")
-    println(s"[manifestbench] delta=$delta files=$files window=$window")
+    println(s"[manifestbench] files=$files window=$window")
     var i = 0
     var winNanos = 0L
     while (i < files) {

@@ -49,7 +49,7 @@ object GraftSession {
     // shuffle width, so every consumer stage scans 32+ near-empty
     // cache partitions — measured 45% off q_dedup_embcos_lsh / 47%
     // off q_text_fingerprint warm, −19% across the cached dedup/text
-    // family (ConfBench A/B, OPTIMIZATION_r21.md §G7). Scale-adaptive
+    // family (the A/B in OPTIMIZATION_r21.md §G7). Scale-adaptive
     // by construction: partition count derives from cached bytes.
     .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
       "true")

@@ -566,6 +566,59 @@ class CatalogSpec extends SparkSpec {
     intercept[Exception] { countAt(t1 - 50000) } // before first commit
   }
 
+  test("every AS OF spelling addresses the same generation") {
+    import spark.implicits._
+    val root = graft.util.Scratch.dir("cat_asof_all")
+    val dir = s"$root/t.avro"
+    def append(from: Long, until: Long, mode: String): Unit =
+      spark.range(from, until).select($"id").repartition(1)
+        .write.format("graft-avro").mode(mode).save(dir)
+    append(0, 10, "overwrite")  // v1: 10 rows
+    append(10, 15, "append")    // v2: 15 rows
+    append(15, 22, "append")    // v3: 22 rows
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val t1 = 1000000000000L
+    Seq(1L, 2L, 3L).foreach(v => graft.sources.FleetManifest
+      .restampCommitTs(fs, p, v, t1 + (v - 1) * 100000L))
+    val t2 = t1 + 100000L
+    val s2 = catSession(root)
+    s2.sql("CALL graft.system.create_tag('t', 'mid', 2)")
+    def dfCount(k: String, v: String): Long =
+      spark.read.format("graft-avro").option(k, v).load(dir).count()
+    def sqlCount(asOf: String): Long =
+      s2.sql(s"SELECT count(*) FROM graft.t $asOf").as[Long].head()
+    val between = t2 + 50000L
+    val spellings = Seq(
+      "versionAsOf 2" -> dfCount("versionAsOf", "2"),
+      "versionAsOf tag" -> dfCount("versionAsOf", "mid"),
+      "timestampAsOf" -> dfCount("timestampAsOf", between.toString),
+      "timestampAsOf at the commit" -> dfCount("timestampAsOf",
+        java.time.Instant.ofEpochMilli(t2).toString),
+      "VERSION AS OF 2" -> sqlCount("VERSION AS OF 2"),
+      "VERSION AS OF tag" -> sqlCount("VERSION AS OF 'mid'"),
+      "TIMESTAMP AS OF" ->
+        sqlCount(s"TIMESTAMP AS OF timestamp_millis(${between}L)"))
+    spellings.foreach { case (name, n) =>
+      assert(n == 15L, s"$name resolved a $n-row generation, not v2") }
+    // an inclusive change-feed range [v2, v2]: the startingTimestamp
+    // floor (strictly before) and the endingTimestamp ceiling (at or
+    // before) hit the same bounds as the version spelling
+    def feed(opts: (String, String)*): Seq[Long] = {
+      var r = spark.read.format("graft-avro")
+        .option("readChangeFeed", "true")
+      opts.foreach { case (k, v) => r = r.option(k, v) }
+      r.load(dir).select("id").as[Long].collect().toSeq.sorted
+    }
+    val byVersion = feed("startingVersion" -> "1", "endingVersion" -> "2")
+    assert(byVersion == (10L until 15L), byVersion.toString)
+    assert(feed("startingTimestamp" -> t2.toString,
+      "endingTimestamp" -> between.toString) == byVersion)
+    assert(feed("startingTimestamp" ->
+      java.time.Instant.ofEpochMilli(t2).toString,
+      "endingTimestamp" -> t2.toString) == byVersion)
+  }
+
   test("CALL remove_orphans GCs only unreferenced files past the grace window") {
     val root = graft.util.Scratch.dir("cat_orphans")
     val s2 = catSession(root)

@@ -497,7 +497,7 @@ class MorRowLevelSpec extends SparkSpec {
     s2.sql("DELETE FROM graft.cust WHERE c_custkey % 31 = 7")
     val v1 = manifest(fleet).version
     assert(manifest(fleet).files.toSet ==
-      graft.sources.FleetManifest.snapshotFor(
+      graft.sources.FleetManifest.select(
         new org.apache.hadoop.fs.Path(fleet).getFileSystem(
           spark.sessionState.newHadoopConf()),
         new org.apache.hadoop.fs.Path(fleet), Some(v0)).get.files.toSet,

@@ -106,8 +106,7 @@ class SpjSpec extends SparkSpec {
     writeClustered(ev, s"$root/ev.avro")
     val p = new org.apache.hadoop.fs.Path(s"$root/ev.avro")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val fleet = graft.sources.Avro.listFleet(spark, s"$root/ev.avro",
-      Long.MaxValue, enforceBound = false)
+    val fleet = graft.sources.Avro.listFleet(spark, s"$root/ev.avro")
     val stats = graft.sources.FleetStats.forFleet(fs, fleet)
     assert(fleet.nonEmpty)
     // an empty task still commits one schema-bearing rows=0 container
