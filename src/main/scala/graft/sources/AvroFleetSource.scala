@@ -21,7 +21,9 @@ import graft.util.SerializableHadoopConf
   * (`spark.read.format("graft-avro").load(dirOrGlob)`): the same
   * listing contract as [[FleetView]] (hidden temps/markers
   * filtered, `_SUCCESS` required on part-file directories, per-file
-  * size bound), one `InputPartition` per container file, and — the
+  * size bound), small container files packed into core-sized read
+  * partitions by Spark's own file-source rule
+  * ([[AvroFleetScan.planGroups]]), and — the
   * point of going through Catalyst instead of an RDD — REAL column
   * pruning: the connector implements `SupportsPushDownRequiredColumns`,
   * so ANY downstream projection reaches the executors as an Avro
@@ -1663,19 +1665,19 @@ private[sources] class AvroFleetScanBuilder(fullSchema: StructType,
     required = requiredSchema
 
   // PARTIAL limit pushdown (the default isPartiallyPushed contract):
-  // each file stops DECODING after `limit` records — a head()/show()
-  // over a fleet costs O(limit) per file, not a full decode — and
-  // Spark's own Limit on top enforces the global count
+  // each read partition stops DECODING after `limit` records — a
+  // head()/show() over a fleet costs O(limit) per task, not a full
+  // decode — and Spark's own Limit on top enforces the global count
   override def pushLimit(l: Int): Boolean =
     if (cdc) false else { limit = Some(l); true }
 
   /** PARTIAL TopN pushdown — the `ORDER BY k LIMIT n` shape at fleet
-    * scale: each split folds its decoded (post-filter) rows through a
-    * BOUNDED n-row heap honoring direction and null ordering, so a
-    * task ships n rows instead of its whole split and Spark's final
-    * sort merges |splits|·n rows instead of the fleet. Accepted only
-    * when every sort key is a plain orderable column — expression
-    * keys stay with Spark. */
+    * scale: each read partition folds its decoded (post-filter) rows
+    * through a BOUNDED n-row heap honoring direction and null
+    * ordering, so a task ships n rows instead of its whole group and
+    * Spark's final sort merges |partitions|·n rows instead of the
+    * fleet. Accepted only when every sort key is a plain orderable
+    * column — expression keys stay with Spark. */
   override def pushTopN(orders: Array[
       org.apache.spark.sql.connector.expressions.SortOrder],
       l: Int): Boolean = {
@@ -2554,8 +2556,7 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
         val dt = fullSchema(fullSchema.fieldIndex(clusterBy.get)).dataType
         groups.map { case (k, files) =>
           AvroClusterPartition(k, dt,
-            AvroFleetScan.planSplits(files, maxFileBytes, dvByPath)
-              .map(_.asInstanceOf[AvroFilePartition]))
+            AvroFleetScan.planSplits(files, maxFileBytes, dvByPath))
         }.toArray[InputPartition]
       case None =>
         val base = topNPrune(surviving(pushedFilters.toSeq ++ runtimeFilters))
@@ -2572,7 +2573,7 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
         if (onPlannedDvs != null) onPlannedDvs(files.map(st =>
           st.getPath.getName ->
             view.dvRelByName.get(st.getPath.getName)).toMap)
-        AvroFleetScan.planSplits(files, maxFileBytes, dvByPath)
+        AvroFleetScan.planGroups(files, maxFileBytes, dvByPath)
     }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -2604,32 +2605,74 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
 }
 
 private[sources] object AvroFleetScan {
-  /** Deterministic partition order (listing order is no contract);
-    * files over maxFileBytes become MULTIPLE byte-range splits — the
-    * reader aligns each range to avro sync markers, so one oversized
-    * external container file fans out across tasks instead of either
-    * failing the ingest bound or straggling as one giant task. */
+  /** The byte-range splits of `fleet`, in path order (listing order is
+    * no contract); files over maxFileBytes become MULTIPLE byte-range
+    * splits — the reader aligns each range to avro sync markers, so
+    * one oversized external container file fans out across tasks
+    * instead of either failing the ingest bound or straggling as one
+    * giant task. Each split carries its file's plan-time length, so no
+    * reader stats the file again. The streaming planners schedule one
+    * split per partition; batch scans pack them ([[planGroups]]). */
   def planSplits(fleet: Seq[org.apache.hadoop.fs.FileStatus],
       maxFileBytes: Long,
       dvByPath: Map[String, DvPartSpec] = Map.empty)
-      : Array[InputPartition] =
+      : Seq[AvroFilePartition] =
     fleet.sortBy(_.getPath.toString).flatMap { st =>
       val len = st.getLen
       val n = math.max(1L, math.ceil(len.toDouble / maxFileBytes).toLong)
       val dv = dvByPath.get(st.getPath.toString)
       (0L until n).map { i =>
         AvroFilePartition(st.getPath.toString, i * maxFileBytes,
-          if (i == n - 1) len else (i + 1) * maxFileBytes, dv)
+          if (i == n - 1) len else (i + 1) * maxFileBytes, len, dv)
       }
-    }.toArray[InputPartition]
+    }
+
+  /** Batch read partitions: [[planSplits]] packed into
+    * [[AvroFileGroup]]s by Spark's own file-source rule, so a fleet of
+    * small files runs about one task per core instead of one per file.
+    * The width is `FilePartition.maxSplitBytes` — min(
+    * `spark.sql.files.maxPartitionBytes`, max(
+    * `spark.sql.files.openCostInBytes`, Σ(len + openCost) /
+    * (`spark.sql.files.minPartitionNum` or the default parallelism)))
+    * — and a group closes when the next split would push it past that
+    * width, each split costing its length plus the open cost (the
+    * next-fit of `FilePartition.getFilePartitions`). Unlike Spark,
+    * splits are packed in path order, not by descending size: a plain
+    * scan returns rows in the same order as a one-file-per-partition
+    * read, and the splits of one file stay adjacent. */
+  def planGroups(fleet: Seq[org.apache.hadoop.fs.FileStatus],
+      maxFileBytes: Long,
+      dvByPath: Map[String, DvPartSpec] = Map.empty)
+      : Array[InputPartition] = {
+    val splits = planSplits(fleet, maxFileBytes, dvByPath)
+    val s = SparkSession.active
+    val openCost = s.sessionState.conf.filesOpenCostInBytes
+    val width = org.apache.spark.sql.execution.datasources.FilePartition
+      .maxSplitBytes(s, splits.map(_.length + openCost).sum)
+    val groups = scala.collection.mutable.ArrayBuffer.empty[AvroFileGroup]
+    var cur = Vector.empty[AvroFilePartition]
+    var size = 0L
+    splits.foreach { sp =>
+      if (cur.nonEmpty && size + sp.length > width) {
+        groups += new AvroFileGroup(cur)
+        cur = Vector.empty
+        size = 0L
+      }
+      cur :+= sp
+      size += sp.length + openCost
+    }
+    if (cur.nonEmpty) groups += new AvroFileGroup(cur)
+    groups.toArray[InputPartition]
+  }
 }
 
 /** Count-mode scan for a pushed ungrouped COUNT(*): same fleet listing
-  * and sync-marker splits as the row scan, but each task emits ONE row
-  * of per-split partial counts read from the OCF BLOCK HEADERS — the
-  * raw block bytes are skipped still-compressed, no record is ever
-  * decoded. Spark's rewritten final aggregate sums the partials, so
-  * `fleet.count()` costs one header walk per split at any fleet size. */
+  * and packed sync-marker splits as the row scan, but each task emits
+  * ONE row of partial counts summed over its group's OCF BLOCK HEADERS
+  * — the raw block bytes are skipped still-compressed, no record is
+  * ever decoded. Spark's rewritten final aggregate sums the partials,
+  * so `fleet.count()` costs one header walk per split at any fleet
+  * size. */
 private[sources] class AvroFleetCountScan(tableSchema: StructType,
     path: String, maxFileBytes: Long, countStars: Int,
     resolveView: => FleetView,
@@ -2660,13 +2703,13 @@ private[sources] class AvroFleetCountScan(tableSchema: StructType,
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val splits = AvroFleetScan.planSplits(fleet, maxFileBytes)
+    val groups = AvroFleetScan.planGroups(fleet, maxFileBytes)
     // deletion-vector correction: block headers count RAW rows, so a
     // vectored fleet contributes one constant partial of −(total
     // vectored positions) — count(*) stays a header walk instead of
     // falling back to a full decode
-    if (dvAdjust == 0L) splits
-    else splits :+ (CountAdjustPartition(-dvAdjust): InputPartition)
+    if (dvAdjust == 0L) groups
+    else groups :+ (CountAdjustPartition(-dvAdjust): InputPartition)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -2697,18 +2740,16 @@ private[sources] class AvroFleetCountReaderFactory(
         }
       case _ => ()
     }
-    val part = p.asInstanceOf[AvroFilePartition]
+    val group = p.asInstanceOf[AvroFileGroup]
     new PartitionReader[InternalRow] {
       private var done = false
       private var count = 0L
 
-      override def next(): Boolean = {
-        if (done) return false
+      private def countSplit(part: AvroFilePartition): Unit = {
         val path = new org.apache.hadoop.fs.Path(part.file)
         val fs = path.getFileSystem(conf.value)
         val stream = new org.apache.avro.file.DataFileReader(
-          new HadoopSeekableInput(fs.open(path),
-            fs.getFileStatus(path).getLen),
+          new HadoopSeekableInput(fs.open(path), part.fileLen),
           new org.apache.avro.generic.GenericDatumReader[
             org.apache.avro.generic.GenericRecord]())
         try {
@@ -2729,6 +2770,11 @@ private[sources] class AvroFleetCountReaderFactory(
             stream.nextBlock()
           }
         } finally stream.close()
+      }
+
+      override def next(): Boolean = {
+        if (done) return false
+        group.splits.foreach(countSplit)
         done = true
         true
       }
@@ -2753,10 +2799,11 @@ private[sources] class AvroFleetCountReaderFactory(
   *    laid down partitioned by the group key — the common 100 TB
   *    layout — EVERY file takes this path and the whole grouped rollup
   *    is a metadata read.
-  *  - `AvroFilePartition` — everything else decodes, but aggregates
-  *    DURING the decode into a per-split hash (reader-schema pruning
-  *    still skips unreferenced columns), emitting one row per group
-  *    per split instead of shipping raw rows into Catalyst. */
+  *  - `AvroFileGroup` — everything else decodes, packed like the row
+  *    scan, and aggregates DURING the decode into one hash per packed
+  *    group (reader-schema pruning still skips unreferenced columns),
+  *    emitting one row per aggregate group per task instead of
+  *    shipping raw rows into Catalyst. */
 private[sources] class AvroFleetGroupAggScan(tableSchema: StructType,
     path: String, maxFileBytes: Long, groupCols: Seq[String],
     specs: Seq[MetaAggSpec],
@@ -2910,7 +2957,7 @@ private[sources] class AvroFleetGroupAggScan(tableSchema: StructType,
         .map { case (full, _) => st.getPath.toString -> DvPartSpec(full) }
     }.toMap
     metaParts.toArray[InputPartition] ++
-      AvroFleetScan.planSplits(decode, maxFileBytes, byPath)
+      AvroFleetScan.planGroups(decode, maxFileBytes, byPath)
   }
 
   override def estimateStatistics(): Statistics = new Statistics {
@@ -2953,14 +3000,14 @@ private[sources] class AvroFleetGroupAggReaderFactory(
           override def get(): InternalRow = new GenericInternalRow(values)
           override def close(): Unit = ()
         }
-      case part: AvroFilePartition => decodeReader(part)
+      case group: AvroFileGroup => decodeReader(group)
     }
 
-  /** Streaming decode of the split with an in-task hash aggregate:
-    * reader-schema pruning decodes only group+aggregate columns, and
-    * the task emits one partial row per group — memory is O(groups in
-    * split), the partial-aggregate contract. */
-  private def decodeReader(part: AvroFilePartition)
+  /** Streaming decode of a packed group's splits with ONE in-task hash
+    * aggregate: reader-schema pruning decodes only group+aggregate
+    * columns, and the task emits one partial row per aggregate group —
+    * memory is O(groups in the task), the partial-aggregate contract. */
+  private def decodeReader(group: AvroFileGroup)
       : PartitionReader[InternalRow] = new PartitionReader[InternalRow] {
     private val aggCols = specs.collect {
       case CountCol(c) => c; case MinCol(c) => c; case MaxCol(c) => c
@@ -2969,15 +3016,27 @@ private[sources] class AvroFleetGroupAggReaderFactory(
       (groupCols ++ aggCols ++ filters.toSeq.flatMap(_.references.toSeq))
         .distinct.toIndexedSeq
     private var out: Iterator[InternalRow] = _
+    // insertion-ordered so partial-row order is deterministic
+    private val groups = new java.util.LinkedHashMap[Seq[Any], Array[Any]]()
 
     private def aggregate(): Iterator[InternalRow] = {
+      group.splits.foreach(aggregateSplit)
+      scala.jdk.CollectionConverters.IteratorHasAsScala(
+        groups.entrySet().iterator()).asScala.map { e =>
+        new GenericInternalRow(
+          (e.getKey.map(AvroFleetReaderFactory.toCatalyst) ++
+            e.getValue.toSeq.map(AvroFleetReaderFactory.toCatalyst))
+            .toArray)
+      }.toVector.iterator
+    }
+
+    private def aggregateSplit(part: AvroFilePartition): Unit = {
       val path = new org.apache.hadoop.fs.Path(part.file)
       val fs = path.getFileSystem(conf.value)
       val datumReader = new org.apache.avro.generic.GenericDatumReader[
         org.apache.avro.generic.GenericRecord]()
       val stream = new org.apache.avro.file.DataFileReader(
-        new HadoopSeekableInput(fs.open(path),
-          fs.getFileStatus(path).getLen), datumReader)
+        new HadoopSeekableInput(fs.open(path), part.fileLen), datumReader)
       try {
         val writerSpark = Avro.toSparkSchema(stream.getSchema)
         require(writerSpark.map(f => (f.name, f.dataType)) ==
@@ -3002,8 +3061,6 @@ private[sources] class AvroFleetGroupAggReaderFactory(
         }
         var curSync = Long.MinValue
         var curRidx = -1L
-        // insertion-ordered so partial-row order is deterministic
-        val groups = new java.util.LinkedHashMap[Seq[Any], Array[Any]]()
         stream.sync(part.start)
         while (stream.hasNext && !stream.pastSync(part.end)) {
           val ps = stream.previousSync()
@@ -3043,13 +3100,6 @@ private[sources] class AvroFleetGroupAggReaderFactory(
           }
           } // filter gate
         }
-        scala.jdk.CollectionConverters.IteratorHasAsScala(
-          groups.entrySet().iterator()).asScala.map { e =>
-          new GenericInternalRow(
-            (e.getKey.map(AvroFleetReaderFactory.toCatalyst) ++
-              e.getValue.toSeq.map(AvroFleetReaderFactory.toCatalyst))
-              .toArray)
-        }.toVector.iterator
       } finally stream.close()
     }
 
@@ -3062,13 +3112,8 @@ private[sources] class AvroFleetGroupAggReaderFactory(
   }
 }
 
-/** One byte range of one container file. Whole small files are a
-  * single `[0, len)` range; ranges align to sync markers at read time
-  * (`DataFileReader.sync(start)` / `pastSync(end)` — the standard
-  * avro split convention: a block belongs to the range containing its
-  * first byte, so contiguous ranges partition the blocks exactly). */
 /** Per-split deletion-vector instruction (vector paths are FULL
-  * paths; the reader loads them — tiny JSONs — once per task):
+  * paths; the reader loads them — tiny JSONs — once per split):
   *
   *  - `deltaOnly = false` (the read path): EXCLUDE `newDv`'s
   *    positions — the split serves the file's live rows.
@@ -3079,18 +3124,42 @@ private[sources] class AvroFleetGroupAggReaderFactory(
 private[graft] case class DvPartSpec(newDv: String,
     oldDv: Option[String] = None, deltaOnly: Boolean = false)
 
-/** One byte-range split of one container file. `dv` carries the
-  * file's deletion-vector instruction under the resolved snapshot
+/** One byte range `[start, end)` of one container file. Whole small
+  * files are a single `[0, fileLen)` range; ranges align to sync
+  * markers at read time (`DataFileReader.sync(start)` /
+  * `pastSync(end)` — the standard avro split convention: a block
+  * belongs to the range containing its first byte, so contiguous
+  * ranges partition the blocks exactly). `fileLen` is the file's
+  * length at planning time — fleet files are immutable, so readers
+  * open the file with it instead of statting it again. `dv` carries
+  * the file's deletion-vector instruction under the resolved snapshot
   * (None = no vector); every split of a file carries the same one. */
 private[graft] case class AvroFilePartition(file: String, start: Long,
-    end: Long, dv: Option[DvPartSpec] = None) extends InputPartition
+    end: Long, fileLen: Long, dv: Option[DvPartSpec] = None)
+    extends InputPartition {
+  def length: Long = end - start
+}
 
-/** One cluster-key group: every split of every file proven to hold
-  * exactly `key` (sidecar carrier spelling; null = the all-null key).
-  * `partitionKey` re-boxes the carrier into the catalyst-internal row
-  * Spark's key-grouped planner compares on the driver. */
+/** One batch read partition: a contiguous run of splits in path order,
+  * read back to back by one task ([[AvroFleetScan.planGroups]] packs
+  * them). Every batch reader serves it: the row reader chains its
+  * splits (a pushed limit counts rows across the whole group, a pushed
+  * TopN folds the group into one bounded heap), the block-header count
+  * sums over it and the grouped decode tier aggregates it into one
+  * hash. Per-row metadata (`_file`, `_sync`, `_ridx`) stays per split. */
+private[graft] class AvroFileGroup(val splits: Seq[AvroFilePartition])
+    extends InputPartition
+
+/** The keyed form of [[AvroFileGroup]]: one cluster-key group, every
+  * split of every file proven to hold exactly `key` (sidecar carrier
+  * spelling; null = the all-null key), so the partition really
+  * contains every row of its key (the KeyGroupedPartitioning
+  * contract). `partitionKey` re-boxes the carrier into the
+  * catalyst-internal row Spark's key-grouped planner compares on the
+  * driver. */
 private[sources] case class AvroClusterPartition(key: Any, dt: DataType,
-    splits: Seq[AvroFilePartition]) extends InputPartition
+    override val splits: Seq[AvroFilePartition])
+    extends AvroFileGroup(splits)
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
@@ -3110,30 +3179,38 @@ private[sources] class AvroFleetReaderFactory(tableSchema: StructType,
     aliases: Map[String, Seq[String]] = Map.empty)
     extends PartitionReaderFactory {
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    p match {
-      case c: AvroClusterPartition => chainedReader(c.splits)
-      case f: AvroFilePartition => topN match {
-        case Some((orders, n)) => topNReader(f, orders, n)
-        case None => rowReader(f)
-      }
+  // batch scans plan groups; the streaming and change-feed planners
+  // plan single splits, which read as a group of one
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val splits = p match {
+      case g: AvroFileGroup => g.splits
+      case f: AvroFilePartition => Seq(f)
     }
+    topN match {
+      case Some((orders, n)) => topNReader(splits, orders, n)
+      case None => new SplitChain(splits, Nil)
+    }
+  }
 
-  /** Sequential chain over one cluster group's splits — a key's whole
-    * file set reads as ONE task so the partition really contains every
-    * row of its key (the KeyGroupedPartitioning contract). */
-  private def chainedReader(splits: Seq[AvroFilePartition])
-      : PartitionReader[InternalRow] = new PartitionReader[InternalRow] {
+  /** Sequential chain over a group's splits, one row reader at a time.
+    * The pushed limit counts EMITTED (post-filter) rows across the
+    * whole group: Spark only pushes a limit when every filter is
+    * pushed too, so the global Limit on top sees already-filtered
+    * rows, and a group stops decoding once it has `limit` of them. */
+  private final class SplitChain(splits: Seq[AvroFilePartition],
+      decodeExtra: Seq[String]) extends PartitionReader[InternalRow] {
     private val rest = splits.iterator
-    private var cur: PartitionReader[InternalRow] = _
+    private var emitted = 0
+    var cur: AvroFleetRowReader = _
 
     override def next(): Boolean = {
-      while (true) {
+      while (!limit.exists(emitted >= _)) {
         if (cur == null) {
           if (!rest.hasNext) return false
-          cur = rowReader(rest.next())
+          cur = new AvroFleetRowReader(rest.next(), decodeExtra,
+            tableSchema, columns, filters, conf, evolve, aliases)
         }
-        if (cur.next()) return true
+        if (cur.next()) { emitted += 1; return true }
         cur.close(); cur = null
       }
       false
@@ -3144,25 +3221,27 @@ private[sources] class AvroFleetReaderFactory(tableSchema: StructType,
     override def close(): Unit = if (cur != null) { cur.close(); cur = null }
   }
 
-  /** Bounded-heap TopN over one split: decode (with pushed filters),
+  /** Bounded-heap TopN over a group: decode (with pushed filters),
     * keep the n best rows under the pushed ordering (`TopNHeap` — the
     * machinery shared with the xlsx connector), emit them at end. Task
-    * memory and output are O(n) regardless of split size, and the
+    * memory and output are O(n) regardless of group size, and the
     * comparator mirrors Catalyst ordering, so the final merge sort
     * upstream sees exactly the rows it would have chosen itself. */
-  private def topNReader(part: AvroFilePartition, orders: Seq[TopNOrder],
-      n: Int): PartitionReader[InternalRow] = new PartitionReader[InternalRow] {
+  private def topNReader(splits: Seq[AvroFilePartition],
+      orders: Seq[TopNOrder], n: Int): PartitionReader[InternalRow] =
+    new PartitionReader[InternalRow] {
 
     private var out: Iterator[InternalRow] = _
 
     private def run(): Iterator[InternalRow] = {
-      val inner = rowReader(part, decodeExtra = orders.map(_.col))
+      val keys = orders.map(_.col)
+      val rows = new SplitChain(splits, keys)
       val heap = new TopNHeap.Bounded(orders, n)
       try {
-        while (inner.next())
-          heap.offer(inner.currentSortKeys(orders.map(_.col)),
-            inner.currentProjectedValues())
-      } finally inner.close()
+        while (rows.next())
+          heap.offer(rows.cur.currentSortKeys(keys),
+            rows.cur.currentProjectedValues())
+      } finally rows.close()
       heap.drain().map(vals =>
         new GenericInternalRow(
           vals.map(AvroFleetReaderFactory.toCatalyst)))
@@ -3175,11 +3254,6 @@ private[sources] class AvroFleetReaderFactory(tableSchema: StructType,
     override def get(): InternalRow = out.next()
     override def close(): Unit = ()
   }
-
-  private def rowReader(part: AvroFilePartition,
-      decodeExtra: Seq[String] = Nil): AvroFleetRowReader =
-    new AvroFleetRowReader(part, decodeExtra, tableSchema, columns,
-      limit, filters, conf, evolve, aliases)
 }
 
 /** The streaming row reader for one split — named (not anonymous) so
@@ -3187,7 +3261,7 @@ private[sources] class AvroFleetReaderFactory(tableSchema: StructType,
   * current record's sort keys without re-materializing rows. */
 private[sources] class AvroFleetRowReader(part: AvroFilePartition,
     decodeExtra: Seq[String], tableSchema: StructType,
-    columns: Array[String], limit: Option[Int],
+    columns: Array[String],
     filters: Array[org.apache.spark.sql.sources.Filter],
     conf: SerializableHadoopConf, evolve: Boolean = false,
     aliases: Map[String, Seq[String]] = Map.empty)
@@ -3208,7 +3282,6 @@ private[sources] class AvroFleetRowReader(part: AvroFilePartition,
   private type Decode = org.apache.avro.generic.GenericRecord => Any
   private var fields: Seq[(String, Decode)] = _
   private var decodeByName: Map[String, Decode] = _
-  private var emitted = 0
   private var rec: org.apache.avro.generic.GenericRecord = _
   // ROW POSITION tracking: the current record's block sync position
   // and ordinal within the block — updated on every raw record, BEFORE
@@ -3254,8 +3327,7 @@ private[sources] class AvroFleetRowReader(part: AvroFilePartition,
       new org.apache.avro.generic.GenericDatumReader[
         org.apache.avro.generic.GenericRecord]()
     stream = new org.apache.avro.file.DataFileReader(
-      new HadoopSeekableInput(fs.open(path),
-        fs.getFileStatus(path).getLen), datumReader)
+      new HadoopSeekableInput(fs.open(path), part.fileLen), datumReader)
     val writer = stream.getSchema
     // mixed-fleet guard at the SPARK-type level: each file must map
     // to the pinned table schema, but its avro spelling is its own —
@@ -3345,11 +3417,7 @@ private[sources] class AvroFleetRowReader(part: AvroFilePartition,
 
   override def next(): Boolean = {
     ensureOpen()
-    // the pushed limit counts EMITTED (post-filter) rows: Spark
-    // only pushes a limit when every filter is pushed too, so the
-    // global Limit on top sees already-filtered rows
-    while (!limit.exists(emitted >= _) && stream.hasNext &&
-        !stream.pastSync(part.end)) {
+    while (stream.hasNext && !stream.pastSync(part.end)) {
       // sample the block key BEFORE next(): DataFileStream.next()
       // calls blockFinished() — which advances previousSync() — upon
       // reading a block's LAST record, so sampling after next() would
@@ -3370,7 +3438,7 @@ private[sources] class AvroFleetRowReader(part: AvroFilePartition,
       val emit =
         if (dvDeltaOnly) inNew && !dvOld.contains(curSync, curRidx)
         else !inNew
-      if (emit && passes) { emitted += 1; return true }
+      if (emit && passes) return true
     }
     false
   }

@@ -270,6 +270,7 @@ private[graft] class AvroFleetMicroBatchStream(tableSchema: StructType,
       pins.get(st.getPath.toString)
         .map(full => st.getPath.toString -> DvPartSpec(full))).toMap
     AvroFleetScan.planSplits(statuses, maxFileBytes, byPath)
+      .toArray[InputPartition]
   }
 
   // aliases travel with the stream exactly as in batch: a readStream
@@ -460,8 +461,7 @@ private[sources] class AvroFleetCdcMicroBatchStream(
       val byPath = sts.flatMap(st =>
         specs.get(st.getPath.getName).map(st.getPath.toString -> _)).toMap
       AvroFleetScan.planSplits(sts, maxFileBytes, byPath)
-        .map(sp => FleetCdcPartition(sp.asInstanceOf[AvroFilePartition],
-          tag))
+        .map(FleetCdcPartition(_, tag))
     }
     // deletion-vector awareness mirrors FleetCDC.changesOf: added
     // files read minus their `to` vector, removed files minus their

@@ -1013,7 +1013,15 @@ private[graft] object FleetManifest {
     * [[FleetCompact.expireVersions]] under the commit lock, BEFORE any
     * version file is deleted (every chain is still readable). Content
     * is the same logical snapshot; process the retained set ascending
-    * so a kept base materializes before a kept dependent is examined. */
+    * so a kept base materializes before a kept dependent is examined.
+    *
+    * Crash-atomic like every other version-file write (the
+    * [[renameClaim]] discipline): the full form goes to a hidden temp
+    * beside the version files and is renamed OVER the delta (POSIX
+    * rename replaces atomically), so a write that fails midway leaves
+    * the retained delta intact and readable — its base is not deleted
+    * yet — instead of a truncated version file. Only a filesystem that
+    * refuses an existing destination falls back to delete-then-rename. */
   private[sources] def materializeIfChainBroken(fs: FileSystem, dir: Path,
       kept: Set[Long], v: Long): Unit = {
     val p = vpath(dir, v)
@@ -1026,9 +1034,19 @@ private[graft] object FleetManifest {
     }
     if (kept(baseV)) return // base survives this pass — chain intact
     val snap = snapshotAtMain(fs, dir, v).getOrElse(return)
-    val out = fs.create(p, true)
-    try out.write(render(snap).getBytes("UTF-8"))
-    finally out.close()
+    val tmp = new Path(mdir(dir),
+      s".${vname(v)}.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      val out = fs.create(tmp, false)
+      try out.write(render(snap).getBytes("UTF-8"))
+      finally out.close()
+    } catch { case NonFatal(e) => fs.delete(tmp, false); throw e }
+    if (!fs.rename(tmp, p)) {
+      fs.delete(p, false)
+      if (!fs.rename(tmp, p))
+        throw new java.io.IOException(s"cannot materialize retained " +
+          s"version $v at $dir; its full form is left in $tmp")
+    }
     invalidate(fs, p)
   }
 

@@ -311,6 +311,128 @@ class AvroSpec extends SparkSpec {
       .count() == 60000L)
   }
 
+  // the V2 scan of `df` and its planned read partitions, planned under
+  // `s` (planning reads the active session's spark.sql.files.* confs)
+  private def plannedGroups(s: org.apache.spark.sql.SparkSession,
+      df: org.apache.spark.sql.DataFrame)
+      : Seq[graft.sources.AvroFileGroup] = {
+    val scan = df.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2
+          .DataSourceV2ScanRelation => r.scan
+    }.get
+    org.apache.spark.sql.SparkSession.setActiveSession(s)
+    try scan.toBatch.planInputPartitions().toSeq.map {
+      case g: graft.sources.AvroFileGroup => g
+      case other => fail(s"unexpected partition $other")
+    } finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
+  }
+
+  test("small fleet files pack into core-sized read partitions by Spark's file rule") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+    val dir = tmp("avro_pack") + "/t.avro"
+    spark.range(0, 4800, 1, 48).select($"id", ($"id" * 3).as("v"))
+      .write.format("graft-avro").mode("overwrite").save(dir)
+    val files = Avro.listFleet(spark, dir).sortBy(_.getPath.toString)
+    assert(files.size == 48, s"fixture should hold 48 files: ${files.size}")
+    // what Spark's own file source plans for the same files, taken in
+    // path order: FilePartition.maxSplitBytes for the width, then its
+    // next-fit packing
+    def sparkPlans(s: org.apache.spark.sql.SparkSession): Int = {
+      val openCost = s.sessionState.conf.filesOpenCostInBytes
+      val width = FilePartition.maxSplitBytes(s,
+        files.map(_.getLen + openCost).sum)
+      FilePartition.getFilePartitions(s, files.map(st => PartitionedFile(
+        org.apache.spark.sql.catalyst.InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromPath(st.getPath),
+        0L, st.getLen)), width).size
+    }
+    def widthUnder(conf: (String, String)*) = {
+      val s = spark.newSession()
+      conf.foreach { case (k, v) => s.conf.set(k, v) }
+      val groups = plannedGroups(s, s.read.format("graft-avro").load(dir))
+      // every file planned exactly once, whole, in path order
+      val planned = groups.flatMap(_.splits)
+      assert(planned.map(_.file) == files.map(_.getPath.toString))
+      assert(planned.forall(sp => sp.start == 0L && sp.end == sp.fileLen))
+      assert(groups.size == sparkPlans(s),
+        s"${groups.size} partitions, Spark's file source plans ${sparkPlans(s)}")
+      groups.size
+    }
+    // local[4]: about one partition per core, not one per file
+    val cores = widthUnder()
+    assert(cores >= 4 && cores <= 8, s"$cores partitions at local[4]")
+    // the width follows the cluster: asking for 32 partitions splits
+    // the same fleet about 32 ways (next-fit gives two sub-open-cost
+    // files a partition, so 24 here); asking for 48 gives every file
+    // its own
+    val wide = widthUnder("spark.sql.files.minPartitionNum" -> "32")
+    assert(wide >= 24, s"$wide partitions for minPartitionNum=32")
+    assert(widthUnder("spark.sql.files.minPartitionNum" -> "48") == 48)
+    // and a real action runs that many tasks
+    assert(spark.read.format("graft-avro").load(dir).rdd.getNumPartitions
+      == cores)
+  }
+
+  test("packed and one-file-per-partition reads return identical rows") {
+    import spark.implicits._
+    val root = tmp("avro_pack_same")
+    val dir = s"$root/t.avro"
+    spark.range(0, 2400, 1, 24).select($"id", ($"id" % 5).as("g"),
+        ($"id" * 7 % 2400).as("v"), concat(lit("n"), $"id").as("name"))
+      .write.format("graft-avro").mode("overwrite").save(dir)
+    // merge-on-read deletes bind vectors on most files
+    val cat = spark.newSession()
+    cat.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    cat.conf.set("spark.sql.catalog.graft.root", root)
+    cat.conf.set("spark.graft.rowLevelMode", "merge-on-read")
+    cat.sql("DELETE FROM graft.t WHERE id % 13 = 4")
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(graft.sources.FleetManifest.current(fs, p).get.dvs.size >= 20)
+    // no sidecar: COUNT(*) takes the block-header tier, not metadata
+    fs.delete(new org.apache.hadoop.fs.Path(p,
+      graft.sources.FleetStats.FileName), false)
+    val single = spark.newSession()
+    single.conf.set("spark.sql.files.maxPartitionBytes", "1")
+    def both[T](q: org.apache.spark.sql.DataFrame => T): (T, T) =
+      (q(spark.read.format("graft-avro").load(dir)),
+        q(single.read.format("graft-avro").load(dir)))
+    def desc(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.v2
+            .DataSourceV2ScanRelation => r.scan.description()
+      }.get
+    def same[T](what: String, q: org.apache.spark.sql.DataFrame => T): T = {
+      val (packed, one) = both(q)
+      assert(packed == one, s"$what differs between packed and single reads")
+      packed
+    }
+    val (nPacked, nSingle) = both(_.rdd.getNumPartitions)
+    assert(nSingle == 24 && nPacked < nSingle, s"$nPacked vs $nSingle")
+    // plain scan: same rows in the same order
+    val rows = same("plain scan", _.collect().toSeq)
+    assert(rows.size == 2400 - (0 until 2400).count(_ % 13 == 4))
+    // per-split metadata columns keep their values inside a group
+    same("metadata columns", _.select(col("_file"), col("_sync"),
+      col("_ridx"), $"id").collect().toSeq)
+    same("LIMIT", _.select($"id", $"name").limit(5).collect().toSeq)
+    val top = (df: org.apache.spark.sql.DataFrame) =>
+      df.orderBy($"v".desc).limit(7)
+    assert(desc(top(spark.read.format("graft-avro").load(dir)))
+      .contains("PushedTopN"))
+    same("TopN", top(_).collect().toSeq)
+    assert(desc(spark.read.format("graft-avro").load(dir).groupBy()
+      .count()).contains("PushedAggregation: [COUNT(*)]"))
+    assert(same("COUNT(*)", _.count()) == rows.size)
+    val grouped = (df: org.apache.spark.sql.DataFrame) =>
+      df.groupBy($"g").agg(count(lit(1)), min($"v"), max($"v"))
+        .orderBy($"g")
+    assert(desc(grouped(spark.read.format("graft-avro").load(dir)))
+      .contains("PushedAggregation(grouped)"))
+    same("grouped decode", grouped(_).collect().toSeq)
+  }
+
   test("distributed read decodes many container files on executors") {
     import spark.implicits._
     val dir = tmp("avro_fleet")

@@ -251,14 +251,31 @@ class CatalogSpec extends SparkSpec {
         pmod($"user_id", lit(4)).cast("long").as("shard"))
     // fragmented ingest: 8 non-key tasks × up to 4 keys each → ~32
     // files over 4 keys (> 4 files/key) — AUTO grouping must lapse so
-    // a plain scan keeps its parallelism...
+    // a plain scan keeps its parallelism: no key-grouped report, and
+    // every data file planned (packed by the session's read width, not
+    // collapsed to the key count)...
     ev.repartition(8).write.format("graft-avro")
       .option("clusterBy", "shard").mode("overwrite")
       .save(s"$root/frag.avro")
     val auto = spark.read.format("graft-avro").load(s"$root/frag.avro")
-    assert(auto.rdd.getNumPartitions > 4,
-      s"fragmented auto scan must not collapse to the key count: " +
-        s"${auto.rdd.getNumPartitions}")
+    val autoScan = auto.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2
+          .DataSourceV2ScanRelation => r.scan
+    }.get
+    assert(autoScan.asInstanceOf[org.apache.spark.sql.connector.read
+        .SupportsReportPartitioning].outputPartitioning()
+        .isInstanceOf[org.apache.spark.sql.connector.read.partitioning
+          .UnknownPartitioning],
+      "fragmented auto scan must not report key grouping")
+    val dataFiles = graft.sources.Avro.listFleet(spark, s"$root/frag.avro")
+      .map(_.getPath.toString)
+    assert(dataFiles.size > 4 * 4, s"fixture not fragmented: $dataFiles")
+    val planned = autoScan.toBatch.planInputPartitions().toSeq.flatMap {
+      case g: graft.sources.AvroFileGroup => g.splits.map(_.file)
+      case other => fail(s"unexpected partition $other")
+    }
+    assert(planned.sorted == dataFiles.sorted,
+      "fragmented auto scan must plan every data file")
     // ...while the EXPLICIT option remains an informed override
     val explicit = spark.read.format("graft-avro")
       .option("clusterBy", "shard").load(s"$root/frag.avro")

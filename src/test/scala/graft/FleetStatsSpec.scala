@@ -19,12 +19,17 @@ class FleetStatsSpec extends SparkSpec {
     new Path(System.getProperty("java.io.tmpdir"))
       .getFileSystem(spark.sessionState.newHadoopConf())
 
-  // planned (post-skip) input partitions of the ONE V2 scan in `df`
+  // planned (post-skip) part files of the ONE V2 scan in `df`: the
+  // files of every packed avro read partition, or one per partition of
+  // a scan that plans one file per partition (the xlsx fleet)
   private def plannedParts(df: org.apache.spark.sql.DataFrame): Int =
     df.queryExecution.optimizedPlan.collectFirst {
       case s: DataSourceV2ScanRelation => s.scan
     }.getOrElse(fail(s"no V2 scan in:\n${df.queryExecution.optimizedPlan}"))
-      .toBatch.planInputPartitions().length
+      .toBatch.planInputPartitions().toSeq.flatMap[Any] {
+        case g: graft.sources.AvroFileGroup => g.splits.map(_.file)
+        case other => Seq(other)
+      }.distinct.size
 
   test("collector folds min/max/nulls; NaN drops a column; all-null kept") {
     val schema = StructType(Seq(
@@ -492,7 +497,7 @@ class FleetStatsSpec extends SparkSpec {
     val low = fleet.filter($"v" < 45)
       .groupBy($"g").agg(count(lit(1)).as("n"), max($"v").as("mx"))
       .orderBy($"g")
-    assert(partKinds(low).forall(_ == "AvroFilePartition"),
+    assert(partKinds(low).forall(_ == "AvroFileGroup"),
       partKinds(low).mkString(","))
     val expected = df.filter($"v" < 45).groupBy($"g")
       .agg(count(lit(1)).as("n"), max($"v").as("mx"))
