@@ -487,7 +487,8 @@ object Avro {
     * Spark's parquet `mergeSchema` makes, so a million-file fleet
     * costs one distributed pass, not a driver loop. Schemas travel
     * as JSON strings (Avro `Schema` is not serializable-stable) and
-    * dedupe before parsing. */
+    * dedupe before parsing: per partition in the job's one stage, then
+    * on the driver (at most 256 partitions × distinct schemas). */
   private[graft] def peekAllSchemas(s: SparkSession, glob: String)
       : Seq[Schema] = {
     val files = listFleet(s, glob)
@@ -510,7 +511,9 @@ object Avro {
         val conf =
           new graft.util.SerializableHadoopConf(s.sessionState.newHadoopConf())
         s.sparkContext.parallelize(files, math.min(files.length, 256))
-          .map(p => peekOne(conf.value)(p)).distinct().collect().toSeq.sorted
+          .map(p => peekOne(conf.value)(p))
+          .mapPartitions(_.toSeq.distinct.iterator)
+          .collect().toSeq.distinct.sorted
       }
     jsons.map(j => new Schema.Parser().parse(j))
   }

@@ -36,7 +36,9 @@ import org.apache.spark.sql.types.StructType
   * compatible with [[FleetCdcOffset]]; a fresh checkpoint starts at
   * the CURRENT version, `startingVersion` replays history, and an
   * expired pending range fails loudly exactly like the file-granular
-  * feed (same snapshot resolution underneath).
+  * feed — the head is [[FleetCDC.head]] (session-branch guard
+  * included) and each batch reads the one batch range
+  * ([[FleetCDC.read]]).
   *
   * ADMISSION CONTROL (`option("maxVersionsPerTrigger", k)`, r19): by
   * default `getOffset` jumps to the current version, so a consumer
@@ -132,19 +134,7 @@ private[sources] class AvroFleetCdcKeyedSource(sqlContext: SQLContext,
       }
     }
 
-  private def currentVersion(): Long = branch match {
-    case Some(b) =>
-      FleetManifest.branchHead(fs, p, b).map(_.version).getOrElse(
-        throw new IllegalStateException(
-          s"readChangeFeed: no branch '$b' at $path (published or " +
-            "dropped?) — a branch feed ends with its branch"))
-    case None =>
-      val vs = FleetManifest.versions(fs, p)
-      if (vs.isEmpty) throw new IllegalStateException(
-        s"readChangeFeed: fleet at $path has no manifest history — " +
-          "only transactionally-committed fleets have a change feed")
-      vs.last
-  }
+  private def currentVersion(): Long = FleetCDC.head(fs, p, branch)
 
   // a fresh checkpoint starts at the CURRENT version (only future
   // commits stream) unless startingVersion replays history — resolved
@@ -244,49 +234,15 @@ private[sources] class AvroFleetCdcKeyedSource(sqlContext: SQLContext,
     // engine-shown progress (a restart replaying its offset log)
     // raises the rate-limit floor exactly like our own returns
     observe(math.max(v0, v1))
-    val s = sqlContext.sparkSession
-    val net =
-      if (v1 <= v0)
-        FleetCDC.reconcileKeyed(
-          s.createDataFrame(s.sparkContext
-            .emptyRDD[org.apache.spark.sql.Row],
-            StructType(declaredSchema.filterNot(
-              _.name == FleetCDC.ChangeTypeCol)))
-            .withColumn(FleetCDC.ChangeTypeCol,
-              org.apache.spark.sql.functions.lit("insert")), keyCols)
-      else {
-        val snapAt = (v: Long) =>
-          if (v == 0L) None
-          else Some(FleetManifest.snapshotAtRef(fs, p, v, branch)
-            .getOrElse(throw new IllegalStateException(
-              s"readChangeFeed: manifest version $v at $path was " +
-                "expired by retention while the stream was down — " +
-                "re-seed the consumer from a full scan")))
-        val fromS = snapAt(v0)
-        val toS = snapAt(v1)
-        val from = fromS.map(_.files.toSet).getOrElse(Set.empty)
-        val to = toS.map(_.files.toSet).getOrElse(Set.empty)
-        val dvFrom = fromS.map(_.dvs).getOrElse(Map.empty)
-        val dvTo = toS.map(_.dvs).getOrElse(Map.empty)
-        val (grown, shrunk) = (fromS, toS) match {
-          case (Some(f0), Some(t0)) => FleetCDC.routeDvChanges(fs, p,
-            f0, t0, from.intersect(to),
-            s"readChangeFeed at $path v$v0..v$v1")
-          case _ => (Nil, Nil)
-        }
-        FleetCDC.reconcileKeyed(
-          FleetCDC.changesOf(s, path, (to -- from).toSeq.sorted,
-            (from -- to).toSeq.sorted, dvFrom, dvTo, grown, shrunk,
-            // PIN the stream-definition schema: V1 sourceSchema
-            // resolves eagerly at definition, so a fleet evolved
-            // between definition and a later batch would otherwise
-            // emit a batch WIDER than the declared schema — pinned,
-            // every batch holds the declared shape (added columns
-            // prune at decode; a restart re-resolves and adopts them)
-            schemaOverride = Some(StructType(declaredSchema
-              .filterNot(_.name == FleetCDC.ChangeTypeCol)))),
-          keyCols)
-      }
+    // the batch range over the span, read under the PINNED
+    // stream-definition schema: V1 sourceSchema resolves eagerly at
+    // definition, so a fleet evolved between definition and a later
+    // batch would otherwise emit a batch WIDER than the declared schema
+    // — pinned, every batch holds the declared shape (added columns
+    // prune at decode; a restart re-resolves and adopts them)
+    val net = FleetCDC.reconcileKeyed(
+      FleetCDC.read(sqlContext.sparkSession, path, v0, Some(v1), branch,
+        Some(declaredSchema)), keyCols)
     // V1 contract: the per-batch plan must carry isStreaming — see
     // GraftStreamingShim (the FileStreamSource stamp)
     org.apache.spark.sql.GraftStreamingShim.asStreamingBatch(net)

@@ -53,10 +53,8 @@ class AvroFleetSource extends TableProvider with DataSourceRegister
   // version range per key — a JOIN no DSv2 scan can express, so the
   // keyed table declares no BATCH_READ and DataFrameReader's
   // documented fallback (loadV2Source yields None) resolves this V1
-  // relation instead: the same escape hatch the keyed STREAM uses,
-  // batch-side. Completes the declarative matrix — {file-granular,
-  // keyed} × {batch, stream} — with one netting implementation
-  // (FleetCDC.changesKeyed) shared with the programmatic API.
+  // relation instead: FleetCDC.reconcileKeyed over the batch range,
+  // the keyed STREAM's escape hatch batch-side.
   override def createRelation(sqlContext: org.apache.spark.sql.SQLContext,
       parameters: Map[String, String])
       : org.apache.spark.sql.sources.BaseRelation = {
@@ -65,7 +63,7 @@ class AvroFleetSource extends TableProvider with DataSourceRegister
     require(cdcOf(opts) && keyedCdcCols(opts).nonEmpty,
       "the graft-avro V1 relation serves only readChangeFeed + " +
         "cdcKeyCols batch ranges (plain reads use the V2 table)")
-    require(Option(opts.get("branch")).forall(_.trim.isEmpty),
+    require(branchOf(opts).isEmpty,
       "a keyed batch range addresses MAIN history — net a branch's " +
         "changes by following the branch feed (option(\"branch\") on " +
         "readStream) or FleetCDC.changesKeyed over branch snapshots")
@@ -76,33 +74,9 @@ class AvroFleetSource extends TableProvider with DataSourceRegister
         "a batch readChangeFeed needs a range start — " +
           "option(\"startingVersion\", v) (0 replays the full " +
           "retained history) or option(\"startingTimestamp\", ...)"))
-    val p0 = new org.apache.hadoop.fs.Path(path)
-    val f = p0.getFileSystem(
-      sqlContext.sparkSession.sessionState.newHadoopConf())
-    Option(sqlContext.sparkSession.conf.get("spark.graft.branch", null))
-      .map(_.trim).filter(_.nonEmpty).foreach { b =>
-        if (FleetManifest.branchBase(f, p0, b).isDefined)
-          throw new IllegalStateException(
-            s"readChangeFeed: fleet at $path has an active branch " +
-              s"'$b' in this session (spark.graft.branch) — the keyed " +
-              "range reads MAIN history only; unset the branch conf")
-      }
-    val vs = FleetManifest.versions(f, p0)
-    require(vs.nonEmpty,
-      s"readChangeFeed: fleet at $path has no manifest history — " +
-        "only transactionally-committed fleets have a change feed")
-    val cur = vs.last
-    val ending = AvroFleetTable.resolveEndingVersion(opts, path)
-    if (ending.exists(_ > cur))
-      throw new IllegalArgumentException(
-        s"endingVersion=${ending.get}: fleet at $path is at v$cur — " +
-          "the range end does not exist yet")
-    val to = ending.getOrElse(cur)
-    require(to >= from,
-      s"readChangeFeed range is inverted: startingVersion=$from > " +
-        s"endingVersion=$to")
-    val net = FleetCDC.changesKeyed(sqlContext.sparkSession, path,
-      from, to, keys)
+    val to = AvroFleetTable.resolveEndingVersion(opts, path)
+    val net = FleetCDC.reconcileKeyed(
+      FleetCDC.read(sqlContext.sparkSession, path, from, to), keys)
     val sqlc = sqlContext
     new org.apache.spark.sql.sources.BaseRelation
         with org.apache.spark.sql.sources.TableScan {
@@ -111,8 +85,8 @@ class AvroFleetSource extends TableProvider with DataSourceRegister
       override def buildScan()
           : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = net.rdd
       override def toString: String =
-        s"GraftKeyedChangeRange[$path v$from..v$to keys=${keys
-          .mkString(",")}]"
+        s"GraftKeyedChangeRange[$path v$from..${to.fold("head")(v =>
+          s"v$v")} keys=${keys.mkString(",")}]"
     }
   }
 
@@ -241,11 +215,11 @@ class AvroFleetSource extends TableProvider with DataSourceRegister
   /** An `ALTER TABLE`d fleet carries its declared schema in the
     * `_schema.json` marker — prefer it over the header peek (ADD
     * COLUMN / RENAME COLUMN are metadata-only; files are immutable).
-    * A multi-path or per-file load (FleetCDC's diff read, explicit
-    * part files, in-directory globs) resolves the marker from the
-    * FIRST path's enclosing fleet directory, so an ALTERed fleet's
-    * aliases and declared schema apply however its files are
-    * addressed. */
+    * A multi-path or per-file load (explicit part files such as
+    * [[FleetMerge]]'s touched-file reads, in-directory globs) resolves
+    * the marker from the FIRST path's enclosing fleet directory, so an
+    * ALTERed fleet's aliases and declared schema apply however its
+    * files are addressed. */
   private def markerOf(path: String,
       branch: Option[String] = None,
       asOf: Option[FleetView.AsOf] = None)
@@ -430,7 +404,7 @@ private[sources] class AvroFleetTable(tableSchema: StructType, path: String,
     // fragmented fleets — see clusterGroups)
     val explicit = Option(options.get("clusterBy"))
     val marker =
-      if (explicit.isDefined) None
+      if (explicit.isDefined || cdc) None
       else {
         val p = new org.apache.hadoop.fs.Path(path)
         FleetLayout.read(p.getFileSystem(
@@ -683,12 +657,11 @@ private[sources] object AvroFleetTable {
   val SyncMetaCol = "_sync"
   val RidxMetaCol = "_ridx"
 
-  /** `option("dvSpec", json)` — per-file deletion-vector instructions
-    * for EXPLICIT-path reads, which bypass manifest resolution (the
-    * change feed's image reads, [[FleetMerge]]'s extent-hit loads).
-    * JSON object keyed by file NAME:
-    * `{"part-x.avro": {"new": "<full dv path>", "old": "<full dv
-    * path>", "deltaOnly": true}}` — `old`/`deltaOnly` optional. */
+  /** `option("dvSpec", json)` — per-file deletion vectors for
+    * EXPLICIT-path reads, which bypass manifest resolution
+    * ([[FleetMerge]]'s extent-hit loads, `compact_vectors`' rewrite):
+    * each named file reads minus its vector. JSON object keyed by file
+    * NAME: `{"part-x.avro": {"new": "<full dv path>"}}`. */
   def parseDvSpec(json: String): Map[String, DvPartSpec] =
     Option(json).filter(_.nonEmpty).map { j =>
       import org.json4s._
@@ -700,15 +673,7 @@ private[sources] object AvroFleetTable {
               case other => throw new IllegalArgumentException(
                 s"dvSpec[$name].new must be a string: $other")
             }
-            val old = spec \ "old" match {
-              case JString(s) => Some(s)
-              case _ => None
-            }
-            val delta = spec \ "deltaOnly" match {
-              case JBool(b) => b
-              case _ => false
-            }
-            name -> DvPartSpec(nw, old, delta)
+            name -> DvPartSpec(nw)
           case (name, other) => throw new IllegalArgumentException(
             s"dvSpec[$name] must be an object: $other")
         }.toMap
@@ -752,11 +717,7 @@ private[sources] object AvroFleetTable {
     org.json4s.jackson.JsonMethods.compact(
       org.json4s.jackson.JsonMethods.render(JObject(
         specs.toList.sortBy(_._1).map { case (name, sp) =>
-          name -> (JObject(List(
-            "new" -> (JString(sp.newDv): JValue)) ++
-            sp.oldDv.map(o => "old" -> (JString(o): JValue)).toList ++
-            (if (sp.deltaOnly) List("deltaOnly" -> (JBool(true): JValue))
-             else Nil)): JValue)
+          name -> (JObject("new" -> (JString(sp.newDv): JValue)): JValue)
         })))
   }
 
@@ -1712,6 +1673,8 @@ private[sources] class AvroFleetScanBuilder(fullSchema: StructType,
     val (ok, rest) =
       filters.partition(FleetFilters.supported(dataSchema, _))
     pushed = ok
+    // ...but its EqualTo / In prunes whole tagged sides at planning
+    if (cdc) changeTags = FleetCDC.tagsOf(rest)
     rest
   }
 
@@ -1720,6 +1683,8 @@ private[sources] class AvroFleetScanBuilder(fullSchema: StructType,
 
   private var pushed: Array[org.apache.spark.sql.sources.Filter] =
     Array.empty
+
+  private var changeTags: Set[String] = FleetCDC.tagsOf(Nil)
 
   /** Aggregate pushdown, two tiers (the avro twin of Spark's parquet
     * footer-aggregate pushdown):
@@ -1782,13 +1747,11 @@ private[sources] class AvroFleetScanBuilder(fullSchema: StructType,
         case _ => None
       }
 
-    // caller-passed per-file vector instructions (`dvSpec`: the
-    // change-feed image reads, FleetMerge touched loads) address
-    // EXPLICIT file paths the manifest-derived handling below cannot
-    // see — the view binds no vector to them — and a deltaOnly
-    // spec serves a position DIFFERENCE no tier can represent.
-    // Spec-carrying reads keep the row path, which applies each spec
-    // per task (r16 ADVICE).
+    // caller-passed per-file vectors (`dvSpec`: FleetMerge touched
+    // loads, compact_vectors' rewrite) address EXPLICIT file paths the
+    // manifest-derived handling below cannot see — the view binds no
+    // vector to them. Spec-carrying reads keep the row path, which
+    // applies each spec per task (r16 ADVICE).
     if (dvSpecs.nonEmpty) return false
 
     if (agg.groupByExpressions.nonEmpty) {
@@ -1967,6 +1930,7 @@ private[sources] class AvroFleetScanBuilder(fullSchema: StructType,
         endingVersion = endingVersion,
         aliases = aliases,
         cdc = cdc,
+        changeTags = changeTags,
         dvSpecs = dvSpecs,
         branch = branch)
   }
@@ -2122,6 +2086,7 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
     endingVersion: Option[Long] = None,
     aliases: Map[String, Seq[String]] = Map.empty,
     cdc: Boolean = false,
+    changeTags: Set[String] = FleetCDC.tagsOf(Nil),
     dvSpecs: Map[String, DvPartSpec] = Map.empty,
     branch: Option[String] = None)
     extends Scan with Batch with SupportsReportStatistics
@@ -2143,6 +2108,10 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
 
   override def toBatch: Batch = this
 
+  // set when the scan becomes a stream (the engine prices every
+  // micro-batch through this same scan's estimateStatistics)
+  @volatile private var streaming = false
+
   /** Streaming read (`spark.readStream.format("graft-avro")`): the
     * fleet as a tailed source — see [[AvroFleetMicroBatchStream]].
     * Column pruning and pushed row filters carry over from this
@@ -2153,6 +2122,7 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
       "endingVersion/endingTimestamp bound a BATCH change-feed range " +
         "(spark.read); a stream is unbounded — stop it, or drain to " +
         "now with Trigger.AvailableNow")
+    streaming = true
     if (cdc)
       new AvroFleetCdcMicroBatchStream(
         StructType(fullSchema.filterNot(_.name == FleetCDC.ChangeTypeCol)),
@@ -2163,7 +2133,8 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
         startingVersion = startingVersion,
         aliases = aliases,
         branch = branch,
-        maxVersionsPerTrigger = maxVersionsPerTrigger)
+        maxVersionsPerTrigger = maxVersionsPerTrigger,
+        changeTags = changeTags)
     else new AvroFleetMicroBatchStream(fullSchema, required.fieldNames, path,
       maxFileBytes, pushedFilters,
       new SerializableHadoopConf(
@@ -2180,13 +2151,11 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
 
   /** BATCH change-feed range (r19): `spark.read` + `readChangeFeed` +
     * `startingVersion`/`startingTimestamp` (+ optional
-    * `endingVersion`/`endingTimestamp`, default = the current head) —
-    * the declarative spelling of [[FleetCDC.changes]], planned as
-    * EXACTLY the partitions the streaming feed would plan for the
-    * same span (one shared implementation — the semantics cannot
-    * drift). Expired ranges, vanished files, and divergent rebinds
-    * fail loudly through the shared path. */
-  private def cdcBatchPartitions(): Array[InputPartition] = {
+    * `endingVersion`/`endingTimestamp`, default = the head), planned
+    * once by the streaming feed's planner ([[FleetCDC.plan]]) for both
+    * the size estimate and the partitions — never from the CURRENT
+    * fleet's view. */
+  private lazy val cdcPartitions: Seq[FleetCdcPartition] = {
     val from = startingVersion.getOrElse(throw new
         IllegalArgumentException(
       "a batch readChangeFeed needs a range start — " +
@@ -2196,46 +2165,17 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
     val p0 = new org.apache.hadoop.fs.Path(path)
     val f = p0.getFileSystem(
       SparkSession.active.sessionState.newHadoopConf())
-    val cur = branch match {
-      case Some(b) => FleetManifest.branchHead(f, p0, b).map(_.version)
-        .getOrElse(throw new IllegalArgumentException(
-          s"readChangeFeed: no branch '$b' at $path"))
-      case None =>
-        // the same loud guard the streaming feed applies: a session
-        // whose spark.graft.branch exists at this fleet must not
-        // silently audit MAIN's history — the option is the remedy
-        Option(SparkSession.active.conf.get("spark.graft.branch", null))
-          .map(_.trim).filter(_.nonEmpty).foreach { b =>
-            if (FleetManifest.branchBase(f, p0, b).isDefined)
-              throw new IllegalStateException(
-                s"readChangeFeed: fleet at $path has an active branch " +
-                  s"'$b' in this session (spark.graft.branch) — the " +
-                  "range reads MAIN history only; unset the branch " +
-                  "conf, or address the branch explicitly with " +
-                  "option(\"branch\", \"" + b + "\")")
-          }
-        val vs = FleetManifest.versions(f, p0)
-        require(vs.nonEmpty,
-          s"readChangeFeed: fleet at $path has no manifest history — " +
-            "only transactionally-committed fleets have a change feed")
-        vs.last
-    }
-    val to = endingVersion.getOrElse(cur)
+    val cur = FleetCDC.head(f, p0, branch)
     if (endingVersion.exists(_ > cur))
       throw new IllegalArgumentException(
         s"endingVersion=${endingVersion.get}: fleet at $path is at " +
           s"v$cur — the range end does not exist yet")
+    val to = endingVersion.getOrElse(cur)
     require(to >= from,
       s"readChangeFeed range is inverted: startingVersion=$from > " +
         s"endingVersion=$to")
-    new AvroFleetCdcMicroBatchStream(
-      StructType(fullSchema.filterNot(_.name == FleetCDC.ChangeTypeCol)),
-      required.fieldNames, path, maxFileBytes, pushedFilters,
-      new SerializableHadoopConf(
-        SparkSession.active.sessionState.newHadoopConf()),
-      evolve = evolve, startingVersion = startingVersion,
-      aliases = aliases, branch = branch)
-      .planInputPartitions(FleetCdcOffset(from), FleetCdcOffset(to))
+    FleetCDC.plan(f, p0, from, to, branch, maxFileBytes, changeTags,
+      pushedFilters.toSeq)
   }
 
   // the builder's ONE resolved snapshot: the files (oversized ones are
@@ -2257,10 +2197,9 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
   }
 
   // deletion-vector instructions per full data path: the view's
-  // bindings (exclude mode) plus any caller-passed `dvSpec` entries
-  // (keyed by file NAME — the change-feed reads address explicit
-  // files whose vectors the CURRENT manifest no longer names); empty
-  // on vector-less fleets, costing nothing
+  // bindings plus any caller-passed `dvSpec` entries (keyed by file
+  // NAME — explicit-path loads whose vectors the view does not bind);
+  // empty on vector-less fleets, costing nothing
   private lazy val dvByPath: Map[String, DvPartSpec] = {
     val fromManifest = view.dvs.map { case (f, (dv, _)) =>
       f -> DvPartSpec(dv) }
@@ -2273,24 +2212,19 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
   // per-file DELETED counts — lets row-count math stay exact under
   // vectors. Manifest-carried meta serves them with zero vector I/O
   // (r18); only legacy bindings and caller-passed dvSpec entries pay
-  // one tiny header read each. Exclude-mode entries only: delta-only
-  // splits serve an unknown subset, so their presence drops count
-  // exactness instead
+  // one tiny header read each
   private lazy val dvCounts: Map[String, Long] = {
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       SparkSession.active.sessionState.newHadoopConf())
-    dvByPath.collect { case (f, spec) if !spec.deltaOnly =>
+    dvByPath.map { case (f, spec) =>
       // a caller-passed dvSpec may bind a DIFFERENT vector than the
-      // manifest's (the CDC image reads) — its count must come from
-      // its own header, never the manifest meta
+      // manifest's — its count must come from its own header, never
+      // the manifest meta
       f -> (if (dvSpecs.contains(new org.apache.hadoop.fs.Path(f).getName))
               FleetDv.countAt(fs, new org.apache.hadoop.fs.Path(spec.newDv))
             else view.deletedRows(fs, f))
     }
   }
-
-  private lazy val anyDeltaOnly: Boolean =
-    dvByPath.valuesIterator.exists(_.deltaOnly)
 
   /** Planning-time data skipping: when filters were pushed, every part
     * file whose recorded min/max/null profile PROVES a pushed conjunct
@@ -2381,15 +2315,23 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
     * parquet's file-size estimate does — fine for the
     * broadcast-threshold decision this feeds. `numRows` is the
     * surviving files' recorded row total when every one carries stats
-    * (an upper bound under pushed filters, exact without them). */
+    * (an upper bound under pushed filters, exact without them). A
+    * change-feed range prices its change splits instead, and a
+    * change-feed STREAM (no one range) reports no size. */
   override def estimateStatistics(): Statistics = {
-    val totalBytes = survivors.map(_.getLen).sum
+    if (cdc && streaming) return new Statistics {
+      override def sizeInBytes() = java.util.OptionalLong.empty()
+      override def numRows() = java.util.OptionalLong.empty()
+    }
+    val totalBytes =
+      if (cdc) cdcPartitions.iterator.map(_.group.splits.map(_.length).sum).sum
+      else survivors.map(_.getLen).sum
     val frac =
       if (fullSchema.isEmpty) 1.0
       else math.max(required.size, 1).toDouble / fullSchema.size
     val size = math.max(1L, math.ceil(totalBytes * frac).toLong)
     val rows =
-      if (anyDeltaOnly) java.util.OptionalLong.empty()
+      if (cdc) java.util.OptionalLong.empty()
       else if (survivors.forall(st =>
           fleetStats.contains(st.getPath.toString)))
         java.util.OptionalLong.of(
@@ -2421,8 +2363,7 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
   private def topNPrune(base: Seq[org.apache.hadoop.fs.FileStatus])
       : Seq[org.apache.hadoop.fs.FileStatus] = topN match {
     case Some((orders, n))
-        if pushedFilters.isEmpty && runtimeFilters.isEmpty &&
-          !anyDeltaOnly =>
+        if pushedFilters.isEmpty && runtimeFilters.isEmpty =>
       val o = orders.head
       def entry(st: org.apache.hadoop.fs.FileStatus) =
         fleetStats.get(st.getPath.toString)
@@ -2480,7 +2421,7 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
   private lazy val clusterGroups
       : Option[Seq[(Any, Seq[org.apache.hadoop.fs.FileStatus])]] =
     clusterBy.flatMap { col =>
-      if (evolve || !fullSchema.fieldNames.contains(col)) None
+      if (cdc || evolve || !fullSchema.fieldNames.contains(col)) None
       else {
         val nonEmpty = survivors.filter { st =>
           fleetStats.get(st.getPath.toString).forall(_.rows > 0)
@@ -2544,7 +2485,7 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
     }
 
   override def planInputPartitions(): Array[InputPartition] =
-    if (cdc) cdcBatchPartitions()
+    if (cdc) cdcPartitions.toArray[InputPartition]
     else clusterGroups match {
       case Some(groups) =>
         // grouped mode: one partition per key holding ALL of the key's
@@ -2574,23 +2515,19 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
           st.getPath.getName ->
             view.dvRelByName.get(st.getPath.getName)).toMap)
         AvroFleetScan.planGroups(files, maxFileBytes, dvByPath)
+          .toArray[InputPartition]
     }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val s = SparkSession.active
-    if (cdc) {
+    if (cdc)
       // batch change-feed range: the stream's own reader pairing —
       // `_change_type` synthesized per partition over the pruned read
-      val dataSchema = StructType(
-        fullSchema.filterNot(_.name == FleetCDC.ChangeTypeCol))
       return new FleetCdcReaderFactory(
-        new AvroFleetReaderFactory(dataSchema,
-          required.fieldNames.filterNot(_ == FleetCDC.ChangeTypeCol),
-          None, pushedFilters,
-          new SerializableHadoopConf(s.sessionState.newHadoopConf()),
-          evolve = evolve, aliases = aliases),
-        required.fieldNames, dataSchema)
-    }
+        StructType(fullSchema.filterNot(_.name == FleetCDC.ChangeTypeCol)),
+        required.fieldNames, pushedFilters,
+        new SerializableHadoopConf(s.sessionState.newHadoopConf()),
+        evolve, aliases)
     // a row-level-operation scan uses pushed filters ONLY to skip
     // whole files: its consumer (ReplaceData) must receive EVERY row
     // of every surviving group so survivors can be rewritten — a file
@@ -2611,8 +2548,8 @@ private[sources] object AvroFleetScan {
     * one oversized external container file fans out across tasks
     * instead of either failing the ingest bound or straggling as one
     * giant task. Each split carries its file's plan-time length, so no
-    * reader stats the file again. The streaming planners schedule one
-    * split per partition; batch scans pack them ([[planGroups]]). */
+    * reader stats the file again. Every scan reads them packed
+    * ([[planGroups]]). */
   def planSplits(fleet: Seq[org.apache.hadoop.fs.FileStatus],
       maxFileBytes: Long,
       dvByPath: Map[String, DvPartSpec] = Map.empty)
@@ -2627,33 +2564,41 @@ private[sources] object AvroFleetScan {
       }
     }
 
-  /** Batch read partitions: [[planSplits]] packed into
-    * [[AvroFileGroup]]s by Spark's own file-source rule, so a fleet of
-    * small files runs about one task per core instead of one per file.
-    * The width is `FilePartition.maxSplitBytes` — min(
+  /** The pack width of `fleet` by Spark's own file-source rule:
+    * `FilePartition.maxSplitBytes` — min(
     * `spark.sql.files.maxPartitionBytes`, max(
     * `spark.sql.files.openCostInBytes`, Σ(len + openCost) /
     * (`spark.sql.files.minPartitionNum` or the default parallelism)))
-    * — and a group closes when the next split would push it past that
-    * width, each split costing its length plus the open cost (the
-    * next-fit of `FilePartition.getFilePartitions`). Unlike Spark,
-    * splits are packed in path order, not by descending size: a plain
-    * scan returns rows in the same order as a one-file-per-partition
-    * read, and the splits of one file stay adjacent. */
-  def planGroups(fleet: Seq[org.apache.hadoop.fs.FileStatus],
-      maxFileBytes: Long,
-      dvByPath: Map[String, DvPartSpec] = Map.empty)
-      : Array[InputPartition] = {
-    val splits = planSplits(fleet, maxFileBytes, dvByPath)
+    * over its splits. */
+  def packWidth(fleet: Seq[org.apache.hadoop.fs.FileStatus],
+      maxFileBytes: Long): Long = {
     val s = SparkSession.active
     val openCost = s.sessionState.conf.filesOpenCostInBytes
-    val width = org.apache.spark.sql.execution.datasources.FilePartition
-      .maxSplitBytes(s, splits.map(_.length + openCost).sum)
-    val groups = scala.collection.mutable.ArrayBuffer.empty[AvroFileGroup]
+    org.apache.spark.sql.execution.datasources.FilePartition.maxSplitBytes(
+      s, planSplits(fleet, maxFileBytes).map(_.length + openCost).sum)
+  }
+
+  /** Read partitions: [[planSplits]] packed into [[AvroFileGroup]]s,
+    * so a fleet of small files runs about one task per core instead
+    * of one per file. A group closes when the next split would push
+    * it past `width` (default: the [[packWidth]] of `fleet`), each
+    * split costing its length plus the open cost (the next-fit of
+    * `FilePartition.getFilePartitions`). Unlike Spark, splits are
+    * packed in path order, not by descending size: a plain scan
+    * returns rows in the same order as a one-file-per-partition read,
+    * and the splits of one file stay adjacent. */
+  def planGroups(fleet: Seq[org.apache.hadoop.fs.FileStatus],
+      maxFileBytes: Long,
+      dvByPath: Map[String, DvPartSpec] = Map.empty,
+      width: Option[Long] = None): Seq[AvroFileGroup] = {
+    val splits = planSplits(fleet, maxFileBytes, dvByPath)
+    val openCost = SparkSession.active.sessionState.conf.filesOpenCostInBytes
+    val w = width.getOrElse(packWidth(fleet, maxFileBytes))
+    val groups = Seq.newBuilder[AvroFileGroup]
     var cur = Vector.empty[AvroFilePartition]
     var size = 0L
     splits.foreach { sp =>
-      if (cur.nonEmpty && size + sp.length > width) {
+      if (cur.nonEmpty && size + sp.length > w) {
         groups += new AvroFileGroup(cur)
         cur = Vector.empty
         size = 0L
@@ -2662,7 +2607,7 @@ private[sources] object AvroFleetScan {
       size += sp.length + openCost
     }
     if (cur.nonEmpty) groups += new AvroFileGroup(cur)
-    groups.toArray[InputPartition]
+    groups.result()
   }
 }
 
@@ -2703,7 +2648,8 @@ private[sources] class AvroFleetCountScan(tableSchema: StructType,
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val groups = AvroFleetScan.planGroups(fleet, maxFileBytes)
+    val groups =
+      AvroFleetScan.planGroups(fleet, maxFileBytes).toArray[InputPartition]
     // deletion-vector correction: block headers count RAW rows, so a
     // vectored fleet contributes one constant partial of −(total
     // vectored positions) — count(*) stays a header walk instead of
@@ -3115,12 +3061,12 @@ private[sources] class AvroFleetGroupAggReaderFactory(
 /** Per-split deletion-vector instruction (vector paths are FULL
   * paths; the reader loads them — tiny JSONs — once per split):
   *
-  *  - `deltaOnly = false` (the read path): EXCLUDE `newDv`'s
-  *    positions — the split serves the file's live rows.
-  *  - `deltaOnly = true` (the change-feed path): emit ONLY positions
-  *    in `newDv` and not in `oldDv` — the rows a vector commit
-  *    deleted in a version span, computed in-task (the driver never
-  *    holds positions). */
+  *  - `deltaOnly = false` (every read): EXCLUDE `newDv`'s positions —
+  *    the split serves the file's live rows.
+  *  - `deltaOnly = true` (the change feed's [[FleetCDC.plan]]): emit
+  *    ONLY positions in `newDv` and not in `oldDv` — the rows a vector
+  *    commit deleted in a version span, computed in-task (the driver
+  *    never holds positions). */
 private[graft] case class DvPartSpec(newDv: String,
     oldDv: Option[String] = None, deltaOnly: Boolean = false)
 
@@ -3135,8 +3081,7 @@ private[graft] case class DvPartSpec(newDv: String,
   * the file's deletion-vector instruction under the resolved snapshot
   * (None = no vector); every split of a file carries the same one. */
 private[graft] case class AvroFilePartition(file: String, start: Long,
-    end: Long, fileLen: Long, dv: Option[DvPartSpec] = None)
-    extends InputPartition {
+    end: Long, fileLen: Long, dv: Option[DvPartSpec] = None) {
   def length: Long = end - start
 }
 
@@ -3179,13 +3124,9 @@ private[sources] class AvroFleetReaderFactory(tableSchema: StructType,
     aliases: Map[String, Seq[String]] = Map.empty)
     extends PartitionReaderFactory {
 
-  // batch scans plan groups; the streaming and change-feed planners
-  // plan single splits, which read as a group of one
+  // every scan — batch, streaming and change feed — plans packed groups
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val splits = p match {
-      case g: AvroFileGroup => g.splits
-      case f: AvroFilePartition => Seq(f)
-    }
+    val splits = p.asInstanceOf[AvroFileGroup].splits
     topN match {
       case Some((orders, n)) => topNReader(splits, orders, n)
       case None => new SplitChain(splits, Nil)

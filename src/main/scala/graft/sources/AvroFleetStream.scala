@@ -269,7 +269,7 @@ private[graft] class AvroFleetMicroBatchStream(tableSchema: StructType,
     val byPath = statuses.flatMap(st =>
       pins.get(st.getPath.toString)
         .map(full => st.getPath.toString -> DvPartSpec(full))).toMap
-    AvroFleetScan.planSplits(statuses, maxFileBytes, byPath)
+    AvroFleetScan.planGroups(statuses, maxFileBytes, byPath)
       .toArray[InputPartition]
   }
 
@@ -316,11 +316,13 @@ private[graft] class AvroFleetMicroBatchStream(tableSchema: StructType,
   *
   * Only transactional fleets (committed `_manifest/`) have a change
   * feed; a manifest-less directory fails at first offset resolution.
-  * Column pruning reaches the per-file readers exactly as in batch;
-  * pushed row filters apply to DATA columns only (`_change_type` is
-  * synthesized per partition, filters on it stay with Spark).
-  * AvailableNow caps the drain at the version current when the query
-  * started. */
+  * Each batch is planned by [[FleetCDC.plan]] — the batch range's
+  * planner — as packed, tagged groups. Column pruning reaches the
+  * per-file readers exactly as in batch; pushed row filters apply to
+  * DATA columns (and skip changed files by their stats), while a
+  * filter on the synthesized `_change_type` prunes whole tagged sides
+  * (`changeTags`) and stays with Spark. AvailableNow caps the drain
+  * at the version current when the query started. */
 private[sources] class AvroFleetCdcMicroBatchStream(
     dataSchema: StructType, columns: Array[String], path: String,
     maxFileBytes: Long,
@@ -330,7 +332,8 @@ private[sources] class AvroFleetCdcMicroBatchStream(
     startingVersion: Option[Long] = None,
     aliases: Map[String, Seq[String]] = Map.empty,
     branch: Option[String] = None,
-    maxVersionsPerTrigger: Option[Long] = None)
+    maxVersionsPerTrigger: Option[Long] = None,
+    changeTags: Set[String] = FleetCDC.tagsOf(Nil))
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   require(maxVersionsPerTrigger.forall(_ > 0L),
@@ -340,43 +343,7 @@ private[sources] class AvroFleetCdcMicroBatchStream(
   private def p = new org.apache.hadoop.fs.Path(path)
   private def fs = p.getFileSystem(conf.value)
 
-  private def currentVersion(): Long = {
-    // an EXPLICIT `option("branch", b)` makes this a BRANCH-FOLLOWING
-    // feed (r18): offsets are the branch's own version sequence
-    // (numbering continues from the fork base, pre-fork numbers
-    // resolve to the shared main history). Without it the feed tails
-    // MAIN generations, and a session whose spark.graft.branch exists
-    // at this fleet fails loudly — silently feeding it main's changes
-    // would mix the two histories; the option IS the remedy.
-    branch match {
-      case Some(b) =>
-        return FleetManifest.branchHead(fs, p, b).map(_.version)
-          .getOrElse(throw new IllegalStateException(
-            s"readChangeFeed: no branch '$b' at $path (published or " +
-              "dropped?) — a branch feed ends with its branch; resume " +
-              "the MAIN feed from the publish version instead"))
-      case None =>
-    }
-    try org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(s => Option(s.conf.get("spark.graft.branch", null)))
-      .map(_.trim).filter(_.nonEmpty).foreach { b =>
-        if (FleetManifest.branchBase(fs, p, b).isDefined)
-          throw new IllegalStateException(
-            s"readChangeFeed: fleet at $path has an active branch " +
-              s"'$b' in this session (spark.graft.branch) — the " +
-              "change feed follows MAIN history only; unset the " +
-              "branch conf (or publish/drop the branch), or follow " +
-              "the branch explicitly with option(\"branch\", \"" + b +
-              "\")")
-      }
-    catch { case e: IllegalStateException => throw e
-            case scala.util.control.NonFatal(_) => () }
-    val vs = FleetManifest.versions(fs, p)
-    if (vs.isEmpty) throw new IllegalStateException(
-      s"readChangeFeed: fleet at $path has no manifest history — " +
-        "only transactionally-committed fleets have a change feed")
-    vs.last
-  }
+  private def currentVersion(): Long = FleetCDC.head(fs, p, branch)
 
   @volatile private var availableNowCap: Option[Long] = None
 
@@ -421,83 +388,14 @@ private[sources] class AvroFleetCdcMicroBatchStream(
   }
 
   override def planInputPartitions(start: Offset, end: Offset)
-      : Array[InputPartition] = {
-    val v0 = FleetCdcOffset.of(start).version
-    val v1 = FleetCdcOffset.of(end).version
-    if (v1 <= v0) return Array.empty
-    def snapAt(v: Long): Option[FleetManifest.Snapshot] =
-      if (v == 0L) None
-      else Some(FleetManifest.snapshotAtRef(fs, p, v, branch).getOrElse(
-        throw new IllegalStateException(
-          s"readChangeFeed: manifest version $v at $path was expired " +
-            "by retention while the stream was down — the change range " +
-            "is gone; re-seed the consumer from a full scan and resume " +
-            "from a live version")))
-    val fromS = snapAt(v0)
-    val toS = snapAt(v1)
-    val from = fromS.map(_.files.toSet).getOrElse(Set.empty)
-    val to = toS.map(_.files.toSet).getOrElse(Set.empty)
-    val dvFrom = fromS.map(_.dvs).getOrElse(Map.empty)
-    val dvTo = toS.map(_.dvs).getOrElse(Map.empty)
-    val f = fs
-    def statuses(names: Seq[String]) = names.sorted.map { n =>
-      try f.getFileStatus(new org.apache.hadoop.fs.Path(p, n))
-      catch {
-        case _: java.io.FileNotFoundException =>
-          throw new java.io.FileNotFoundException(
-            s"readChangeFeed: data file $n of the v$v0..v$v1 diff at " +
-              s"$path is gone — retention outran the stream (retain " +
-              "retired generations until consumers pass)")
-      }
-    }
-    def dvPath(rel: String) =
-      new org.apache.hadoop.fs.Path(p, rel).toString
-    def side(names: Seq[String], tag: String,
-        specs: Map[String, DvPartSpec]): Seq[InputPartition] = {
-      val sts = statuses(names)
-      // key the vector map by the statuses' OWN path spelling —
-      // getFileStatus qualifies paths, a hand-built Path(p, n) string
-      // may not, and a missed lookup silently serves raw rows
-      val byPath = sts.flatMap(st =>
-        specs.get(st.getPath.getName).map(st.getPath.toString -> _)).toMap
-      AvroFleetScan.planSplits(sts, maxFileBytes, byPath)
-        .map(FleetCdcPartition(_, tag))
-    }
-    // deletion-vector awareness mirrors FleetCDC.changesOf: added
-    // files read minus their `to` vector, removed files minus their
-    // `from` vector, a RETAINED file whose vector grew streams exactly
-    // its newly-vectored rows as deletes, and one whose vector SHRANK
-    // (a restore span) streams the no-longer-vectored rows as inserts;
-    // a position-identical rebind (compact_vectors) contributes
-    // nothing — count-routed from manifest meta, set-verified on equal
-    // counts, lineage-verified in-task (FleetCDC.routeDvChanges)
-    val addedNames = (to -- from).toSeq
-    val removedNames = (from -- to).toSeq
-    val (grown, shrunk) = (fromS, toS) match {
-      case (Some(f0), Some(t0)) => FleetCDC.routeDvChanges(f, p, f0, t0,
-        from.intersect(to), s"readChangeFeed at $path v$v0..v$v1")
-      case _ => (Nil, Nil)
-    }
-    (side(addedNames, "insert",
-      addedNames.flatMap(n => dvTo.get(n)
-        .map(rel => n -> DvPartSpec(dvPath(rel)))).toMap) ++
-      side(removedNames, "delete",
-        removedNames.flatMap(n => dvFrom.get(n)
-          .map(rel => n -> DvPartSpec(dvPath(rel)))).toMap) ++
-      side(grown, "delete",
-        grown.map(n => n -> DvPartSpec(dvPath(dvTo(n)),
-          dvFrom.get(n).map(dvPath), deltaOnly = true)).toMap) ++
-      side(shrunk, "insert",
-        shrunk.map(n => n -> DvPartSpec(dvPath(dvFrom(n)),
-          dvTo.get(n).map(dvPath), deltaOnly = true)).toMap)).toArray
-  }
+      : Array[InputPartition] =
+    FleetCDC.plan(fs, p, FleetCdcOffset.of(start).version,
+      FleetCdcOffset.of(end).version, branch, maxFileBytes, changeTags,
+      filters.toSeq).toArray[InputPartition]
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FleetCdcReaderFactory(
-      new AvroFleetReaderFactory(dataSchema,
-        columns.filterNot(_ == FleetCDC.ChangeTypeCol), None, filters,
-        conf, evolve = evolve, aliases = aliases),
-      columns, dataSchema)
+    new FleetCdcReaderFactory(dataSchema, columns, filters, conf, evolve,
+      aliases)
 
   override def deserializeOffset(json: String): Offset =
     FleetCdcOffset.fromJson(json)
@@ -526,23 +424,30 @@ private[sources] object FleetCdcOffset {
   }
 }
 
-/** One change-feed split: a file split plus the side of the diff its
-  * rows belong to. */
-private[sources] case class FleetCdcPartition(split: AvroFilePartition,
+/** One change-feed read partition: a packed group of one side's
+  * splits, plus the side of the diff (`insert` / `delete`) its rows
+  * belong to. */
+private[graft] case class FleetCdcPartition(group: AvroFileGroup,
     tag: String) extends InputPartition
 
-/** Wraps the ordinary per-file reader, appending the partition's
+/** Wraps the ordinary group reader, appending the partition's
   * constant `_change_type` at its projected position (pruned away
   * entirely when the query never selects it). */
-private[sources] class FleetCdcReaderFactory(
-    inner: AvroFleetReaderFactory, columns: Array[String],
-    dataSchema: StructType) extends PartitionReaderFactory {
+private[sources] class FleetCdcReaderFactory(dataSchema: StructType,
+    columns: Array[String],
+    filters: Array[org.apache.spark.sql.sources.Filter],
+    conf: SerializableHadoopConf, evolve: Boolean,
+    aliases: Map[String, Seq[String]]) extends PartitionReaderFactory {
+
+  private val inner = new AvroFleetReaderFactory(dataSchema,
+    columns.filterNot(_ == FleetCDC.ChangeTypeCol), None, filters, conf,
+    evolve = evolve, aliases = aliases)
 
   override def createReader(part: InputPartition)
       : org.apache.spark.sql.connector.read.PartitionReader[
         org.apache.spark.sql.catalyst.InternalRow] = {
-    val FleetCdcPartition(split, tag) = part
-    val r = inner.createReader(split)
+    val FleetCdcPartition(group, tag) = part
+    val r = inner.createReader(group)
     val ctIdx = columns.indexOf(FleetCDC.ChangeTypeCol)
     if (ctIdx < 0) r
     else {

@@ -1,8 +1,10 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.types.StructType
 
 /** Change-data-feed over a transactional fleet — the manifest DIFF
   * read (SURVEY.md §2.A; the Delta CDF / Iceberg changelog-scan shape
@@ -27,17 +29,27 @@ import org.apache.spark.sql.functions.lit
   * file added and retired strictly inside (fromVersion, toVersion]
   * contributes nothing, by construction of the endpoint diff.
   *
+  * This object is the only code that resolves a change feed: its
+  * [[head]], the span's [[resolveDiff]] and the tagged, packed
+  * partitions of [[plan]]. The streaming feed and the batch range
+  * (`readChangeFeed`) call the planner; every other reader
+  * ([[changes]], [[changesKeyed]], [[FleetMV.refresh]], the keyed
+  * stream and the keyed batch relation) reads that batch range.
+  *
   * Scale: the driver holds O(changed files) names — the DELTA, never
-  * the fleet; the two reads are ordinary distributed fleet scans
-  * (sidecar skipping, column pruning, and split planning all apply),
-  * so "what changed since yesterday" costs the changed bytes, not a
-  * table scan. Both generations must still be on disk: run consumers
-  * before [[FleetCompact.expireVersions]] retires the `from` side (a
-  * GC'd file fails the read loudly — silent loss is never an option).
+  * the fleet — read as ONE packed scan with column pruning, stats
+  * skipping and `_change_type` pruning, so "what changed since
+  * yesterday" costs the changed bytes. Both generations must still
+  * be on disk: run consumers before [[FleetCompact.expireVersions]]
+  * retires the `from` side (a GC'd file fails the read loudly —
+  * silent loss is never an option).
   */
 object FleetCDC {
 
   val ChangeTypeCol = "_change_type"
+
+  /** The two tags, in planning order. */
+  private val Tags = Seq("insert", "delete")
 
   /** The complete change surface between two committed versions:
     * added/removed file names, both sides' deletion-vector bindings,
@@ -65,37 +77,152 @@ object FleetCDC {
       dvFrom: Map[String, String], dvTo: Map[String, String],
       dvGrown: Seq[String], dvShrunk: Seq[String] = Nil)
 
-  /** One manifest read per side — shared by [[changes]] and
-    * [[FleetMV.refresh]] so a maintenance step computes the diff
-    * (and fetches its manifests) exactly once. */
+  /** The newest version a feed at `p` may read through. An explicit
+    * `branch` follows the branch's own version sequence (r18); without
+    * it the feed tails MAIN, and a session whose `spark.graft.branch`
+    * exists at this fleet fails loudly — silently feeding it main's
+    * changes would mix the two histories. */
+  private[sources] def head(fs: FileSystem, p: Path,
+      branch: Option[String]): Long = branch match {
+    case Some(b) =>
+      FleetManifest.branchHead(fs, p, b).map(_.version).getOrElse(
+        throw new IllegalStateException(
+          s"readChangeFeed: no branch '$b' at $p (published or " +
+            "dropped?) — a branch feed ends with its branch; resume " +
+            "the MAIN feed from the publish version instead"))
+    case None =>
+      FleetManifest.activeBranchAt(fs, p).foreach { b =>
+        throw new IllegalStateException(
+          s"readChangeFeed: fleet at $p has an active branch '$b' in " +
+            "this session (spark.graft.branch) — the change feed " +
+            "follows MAIN history only; unset the branch conf (or " +
+            "publish/drop the branch), or follow the branch " +
+            "explicitly with option(\"branch\", \"" + b + "\")")
+      }
+      FleetManifest.versions(fs, p).lastOption.getOrElse(
+        throw new IllegalStateException(
+          s"readChangeFeed: fleet at $p has no manifest history — " +
+            "only transactionally-committed fleets have a change feed"))
+  }
+
+  /** The span (v0, v1] as a [[FleetDiff]], one manifest read per
+    * side. Version 0 is the empty side (a full replay); an expired
+    * version is a loud error — a consumer must never skip changes. */
+  private[sources] def resolveDiff(fs: FileSystem, p: Path, v0: Long,
+      v1: Long, branch: Option[String]): FleetDiff = {
+    def snapAt(v: Long): Option[FleetManifest.Snapshot] =
+      if (v == 0L) None
+      else Some(FleetManifest.snapshotAtRef(fs, p, v, branch).getOrElse(
+        throw new IllegalStateException(
+          s"readChangeFeed: manifest version $v at $p was expired by " +
+            "retention — the change range is gone; re-seed the " +
+            "consumer from a full scan and resume from a live version")))
+    val fromS = snapAt(v0)
+    val toS = snapAt(v1)
+    val from = fromS.map(_.files.toSet).getOrElse(Set.empty)
+    val to = toS.map(_.files.toSet).getOrElse(Set.empty)
+    val (grown, shrunk) = (fromS, toS) match {
+      case (Some(f0), Some(t0)) => routeDvChanges(fs, p, f0, t0,
+        from.intersect(to), s"change feed at $p v$v0..v$v1")
+      case _ => (Nil, Nil)
+    }
+    FleetDiff((to -- from).toSeq.sorted, (from -- to).toSeq.sorted,
+      fromS.map(_.dvs).getOrElse(Map.empty),
+      toS.map(_.dvs).getOrElse(Map.empty), grown, shrunk)
+  }
+
+  /** The diff between two committed versions, validated eagerly:
+    * `fromVersion < toVersion`, and both versions exist (a missing one
+    * is a caller error naming the available versions). */
   def diff(s: SparkSession, dir: String, fromVersion: Long,
       toVersion: Long): FleetDiff = {
     require(fromVersion < toVersion,
       s"changes need fromVersion < toVersion (got $fromVersion, $toVersion)")
     val p = new Path(dir)
     val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    def snap(v: Long) = FleetManifest.snapshotAt(fs, p, v).getOrElse(
-      throw new IllegalArgumentException(
-        s"no manifest version $v at $dir (available: " +
-          s"${FleetManifest.versions(fs, p).mkString(", ")})"))
-    val fromS = snap(fromVersion)
-    val toS = snap(toVersion)
-    val from = fromS.files.toSet
-    val to = toS.files.toSet
-    val (grown, shrunk) = routeDvChanges(fs, p, fromS, toS,
-      from.intersect(to), s"change feed at $dir v$fromVersion..v$toVersion")
-    FleetDiff((to -- from).toSeq.sorted, (from -- to).toSeq.sorted,
-      fromS.dvs, toS.dvs, grown, shrunk)
+    Seq(fromVersion, toVersion)
+      .find(FleetManifest.snapshotAt(fs, p, _).isEmpty).foreach { v =>
+        throw new IllegalArgumentException(
+          s"no manifest version $v at $dir (available: " +
+            s"${FleetManifest.versions(fs, p).mkString(", ")})")
+      }
+    resolveDiff(fs, p, fromVersion, toVersion, None)
   }
+
+  /** The span (v0, v1] as read partitions, each a packed group of
+    * one tag's splits. Each changed file's vector instruction is built
+    * once: an added file reads minus its `to` vector, a removed one
+    * minus its `from` vector; a retained file whose vector GREW emits
+    * its newly-vectored rows (delete), one whose vector SHRANK its
+    * resurrected rows (insert) — in-task, lineage-verified. `tags`
+    * drops whole sides; data `filters` skip files whose stats prove no
+    * row matches (the reader still applies them per row). One pack
+    * width spans every tag, so a span reads about one task per core. */
+  private[sources] def plan(fs: FileSystem, p: Path, v0: Long, v1: Long,
+      branch: Option[String], maxFileBytes: Long, tags: Set[String],
+      filters: Seq[Filter]): Seq[FleetCdcPartition] = {
+    if (v1 <= v0) return Nil
+    val d = resolveDiff(fs, p, v0, v1, branch)
+    def dv(rel: String) = new Path(p, rel).toString
+    def live(bound: Option[String]) = bound.map(r => DvPartSpec(dv(r)))
+    def delta(keep: String, minus: Option[String]) =
+      Some(DvPartSpec(dv(keep), minus.map(dv), deltaOnly = true))
+    val changed: Seq[(String, String, Option[DvPartSpec])] = (
+      d.added.map(n => ("insert", n, live(d.dvTo.get(n)))) ++
+      d.dvShrunk.map(n =>
+        ("insert", n, delta(d.dvFrom(n), d.dvTo.get(n)))) ++
+      d.removed.map(n => ("delete", n, live(d.dvFrom.get(n)))) ++
+      d.dvGrown.map(n =>
+        ("delete", n, delta(d.dvTo(n), d.dvFrom.get(n))))
+    ).filter(c => tags(c._1))
+    val statuses = changed.map { case (_, n, _) =>
+      try fs.getFileStatus(new Path(p, n))
+      catch {
+        case _: java.io.FileNotFoundException =>
+          throw new java.io.FileNotFoundException(
+            s"readChangeFeed: data file $n of the v$v0..v$v1 diff at $p " +
+              "is gone — retention outran the consumer (retain retired " +
+              "generations until consumers pass)")
+      }
+    }
+    val stats =
+      if (filters.isEmpty) Map.empty[String, FleetStats.PartStats]
+      else FleetStats.forFleet(fs, statuses)
+    val kept = changed.zip(statuses).filterNot { case (_, st) =>
+      stats.get(st.getPath.toString).exists(ps =>
+        filters.exists(FleetStats.neverMatches(_, ps)))
+    }
+    // keyed by the statuses' OWN path spelling — getFileStatus
+    // qualifies paths, and a missed lookup would serve raw rows
+    val dvByPath = kept.flatMap { case ((_, _, spec), st) =>
+      spec.map(st.getPath.toString -> _) }.toMap
+    val width = AvroFleetScan.packWidth(kept.map(_._2), maxFileBytes)
+    Tags.flatMap { t =>
+      val sts = kept.collect { case ((`t`, _, _), st) => st }
+      AvroFleetScan.planGroups(sts, maxFileBytes, dvByPath, Some(width))
+        .map(FleetCdcPartition(_, t))
+    }
+  }
+
+  /** The `_change_type` values a set of pushed filters admits: each
+    * `EqualTo` / `In` on the tag column narrows the planned sides
+    * (Spark keeps re-checking them — the filters stay residual). */
+  private[sources] def tagsOf(filters: Seq[Filter]): Set[String] =
+    filters.foldLeft(Tags.toSet) {
+      case (acc, org.apache.spark.sql.sources.EqualTo(ChangeTypeCol, v)) =>
+        acc.intersect(Set(String.valueOf(v)))
+      case (acc, org.apache.spark.sql.sources.In(ChangeTypeCol, vs)) =>
+        acc.intersect(vs.map(String.valueOf).toSet)
+      case (acc, _) => acc
+    }
 
   /** Route the retained files whose deletion-vector binding changed
     * across a span into (grown, shrunk) by their binding COUNTS —
     * manifest-carried meta makes this zero-I/O; only legacy bindings
     * pay one header read each. Equal counts are decided exactly by a
     * driver set-compare (a compact_vectors flatten is a no-op rebind
-    * and contributes nothing; an equal-size divergence fails loudly).
-    * Shared by the batch diff and the streaming change feed. */
-  private[sources] def routeDvChanges(fs: org.apache.hadoop.fs.FileSystem,
+    * and contributes nothing; an equal-size divergence fails loudly). */
+  private def routeDvChanges(fs: FileSystem,
       p: Path, fromS: FleetManifest.Snapshot, toS: FleetManifest.Snapshot,
       common: Set[String], at: String): (Seq[String], Seq[String]) = {
     def cnt(s0: FleetManifest.Snapshot, n: String): Long =
@@ -142,28 +269,33 @@ object FleetCDC {
     (grown.result(), shrunk.result())
   }
 
-  /** The (added, removed) file-name pair of [[diff]] — kept for
-    * callers that only consume file-set changes. */
-  def fileDiff(s: SparkSession, dir: String, fromVersion: Long,
-      toVersion: Long): (Seq[String], Seq[String]) = {
-    val d = diff(s, dir, fromVersion, toVersion)
-    (d.added, d.removed)
+  /** The batch range (`from`, `to`] (None = the head) every other
+    * reader reads, under ONE table schema: the `_schema.json` marker,
+    * else the merge of every generation's writer schema, so pre-ALTER
+    * generations null-fill added columns and answer renamed ones
+    * through the alias chain. `schema` pins it instead (the keyed
+    * stream's definition schema). */
+  private[sources] def read(s: SparkSession, dir: String, from: Long,
+      to: Option[Long], branch: Option[String] = None,
+      schema: Option[StructType] = None): DataFrame = {
+    val r = s.read.format("graft-avro")
+      .option("readChangeFeed", "true")
+      .option("mergeSchema", "true")
+      .option("startingVersion", from)
+    to.foreach(v => r.option("endingVersion", v))
+    branch.foreach(b => r.option("branch", b))
+    schema.foreach(r.schema)
+    r.load(dir)
   }
 
   /** NET row changes from `fromVersion` (exclusive) to `toVersion`
     * (inclusive), as the fleet schema plus a trailing
-    * `_change_type` ∈ ('insert','delete') column. Deletion-vector
-    * aware on every side: an added file reads minus its `to`-side
-    * vector, a removed file minus its `from`-side vector (rows
-    * already deleted at `from` were never visible in the span), and
-    * a RETAINED file whose vector grew contributes exactly its
-    * newly-vectored rows as deletes — computed in-task from the two
-    * vectors, the driver never holds positions. */
+    * `_change_type` ∈ ('insert','delete') column: the batch range,
+    * after [[diff]]'s eager checks. */
   def changes(s: SparkSession, dir: String, fromVersion: Long,
       toVersion: Long): DataFrame = {
-    val d = diff(s, dir, fromVersion, toVersion)
-    changesOf(s, dir, d.added, d.removed, d.dvFrom, d.dvTo, d.dvGrown,
-      d.dvShrunk)
+    diff(s, dir, fromVersion, toVersion)
+    read(s, dir, fromVersion, Some(toVersion))
   }
 
   /** ROW-IDENTITY net changes from `fromVersion` (exclusive) to
@@ -226,6 +358,8 @@ object FleetCDC {
         s"(schema: ${dataCols.mkString(", ")})")
     val nonKey = dataCols.filterNot(keyCols.contains)
     import org.apache.spark.sql.functions.{array, col, explode, struct, when}
+    // over a change-feed scan each side's tag filter prunes the other
+    // side's files at planning: a side reads only its own files
     val dels = raw.filter(col(ChangeTypeCol) === "delete")
       .drop(ChangeTypeCol).alias("d")
     val ins = raw.filter(col(ChangeTypeCol) === "insert")
@@ -249,70 +383,5 @@ object FleetCDC {
       .otherwise(array(img("d", "update_preimage"),
         img("i", "update_postimage")))
     joined.select(explode(rows).as("_r")).select(col("_r.*"))
-  }
-
-  /** The diff read for an already-computed [[diff]] surface.
-    * `schemaOverride` PINS the read schema instead of re-resolving it
-    * from the fleet — the streaming keyed source passes its
-    * stream-definition schema so a fleet evolved UNDER a running
-    * stream keeps emitting consistently-shaped batches (the
-    * FileStreamSource pinned-at-start posture) rather than a
-    * mis-shaped batch the sink's declared schema cannot hold; a
-    * restart re-resolves and picks the evolution up. */
-  private[sources] def changesOf(s: SparkSession, dir: String,
-      added: Seq[String], removed: Seq[String],
-      dvFrom: Map[String, String] = Map.empty,
-      dvTo: Map[String, String] = Map.empty,
-      dvGrown: Seq[String] = Nil,
-      dvShrunk: Seq[String] = Nil,
-      schemaOverride: Option[org.apache.spark.sql.types.StructType] =
-        None): DataFrame = {
-    // ONE table schema governs both sides — resolved from the whole
-    // fleet (schema marker preferred, else the merge of every
-    // generation's writer schema), then imposed on the per-file reads
-    // so a schema-EVOLVED fleet diffs cleanly: pre-ALTER generations
-    // null-fill added columns and answer renamed ones through the
-    // alias chain, exactly as a full-fleet read would
-    val schema = schemaOverride.getOrElse(s.read.format("graft-avro")
-      .option("mergeSchema", "true").load(dir).schema)
-    def dvPath(rel: String) = s"$dir/$rel"
-    def side(files: Seq[String], tag: String,
-        specs: Map[String, DvPartSpec]): DataFrame =
-      if (files.isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          schema).withColumn(ChangeTypeCol, lit(tag))
-      else {
-        // explicit file paths reach the V2 source as a multi-path load
-        // (names never contain commas — the committer's contract), so
-        // the diff read IS a normal fleet scan over just those files;
-        // the dvSpec option carries each file's vector instruction
-        // (explicit-path loads bypass manifest vector resolution)
-        val r = s.read.format("graft-avro")
-          .option("mergeSchema", "true").schema(schema)
-        (if (specs.isEmpty) r
-         else r.option("dvSpec", AvroFleetTable.renderDvSpec(specs)))
-          .load(files.map(n => s"$dir/$n").mkString(","))
-          .withColumn(ChangeTypeCol, lit(tag))
-      }
-    val ins = side(added, "insert",
-      added.flatMap(n => dvTo.get(n)
-        .map(rel => n -> DvPartSpec(dvPath(rel)))).toMap)
-    val del = side(removed, "delete",
-      removed.flatMap(n => dvFrom.get(n)
-        .map(rel => n -> DvPartSpec(dvPath(rel)))).toMap)
-    // merge-on-read deletes: retained files whose vector grew emit
-    // exactly the newly-vectored rows as deletes
-    val mor = side(dvGrown, "delete",
-      dvGrown.map(n => n -> DvPartSpec(dvPath(dvTo(n)),
-        dvFrom.get(n).map(dvPath), deltaOnly = true)).toMap)
-    // restore resurrections: retained files whose vector SHRANK emit
-    // exactly the no-longer-vectored rows as inserts — the inverted
-    // delta read (from minus to), in-task, positions never on the
-    // driver; both delta orientations verify lineage containment in
-    // the reader and fail loudly on a divergent rebind
-    val res = side(dvShrunk, "insert",
-      dvShrunk.map(n => n -> DvPartSpec(dvPath(dvFrom(n)),
-        dvTo.get(n).map(dvPath), deltaOnly = true)).toMap)
-    ins.unionByName(del).unionByName(mor).unionByName(res)
   }
 }

@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *    snapshot (`versionAsOf` — a concurrent source commit between
   *    version read and scan cannot leak into the base build) and
   *    stamps that version;
-  *  - [[refresh]] reads ONLY the manifest diff since the stamp
-  *    ([[FleetCDC.fileDiff]] once, shared with the diff read):
+  *  - [[refresh]] reads ONLY the manifest diff since the stamp (the
+  *    change feed's batch range, [[FleetCDC.read]]):
   *    inserts contribute +1/+value, deletes −1/−value, and one small
   *    union-aggregate folds the signed delta into the stored groups
   *    (a fully-deleted group's cnt reaches 0 and drops out). The
@@ -127,8 +127,7 @@ object FleetMV {
     // rows — the O(changed rows) contract survives MOR sources
     // resurrections (a restore span: dvShrunk) arrive as ordinary
     // insert images and fold through the same signed netting
-    val rawDelta = FleetCDC.changesOf(s, srcDir, d.added, d.removed,
-      d.dvFrom, d.dvTo, d.dvGrown, d.dvShrunk)
+    val rawDelta = FleetCDC.read(s, srcDir, v0, Some(v1))
     val changedFiles = d.added.size + d.removed.size + d.dvGrown.size +
       d.dvShrunk.size
     val sign = when(col(FleetCDC.ChangeTypeCol) === "insert", lit(1L))

@@ -14,8 +14,9 @@ import org.apache.spark.sql.SparkSession
   *  - a manifest-less directory keeps the raw-listing contract
   *    ([[Avro.listLegacyDir]]: hidden temps and markers filtered,
   *    `_SUCCESS` required on part-file directories);
-  *  - an explicit FILE is read raw (no vector applies — the surgical
-  *    per-file loads of the change feed bind their own `dvSpec`).
+  *  - an explicit FILE is read raw (no vector applies — an
+  *    explicit-path load that needs one passes `dvSpec`; the change
+  *    feed plans its files from [[FleetCDC.plan]], never a view).
   *
   * INVARIANT: every number a scan plans from — its file list, vector
   * bindings, deleted-row counts and meta, the copy-on-write
@@ -25,8 +26,8 @@ import org.apache.spark.sql.SparkSession
   * vectored files, a merge-on-read delete rebinding one) can never
   * pair one generation's files with another's vectors. A scan builder
   * resolves its view lazily, once, so a new query resolves afresh and
-  * the streaming / change-feed paths, which plan from offsets, never
-  * force it. */
+  * the streaming and change-feed paths, which plan from offsets and
+  * version spans, never force it. */
 private[graft] final case class FleetView(parts: Seq[FleetView.Part]) {
 
   /** The data files to plan from, deduplicated by path (two globs of

@@ -522,6 +522,20 @@ class AvroSpec extends SparkSpec {
     assert(spark.read.format("graft-avro").option("mergeSchema", "true")
       .load(s"$root/gen*").count() == 4)
 
+    // past 64 files the header peeks run as one Spark job, deduped per
+    // partition and then on the driver: the same merged schema
+    spark.range(100, 170, 1, 70).select($"id", $"id".as("v"),
+      concat(lit("m"), $"id".cast("string")).as("name"),
+      ($"id" * 0.5).as("extra"))
+      .write.format("graft-avro").mode("overwrite").save(s"$root/gen2b")
+    val many = spark.read.format("graft-avro").option("mergeSchema", "true")
+      .load(s"$root/gen*")
+    assert(graft.sources.Avro.listFleet(spark, s"$root/gen*").size > 64)
+    assert(many.schema.map(f => (f.name, f.dataType.typeName)) ==
+      Seq(("id", "long"), ("v", "long"), ("name", "string"),
+        ("extra", "double")))
+    assert(many.count() == 74)
+
     // a real conflict (string vs long) fails loudly at merge time
     Seq((9L, "oops")).toDF("id", "v").coalesce(1)
       .write.format("graft-avro").mode("overwrite").save(s"$root/gen3")

@@ -781,4 +781,161 @@ class FleetDvSpec extends SparkSpec {
     assert(!ids.contains(1L) && !ids.contains(2L))
     assert(ids.size == 20000 - 2)
   }
+
+  /** A 4-file fleet `t.avro` (ids 0..3999, 1000 per file in id order)
+    * and each id's (file name, sync, ridx) position. */
+  private def fourFileFleet(tag: String)
+      : (String, Map[Long, (String, (Long, Long))]) = {
+    import spark.implicits._
+    val dir = graft.util.Scratch.dir(s"dv_$tag") + "/t.avro"
+    spark.range(0, 4000, 1, 4)
+      .select($"id", concat(lit("v"), $"id".cast("string")).as("v"))
+      .write.format("graft-avro").mode("overwrite").save(dir)
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    s2.conf.set("spark.sql.catalog.graft.root",
+      new org.apache.hadoop.fs.Path(dir).getParent.toString)
+    val pos = s2.sql("SELECT id, _file, _sync, _ridx FROM graft.t")
+      .collect().map(r => r.getLong(0) -> (
+        new org.apache.hadoop.fs.Path(r.getString(1)).getName,
+        (r.getLong(2), r.getLong(3)))).toMap
+    (dir, pos)
+  }
+
+  test("every change-feed reader returns the same multiset over a span of append, compaction, MOR delete, restore and no-op rebind") {
+    import spark.implicits._
+    val (dir, pos) = fourFileFleet("cdc_parity")
+    val (fs, p) = fsOf(dir)
+    val Seq(fa, fb, fc, fd) = (0 until 4).map(i => pos(i * 1000L)._1)
+    def vec(ids: Long*) = FleetDv.Deleted.of(ids.map(i => pos(i)._2))
+    def head = FleetManifest.current(fs, p).get.version
+    // before the span: A carries a 3-row vector (to be restored to a
+    // 1-row ancestor), C a two-leaf chain (to be flattened)
+    val dvBig = FleetDv.write(fs, p, fa, vec(1L, 2L, 3L))
+    FleetManifest.commit(fs, p, identity, Nil,
+      dvUpdate = Map(fa -> Some(dvBig)))
+    val chain = FleetDv.writeChain(fs, p, fc, Seq(
+      FleetDv.write(fs, p, fc, vec(2010L)),
+      FleetDv.write(fs, p, fc, vec(2011L))), 2L)
+    FleetManifest.commit(fs, p, identity, Nil,
+      dvUpdate = Map(fc -> Some(chain)))
+    val vStart = head
+    // the span: an append ...
+    spark.range(4000, 4100).select($"id",
+      concat(lit("v"), $"id".cast("string")).as("v"))
+      .coalesce(1).write.format("graft-avro").mode("append").save(dir)
+    // ... a compaction of D into one new file (one manifest swap) ...
+    spark.read.format("graft-avro").load(s"$dir/$fd").coalesce(1)
+      .write.format("graft-avro").mode("append")
+      .option("manifestSwapRemove", fd).save(dir)
+    // ... a merge-on-read delete on B (vector grown) ...
+    FleetManifest.commit(fs, p, identity, Nil,
+      dvUpdate = Map(fb -> Some(FleetDv.write(fs, p, fb,
+        vec(1500L, 1501L)))))
+    // ... a restore of A's binding to a 1-row ancestor (shrunk) ...
+    FleetManifest.commit(fs, p, identity, Nil,
+      dvUpdate = Map(fa -> Some(FleetDv.write(fs, p, fa, vec(1L)))),
+      requireDvs = Map(fa -> Some(dvBig)))
+    // ... and compact_vectors' position-identical flatten of C
+    FleetManifest.commit(fs, p, identity, Nil,
+      dvUpdate = Map(fc -> Some(FleetDv.write(fs, p, fc,
+        FleetDv.read(fs, p, chain)))),
+      requireDvs = Map(fc -> Some(chain)))
+    val vEnd = head
+    assert(vEnd == vStart + 5)
+
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String, String)] =
+      df.select($"id", $"v", col(graft.sources.FleetCDC.ChangeTypeCol))
+        .as[(Long, String, String)].collect().toSeq.sorted
+    val prog = rows(graft.sources.FleetCDC.changes(spark, dir, vStart, vEnd))
+    val range = rows(spark.read.format("graft-avro")
+      .option("readChangeFeed", "true")
+      .option("startingVersion", vStart).option("endingVersion", vEnd)
+      .load(dir))
+    val streamed = scala.collection.mutable.ArrayBuffer
+      .empty[(Long, String, String)]
+    spark.readStream.format("graft-avro")
+      .option("readChangeFeed", "true")
+      .option("startingVersion", vStart).load(dir)
+      .writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        streamed ++= rows(b); ()
+      }
+      .option("checkpointLocation",
+        graft.util.Scratch.dir("dv_cdc_parity_ckpt"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    def img(ids: Seq[Long], t: String) = ids.map(i => (i, s"v$i", t))
+    val expected = (img(4000L until 4100L, "insert") ++
+      img(3000L until 4000L, "insert") ++ img(Seq(2L, 3L), "insert") ++
+      img(3000L until 4000L, "delete") ++ img(Seq(1500L, 1501L), "delete"))
+      .sorted
+    assert(prog == expected)
+    assert(range == prog)
+    assert(streamed.sorted.toSeq == prog)
+
+    def keyedRows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"id", col(graft.sources.FleetCDC.ChangeTypeCol))
+        .as[(Long, String)].collect().toSeq.sorted
+    val keyed = keyedRows(graft.sources.FleetCDC.changesKeyed(spark, dir,
+      vStart, vEnd, Seq("id")))
+    val relation = keyedRows(spark.read.format("graft-avro")
+      .option("readChangeFeed", "true").option("cdcKeyCols", "id")
+      .option("startingVersion", vStart).option("endingVersion", vEnd)
+      .load(dir))
+    // the compaction's equal images net out; the rest survive keyed
+    assert(keyed == ((4000L until 4100L).map(_ -> "insert") ++
+      Seq(2L -> "insert", 3L -> "insert", 1500L -> "delete",
+        1501L -> "delete")).sorted)
+    assert(relation == keyed)
+  }
+
+  test("a change-feed span plans packed tagged groups; a tag filter plans only its side") {
+    import spark.implicits._
+    import graft.sources.FleetCdcPartition
+    val dir = graft.util.Scratch.dir("dv_cdc_plan") + "/t.avro"
+    def gen(lo: Long, hi: Long, files: Int, mode: String) =
+      spark.range(lo, hi, 1, files).select($"id")
+        .write.format("graft-avro").mode(mode).save(dir)
+    gen(0, 2100, 21, "overwrite")                               // v1
+    val (fs, p) = fsOf(dir)
+    val v1Files = FleetManifest.current(fs, p).get.files
+    gen(2100, 4100, 20, "append")                               // v2
+    val (kept, retired) = (v1Files.head, v1Files.tail.toSet)
+    FleetManifest.commit(fs, p, _.filterNot(retired), Nil,
+      requireInBase = retired)                                  // v3
+    val keptIds = spark.read.format("graft-avro").load(s"$dir/$kept")
+      .select($"id", col("_sync"), col("_ridx")).as[(Long, Long, Long)]
+      .collect()
+    FleetManifest.commit(fs, p, identity, Nil,                  // v4
+      dvUpdate = Map(kept -> Some(FleetDv.write(fs, p, kept,
+        FleetDv.Deleted.of(Seq((keptIds.head._2, keptIds.head._3)))))))
+    val added = FleetManifest.current(fs, p).get.files.toSet -- v1Files
+    assert(added.size == 20 && retired.size == 20)
+    val range = spark.read.format("graft-avro")
+      .option("readChangeFeed", "true")
+      .option("startingVersion", "1").option("endingVersion", "4")
+      .load(dir)
+    def planned(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.v2
+            .DataSourceV2ScanRelation => r.scan
+      }.get.toBatch.planInputPartitions().toSeq
+        .map(_.asInstanceOf[FleetCdcPartition])
+    def names(parts: Seq[FleetCdcPartition]) = parts
+      .flatMap(_.group.splits.map(sp =>
+        new org.apache.hadoop.fs.Path(sp.file).getName)).sorted
+    // 41 changed files at local[4]: packed to about one group per core
+    val all = planned(range)
+    assert(all.size <= 8, s"${all.size} partitions for 41 changed files")
+    assert(names(all) == (added ++ retired + kept).toSeq.sorted)
+    assert(range.groupBy(graft.sources.FleetCDC.ChangeTypeCol).count()
+      .as[(String, Long)].collect().toMap ==
+      Map("insert" -> 2000L, "delete" -> 2001L))
+    // a pushed tag filter plans only the removed and grown files
+    val dels = planned(range.where(
+      col(graft.sources.FleetCDC.ChangeTypeCol) === "delete"))
+    assert(dels.forall(_.tag == "delete"))
+    assert(names(dels) == (retired + kept).toSeq.sorted)
+  }
 }

@@ -435,6 +435,19 @@ class FleetStreamSpec extends SparkSpec {
       Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
     assert(chain(e).exists(t => Option(t.getMessage).exists(
       _.contains("follows MAIN history"))), e.toString)
+    // the KEYED feed resolves its head by the same rule: the same
+    // guard, rather than silently streaming MAIN history
+    val ek = intercept[Exception] {
+      val q = s2.readStream.format("graft-avro")
+        .option("readChangeFeed", "true").option("cdcKeyCols", "id")
+        .load(dir)
+        .writeStream.format("noop")
+        .option("checkpointLocation", s"$root/ck_guard_keyed")
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+    }
+    assert(chain(ek).exists(t => Option(t.getMessage).exists(
+      _.contains("follows MAIN history"))), ek.toString)
   }
 
   test("an MV maintained from the change stream matches FleetMV.refresh") {
@@ -632,7 +645,7 @@ class FleetStreamSpec extends SparkSpec {
 
   test("offsets PIN deletion-vector bindings at admission; replay deterministic") {
     import spark.implicits._
-    import graft.sources.{AvroFleetMicroBatchStream, AvroFilePartition, FleetDv, FleetManifest, FleetSourceOffset}
+    import graft.sources.{AvroFleetMicroBatchStream, AvroFileGroup, FleetDv, FleetManifest, FleetSourceOffset}
     val root = graft.util.Scratch.dir("stream_dv_pin")
     val dir = s"$root/t.avro"
     spark.range(500).select($"id", ($"id" % 7).as("k"))
@@ -673,7 +686,7 @@ class FleetStreamSpec extends SparkSpec {
     // batch contents are a deterministic function of the offset range
     // (exactly-once replay for recovering sinks; r16 ADVICE)
     val specs = stream.planInputPartitions(init, end1)
-      .collect { case fp: AvroFilePartition => fp.dv }.flatten
+      .collect { case g: AvroFileGroup => g.splits.flatMap(_.dv) }.flatten
     assert(specs.nonEmpty && specs.forall(_.newDv == pinnedPath),
       s"replay must plan under the admission-pinned vector: ${specs.toSeq}")
     // pins survive the offset-log round trip, inline spelling
@@ -1090,6 +1103,30 @@ class FleetStreamSpec extends SparkSpec {
       .option("readChangeFeed", "true")
       .option("startingVersion", "0").option("branch", "wip")
       .load(dir).count() == 30L)
+  }
+
+  test("a change-feed range sizes itself from its change splits, not the fleet") {
+    val root = graft.util.Scratch.dir("cdc_range_stats")
+    val dir = s"$root/t.avro"
+    (0 until 5).foreach(i => writeGen(dir, i * 100, (i + 1) * 100))  // v1..v5
+    import spark.implicits._
+    spark.range(500, 510).select($"id", concat(lit("v"), $"id").as("v"))
+      .coalesce(1).write.format("graft-avro").mode("append").save(dir) // v6
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val added = graft.sources.FleetManifest.snapshotAt(fs, p, 6L).get.files
+      .diff(graft.sources.FleetManifest.snapshotAt(fs, p, 5L).get.files)
+    assert(added.size == 1, added.toString)
+    val len = fs.getFileStatus(new org.apache.hadoop.fs.Path(p, added.head))
+      .getLen
+    val df = spark.read.format("graft-avro")
+      .option("readChangeFeed", "true")
+      .option("startingVersion", "5").option("endingVersion", "6")
+      .load(dir)
+    // every column projected: the estimate is exactly the one changed
+    // file's bytes, not the 11-file fleet's
+    assert(df.queryExecution.optimizedPlan.stats.sizeInBytes == BigInt(len))
+    assert(df.count() == 10L)
   }
 
   test("keyed batch change range: spark.read + cdcKeyCols nets per key") {
