@@ -2316,10 +2316,11 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
     * broadcast-threshold decision this feeds. `numRows` is the
     * surviving files' recorded row total when every one carries stats
     * (an upper bound under pushed filters, exact without them). A
-    * change-feed range prices its change splits instead, and a
-    * change-feed STREAM (no one range) reports no size. */
+    * change-feed range prices its change splits instead. A STREAM
+    * (change feed or file tail, priced every micro-batch) reports no
+    * size: the whole current fleet's bytes describe no one batch. */
   override def estimateStatistics(): Statistics = {
-    if (cdc && streaming) return new Statistics {
+    if (streaming) return new Statistics {
       override def sizeInBytes() = java.util.OptionalLong.empty()
       override def numRows() = java.util.OptionalLong.empty()
     }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
@@ -27,6 +27,11 @@ import org.apache.spark.sql.functions.col
   * way to get equal-sized sorted shards) + a per-partition sort, then
   * the normal arbitrated V2 commit (attempt temps, rename-if-absent,
   * sidecar merge, `_SUCCESS` last).
+  *
+  * It is also the ONE retention core of every manifest fleet, Avro and
+  * Parquet tiers alike: [[expireVersions]], [[removeOrphans]] and the
+  * copy-on-write merge's sweep all retire files through [[unlink]],
+  * which drops each file's `_stats.json` entry with it.
   */
 object FleetCompact {
 
@@ -91,11 +96,27 @@ object FleetCompact {
   final case class ExpireResult(expiredVersions: Seq[Long],
       deletedFiles: Seq[String])
 
-  /** Snapshot retention for a TRANSACTIONAL fleet ([[FleetManifest]]):
-    * keep the newest `keepLast` manifest versions, drop the older
-    * version files, and unlink every data file that only expired
-    * generations referenced. `versionAsOf` reads of retained versions
-    * keep working; reads of expired ones fail with the documented
+  /** Unlink retired fleet-relative names — a directory (a columnar
+    * vector partition, a `.staging-*` leftover) recursively — and drop
+    * their sidecar entries in one rewrite. A retired name's entry is
+    * dead even if its unlink failed. Returns the names unlinked. */
+  private[sources] def unlink(fs: FileSystem, dir: Path,
+      retired: Seq[String]): Seq[String] = {
+    val gone = retired.filter { n =>
+      val t = new Path(dir, n)
+      if (fs.isDirectory(t)) fs.delete(t, true)
+      else fs.delete(t, false)
+    }
+    FleetStats.drop(fs, dir, retired.toSet)
+    gone
+  }
+
+  /** Snapshot retention for a TRANSACTIONAL fleet ([[FleetManifest]]),
+    * either codec: keep the newest `keepLast` manifest versions, drop
+    * the older version files, and unlink every data file and deletion
+    * vector that only expired generations referenced, with their
+    * sidecar entries. `versionAsOf` reads of retained versions keep
+    * working; reads of expired ones fail with the documented
     * missing-version error. Deletion is precise, not a sweep —
     * candidates are (∪ expired generations' files) − (∪ retained
     * generations' files) — so an in-flight job's task-committed (not
@@ -113,7 +134,7 @@ object FleetCompact {
     // must not land between the retained-version scan and the deletes
     // (a restore re-pointing at an expired generation would otherwise
     // leave a CURRENT version whose files this pass just unlinked)
-    FleetManifest.withCommitLock(fs, dirPath) {
+    val r = FleetManifest.withCommitLock(fs, dirPath) {
       val vs = FleetManifest.versions(fs, dirPath)
       // TAGGED versions are pinned: retention keeps them (and their
       // files/vectors) regardless of keepLast — a named ref must stay
@@ -160,16 +181,96 @@ object FleetCompact {
         expired.foreach { v =>
           fs.delete(FleetManifest.versionFilePath(dirPath, v), false)
         }
-        val deleted = (candidates ++ dvCandidates).filter { n =>
-          val t = new Path(dirPath, n)
-          // a columnar-tier deletion vector is a DIRECTORY (one
-          // parquet partition per binding), wholly owned by its
-          // binding — it GCs recursively; plain files (avro tier
-          // data/vectors) keep the non-recursive guard
-          if (fs.isDirectory(t)) fs.delete(t, true)
-          else fs.delete(t, false)
+        ExpireResult(expired, unlink(fs, dirPath, candidates ++ dvCandidates))
+      }
+    }
+    sweepEmptyDvGenerations(fs, dirPath)
+    r
+  }
+
+  /** ORPHAN SWEEP for a manifest fleet, either codec: unlink what NO
+    * retained generation (main or branch) references and is older than
+    * `graceMs` — a task-committed top-level `.avro`/`.parquet` part
+    * whose manifest commit never landed, a `.staging-*` dir from a
+    * killed writer, a `_dv/` vector file or `_dv_parquet` vector
+    * partition from a crashed or conflicted delete. The grace guard
+    * keeps an in-flight job's just-staged files safe: a stray must
+    * predate any plausibly-running job. Returns the deleted paths
+    * (fleet-relative). */
+  def removeOrphans(s: SparkSession, dir: String, graceMs: Long)
+      : Seq[String] = {
+    require(graceMs >= 0, "grace_ms must be >= 0")
+    val p = new Path(dir)
+    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    require(FleetManifest.versions(fs, p).nonEmpty,
+      s"remove_orphans: fleet at $dir has no manifest — on a legacy " +
+        "(raw-listing) fleet every data file is live")
+    val cutoff = System.currentTimeMillis() - graceMs
+    // data names and vector rels (which hold a '/') share one set
+    val live = FleetManifest.withCommitLock(fs, p) {
+      val snaps = FleetManifest.versions(fs, p).flatMap(v =>
+        FleetManifest.snapshotAtMain(fs, p, v).toSeq) ++
+        // a staged branch generation's files are LIVE — published
+        // or dropped decides their fate, never the orphan sweep
+        FleetManifest.branchSnapshots(fs, p)
+      // chain vectors reference their parent files transitively —
+      // a leaf reached only through a live chain node is LIVE
+      snaps.flatMap(_.files).toSet ++
+        FleetDv.expandRefs(fs, p, snaps.flatMap(_.dvs.values).toSet)
+    }
+    def list(rel: String): Seq[(String, FileStatus)] = {
+      val d = if (rel.isEmpty) p else new Path(p, rel)
+      if (!fs.exists(d)) Nil
+      else fs.listStatus(d).toSeq.map(st =>
+        ((if (rel.isEmpty) "" else s"$rel/") + st.getPath.getName, st))
+    }
+    val topStrays = list("").filter { case (n, st) =>
+      if (st.isDirectory) n.startsWith(".staging-")
+      else !n.startsWith("_") && !n.startsWith(".") &&
+        (n.endsWith(".avro") || n.endsWith(".parquet"))
+    }
+    // vector strays: written by a delete that crashed or conflicted
+    // before its manifest commit
+    val dvGens = list(ParquetFleet.DvDir).filter(_._2.isDirectory)
+    val dvStrays = list(FleetDv.DirName).filter(_._2.isFile) ++
+      dvGens.flatMap(g => list(g._1).filter(_._2.isDirectory))
+    val gone = unlink(fs, p, (topStrays ++ dvStrays).collect {
+      case (n, st) if st.getModificationTime < cutoff && !live(n) => n })
+    // a gen dir with no live partition left holds only write markers —
+    // sweep it, but never a fresh one (an in-flight delete may still be
+    // writing its partitions into it)
+    dvGens.foreach { case (_, gen) =>
+      if (gen.getModificationTime < cutoff &&
+          !fs.listStatus(gen.getPath).exists(c =>
+            c.isDirectory && c.getPath.getName.startsWith("__file=")))
+        fs.delete(gen.getPath, true)
+    }
+    gone
+  }
+
+  /** The columnar tier's emptied vector generation dirs (a no-op on an
+    * Avro fleet, which has no `_dv_parquet/`): a generation dir whose
+    * partition dirs all GC'd holds only write markers (_SUCCESS) —
+    * sweep it; one with any live partition stays, markers included.
+    * Race guard (r21, ADVICE r20 #2): a CONCURRENT MOR delete's
+    * generation dir holds a `_temporary` SUBDIRECTORY (its in-flight
+    * shuffle write) and no `__file=` children yet — the old recursive
+    * sweep deleted it mid-job. Now any subdirectory blocks the sweep,
+    * marker FILES are unlinked individually, and the dir itself is
+    * removed NON-recursively, so a partition promoted between our
+    * listing and the rmdir makes the rmdir fail harmlessly instead of
+    * deleting just-promoted vectors. */
+  private def sweepEmptyDvGenerations(fs: FileSystem, p: Path): Unit = {
+    val dvRoot = new Path(p, ParquetFleet.DvDir)
+    if (fs.exists(dvRoot)) fs.listStatus(dvRoot).foreach { st =>
+      if (st.isDirectory) {
+        val kids = fs.listStatus(st.getPath)
+        if (!kids.exists(_.isDirectory)) {
+          kids.foreach(k => fs.delete(k.getPath, false))
+          try fs.delete(st.getPath, false)
+          catch { case _: java.io.IOException => () }
+          ()
         }
-        ExpireResult(expired, deleted)
       }
     }
   }

@@ -191,10 +191,8 @@ object FleetMerge {
       val stillReferenced = FleetManifest.versions(fs, dirPath)
         .flatMap(v => FleetManifest.snapshotAt(fs, dirPath, v)
           .toSeq.flatMap(_.files)).toSet
-      touched.foreach { t =>
-        val tp = new org.apache.hadoop.fs.Path(t)
-        if (!stillReferenced(tp.getName)) fs.delete(tp, false)
-      }
+      FleetCompact.unlink(fs, dirPath,
+        touchedNames.filterNot(stillReferenced))
     }
     CowResult(touched, untouched, written)
   }

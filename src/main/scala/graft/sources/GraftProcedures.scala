@@ -50,8 +50,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `remove_orphans(table, grace_ms)` — GC for files NO manifest
   *    version references (a crashed job's task-committed strays:
   *    renamed to final names but never manifest-committed, so never
-  *    reader-visible). `grace_ms` guards in-flight jobs — only files
-  *    older than (now − grace) qualify.
+  *    reader-visible), via [[FleetCompact.removeOrphans]]. `grace_ms`
+  *    guards in-flight jobs — only files older than (now − grace)
+  *    qualify. Both retention verbs drop the deleted files' sidecar
+  *    entries.
   *
   * Results surface as `LocalScan` rows — driver-side by design: every
   * procedure is a METADATA operation (the one distributed step,
@@ -274,18 +276,19 @@ private[sources] object GraftProcedures {
     * policy may outlive. */
   /** `CALL clone(src, dst)` — an INDEPENDENT copy of the source's
     * CURRENT generation whose history starts fresh at v1. On a local
-    * filesystem every data file, bound deletion vector, and sidecar
+    * filesystem every data file, bound deletion vector, and marker
     * is HARD-LINKED (O(files) metadata ops, zero bytes copied — the
     * dev/test sandbox of a production fleet costs nothing; linked
     * content is safe to share because committed fleet files are
     * immutable: every mutation path writes NEW files and retires old
     * names); filesystems without link(2) fall back to a copy (at
     * object-store scale that is the store's server-side copy).
-    * Vector bindings and their manifest meta carry into the clone's
-    * v1 snapshot, as do the declared-schema marker, layout marker,
-    * and CHECK constraints. Tags, branches, and retained history do
-    * NOT clone — the clone is one generation, not a mirror (use the
-    * change feed for mirrors). */
+    * The stats sidecar is written fresh from the source's entries for
+    * the cloned files. Vector bindings and their manifest meta carry
+    * into the clone's v1 snapshot, as do the declared-schema marker,
+    * layout marker, and CHECK constraints. Tags, branches, and
+    * retained history do NOT clone — the clone is one generation, not
+    * a mirror (use the change feed for mirrors). */
   private final class Clone(dirFor: String => String)
       extends Base("clone") {
     override def description: String =
@@ -314,7 +317,7 @@ private[sources] object GraftProcedures {
       val vectors = snap.map(s =>
         FleetDv.expandRefs(fs, sp, s.dvs.values.toSet).toSeq.sorted)
         .getOrElse(Seq.empty)
-      val markers = Seq("_stats.json", FleetSchemaMarker.FileName,
+      val markers = Seq(FleetSchemaMarker.FileName,
         FleetLayout.FileName, FleetChecks.FileName)
         .filter(m => fs.exists(new Path(sp, m)))
       fs.mkdirs(dp)
@@ -349,6 +352,11 @@ private[sources] object GraftProcedures {
         }
       }
       (names ++ vectors ++ markers).foreach(bring)
+      // the cloned files' entries of the source's merged sidecar (base
+      // plus `_stats.d/` shards), never a link of the base alone
+      val cloned = names.toSet
+      val stats = FleetStats.read(fs, sp).filter { case (n, _) => cloned(n) }
+      if (stats.nonEmpty) FleetStats.write(fs, dp, stats)
       // the clone's v1: the linked names under the source's bindings
       // and meta; the declared-schema prop carries so VERSION AS OF 1
       // of the clone resolves the schema the source had now, and the
@@ -993,6 +1001,11 @@ private[sources] object GraftProcedures {
     }
   }
 
+  /** `CALL remove_orphans(table, grace_ms)` — the shared orphan sweep
+    * ([[FleetCompact.removeOrphans]], the one implementation both
+    * codecs run): unreferenced data files, `.staging-*` leftovers and
+    * vector strays older than (now − grace), with their sidecar
+    * entries. Reports how many paths it deleted. */
   private final class RemoveOrphans(dirFor: String => String)
       extends Base("remove_orphans") {
     override def description: String =
@@ -1003,52 +1016,10 @@ private[sources] object GraftProcedures {
     private val out = StructType(Seq(
       StructField("deleted_files", IntegerType, nullable = false)))
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val graceMs = input.getLong(1)
-      require(graceMs >= 0, "grace_ms must be >= 0")
-      val dir = requireFleet(dirFor, table)
-      val (p, fs) = fsFor(dir)
-      require(FleetManifest.versions(fs, p).nonEmpty,
-        s"remove_orphans: fleet '$table' has no manifest — on a " +
-          "legacy (raw-listing) fleet every data file is live")
-      // an in-flight job's task-committed files are orphans-in-waiting
-      // until its ONE manifest commit lands; grace_ms is the guard —
-      // only files strictly older than (now − grace) qualify, so a
-      // stray must predate any plausibly-running job. The referenced
-      // set spans EVERY retained version (time travel keeps serving).
-      val cutoff = System.currentTimeMillis() - graceMs
-      val (referenced, referencedDvs) =
-        FleetManifest.withCommitLock(fs, p) {
-          val snaps = FleetManifest.versions(fs, p).flatMap(v =>
-            FleetManifest.snapshotAtMain(fs, p, v).toSeq) ++
-            // a staged branch generation's files are LIVE — published
-            // or dropped decides their fate, never the orphan sweep
-            FleetManifest.branchSnapshots(fs, p)
-          // chain vectors reference their parent files transitively —
-          // a leaf reached only through a live chain node is LIVE
-          (snaps.flatMap(_.files).toSet,
-            FleetDv.expandRefs(fs, p,
-              snaps.flatMap(_.dvs.values).toSet))
-        }
-      val dataDeleted = AvroFleetCommits.dataFileStatuses(fs, p).count { st =>
-        val n = st.getPath.getName
-        !referenced(n) && st.getModificationTime < cutoff &&
-          fs.delete(st.getPath, false)
-      }
-      // deletion-vector strays: written inside a delta commit that
-      // then crashed/conflicted before its manifest commit — never
-      // reader-visible, same grace guard
-      val dvDir = new Path(p, FleetDv.DirName)
-      val dvDeleted =
-        if (!fs.exists(dvDir)) 0
-        else fs.listStatus(dvDir).count { st =>
-          val rel = s"${FleetDv.DirName}/${st.getPath.getName}"
-          st.isFile && !referencedDvs(rel) &&
-            st.getModificationTime < cutoff &&
-            fs.delete(st.getPath, false)
-        }
-      result(out,
-        new GenericInternalRow(Array[Any](dataDeleted + dvDeleted)))
+      val dir = requireFleet(dirFor, input.getUTF8String(0).toString)
+      val gone = FleetCompact.removeOrphans(SparkSession.active, dir,
+        graceMs = input.getLong(1))
+      result(out, new GenericInternalRow(Array[Any](gone.size)))
     }
   }
 

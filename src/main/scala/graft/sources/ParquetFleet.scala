@@ -51,8 +51,9 @@ import org.apache.spark.sql.functions._
   * `mergeSchema` evolution with versioned declared schemas, metadata
   * tiers ([[count]], [[minMax]]), a row-exact change data feed
   * ([[changes]], composing with [[FleetCDC.reconcileKeyed]]),
-  * clustered compaction, snapshot retention ([[expire]]) and orphan
-  * sweeping ([[removeOrphans]]), and both AS OF spellings
+  * clustered compaction, snapshot retention and orphan sweeping (the
+  * [[FleetCompact.expireVersions]] / [[FleetCompact.removeOrphans]]
+  * core both tiers share), and both AS OF spellings
   * ([[versionAtTimestamp]]). Each delete writes per-file vectors via
   * ONE distributed `partitionBy(file)` job (positions never collect
   * to the driver), reads only the stats-surviving candidate files,
@@ -484,8 +485,9 @@ private[graft] object ParquetFleet {
 
   /** NAMED REFS on the columnar tier — the manifest's own immutable
     * tags (shared machinery, shared retention semantics: a tagged
-    * generation and its files/vectors survive [[expire]] regardless
-    * of keepLast, exactly what a training-data RELEASE cut needs —
+    * generation and its files/vectors survive retention
+    * ([[FleetCompact.expireVersions]]) regardless of keepLast, exactly
+    * what a training-data RELEASE cut needs —
     * "tag the dataset, retention keeps it, readers address it by
     * name"). `createTag` with no version pins the CURRENT generation;
     * re-pointing requires an explicit `dropTag` (tags are immutable). */
@@ -723,106 +725,6 @@ private[graft] object ParquetFleet {
       requireDvs = snap.files.map(f => f -> snap.dvs.get(f)).toMap)
     fs.delete(staging, true)
     ()
-  }
-
-  /** SNAPSHOT RETENTION for the columnar tier — the same precise GC
-    * the avro tier runs ([[FleetCompact.expireVersions]]: keep the
-    * newest `keepLast` versions plus anything tagged/branched, drop
-    * expired version files first, then every data file and deletion-
-    * vector directory only expired generations referenced — crash
-    * between the two leaves harmless orphans, never a readable version
-    * with missing files). On top of the shared pass this tier also
-    * drops the deleted files' advisory sidecar entries (bounded
-    * `_stats.json`) and sweeps vector generation dirs left empty. */
-  def expire(s: SparkSession, dir: String, keepLast: Int)
-      : FleetCompact.ExpireResult = {
-    val r = FleetCompact.expireVersions(s, dir, keepLast)
-    val (fs, p) = fsp(s, dir)
-    FleetStats.drop(fs, p, r.deletedFiles.toSet)
-    val dvRoot = new Path(p, DvDir)
-    // a generation dir whose partition dirs all GC'd holds only write
-    // markers (_SUCCESS) — sweep it; one with any live partition
-    // stays, markers included. Race guard (r21, ADVICE r20 #2): a
-    // CONCURRENT MOR delete's generation dir holds a `_temporary`
-    // SUBDIRECTORY (its in-flight shuffle write) and no `__file=`
-    // children yet — the old recursive sweep deleted it mid-job. Now
-    // any subdirectory blocks the sweep, marker FILES are unlinked
-    // individually, and the dir itself is removed NON-recursively, so
-    // a partition promoted between our listing and the rmdir makes
-    // the rmdir fail harmlessly instead of deleting just-promoted
-    // vectors.
-    if (fs.exists(dvRoot)) fs.listStatus(dvRoot).foreach { st =>
-      if (st.isDirectory) {
-        val kids = fs.listStatus(st.getPath)
-        if (!kids.exists(_.isDirectory)) {
-          kids.foreach(k => fs.delete(k.getPath, false))
-          try fs.delete(st.getPath, false)
-          catch { case _: java.io.IOException => () }
-          ()
-        }
-      }
-    }
-    r
-  }
-
-  /** ORPHAN SWEEP: delete data files, staging leftovers, and vector
-    * partitions NO retained generation (main or branch) references,
-    * older than `graceMs` — the crashed-job debris a 100 TB fleet
-    * accumulates (a task-committed part whose manifest commit never
-    * landed, a `.staging-*` dir from a killed writer, a vector
-    * generation from a conflicted delete). The grace guard keeps an
-    * in-flight job's just-staged files safe: only strays strictly
-    * older than (now − grace) qualify. Returns the deleted paths
-    * (fleet-relative). */
-  def removeOrphans(s: SparkSession, dir: String, graceMs: Long)
-      : Seq[String] = {
-    require(graceMs >= 0, "graceMs must be >= 0")
-    val (fs, p) = fsp(s, dir)
-    val cutoff = System.currentTimeMillis() - graceMs
-    val (referenced, referencedDvs) =
-      FleetManifest.withCommitLock(fs, p) {
-        val snaps = FleetManifest.versions(fs, p).flatMap(v =>
-          FleetManifest.snapshotAtMain(fs, p, v).toSeq) ++
-          FleetManifest.branchSnapshots(fs, p)
-        (snaps.flatMap(_.files).toSet,
-          snaps.flatMap(_.dvs.values).toSet)
-      }
-    val dataGone = fs.listStatus(p).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      val straysFile = st.isFile && n.endsWith(".parquet") &&
-        !referenced(n) && st.getModificationTime < cutoff
-      val straysStaging = st.isDirectory && n.startsWith(".staging-") &&
-        st.getModificationTime < cutoff
-      if (straysFile && fs.delete(st.getPath, false)) Some(n)
-      else if (straysStaging && fs.delete(st.getPath, true)) Some(n)
-      else None
-    }
-    val dvRoot = new Path(p, DvDir)
-    val dvGone =
-      if (!fs.exists(dvRoot)) Seq.empty
-      else fs.listStatus(dvRoot).toSeq.filter(_.isDirectory)
-        .flatMap { gen =>
-          val genRel = s"$DvDir/${gen.getPath.getName}"
-          val gone = fs.listStatus(gen.getPath).toSeq
-            .filter(_.isDirectory).flatMap { part =>
-              val rel = s"$genRel/${part.getPath.getName}"
-              if (!referencedDvs(rel) &&
-                  part.getModificationTime < cutoff &&
-                  fs.delete(part.getPath, true)) Some(rel)
-              else None
-            }
-          // a gen dir with no live partition left holds only write
-          // markers — sweep it, but never a fresh one (an in-flight
-          // delete may still be writing its partitions into it)
-          if (gen.getModificationTime < cutoff &&
-              !fs.listStatus(gen.getPath).exists(c =>
-                c.isDirectory && c.getPath.getName.startsWith("__file=")))
-            fs.delete(gen.getPath, true)
-          gone
-        }
-    // strayed data files may have advisory sidecar entries too
-    FleetStats.drop(fs, p, dataGone.toSet)
-    dataGone ++ dvGone
   }
 
   /** METADATA-TIER global MIN/MAX of one column: files WITHOUT a

@@ -11,16 +11,28 @@ import org.apache.spark.sql.SparkSession
   *
   * Pure driver-side measurement (manifest commits launch no jobs):
   * grows one fleet to `files` via 1-file append commits and reports
-  * the mean commit latency per 1k-file window, plus the bytes of the
-  * newest version file:
+  * the mean, p50 and p99 commit latency per 1k-file window, plus the
+  * bytes of the newest version file; the stats-sidecar curve reports
+  * the same three per window:
   *
   *   sbt "runMain graft.tools.ManifestBench 10000"
   *
-  * (Window means are robust to GC blips at these sub-ms scales.) */
+  * (Window means are robust to GC blips at these sub-ms scales; the
+  * p99 is where a blip, or a periodic checkpoint/shard fold, shows.) */
 object ManifestBench {
+  /** "mean_<what>_ms=… p50_ms=… p99_ms=…" over one window's samples
+    * (nearest-rank percentiles). */
+  private def windowStats(what: String, nanos: Array[Long]): String = {
+    val sorted = nanos.sorted
+    def pct(q: Double) =
+      sorted(math.max(0, math.ceil(q * sorted.length).toInt - 1)) / 1e6
+    f"mean_${what}_ms=${nanos.sum / 1e6 / nanos.length}%8.3f " +
+      f"p50_ms=${pct(0.50)}%8.3f p99_ms=${pct(0.99)}%8.3f"
+  }
+
   def main(args: Array[String]): Unit = {
     val files = if (args.length > 0) args(0).toInt else 10000
-    val window = 1000
+    val windowSize = 1000
     val spark = graft.util.GraftSession.defaults(SparkSession.builder()
       .master("local[2]")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -28,22 +40,21 @@ object ManifestBench {
     val dir = new org.apache.hadoop.fs.Path(s"$root/t.avro")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     fs.mkdirs(dir)
-    println(s"[manifestbench] files=$files window=$window")
+    println(s"[manifestbench] files=$files window=$windowSize")
+    val winNanos = new Array[Long](windowSize)
     var i = 0
-    var winNanos = 0L
     while (i < files) {
       val name = f"part-$i%08d.avro"
       val t0 = System.nanoTime()
       graft.sources.FleetManifest.commit(fs, dir,
         base => base :+ name, bootstrap = Seq.empty)
-      winNanos += System.nanoTime() - t0
+      winNanos(i % windowSize) = System.nanoTime() - t0
       i += 1
-      if (i % window == 0) {
+      if (i % windowSize == 0) {
         val vf = graft.sources.FleetManifest.versionFilePath(dir, i.toLong)
-        println(f"[manifestbench] files=$i%6d mean_commit_ms=" +
-          f"${winNanos / 1e6 / window}%8.3f newest_vfile_bytes=" +
+        println(f"[manifestbench] files=$i%6d " +
+          windowStats("commit", winNanos) + " newest_vfile_bytes=" +
           f"${fs.getFileStatus(vf).getLen}%8d")
-        winNanos = 0L
       }
     }
     // one cold full-history probe: the reconstruction cost a fresh
@@ -62,7 +73,6 @@ object ManifestBench {
     val sdir = new org.apache.hadoop.fs.Path(s"$root/stats")
     fs.mkdirs(sdir)
     i = 0
-    winNanos = 0L
     while (i < files) {
       val entry = Map(f"part-$i%08d.avro" ->
         graft.sources.FleetStats.PartStats(i.toLong, 1L, Map(
@@ -70,13 +80,11 @@ object ManifestBench {
             Some(i.toLong), Some(i.toLong), 0L))))
       val t1 = System.nanoTime()
       graft.sources.FleetStats.write(fs, sdir, entry)
-      winNanos += System.nanoTime() - t1
+      winNanos(i % windowSize) = System.nanoTime() - t1
       i += 1
-      if (i % window == 0) {
-        println(f"[manifestbench] stats entries=$i%6d mean_write_ms=" +
-          f"${winNanos / 1e6 / window}%8.3f")
-        winNanos = 0L
-      }
+      if (i % windowSize == 0)
+        println(f"[manifestbench] stats entries=$i%6d " +
+          windowStats("write", winNanos))
     }
     val t2 = System.nanoTime()
     val n = graft.sources.FleetStats.read(fs, sdir).size

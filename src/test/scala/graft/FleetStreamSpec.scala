@@ -1129,6 +1129,28 @@ class FleetStreamSpec extends SparkSpec {
     assert(df.count() == 10L)
   }
 
+  test("a file-tail stream's scan reports no size once it becomes a stream") {
+    val root = graft.util.Scratch.dir("tail_stats")
+    val dir = s"$root/t.avro"
+    (0 until 3).foreach(i => writeGen(dir, i * 100, (i + 1) * 100))
+    val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("path", dir))
+    val provider = new graft.sources.AvroFleetSource
+    val scan = provider.getTable(provider.inferSchema(opts),
+      Array.empty, opts)
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
+      .newScanBuilder(opts).build()
+    def size() = scan.asInstanceOf[
+      org.apache.spark.sql.connector.read.SupportsReportStatistics]
+      .estimateStatistics().sizeInBytes()
+    // a batch scan prices the fleet's bytes
+    assert(size().isPresent && size().getAsLong > 0L)
+    // the engine prices a stream every micro-batch; the whole current
+    // fleet's bytes say nothing about a batch of a few new files
+    scan.toMicroBatchStream(s"$root/ckpt")
+    assert(!size().isPresent, s"a tailed fleet reported ${size()}")
+  }
+
   test("keyed batch change range: spark.read + cdcKeyCols nets per key") {
     val root = graft.util.Scratch.dir("cdc_batch_keyed")
     val dir = s"$root/t.avro"

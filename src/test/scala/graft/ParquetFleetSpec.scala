@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * vectors, time travel, binding merge across deletes, and the
   * concurrent-delete compare-and-set. */
 class ParquetFleetSpec extends SparkSpec {
-  import graft.sources.ParquetFleet
+  import graft.sources.{FleetCompact, ParquetFleet}
 
   private def stage(tagName: String): String = {
     import spark.implicits._
@@ -433,7 +433,7 @@ class ParquetFleetSpec extends SparkSpec {
     assert(v2.dvs.nonEmpty)
     ParquetFleet.compact(spark, dir)                      // v3 (dense)
     val expected = (0L until 100L).count(_ % 7 != 3).toLong
-    val r = ParquetFleet.expire(spark, dir, keepLast = 1)
+    val r = FleetCompact.expireVersions(spark, dir, keepLast = 1)
     assert(r.expiredVersions == Seq(1L, 2L), r.toString)
     // every v1/v2-only data file is gone; the dense set remains
     assert(v1Files.forall(n =>
@@ -477,7 +477,7 @@ class ParquetFleetSpec extends SparkSpec {
     val strayVec = plant(
       s"${ParquetFleet.DvDir}/gen-deadbeef/__file=ghost.parquet",
       asDir = true)
-    val gone = ParquetFleet.removeOrphans(spark, dir, graceMs = 60000)
+    val gone = FleetCompact.removeOrphans(spark, dir, graceMs = 60000)
     assert(gone.size == 3, s"expected exactly the three strays: $gone")
     assert(!fs.exists(strayPart) && !fs.exists(strayStaging) &&
       !fs.exists(strayVec))
@@ -489,7 +489,7 @@ class ParquetFleetSpec extends SparkSpec {
     // a fresh stray inside the grace window survives
     val fresh = plant("part-88888-deadbeef.parquet", asDir = false)
     fs.setTimes(fresh, System.currentTimeMillis(), -1)
-    assert(ParquetFleet.removeOrphans(spark, dir, graceMs = 3600000L)
+    assert(FleetCompact.removeOrphans(spark, dir, graceMs = 3600000L)
       .isEmpty)
     assert(fs.exists(fresh))
   }
@@ -858,7 +858,7 @@ class ParquetFleetSpec extends SparkSpec {
       Some(ParquetFleet.versionOfTag(spark, dir, "release-1")))
       .count() == 100)
     // retention keeps the TAGGED generation's files even past keepLast
-    val r = ParquetFleet.expire(spark, dir, keepLast = 1)
+    val r = FleetCompact.expireVersions(spark, dir, keepLast = 1)
     assert(r.expiredVersions == Seq(2L), r.toString)
     assert(ParquetFleet.read(spark, dir,
       Some(ParquetFleet.versionOfTag(spark, dir, "release-1")))
@@ -984,7 +984,7 @@ class ParquetFleetSpec extends SparkSpec {
     val dead = new org.apache.hadoop.fs.Path(dvRoot, "gen-dead")
     fs.mkdirs(dead)
     fs.create(new org.apache.hadoop.fs.Path(dead, "_SUCCESS"), true).close()
-    ParquetFleet.expire(spark, dir, keepLast = 1)
+    FleetCompact.expireVersions(spark, dir, keepLast = 1)
     assert(fs.exists(inflight) && fs.exists(tmpChild),
       "an in-flight delete's generation dir must survive the sweep")
     assert(!fs.exists(dead),
