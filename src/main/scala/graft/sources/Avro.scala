@@ -462,60 +462,115 @@ object Avro {
     data
   }
 
-  /** HEADER-ONLY schema peek for `readDistributed`: resolve the glob
-    * (or list the directory) via the Hadoop FS, pick the
-    * lexicographically FIRST file — deterministic across runs, unlike
-    * a binaryFile `head()`, whose listing order is no contract — and
-    * read just the OCF header (magic + metadata block): DataFileStream
-    * parses the schema at construction and we never iterate rows, so
-    * the driver pulls O(header) bytes, never the whole file. */
-  private[graft] def peekSchema(s: SparkSession, glob: String): Schema = {
-    val files = listFleet(s, glob)
-    val first = files.map(_.getPath).minBy(_.toString)
-    val fs = first.getFileSystem(s.sessionState.newHadoopConf())
-    val in = fs.open(first)
+  // ---- writer-schema memo ------------------------------------------
+  //
+  // A data file's writer schema is fixed when the file is written: the
+  // fleet writers only ever publish complete, immutable files under a
+  // fresh name. So the schema read from one header serves every later
+  // peek of the same file, keyed by (qualified path, len, mtime) from
+  // the status the caller already holds — a manifest fleet's statuses
+  // come from its committed sizes, so a hit costs no filesystem call.
+  // A file rewritten in place under its old name (outside the fleet
+  // contract) changes its length or mtime and is peeked again. Parsed
+  // schemas are interned by the fingerprint of their full JSON, so a
+  // fleet of a million files holds one Schema per distinct shape, not
+  // one per file. Both maps are cleared past 4096 entries (the
+  // manifest snapshot cache's policy).
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long), Schema]()
+  private val schemaIntern =
+    new java.util.concurrent.ConcurrentHashMap[java.lang.Long, Schema]()
+  private val MemoCap = 4096
+
+  private def memoKey(st: org.apache.hadoop.fs.FileStatus) =
+    (st.getPath.toString, st.getLen, st.getModificationTime)
+
+  /** The one parsed Schema for writer-schema JSON `json`. */
+  private def intern(json: String): Schema = {
+    val fp = java.lang.Long.valueOf(org.apache.avro.SchemaNormalization
+      .fingerprint64(json.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    val hit = schemaIntern.get(fp)
+    if (hit != null && hit.toString == json) hit
+    else {
+      val parsed = new Schema.Parser().parse(json)
+      if (schemaIntern.size > MemoCap) schemaIntern.clear()
+      schemaIntern.put(fp, parsed)
+      parsed
+    }
+  }
+
+  private def remember(st: org.apache.hadoop.fs.FileStatus,
+      schema: Schema): Schema = {
+    if (schemaMemo.size > MemoCap) schemaMemo.clear()
+    schemaMemo.put(memoKey(st), schema)
+    schema
+  }
+
+  /** The writer-schema JSON in `p`'s OCF header (magic + metadata
+    * block): DataFileStream parses the schema at construction and we
+    * never iterate rows, so this pulls O(header) bytes. */
+  private def headerJson(conf: org.apache.hadoop.conf.Configuration)(
+      p: String): String = {
+    val path = new org.apache.hadoop.fs.Path(p)
+    val in = path.getFileSystem(conf).open(path)
     try {
-      val header = new DataFileStream(in, new GenericDatumReader[GenericRecord]())
-      try header.getSchema finally header.close()
+      val header =
+        new DataFileStream(in, new GenericDatumReader[GenericRecord]())
+      try header.getSchema.toString finally header.close()
     } finally { try in.close() catch { case _: java.io.IOException => () } }
+  }
+
+  /** HEADER-ONLY schema peek for `readDistributed`: resolve the glob
+    * through [[FleetView.resolve]] and take the writer schema of the
+    * lexicographically FIRST file — deterministic across runs, unlike
+    * a binaryFile `head()`, whose listing order is no contract. The
+    * header is opened only on a writer-schema memo miss (see the memo
+    * above): a repeated peek of an unchanged fleet opens nothing. */
+  private[graft] def peekSchema(s: SparkSession, glob: String): Schema = {
+    val first = listFleet(s, glob).minBy(_.getPath.toString)
+    Option(schemaMemo.get(memoKey(first))).getOrElse(remember(first,
+      intern(headerJson(s.sessionState.newHadoopConf())(
+        first.getPath.toString))))
   }
 
   /** All DISTINCT writer schemas across a fleet, via bounded
     * header-only reads (an OCF header is a few KB, like a parquet
-    * footer). Small fleets peek on the driver; past 64 files the
-    * peeks run as a Spark job over the path list — the same move
-    * Spark's parquet `mergeSchema` makes, so a million-file fleet
-    * costs one distributed pass, not a driver loop. Schemas travel
-    * as JSON strings (Avro `Schema` is not serializable-stable) and
-    * dedupe before parsing: per partition in the job's one stage, then
-    * on the driver (at most 256 partitions × distinct schemas). */
+    * footer), each file's taken from the writer-schema memo when it
+    * was seen before. Only the unseen files are opened: on the driver
+    * when there are at most 64, else as one Spark job over their
+    * paths — the same move Spark's parquet `mergeSchema` makes, so a
+    * million-file fleet costs one distributed pass, not a driver
+    * loop. Schemas travel as JSON strings (Avro `Schema` is not
+    * serializable-stable), deduped per partition. The result is
+    * ordered as it always was: first appearance in path order for
+    * fleets of at most 64 files, JSON order past that. */
   private[graft] def peekAllSchemas(s: SparkSession, glob: String)
       : Seq[Schema] = {
-    val files = listFleet(s, glob)
-      .map(_.getPath.toString).sorted
-    def peekOne(conf: org.apache.hadoop.conf.Configuration)(
-        p: String): String = {
-      val path = new org.apache.hadoop.fs.Path(p)
-      val in = path.getFileSystem(conf).open(path)
-      try {
-        val header =
-          new DataFileStream(in, new GenericDatumReader[GenericRecord]())
-        try header.getSchema.toString finally header.close()
-      } finally { try in.close() catch { case _: java.io.IOException => () } }
-    }
-    val jsons =
-      if (files.length <= 64) {
-        val conf = s.sessionState.newHadoopConf()
-        files.map(peekOne(conf)).distinct
-      } else {
+    val files = listFleet(s, glob).sortBy(_.getPath.toString)
+    val known = files.map(st => Option(schemaMemo.get(memoKey(st))))
+    val unseen = files.zip(known).collect { case (st, None) => st }
+    val paths = unseen.map(_.getPath.toString)
+    val jsons: Seq[String] =
+      if (paths.length <= 64)
+        paths.map(headerJson(s.sessionState.newHadoopConf()))
+      else {
         val conf =
           new graft.util.SerializableHadoopConf(s.sessionState.newHadoopConf())
-        s.sparkContext.parallelize(files, math.min(files.length, 256))
-          .map(p => peekOne(conf.value)(p))
-          .mapPartitions(_.toSeq.distinct.iterator)
-          .collect().toSeq.distinct.sorted
+        // each partition returns its distinct JSONs and, per file in
+        // input order, the index of its JSON among them
+        s.sparkContext.parallelize(paths, math.min(paths.length, 256))
+          .mapPartitions { it =>
+            val js = it.map(headerJson(conf.value)).toArray
+            val distinct = js.distinct
+            Iterator((distinct, js.map(j => distinct.indexOf(j))))
+          }
+          .collect().toSeq.flatMap { case (d, idx) => idx.map(d(_)) }
       }
-    jsons.map(j => new Schema.Parser().parse(j))
+    val peeked = unseen.zip(jsons).map { case (st, j) =>
+      st.getPath.toString -> remember(st, intern(j)) }.toMap
+    val all = files.zip(known).map { case (st, k) =>
+      k.getOrElse(peeked(st.getPath.toString)) }.distinct
+    if (files.length <= 64) all else all.sortBy(_.toString)
   }
 
   /** Distributed ingest of MANY container files — a thin veneer over

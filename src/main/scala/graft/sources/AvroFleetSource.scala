@@ -2096,6 +2096,11 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
 
   override def readSchema(): StructType = required
 
+  // ONE session Hadoop conf per scan (a fresh copy of the ~1,100-entry
+  // session conf costs ~0.2 ms): the driver-side sidecar and vector
+  // reads and the conf shipped to readers all share it
+  private lazy val hadoopConf = SparkSession.active.sessionState.newHadoopConf()
+
   override def description(): String =
     s"graft-avro $path ReadSchema: ${required.catalogString}" +
       limit.map(l => s", PushedLimit: $l").getOrElse("") +
@@ -2127,8 +2132,7 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
       new AvroFleetCdcMicroBatchStream(
         StructType(fullSchema.filterNot(_.name == FleetCDC.ChangeTypeCol)),
         required.fieldNames, path, maxFileBytes, pushedFilters,
-        new SerializableHadoopConf(
-          SparkSession.active.sessionState.newHadoopConf()),
+        new SerializableHadoopConf(hadoopConf),
         evolve = evolve,
         startingVersion = startingVersion,
         aliases = aliases,
@@ -2137,8 +2141,7 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
         changeTags = changeTags)
     else new AvroFleetMicroBatchStream(fullSchema, required.fieldNames, path,
       maxFileBytes, pushedFilters,
-      new SerializableHadoopConf(
-        SparkSession.active.sessionState.newHadoopConf()),
+      new SerializableHadoopConf(hadoopConf),
       maxFilesPerTrigger, evolve = evolve,
       checkpointLocation = checkpointLocation,
       offsetInlineLimit = offsetInlineLimit,
@@ -2163,8 +2166,7 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
         "history) or option(\"startingTimestamp\", ...); for the " +
         "current STATE read the fleet without readChangeFeed"))
     val p0 = new org.apache.hadoop.fs.Path(path)
-    val f = p0.getFileSystem(
-      SparkSession.active.sessionState.newHadoopConf())
+    val f = p0.getFileSystem(hadoopConf)
     val cur = FleetCDC.head(f, p0, branch)
     if (endingVersion.exists(_ > cur))
       throw new IllegalArgumentException(
@@ -2191,8 +2193,7 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
   // per-file stats from the fleet's `_stats.json` sidecars (one small
   // driver-side read per directory; empty where no sidecar exists)
   private lazy val fleetStats = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      SparkSession.active.sessionState.newHadoopConf())
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hadoopConf)
     FleetStats.forFleet(fs, view.files)
   }
 
@@ -2214,8 +2215,7 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
   // (r18); only legacy bindings and caller-passed dvSpec entries pay
   // one tiny header read each
   private lazy val dvCounts: Map[String, Long] = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      SparkSession.active.sessionState.newHadoopConf())
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hadoopConf)
     dvByPath.map { case (f, spec) =>
       // a caller-passed dvSpec may bind a DIFFERENT vector than the
       // manifest's — its count must come from its own header, never
@@ -2520,14 +2520,13 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
     }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val s = SparkSession.active
     if (cdc)
       // batch change-feed range: the stream's own reader pairing —
       // `_change_type` synthesized per partition over the pruned read
       return new FleetCdcReaderFactory(
         StructType(fullSchema.filterNot(_.name == FleetCDC.ChangeTypeCol)),
         required.fieldNames, pushedFilters,
-        new SerializableHadoopConf(s.sessionState.newHadoopConf()),
+        new SerializableHadoopConf(hadoopConf),
         evolve, aliases)
     // a row-level-operation scan uses pushed filters ONLY to skip
     // whole files: its consumer (ReplaceData) must receive EVERY row
@@ -2537,7 +2536,7 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
       org.apache.spark.sql.sources.Filter] else pushedFilters
     new AvroFleetReaderFactory(fullSchema, required.fieldNames,
       limit, rowFilters,
-      new SerializableHadoopConf(s.sessionState.newHadoopConf()), topN,
+      new SerializableHadoopConf(hadoopConf), topN,
       evolve, aliases)
   }
 }
@@ -2696,7 +2695,7 @@ private[sources] class AvroFleetCountReaderFactory(
         val path = new org.apache.hadoop.fs.Path(part.file)
         val fs = path.getFileSystem(conf.value)
         val stream = new org.apache.avro.file.DataFileReader(
-          new HadoopSeekableInput(fs.open(path), part.fileLen),
+          HadoopSeekableInput.open(fs, path, part.fileLen),
           new org.apache.avro.generic.GenericDatumReader[
             org.apache.avro.generic.GenericRecord]())
         try {
@@ -2983,7 +2982,7 @@ private[sources] class AvroFleetGroupAggReaderFactory(
       val datumReader = new org.apache.avro.generic.GenericDatumReader[
         org.apache.avro.generic.GenericRecord]()
       val stream = new org.apache.avro.file.DataFileReader(
-        new HadoopSeekableInput(fs.open(path), part.fileLen), datumReader)
+        HadoopSeekableInput.open(fs, path, part.fileLen), datumReader)
       try {
         val writerSpark = Avro.toSparkSchema(stream.getSchema)
         require(writerSpark.map(f => (f.name, f.dataType)) ==
@@ -3269,7 +3268,7 @@ private[sources] class AvroFleetRowReader(part: AvroFilePartition,
       new org.apache.avro.generic.GenericDatumReader[
         org.apache.avro.generic.GenericRecord]()
     stream = new org.apache.avro.file.DataFileReader(
-      new HadoopSeekableInput(fs.open(path), part.fileLen), datumReader)
+      HadoopSeekableInput.open(fs, path, part.fileLen), datumReader)
     val writer = stream.getSchema
     // mixed-fleet guard at the SPARK-type level: each file must map
     // to the pinned table schema, but its avro spelling is its own —
@@ -3415,6 +3414,18 @@ private[sources] class HadoopSeekableInput(
   override def read(b: Array[Byte], off: Int, n: Int): Int =
     in.read(b, off, n)
   override def close(): Unit = in.close()
+}
+
+private[sources] object HadoopSeekableInput {
+  /** Open a planned data file of plan-time length `len`. Plans built
+    * from manifest sizes never stat the file, so a file deleted since
+    * its commit surfaces here, with the manifest's missing-file
+    * error. */
+  def open(fs: org.apache.hadoop.fs.FileSystem,
+      path: org.apache.hadoop.fs.Path, len: Long): HadoopSeekableInput =
+    try new HadoopSeekableInput(fs.open(path), len)
+    catch { case e: java.io.FileNotFoundException =>
+      throw FleetManifest.missingFile(path, None, e) }
 }
 
 private[sources] object AvroFleetReaderFactory {

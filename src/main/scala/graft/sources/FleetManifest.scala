@@ -154,11 +154,20 @@ private[graft] object FleetManifest {
     * INHERITED forward by [[commit]] (minus retired files, plus the
     * commit's own changes) — unlike `props`, which each commit states
     * in full — because a vector binding is part of the data state,
-    * not a per-commit annotation. */
+    * not a per-commit annotation. `sizes` (data-file name →
+    * [[FileSize]]) is inherited the same way: a commit records each
+    * file it ADDS from one status call, and a retired file drops its
+    * entry (see [[statuses]] for how readers use them). */
   final case class Snapshot(version: Long, files: Seq[String],
       props: Map[String, String] = Map.empty,
       dvs: Map[String, String] = Map.empty,
-      dvMeta: Map[String, DvMeta] = Map.empty)
+      dvMeta: Map[String, DvMeta] = Map.empty,
+      sizes: Map[String, FileSize] = Map.empty)
+
+  /** A data file's committed byte length and modification time. Data
+    * files are immutable under the claim protocol, so the values the
+    * committer observed stay true for as long as the file exists. */
+  final case class FileSize(len: Long, mtime: Long)
 
   /** Per-binding deletion-vector METADATA, carried in the manifest so
     * planning never opens a vector file (r17 verdict #1: the plan-time
@@ -798,7 +807,7 @@ private[graft] object FleetManifest {
                 s"malformed manifest $p: files = $other")
             }
             Snapshot(v, files, parseProps(p, obj), parseDvs(p, obj),
-              parseDvMeta(p, obj))
+              parseDvMeta(p, obj), parseSizes(p, obj))
         }
       case other => throw new java.io.IOException(
         s"malformed manifest $p: $other")
@@ -807,15 +816,21 @@ private[graft] object FleetManifest {
 
   // ---- DELTA version files (r22, the r21 verdict's #3) -------------
   //
-  // A full-snapshot version file costs O(total fleet files) to render
-  // and write on EVERY commit — the one remaining O(table) driver cost
-  // per append, the thing that makes a 10k-file fleet's appends slower
-  // than its first. A commit whose change is small relative to the
-  // base now writes a DELTA file instead:
+  // A FULL version file states the whole snapshot:
+  //
+  //   {"version": N, "files": [...], "props": {...}, "dvs": {...},
+  //    "dvmeta": {...}, "sizes": {"<file>": [len, mtime], ...}}
+  //
+  // (`dvmeta` and `sizes` are omitted when empty). A full-snapshot
+  // version file costs O(total fleet files) to render and write on
+  // EVERY commit — the one remaining O(table) driver cost per append,
+  // the thing that makes a 10k-file fleet's appends slower than its
+  // first. A commit whose change is small relative to the base now
+  // writes a DELTA file instead:
   //
   //   {"version": N, "base": N-1, "removed": [...], "added": [...],
   //    "props": {...full...}, "dvs_set": {...}, "dvs_del": [...],
-  //    "dvmeta_set": {...}, "dvmeta_del": [...]}
+  //    "dvmeta_set": {...}, "dvmeta_del": [...], "sizes_set": {...}}
   //
   // Reconstruction: base.files minus `removed` (order preserved) plus
   // `added` appended — chosen at WRITE time only when that replay
@@ -824,6 +839,14 @@ private[graft] object FleetManifest {
   // with what the committer computed. Props stay full per commit
   // (bounded by schema/checks/txn-ledger size, never by fleet size);
   // dv bindings and their metadata delta the same way as files.
+  // `sizes_set` names the sizes this commit added; a removed file's
+  // size goes with it, so sizes need no delete list.
+  //
+  // Sizes are what let a reader plan without listing the data
+  // directory ([[statuses]]). Version files written before sizes were
+  // recorded carry none, and a snapshot with ANY file lacking a size
+  // falls back to one listing — old fleets keep reading unchanged,
+  // and their files gain sizes as commits rewrite them.
   //
   // Bounds and interplay:
   //  - every CheckpointEvery-th version writes full, so a cold
@@ -872,8 +895,26 @@ private[graft] object FleetManifest {
     val dvs = (base.dvs -- names("dvs_del")) ++ parseDvs(p, obj, "dvs_set")
     val dvMeta = (base.dvMeta -- names("dvmeta_del")) ++
       parseDvMeta(p, obj, "dvmeta_set")
-    Snapshot(v, files, parseProps(p, obj), dvs, dvMeta)
+    val sizes = (base.sizes -- removed) ++ parseSizes(p, obj, "sizes_set")
+    Snapshot(v, files, parseProps(p, obj), dvs, dvMeta, sizes)
   }
+
+  private def parseSizes(p: Path, obj: JObject,
+      key: String = "sizes"): Map[String, FileSize] =
+    (obj \ key) match {
+      case o: JObject => o.obj.map {
+        case (f, JArray(List(JInt(len), JInt(mtime)))) =>
+          f -> FileSize(len.toLong, mtime.toLong)
+        case (f, other) => throw new java.io.IOException(
+          s"malformed manifest $p: $key[$f] = $other")
+      }.toMap
+      case _ => Map.empty[String, FileSize]
+    }
+
+  private def sizesJson(sizes: Map[String, FileSize]): org.json4s.JValue =
+    JObject(sizes.toList.sortBy(_._1).map { case (f, z) =>
+      f -> (JArray(List(JInt(z.len), JInt(z.mtime))): org.json4s.JValue)
+    })
 
   private def parseProps(p: Path, obj: JObject): Map[String, String] =
     (obj \ "props") match {
@@ -959,7 +1000,10 @@ private[graft] object FleetManifest {
     val meta =
       if (s.dvMeta.isEmpty) Nil
       else List[(String, org.json4s.JValue)]("dvmeta" -> dvMetaJson(s.dvMeta))
-    JsonMethods.compact(JsonMethods.render(JObject(base ++ meta)))
+    val sizes =
+      if (s.sizes.isEmpty) Nil
+      else List[(String, org.json4s.JValue)]("sizes" -> sizesJson(s.sizes))
+    JsonMethods.compact(JsonMethods.render(JObject(base ++ meta ++ sizes)))
   }
 
   /** The delta encoding of `next` against `base`, when sound and
@@ -988,6 +1032,9 @@ private[graft] object FleetManifest {
       .toSeq.sorted
     val metaSet = next.dvMeta.filter { case (k, m) =>
       !base.dvMeta.get(k).contains(m) }
+    // [[commit]] builds next.sizes as exactly this replay: the base
+    // sizes minus the removed files plus the added files' sizes
+    val sizesSet = added.flatMap(f => next.sizes.get(f).map(f -> _)).toMap
     val fields = List[(String, org.json4s.JValue)](
       "version" -> JInt(next.version),
       "base" -> JInt(base.version),
@@ -1004,7 +1051,9 @@ private[graft] object FleetManifest {
       (if (metaSet.isEmpty) Nil else List[(String, org.json4s.JValue)](
         "dvmeta_set" -> dvMetaJson(metaSet))) ++
       (if (metaDel.isEmpty) Nil else List[(String, org.json4s.JValue)](
-        "dvmeta_del" -> JArray(metaDel.map(JString(_)).toList)))
+        "dvmeta_del" -> JArray(metaDel.map(JString(_)).toList))) ++
+      (if (sizesSet.isEmpty) Nil else List[(String, org.json4s.JValue)](
+        "sizes_set" -> sizesJson(sizesSet)))
     Some(JsonMethods.compact(JsonMethods.render(JObject(fields))))
   }
 
@@ -1309,8 +1358,22 @@ private[graft] object FleetManifest {
           val baseMeta = cur.map(_.dvMeta).getOrElse(Map.empty)
           val nextMeta = ((baseMeta -- dvUpdate.keys) ++ dvMetaUpdate)
             .filter { case (f, _) => nextDvs.contains(f) }
+          // sizes follow their file: inherited while it stays listed,
+          // one status call for each file this commit adds (a name
+          // that does not exist gets no entry), dropped on retire; the
+          // first commit at a fleet adds every file
+          val curFiles = cur.map(_.files).getOrElse(Seq.empty)
+          val curSet = curFiles.toSet
+          val addedSizes = nextFiles.filterNot(curSet).flatMap { f =>
+            try {
+              val st = fs.getFileStatus(new Path(dir, f))
+              Some(f -> FileSize(st.getLen, st.getModificationTime))
+            } catch { case _: java.io.FileNotFoundException => None }
+          }
+          val nextSizes = (cur.map(_.sizes).getOrElse(Map.empty) --
+            curFiles.filterNot(nextFileSet)) ++ addedSizes
           val next = Snapshot(cur.map(_.version + 1L).getOrElse(1L),
-            nextFiles, stamped, nextDvs, nextMeta)
+            nextFiles, stamped, nextDvs, nextMeta, nextSizes)
           // an active branch that EXISTS at this fleet routes the
           // claim into the branch's own version sequence (base
           // resolution above already read the branch head via
@@ -1407,35 +1470,74 @@ private[graft] object FleetManifest {
                 catch { case NonFatal(_) => false })
   }
 
-  /** Reader-side resolution: the file set of the [[select]]ed snapshot
-    * as live `FileStatus`es, or None when the directory is
-    * manifest-less (caller falls back to the raw-listing contract). */
+  /** The file set of the [[select]]ed snapshot as LIVE `FileStatus`es
+    * from one listing ([[listed]]), or None when the directory is
+    * manifest-less (caller falls back to the raw-listing contract).
+    * For callers that must see the filesystem as it is now: restore's
+    * every-file-still-exists check, the file-tail stream's mtime rules,
+    * maintenance sizing. Query planning uses [[statuses]]. */
   def resolve(fs: FileSystem, dir: Path, versionAsOf: Option[Long],
       branch: Option[String] = None)
       : Option[Seq[FileStatus]] =
-    select(fs, dir, versionAsOf, branch).map(statuses(fs, dir, _))
+    select(fs, dir, versionAsOf, branch).map(listed(fs, dir, _))
 
-  /** One snapshot's files as live `FileStatus`es from ONE listing of
-    * `dir`. A manifest-listed file that no longer exists is a HARD
-    * error — it means a retained generation was GC'd or externally
-    * deleted, and silently dropping it would be silent row loss
-    * (upstream Spark's ignoreMissingFiles=false posture). */
-  def statuses(fs: FileSystem, dir: Path, sn: Snapshot): Seq[FileStatus] = {
+  /** One snapshot's files as `FileStatus`es for query planning,
+    * qualified under `dir`.
+    *
+    * When every file carries its committed [[FileSize]] (every fleet
+    * written since sizes were recorded), the statuses are BUILT from
+    * the snapshot: no listing, no stat, so planning cost is independent
+    * of the directory's size and of orphans in it. A file that has
+    * since gone missing then fails when a reader opens it
+    * ([[missingFile]]). Otherwise (version files written before sizes,
+    * or names committed without a file behind them) they come from
+    * [[listed]]. */
+  def statuses(fs: FileSystem, dir: Path, sn: Snapshot): Seq[FileStatus] =
+    if (!sn.files.forall(sn.sizes.contains)) listed(fs, dir, sn)
+    else {
+      val qdir = fs.makeQualified(dir)
+      val block = fs.getDefaultBlockSize(qdir)
+      sn.files.map { n =>
+        val z = sn.sizes(n)
+        new FileStatus(z.len, false, 1, block, z.mtime, new Path(qdir, n))
+      }
+    }
+
+  /** One snapshot's files from ONE listing of `dir`. A manifest-listed
+    * file that no longer exists is a HARD error — it means a retained
+    * generation was GC'd or externally deleted, and silently dropping
+    * it would be silent row loss (upstream Spark's
+    * ignoreMissingFiles=false posture). */
+  private def listed(fs: FileSystem, dir: Path,
+      sn: Snapshot): Seq[FileStatus] = {
+    val qdir = fs.makeQualified(dir)
     // one listing serves every lookup; manifest names absent from it
     // get one direct probe before the hard error (listing races)
-    val listed = fs.listStatus(dir).iterator
+    val all = fs.listStatus(qdir).iterator
       .filter(_.isFile).map(st => st.getPath.getName -> st).toMap
     sn.files.map { n =>
-      listed.getOrElse(n,
-        try fs.getFileStatus(new Path(dir, n))
+      all.getOrElse(n,
+        try fs.getFileStatus(new Path(qdir, n))
         catch {
-          case _: java.io.FileNotFoundException =>
-            throw new java.io.FileNotFoundException(
-              s"fleet manifest v${sn.version} at $dir references " +
-                s"missing file $n — generation expired " +
-                "(FleetCompact.expireVersions) or externally deleted")
+          case e: java.io.FileNotFoundException =>
+            throw missingFile(new Path(qdir, n), Some(sn.version), e)
         })
     }
+  }
+
+  /** The one loud error for a manifest-listed data file that is gone:
+    * raised at planning by a listing-backed [[statuses]], and by the
+    * readers when a size-built status names a file that no longer
+    * opens. */
+  def missingFile(path: Path, version: Option[Long],
+      cause: java.io.FileNotFoundException): java.io.FileNotFoundException = {
+    val e = new java.io.FileNotFoundException(
+      s"fleet manifest${version.fold("")(v => s" v$v")} at " +
+        s"${path.getParent} references missing file ${path.getName} — " +
+        "generation expired (FleetCompact.expireVersions) or externally " +
+        "deleted")
+    e.initCause(cause)
+    e
   }
 }
 

@@ -36,7 +36,12 @@ import org.json4s.jackson.JsonMethods
   *    rename-if-absent protocol; the check guards out-of-contract
   *    in-place edits);
   *  - the sidecar is ADVISORY: unreadable, missing, or torn stats
-  *    degrade to "no skipping", never to an error.
+  *    degrade to "no skipping", never to an error;
+  *  - the parsed sidecar is memoized per directory, validated by the
+  *    base file's (mtime, len) and the shard names, and refreshed by
+  *    the writers with the map they rendered; sound because an entry
+  *    never changes for an immutable, length-checked file name, so a
+  *    stale memo can only lack entries (read unskipped).
   */
 private[graft] object FleetStats {
 
@@ -449,6 +454,56 @@ private[graft] object FleetStats {
     shards.foreach(st => fs.delete(st.getPath, false))
   }
 
+  // ---- parsed-sidecar memo ------------------------------------------
+  //
+  // Every fleet scan and every commit below the shard threshold used
+  // to parse the whole sidecar (hundreds of KB of JSON with blooms on a
+  // busy fleet). The parsed map is memoized per directory and
+  // validated by the base file's (mtime, len) plus the shard names, so
+  // a reader costs one status call and the shard-directory probe. The
+  // writers below refresh the memo under the stripe lock with the map
+  // they rendered, so neither lookups nor commits re-parse it.
+  //
+  // Sound because an entry never changes for a given data-file name:
+  // part files are immutable, and an entry applies only while the
+  // file's length matches. A stale memo (a foreign process rewrote the
+  // sidecar within one mtime tick at the same length) can therefore
+  // only LACK entries the disk has, or hold entries of files since
+  // deleted — "read unskipped" and "never looked up", never a wrong
+  // skip. Bounded by ENTRIES, not directories (one parsed sidecar
+  // holds a few KB per entry with its blooms): the memo is cleared
+  // when remembering one more map would pass MemoEntries in total.
+
+  private final case class Memo(stamp: (Long, Long), shards: Seq[String],
+      entries: Map[String, PartStats])
+  private val memo = new java.util.concurrent.ConcurrentHashMap[String, Memo]()
+  private val MemoEntries = 16384
+  private var memoEntries = 0 // guarded by memo's monitor
+
+  /** (mtime, len) of the base sidecar; (-1, -1) when it is absent. */
+  private def baseStamp(fs: FileSystem, dir: Path): (Long, Long) =
+    try {
+      val st = fs.getFileStatus(new Path(dir, FileName))
+      (st.getModificationTime, st.getLen)
+    } catch { case _: java.io.FileNotFoundException => (-1L, -1L) }
+
+  private def remember(key: String, m: Memo): Unit = memo.synchronized {
+    if (memoEntries + m.entries.size > MemoEntries) {
+      memo.clear(); memoEntries = 0
+    }
+    val prev = memo.put(key, m)
+    memoEntries += m.entries.size - (if (prev == null) 0 else prev.entries.size)
+  }
+
+  /** Rewrite the base sidecar with `m` and remember `m` as its parse
+    * (callers hold the stripe lock and have seen no shards). */
+  private def writeBase(fs: FileSystem, dir: Path,
+      m: Map[String, PartStats]): Unit = {
+    writeAtomic(fs, new Path(dir, FileName), render(m))
+    remember(fs.makeQualified(dir).toString,
+      Memo(baseStamp(fs, dir), Seq.empty, m))
+  }
+
   /** Merge `fresh` entries into the sidecar at `dir` — called from the
     * job commit, BEFORE `_SUCCESS`. Single-file read-merge-rewrite
     * below [[ShardThreshold]] entries; one O(fresh) shard append past
@@ -461,13 +516,13 @@ private[graft] object FleetStats {
       .synchronized {
       val shards = listShards(fs, dir)
       if (shards.isEmpty) {
-        // the base parse runs only when no shards exist — once per
+        // the base merge runs only when no shards exist — once per
         // CompactAt writes in steady shard mode, every write below
-        // the threshold (where the base is small by definition)
-        val existing = readBase(fs, dir)
+        // the threshold (where the base is small by definition); the
+        // memo serves its parse
+        val existing = read(fs, dir)
         if (existing.size <= ShardThreshold)
-          writeAtomic(fs, new Path(dir, FileName),
-            render(existing ++ fresh))
+          writeBase(fs, dir, existing ++ fresh)
         else writeShard(fs, dir, fresh, Seq.empty) // shard mode begins
       }
       else if (shards.size >= CompactAt) compactShards(fs, dir, fresh)
@@ -487,10 +542,10 @@ private[graft] object FleetStats {
       .synchronized {
       val shards = listShards(fs, dir)
       if (shards.isEmpty) {
-        val existing = readBase(fs, dir)
+        val existing = read(fs, dir)
         val kept = existing -- names
         if (kept.size == existing.size) return
-        writeAtomic(fs, new Path(dir, FileName), render(kept))
+        writeBase(fs, dir, kept)
       } else {
         val merged = read(fs, dir)
         val hit = names.filter(merged.contains)
@@ -524,11 +579,20 @@ private[graft] object FleetStats {
   /** Existing sidecar entries of one fleet directory — base plus any
     * delta shards in name order; empty on any problem (advisory data —
     * never fail a read over it; one unreadable shard degrades to
-    * "those entries absent", never to an error). */
+    * "those entries absent", never to an error). Served from the
+    * parsed-sidecar memo while the base's (mtime, len) and the shard
+    * names are unchanged. */
   def read(fs: FileSystem, dir: Path): Map[String, PartStats] = {
     try {
+      val key = fs.makeQualified(dir).toString
+      val stamp = baseStamp(fs, dir)
+      val shards = listShards(fs, dir)
+      val names = shards.map(_.getPath.getName)
+      val hit = memo.get(key)
+      if (hit != null && hit.stamp == stamp && hit.shards == names)
+        return hit.entries
       var acc = readBase(fs, dir)
-      listShards(fs, dir).foreach { st =>
+      shards.foreach { st =>
         try {
           val top = JsonMethods.parse(readText(fs, st.getPath))
           acc = acc ++ parseFiles(top)
@@ -539,6 +603,7 @@ private[graft] object FleetStats {
           }
         } catch { case NonFatal(_) => () }
       }
+      remember(key, Memo(stamp, names, acc))
       acc
     } catch { case NonFatal(_) => Map.empty }
   }

@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   *  - a transactional fleet DIRECTORY reads ONE manifest
   *    [[FleetManifest.Snapshot]] (the `versionAsOf` generation, the
   *    per-read `branch` head, or the session's current head) and
-  *    statuses that snapshot's files from one directory listing;
+  *    builds that snapshot's file statuses from its committed sizes,
+  *    listing nothing ([[FleetManifest.statuses]]; version files
+  *    written before sizes were recorded take one listing);
   *  - a manifest-less directory keeps the raw-listing contract
   *    ([[Avro.listLegacyDir]]: hidden temps and markers filtered,
   *    `_SUCCESS` required on part-file directories);
@@ -71,7 +73,8 @@ private[graft] object FleetView {
 
   /** Resolve `glob` (comma-separated globs, directories or files) at
     * `versionAsOf` / `branch` (None = the session's current head):
-    * one manifest read and one listing per directory part. */
+    * one manifest read per directory part, and no listing where the
+    * snapshot carries every file's size. */
   def resolve(s: SparkSession, glob: String,
       versionAsOf: Option[Long] = None,
       branch: Option[String] = None): FleetView = {

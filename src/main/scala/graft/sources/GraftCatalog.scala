@@ -62,8 +62,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   private def spark = SparkSession.active
   private def hPath(s: String) = new org.apache.hadoop.fs.Path(s)
-  private def fs = hPath(root).getFileSystem(
-    spark.sessionState.newHadoopConf())
+  /** The root's filesystem, from a fresh session Hadoop conf (about a
+    * thousand entries to copy): each catalog call resolves it ONCE and
+    * passes it down, never once per use. */
+  private def rootFs(): org.apache.hadoop.fs.FileSystem =
+    hPath(root).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** Identifiers become PATH SEGMENTS, so a name carrying separators
     * or parent references would escape the catalog root — and
@@ -85,7 +88,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
       Seq(catalogName) ++ ident.namespace().toSeq :+ ident.name())
 
-  override def listTables(namespace: Array[String]): Array[Identifier] =
+  override def listTables(namespace: Array[String]): Array[Identifier] = {
+    val fs = rootFs()
     namespace.toSeq match {
       case Seq() =>
         val r = hPath(root)
@@ -103,12 +107,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       case Seq(wb) =>
         val p = hPath(xlsxFile(wb))
         if (!fs.exists(p)) throw noSuchNamespace(namespace)
-        Xlsx.sheetNames(readAll(p))
+        Xlsx.sheetNames(readAll(fs, p))
           .map(sh => Identifier.of(Array(wb), sh)).toArray
       case _ => throw noSuchNamespace(namespace)
     }
+  }
 
-  private def readAll(p: org.apache.hadoop.fs.Path): Array[Byte] = {
+  private def readAll(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Array[Byte] = {
     val in = fs.open(p)
     try in.readAllBytes() finally in.close()
   }
@@ -142,12 +148,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     require(ident.namespace().isEmpty,
       s"${asOf.opt} applies to avro fleets only")
     val dir = hPath(avroDir(ident.name()))
+    val fs = rootFs()
     if (!fs.exists(dir) || !fs.getFileStatus(dir).isDirectory)
       noSuchTable(ident)
     FleetView.versionAt(fs, dir, asOf)
   }
 
-  private def loadAt(ident: Identifier, versionAsOf: Option[Long]): Table =
+  private def loadAt(ident: Identifier, versionAsOf: Option[Long]): Table = {
+    val fs = rootFs()
     ident.namespace().toSeq match {
       case Seq() =>
         val dir = avroDir(ident.name())
@@ -188,6 +196,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         new XlsxFleetTable(schema, xlsxFile(wb), ident.name())
       case _ => noSuchTable(ident)
     }
+  }
 
   /** CREATE TABLE / CTAS for avro fleets (top-level namespace only):
     * registers nothing — "create" IS laying the directory down, and a
@@ -203,7 +212,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     require(partitions.isEmpty,
       "graft fleets take no partition transforms (use clusterBy writes)")
     val dir = avroDir(ident.name())
-    if (fs.exists(hPath(dir)))
+    if (rootFs().exists(hPath(dir)))
       throw new org.apache.spark.sql.catalyst.analysis
         .TableAlreadyExistsException(
           Seq(catalogName, ident.name()))
@@ -234,6 +243,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       "ALTER TABLE is supported only for top-level fleets")
     val dir = avroDir(ident.name())
     val p = hPath(dir)
+    val fs = rootFs()
     if (!fs.exists(p) || !fs.getFileStatus(p).isDirectory)
       noSuchTable(ident)
     // under an active branch session the ALTER STAGES: it reads the
@@ -358,6 +368,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     ident.namespace().toSeq match {
       case Seq() =>
         val p = hPath(avroDir(ident.name()))
+        val fs = rootFs()
         fs.exists(p) && fs.delete(p, true)
       case _ => false
     }
@@ -367,6 +378,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       "rename is supported only for top-level fleets")
     val from = hPath(avroDir(oldIdent.name()))
     val to = hPath(avroDir(newIdent.name()))
+    val fs = rootFs()
     if (!fs.exists(from)) noSuchTable(oldIdent)
     if (fs.exists(to))
       throw new org.apache.spark.sql.catalyst.analysis
@@ -374,16 +386,18 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     require(fs.rename(from, to), s"rename $from -> $to failed")
   }
 
-  override def tableExists(ident: Identifier): Boolean =
+  override def tableExists(ident: Identifier): Boolean = {
+    val fs = rootFs()
     ident.namespace().toSeq match {
       case Seq() =>
         val p = hPath(avroDir(ident.name()))
         fs.exists(p) && fs.getFileStatus(p).isDirectory
       case Seq(wb) =>
         val p = hPath(xlsxFile(wb))
-        fs.exists(p) && Xlsx.sheetNames(readAll(p)).contains(ident.name())
+        fs.exists(p) && Xlsx.sheetNames(readAll(fs, p)).contains(ident.name())
       case _ => false
     }
+  }
 
   // --- maintenance procedures: CALL graft.system.<proc>(...) ---
   // (snapshots / rewrite_files / expire_versions / restore — the
@@ -407,6 +421,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   override def listNamespaces(): Array[Array[String]] = {
     val r = hPath(root)
+    val fs = rootFs()
     if (!fs.exists(r)) Array.empty
     else fs.listStatus(r).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".xlsx") &&
@@ -424,7 +439,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def namespaceExists(namespace: Array[String]): Boolean =
     namespace.toSeq match {
       case Seq() => true
-      case Seq(wb) => fs.exists(hPath(xlsxFile(wb)))
+      case Seq(wb) => rootFs().exists(hPath(xlsxFile(wb)))
       case _ => false
     }
 

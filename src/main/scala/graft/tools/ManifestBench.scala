@@ -10,10 +10,14 @@ import org.apache.spark.sql.SparkSession
   * With delta version files the per-append cost must be FLAT.
   *
   * Pure driver-side measurement (manifest commits launch no jobs):
-  * grows one fleet to `files` via 1-file append commits and reports
-  * the mean, p50 and p99 commit latency per 1k-file window, plus the
-  * bytes of the newest version file; the stats-sidecar curve reports
-  * the same three per window:
+  * grows one fleet to `files` via 1-file append commits of real empty
+  * files (so each commit records the file's size, as production
+  * commits do) and reports the mean, p50 and p99 commit latency per
+  * 1k-file window, plus the bytes of the newest version file; the
+  * stats-sidecar curve reports the same three per window. At 1k, 5k
+  * and 10k files it also reports the p50/p99 of `FleetView.resolve`
+  * (the read-side planning step) over the fleet, without and with
+  * 1,000 orphan `.avro` files in the data directory:
   *
   *   sbt "runMain graft.tools.ManifestBench 10000"
   *
@@ -42,9 +46,34 @@ object ManifestBench {
     fs.mkdirs(dir)
     println(s"[manifestbench] files=$files window=$windowSize")
     val winNanos = new Array[Long](windowSize)
+    def touch(name: String): Unit =
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(
+        fs.makeQualified(new org.apache.hadoop.fs.Path(dir, name)).toUri))
+    // resolve latency over the current fleet (nearest-rank p50/p99 of
+    // 50 warm resolves), without and with 1,000 orphans present
+    def resolveCurve(n: Int): Unit = {
+      def probe(): String = {
+        val ns = Array.fill(50) {
+          val t = System.nanoTime()
+          graft.sources.FleetView.resolve(spark, dir.toString)
+          System.nanoTime() - t
+        }.sorted
+        def pct(q: Double) =
+          ns(math.max(0, math.ceil(q * ns.length).toInt - 1)) / 1e6
+        f"p50_ms=${pct(0.50)}%8.3f p99_ms=${pct(0.99)}%8.3f"
+      }
+      val clean = probe()
+      val orphans = (0 until 1000).map(k => f"orphan-$n%06d-$k%04d.avro")
+      orphans.foreach(touch)
+      val dirty = probe()
+      orphans.foreach(o => fs.delete(new org.apache.hadoop.fs.Path(dir, o), false))
+      println(f"[manifestbench] resolve files=$n%6d orphans=0    $clean")
+      println(f"[manifestbench] resolve files=$n%6d orphans=1000 $dirty")
+    }
     var i = 0
     while (i < files) {
       val name = f"part-$i%08d.avro"
+      touch(name)
       val t0 = System.nanoTime()
       graft.sources.FleetManifest.commit(fs, dir,
         base => base :+ name, bootstrap = Seq.empty)
@@ -56,6 +85,7 @@ object ManifestBench {
           windowStats("commit", winNanos) + " newest_vfile_bytes=" +
           f"${fs.getFileStatus(vf).getLen}%8d")
       }
+      if (i == 1000 || i == 5000 || i == 10000) resolveCurve(i)
     }
     // one cold full-history probe: the reconstruction cost a fresh
     // process pays for the newest snapshot (chain length bounded by

@@ -1,0 +1,263 @@
+package graft.sources
+
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, LocalFileSystem, Path}
+import org.apache.spark.sql.{Row, SparkSession}
+
+/** Fleet query planning reads the cached manifest: a fleet written
+  * with committed file sizes plans with no data-directory listing, no
+  * repeated writer-schema header read and no sidecar re-parse; older
+  * version files without sizes and externally deleted files keep
+  * their behaviour. Filesystem calls are counted through
+  * [[CountingFs]], bound for one session only. */
+class FleetPlanningSpec extends graft.SparkSpec {
+
+  /** A session whose `file:` scheme is [[CountingFs]], with a graft
+    * catalog at `root`; active for the duration of `body`. */
+  private def withCounting[T](root: String)(body: SparkSession => T): T = {
+    val s = spark.newSession()
+    s.conf.set("fs.file.impl", classOf[CountingFs].getName)
+    s.conf.set("fs.file.impl.disable.cache", "true")
+    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    s.conf.set("spark.sql.catalog.graft.root", root)
+    SparkSession.setActiveSession(s)
+    try body(s) finally SparkSession.setActiveSession(spark)
+  }
+
+  /** A catalog fleet `t` of six commits (one CREATE, five INSERTs). */
+  private def seed(s: SparkSession): Unit = {
+    s.sql("CREATE TABLE graft.t (k BIGINT, v STRING)")
+    (0 until 5).foreach { i =>
+      s.sql("INSERT INTO graft.t VALUES " + (0 until 20).map { j =>
+        val k = i * 20 + j
+        s"($k, 'v$k')"
+      }.mkString(", "))
+    }
+  }
+
+  private def lookup(s: SparkSession, k: Long): Seq[Row] =
+    s.sql(s"SELECT k, v FROM graft.t WHERE k = $k").collect().toSeq
+
+  private def localDir(p: String): String = new Path(p).toUri.getPath
+
+  test("committed sizes ride delta and full version files; a retired file drops its size") {
+    val dir = graft.util.Scratch.dir("planning_sizes") + "/t.avro"
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.mkdirs(p)
+    def touch(n: String, bytes: Int): Unit = {
+      java.nio.file.Files.write(java.nio.file.Paths.get(localDir(dir), n),
+        new Array[Byte](bytes)); ()
+    }
+    def raw(v: Long): String = {
+      val in = fs.open(FleetManifest.versionFilePath(p, v))
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    touch("a0", 3)
+    // "ghost" names no file: it gets no size
+    FleetManifest.commit(fs, p, _ => Seq("a0", "ghost"), Seq.empty)  // v1
+    (2 to 20).foreach { i =>
+      touch(s"f$i", i)
+      FleetManifest.commit(fs, p, b => b :+ s"f$i", Seq.empty)       // ..v20
+    }
+    FleetManifest.commit(fs, p, b => b.filterNot(_ == "f5"), Seq.empty,
+      requireInBase = Set("f5"))                                     // v21
+    assert(raw(2).contains("\"sizes_set\":{\"f2\":[2,"), raw(2))
+    assert(raw(16).contains("\"sizes\":{\"a0\":[3,"), raw(16))
+    val warm = (1L to 21L).map(v => FleetManifest.snapshotAt(fs, p, v).get)
+    FleetManifest.clearSnapshotCache()
+    val cold = (1L to 21L).map(v => FleetManifest.snapshotAt(fs, p, v).get)
+    assert(warm == cold, "sizes diverged between warm and cold reads")
+    val v21 = cold(20)
+    assert(v21.sizes.keySet == v21.files.toSet - "ghost")
+    assert(v21.sizes("f7").len == 7L && !v21.sizes.contains("f5"))
+    assert(cold(19).sizes("f5").len == 5L)
+    // a file without a size sends statuses to the listing, where the
+    // missing name is the planning-time error it always was
+    val e = intercept[java.io.FileNotFoundException](
+      FleetManifest.statuses(fs, p, v21))
+    assert(e.getMessage.contains("references missing file ghost"), e.getMessage)
+    // retention's materialized full form keeps the sizes
+    FleetManifest.materializeIfChainBroken(fs, p, Set(18L, 19L, 20L, 21L), 18L)
+    assert(!raw(18).contains("\"base\""), raw(18))
+    FleetManifest.clearSnapshotCache()
+    assert(FleetManifest.snapshotAt(fs, p, 18L).contains(warm(17)))
+  }
+
+  test("a catalog point lookup lists no data directory and opens no header after its first query") {
+    val root = graft.util.Scratch.dir("planning_lookup")
+    val dir = localDir(s"$root/t.avro")
+    withCounting(root) { s =>
+      seed(s)
+      assert(lookup(s, 42L) == Seq(Row(42L, "v42")))
+      CountingFs.reset()
+      assert(lookup(s, 57L) == Seq(Row(57L, "v57")))
+      assert(lookup(s, 500L).isEmpty)
+      assert(CountingFs.listsOf(dir) == 0,
+        s"data-directory listings: ${CountingFs.describe()}")
+      assert(CountingFs.driverOpensWhere(_.endsWith(".avro")) == 0,
+        s"driver-side data-file opens: ${CountingFs.describe()}")
+      assert(CountingFs.driverOpensWhere(_.endsWith(FleetStats.FileName)) == 0,
+        s"sidecar re-reads: ${CountingFs.describe()}")
+    }
+  }
+
+  test("1,000 orphan avro files in the data directory leave a lookup's rows and listings unchanged") {
+    val root = graft.util.Scratch.dir("planning_orphans")
+    val dir = localDir(s"$root/t.avro")
+    withCounting(root) { s =>
+      seed(s)
+      val keys = Seq(3L, 42L, 99L, 1000L)
+      val before = keys.map(lookup(s, _))
+      val all = s.sql("SELECT k, v FROM graft.t").collect().toSet
+      // unreferenced files sorting both before and after the data
+      // files, as a crashed writer or an external drop leaves them
+      (0 until 1000).foreach { i =>
+        val name = if (i % 2 == 0) f"a-orphan-$i%04d.avro"
+          else f"z-orphan-$i%04d.avro"
+        java.nio.file.Files.write(java.nio.file.Paths.get(dir, name),
+          Array[Byte](1, 2, 3))
+      }
+      CountingFs.reset()
+      assert(keys.map(lookup(s, _)) == before)
+      assert(s.sql("SELECT k, v FROM graft.t").collect().toSet == all)
+      assert(CountingFs.listsOf(dir) == 0,
+        s"data-directory listings: ${CountingFs.describe()}")
+    }
+  }
+
+  test("a fleet whose version files carry no sizes reads correctly with one listing") {
+    val root = graft.util.Scratch.dir("planning_legacy")
+    val dir = s"$root/t.avro"
+    withCounting(root) { s =>
+      seed(s)
+      val rows = s.sql("SELECT k, v FROM graft.t").collect().toSet
+      val sized = FleetView.resolve(s, dir).files
+        .map(st => (st.getPath.toString, st.getLen))
+      // rewrite every version file as a writer without sizes left it
+      val mdir = new java.io.File(localDir(dir), FleetManifest.DirName)
+      val versions = mdir.listFiles().filter(f =>
+        f.getName.startsWith("v") && f.getName.endsWith(".json"))
+      assert(versions.exists(f => new String(
+        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .contains("\"sizes")), "this change's commits record sizes")
+      import org.json4s._
+      import org.json4s.jackson.JsonMethods
+      versions.foreach { f =>
+        val j = JsonMethods.parse(new String(
+          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+        val stripped = j.removeField {
+          case ("sizes", _) | ("sizes_set", _) => true
+          case _ => false
+        }
+        java.nio.file.Files.write(f.toPath, JsonMethods.compact(
+          JsonMethods.render(stripped)).getBytes("UTF-8"))
+      }
+      FleetManifest.clearSnapshotCache()
+      CountingFs.reset()
+      val legacy = FleetView.resolve(s, dir).files
+      assert(CountingFs.listsOf(localDir(dir)) == 1,
+        s"listings: ${CountingFs.describe()}")
+      assert(legacy.map(st => (st.getPath.toString, st.getLen)) == sized)
+      assert(s.sql("SELECT k, v FROM graft.t").collect().toSet == rows)
+      assert(lookup(s, 42L) == Seq(Row(42L, "v42")))
+    }
+  }
+
+  test("an externally deleted live file fails the read with the missing-file error") {
+    val root = graft.util.Scratch.dir("planning_missing")
+    val dir = localDir(s"$root/t.avro")
+    withCounting(root) { s =>
+      seed(s)
+      val snap = FleetManifest.current(
+        new Path(dir).getFileSystem(s.sessionState.newHadoopConf()),
+        new Path(dir)).get
+      val victim = snap.files.max
+      java.nio.file.Files.delete(java.nio.file.Paths.get(dir, victim))
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(dir, s".$victim.crc"))
+      val e = intercept[Exception](s.sql("SELECT k, v FROM graft.t").collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(m => m.contains(s"references missing file $victim") &&
+        m.contains("externally deleted")), msgs.mkString("\n"))
+    }
+  }
+
+  test("a second keyed change read over an unchanged span runs no schema-peek job") {
+    import spark.implicits._
+    val dir = graft.util.Scratch.dir("planning_cdc") + "/t.avro"
+    // past 64 files, a header peek of unseen files runs as a Spark job
+    spark.range(0, 700, 1, 70).select($"id", ($"id" % 7).as("g"))
+      .write.format("graft-avro").mode("overwrite").save(dir)
+    spark.range(700, 710, 1, 1).select($"id", ($"id" % 7).as("g"))
+      .write.format("graft-avro").mode("append").save(dir)
+    val jobs = new AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def jobsOf(body: => Unit): Int = {
+      jobs.set(0)
+      body
+      Thread.sleep(500) // the listener bus is asynchronous
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // building the frame plans nothing: every job here is the peek
+      val first = jobsOf(FleetCDC.changesKeyed(spark, dir, 1L, 2L, Seq("id")))
+      assert(first >= 1, "the first read peeks 71 unseen headers as a job")
+      val second = jobsOf(FleetCDC.changesKeyed(spark, dir, 1L, 2L, Seq("id")))
+      assert(second == 0, s"$second job(s) on an unchanged span")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(FleetCDC.changesKeyed(spark, dir, 1L, 2L, Seq("id"))
+      .where("_change_type = 'insert'").count() == 10L)
+  }
+}
+
+/** The sessions' local filesystem, counting `listStatus` per directory
+  * and every `open` made outside an executor task thread (the driver's
+  * planning reads). Counters are JVM-wide: Hadoop instantiates the
+  * class per `getFileSystem` call when its cache is disabled. */
+class CountingFs extends LocalFileSystem(new graft.util.NioRawLocalFileSystem) {
+  override def listStatus(f: Path): Array[FileStatus] = {
+    CountingFs.note(CountingFs.lists, f)
+    super.listStatus(f)
+  }
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    if (!Thread.currentThread.getName.startsWith("Executor task launch"))
+      CountingFs.note(CountingFs.opens, f)
+    super.open(f, bufferSize)
+  }
+}
+
+object CountingFs {
+  private[sources] val lists = new ConcurrentHashMap[String, AtomicInteger]()
+  private[sources] val opens = new ConcurrentHashMap[String, AtomicInteger]()
+
+  private[sources] def note(m: ConcurrentHashMap[String, AtomicInteger],
+      f: Path): Unit = {
+    m.computeIfAbsent(f.toUri.getPath.stripSuffix("/"),
+      _ => new AtomicInteger).incrementAndGet()
+    ()
+  }
+
+  def reset(): Unit = { lists.clear(); opens.clear() }
+
+  def listsOf(dir: String): Int =
+    Option(lists.get(dir.stripSuffix("/"))).fold(0)(_.get)
+
+  def driverOpensWhere(p: String => Boolean): Int = {
+    var n = 0
+    opens.forEach((k, v) => if (p(k)) n += v.get)
+    n
+  }
+
+  def describe(): String = s"lists=$lists opens=$opens"
+}
