@@ -247,7 +247,6 @@ private[sources] class AvroFleetDeltaBatchWrite(schemaJson: String,
     val stats = parts.collect { case (file, Some(ps)) =>
       new org.apache.hadoop.fs.Path(file).getName -> ps
     }.toMap
-    if (stats.nonEmpty) FleetStats.write(f, p, stats)
     val added = parts.map { case (file, _) =>
       new org.apache.hadoop.fs.Path(file).getName }
     // a delta write interleaves keys arbitrarily — any SPJ layout
@@ -383,7 +382,8 @@ private[sources] class AvroFleetDeltaBatchWrite(schemaJson: String,
         dvUpdate = dvUpdate,
         requireDvs = requireDvs,
         dvMetaUpdate = dvMetaUpdate.result(),
-        requireChecks = plannedChecks)
+        requireChecks = plannedChecks,
+        stats = stats)
       manifestCommitted = true
     }
     // POST-COMMIT housekeeping is best-effort by contract: the commit

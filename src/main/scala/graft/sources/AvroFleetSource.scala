@@ -484,10 +484,11 @@ private[sources] class AvroFleetTable(tableSchema: StructType, path: String,
       : Option[Seq[(org.apache.hadoop.fs.FileStatus, Boolean)]] = {
     import org.apache.spark.sql.sources.{AlwaysFalse, AlwaysTrue}
     val s = SparkSession.active
-    val fleet = Avro.listFleet(s, path)
+    val view = FleetView.resolve(s, path)
+    val fleet = view.files
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(s.sessionState.newHadoopConf())
-    val stats = FleetStats.forFleet(fs, fleet)
+    val stats = view.stats(fs)
     def alwaysM(f: org.apache.spark.sql.sources.Filter,
         ps: FleetStats.PartStats) = f match {
       case _: AlwaysTrue => true
@@ -931,8 +932,8 @@ private[sources] class AvroFleetWriteBuilder(info: LogicalWriteInfo,
       * (partition, epoch), and the shared rename-if-absent commit
       * SKIPS a name that already exists, so a replayed epoch (same
       * offsets, same partitioning — Spark's offset-log contract)
-      * lands zero duplicate rows. Each epoch commit merges sidecar
-      * stats and re-marks `_SUCCESS`, so the growing fleet stays a
+      * lands zero duplicate rows. Each epoch commit lands its files
+      * with their stats and re-marks `_SUCCESS`, so the growing fleet stays a
       * well-formed batch/streaming SOURCE at every instant. One
       * streaming writer per fleet directory (names carry no query
       * tag — that determinism IS the idempotence). */
@@ -1117,15 +1118,14 @@ private[sources] class AvroFleetBatchWrite(schemaJson: String,
       schema.fields.map(_.name), schema.fields.map(_.dataType))
   }
 
-  // sidecar first, marker LAST: the tasks' per-file min/max/null
-  // stats (carried on the commit messages) land in `_stats.json`
-  // BEFORE `_SUCCESS` certifies the job — so a fleet is never marked
-  // complete with its data-skipping profile still in flight
+  // manifest first, marker LAST: the tasks' per-file min/max/null
+  // stats (carried on the commit messages) land in the manifest
+  // commit with their files, BEFORE `_SUCCESS` certifies the job
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val conf = SparkSession.active.sessionState.newHadoopConf()
     val f = fs(conf)
     val p = new org.apache.hadoop.fs.Path(dir)
-    // layout marker between sidecar and _SUCCESS: a clustered commit
+    // layout marker before the manifest commit: a clustered commit
     // records its key (advisory — the scan re-proves from sidecars);
     // a plain commit CLEARS any marker (its files may interleave keys)
     val committed = AvroFleetCommits.commitFleet(f, p, messages,
@@ -1433,12 +1433,12 @@ private[graft] object AvroFleetDataWriter {
 }
 
 /** The job-level commit sequence SHARED by the batch write and the
-  * streaming sink's per-epoch commit — ONE spelling of the invariant
-  * "sidecar stats land before the commit certifies" so the two paths
-  * cannot drift. `between` runs after the sidecar and before the
-  * manifest (the batch write's layout-marker step). The MANIFEST
-  * commit is the real commit point ([[FleetManifest]]): it atomically
-  * adds this job's files, removes `removeNames` (a copy-on-write
+  * streaming sink's per-epoch commit — ONE spelling of "the files and
+  * their stats land in one manifest commit" so the two paths cannot
+  * drift. `between` runs before the manifest (the batch write's
+  * layout-marker step). The MANIFEST commit is the real commit point
+  * ([[FleetManifest]]): it atomically adds this job's files with the
+  * stats their tasks captured, removes `removeNames` (a copy-on-write
   * swap: ReplaceData / [[FleetMerge]] pass the replaced generation
   * here so readers never see both), or — `reset` — replaces the whole
   * list (TRUNCATE). `_SUCCESS` is still re-marked last for
@@ -1449,11 +1449,8 @@ private[sources] object AvroFleetCommits {
     * REPLAY of a committed transaction; nothing was published and the
     * caller reaps its own staged files. The pre-check runs under the
     * commit lock before any side effect (same-JVM replays leave zero
-    * residue — no stats merge, no marker touch); the authoritative
-    * in-loop check inside [[FleetManifest.commit]] covers the
-    * cross-process race (a lost claim there may leave this job's
-    * already-merged sidecar stats behind for reaped files — dead
-    * entries the scan never resolves, swept with orphans). */
+    * residue — no marker touch); the authoritative in-loop check
+    * inside [[FleetManifest.commit]] covers the cross-process race. */
   def commitFleet(f: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path,
       messages: Array[WriterCommitMessage],
@@ -1486,13 +1483,6 @@ private[sources] object AvroFleetCommits {
       expectedVersion: Option[Long],
       txn: Option[(String, Long)],
       requireChecks: Option[Map[String, String]]): Unit = {
-    val stats = messages.collect {
-      case AvroFleetCommitMessage(parts) =>
-        parts.collect { case (file, Some(ps)) =>
-          new org.apache.hadoop.fs.Path(file).getName -> ps
-        }
-    }.flatten.toMap
-    if (stats.nonEmpty) FleetStats.write(f, p, stats)
     between()
     // a reset (INSERT OVERWRITE / TRUNCATE) replaces the fleet's
     // contents wholesale — the ALTER-era schema marker describes the
@@ -1505,11 +1495,11 @@ private[sources] object AvroFleetCommits {
     if (reset) FleetSchemaMarker.clear(f, p)
     val effProps =
       if (reset) props + (FleetManifest.SchemaProp -> "") else props
-    val added = messages.collect {
-      case AvroFleetCommitMessage(parts) => parts.map { case (file, _) =>
-        new org.apache.hadoop.fs.Path(file).getName
-      }
-    }.flatten.toSeq
+    val parts = messages.toSeq.collect {
+      case AvroFleetCommitMessage(ps) => ps.map { case (file, st) =>
+        new org.apache.hadoop.fs.Path(file).getName -> st }
+    }.flatten
+    val added = parts.map(_._1)
     // conflict detection: the retired names must still be in the base
     // on EVERY commit attempt — two concurrent copy-on-write rewrites
     // of one file would otherwise both land their post-images and
@@ -1530,7 +1520,8 @@ private[sources] object AvroFleetCommits {
       // resurrect in the post-image
       requireDvs = requireDvs,
       txn = txn,
-      requireChecks = requireChecks)
+      requireChecks = requireChecks,
+      stats = parts.collect { case (n, Some(ps)) => n -> ps }.toMap)
     f.create(new org.apache.hadoop.fs.Path(p, "_SUCCESS"), true).close()
   }
 
@@ -1714,7 +1705,7 @@ private[sources] class AvroFleetScanBuilder(fullSchema: StructType,
     // blanket decline was backwards: the branch surface exists for
     // audit passes, which are COUNT/MIN/MAX-shaped): a branch HEAD is
     // just a snapshot, so every tier below plans from the builder's one
-    // view of the branch head and its sidecar stats by file name
+    // view of the branch head and its entries' stats by file name
     // exactly as on main
     // COLUMN-dependent tiers emit values in per-file carrier spelling
     // (sidecar stats, decode-time hashes) typed by a SINGLE pinned
@@ -1830,7 +1821,7 @@ private[sources] class AvroFleetScanBuilder(fullSchema: StructType,
     val countColsOk = countColsWanted.isEmpty ||
       dvs.valuesIterator.forall(_._2.exists(_.stats.isDefined))
     if (specs.forall(_.isDefined) && countColsOk) {
-      val stats = FleetStats.forFleet(fs, view.files)
+      val stats = view.stats(fs)
       val entries = view.files.map(f => stats.get(f.getPath.toString))
       val cols = flat.collect {
         case MetaAggSpec.CountCol(c) => c
@@ -1950,7 +1941,7 @@ private[sources] object MetaAggSpec {
 }
 
 /** Metadata-tier aggregate scan: the values were already resolved from
-  * the `_stats.json` sidecars at pushdown time, so the "scan" is one
+  * the files' stats at pushdown time, so the "scan" is one
   * partition emitting one exact row — no file is ever opened. The row
   * is handed to Spark through the standard partial-aggregate contract
   * (final MIN-of-min / MAX-of-max / SUM-of-count over a single row is
@@ -2190,12 +2181,9 @@ private[sources] class AvroFleetScan(fullSchema: StructType,
   // silently drop the delete
   private lazy val view = resolveView
 
-  // per-file stats from the fleet's `_stats.json` sidecars (one small
-  // driver-side read per directory; empty where no sidecar exists)
-  private lazy val fleetStats = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hadoopConf)
-    FleetStats.forFleet(fs, view.files)
-  }
+  // per-file stats of the same snapshot as the files
+  private lazy val fleetStats = view.stats(
+    new org.apache.hadoop.fs.Path(path).getFileSystem(hadoopConf))
 
   // deletion-vector instructions per full data path: the view's
   // bindings plus any caller-passed `dvSpec` entries (keyed by file
@@ -2791,11 +2779,9 @@ private[sources] class AvroFleetGroupAggScan(tableSchema: StructType,
   // must not pair the old files with the new (absent) bindings
   private lazy val view = resolveView
 
-  private lazy val fleetStats = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      SparkSession.active.sessionState.newHadoopConf())
-    FleetStats.forFleet(fs, view.files)
-  }
+  private lazy val fleetStats = view.stats(
+    new org.apache.hadoop.fs.Path(path).getFileSystem(
+      SparkSession.active.sessionState.newHadoopConf()))
 
   /** The sidecar single-group proof for one file, and the partial-row
     * values if it holds. `min==max` uses the shared comparator so the

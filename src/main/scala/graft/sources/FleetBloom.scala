@@ -56,6 +56,16 @@ final case class FleetBloom(tag: Char, k: Int, bits: Array[Long]) {
     }
     true
   }
+
+  // value equality over the bit words (a case class compares arrays by
+  // reference), so two parses of one manifest entry compare equal
+  override def equals(o: Any): Boolean = o match {
+    case b: FleetBloom => tag == b.tag && k == b.k &&
+      java.util.Arrays.equals(bits, b.bits)
+    case _ => false
+  }
+
+  override def hashCode: Int = java.util.Arrays.hashCode(bits) * 31 + k
 }
 
 object FleetBloom {

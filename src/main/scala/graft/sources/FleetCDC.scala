@@ -72,10 +72,14 @@ object FleetCDC {
     * reads additionally VERIFY lineage in-task (old ⊆ new for grown,
     * new ⊆ old for shrunk — [[FleetDv.Deleted.subsetOf]]) and fail
     * loudly on a mixed rebind; re-seed the consumer from a full scan
-    * across such a span. */
+    * across such a span.
+    *
+    * `stats` holds the changed files' committed stats, each from the
+    * end of the span that lists the file. */
   final case class FleetDiff(added: Seq[String], removed: Seq[String],
       dvFrom: Map[String, String], dvTo: Map[String, String],
-      dvGrown: Seq[String], dvShrunk: Seq[String] = Nil)
+      dvGrown: Seq[String], dvShrunk: Seq[String] = Nil,
+      stats: Map[String, FleetStats.PartStats] = Map.empty)
 
   /** The newest version a feed at `p` may read through. An explicit
     * `branch` follows the branch's own version sequence (r18); without
@@ -126,9 +130,14 @@ object FleetCDC {
         from.intersect(to), s"change feed at $p v$v0..v$v1")
       case _ => (Nil, Nil)
     }
-    FleetDiff((to -- from).toSeq.sorted, (from -- to).toSeq.sorted,
+    val added = (to -- from).toSeq.sorted
+    val removed = (from -- to).toSeq.sorted
+    def statsAt(sn: Option[FleetManifest.Snapshot], names: Seq[String]) =
+      names.flatMap(n => sn.flatMap(_.statsOf(n)).map(n -> _))
+    FleetDiff(added, removed,
       fromS.map(_.dvs).getOrElse(Map.empty),
-      toS.map(_.dvs).getOrElse(Map.empty), grown, shrunk)
+      toS.map(_.dvs).getOrElse(Map.empty), grown, shrunk,
+      (statsAt(toS, added ++ grown ++ shrunk) ++ statsAt(fromS, removed)).toMap)
   }
 
   /** The diff between two committed versions, validated eagerly:
@@ -185,11 +194,8 @@ object FleetCDC {
               "generations until consumers pass)")
       }
     }
-    val stats =
-      if (filters.isEmpty) Map.empty[String, FleetStats.PartStats]
-      else FleetStats.forFleet(fs, statuses)
-    val kept = changed.zip(statuses).filterNot { case (_, st) =>
-      stats.get(st.getPath.toString).exists(ps =>
+    val kept = changed.zip(statuses).filterNot { case ((_, n, _), st) =>
+      d.stats.get(n).exists(ps => ps.len == st.getLen &&
         filters.exists(FleetStats.neverMatches(_, ps)))
     }
     // keyed by the statuses' OWN path spelling — getFileStatus

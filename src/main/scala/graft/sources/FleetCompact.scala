@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.col
 /** Fleet compaction — the small-file maintenance pass every long-lived
   * 100 TB fleet needs (SURVEY.md §2.A). Streaming sinks and frequent
   * appends leave a directory of many small object-container files;
-  * each costs a task, a file-open, and a sidecar entry, so scan
+  * each costs a task, a file-open, and a manifest entry, so scan
   * parallelism degrades into scheduling overhead. Compaction rewrites
   * the fleet into ~`targetBytes` files RANGE-CLUSTERED on a key, which
   * does two things at once:
@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions.col
   *  - restores scan granularity (ceil(total/target) right-sized files
   *    instead of thousands of shards), and
   *  - re-establishes skipping power: range partitioning gives every
-  *    output file a disjoint `clusterBy` interval, so the sidecar
-  *    `_stats.json` written by the V2 commit proves point/range
+  *    output file a disjoint `clusterBy` interval, so the stats the
+  *    V2 commit records for each file prove point/range
   *    predicates against whole files again (append-order fleets
   *    interleave keys and their min/max proofs go useless).
   *
@@ -26,12 +26,13 @@ import org.apache.spark.sql.functions.col
   * shuffle (`repartitionByRange` samples the key, the scale-standard
   * way to get equal-sized sorted shards) + a per-partition sort, then
   * the normal arbitrated V2 commit (attempt temps, rename-if-absent,
-  * sidecar merge, `_SUCCESS` last).
+  * stats in the manifest commit, `_SUCCESS` last).
   *
   * It is also the ONE retention core of every manifest fleet, Avro and
   * Parquet tiers alike: [[expireVersions]], [[removeOrphans]] and the
-  * copy-on-write merge's sweep all retire files through [[unlink]],
-  * which drops each file's `_stats.json` entry with it.
+  * copy-on-write merge's sweep all retire files through [[unlink]]
+  * (a file's stats live in the manifest entries of the versions that
+  * list it, so they expire with those versions).
   */
 object FleetCompact {
 
@@ -97,25 +98,20 @@ object FleetCompact {
       deletedFiles: Seq[String])
 
   /** Unlink retired fleet-relative names — a directory (a columnar
-    * vector partition, a `.staging-*` leftover) recursively — and drop
-    * their sidecar entries in one rewrite. A retired name's entry is
-    * dead even if its unlink failed. Returns the names unlinked. */
+    * vector partition, a `.staging-*` leftover) recursively. Returns
+    * the names unlinked. */
   private[sources] def unlink(fs: FileSystem, dir: Path,
-      retired: Seq[String]): Seq[String] = {
-    val gone = retired.filter { n =>
+      retired: Seq[String]): Seq[String] =
+    retired.filter { n =>
       val t = new Path(dir, n)
       if (fs.isDirectory(t)) fs.delete(t, true)
       else fs.delete(t, false)
     }
-    FleetStats.drop(fs, dir, retired.toSet)
-    gone
-  }
 
   /** Snapshot retention for a TRANSACTIONAL fleet ([[FleetManifest]]),
     * either codec: keep the newest `keepLast` manifest versions, drop
     * the older version files, and unlink every data file and deletion
-    * vector that only expired generations referenced, with their
-    * sidecar entries. `versionAsOf` reads of retained versions keep
+    * vector that only expired generations referenced. `versionAsOf` reads of retained versions keep
     * working; reads of expired ones fail with the documented
     * missing-version error. Deletion is precise, not a sweep —
     * candidates are (∪ expired generations' files) − (∪ retained

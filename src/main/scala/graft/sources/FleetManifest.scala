@@ -3,7 +3,7 @@ package graft.sources
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.json4s.{JArray, JInt, JObject, JString}
+import org.json4s.{JArray, JInt, JNothing, JNull, JObject, JString, JValue}
 import org.json4s.jackson.JsonMethods
 
 /** Transactional file manifest for avro fleets — the generation
@@ -51,9 +51,9 @@ import org.json4s.jackson.JsonMethods
   * filesystems need nothing. Same-JVM committers are always safe (the
   * stripe lock serializes them before the filesystem is involved).
   *
-  * In-JVM commits additionally serialize on striped locks (the
-  * [[FleetStats]] pattern) so local-mode concurrency never relies on
-  * filesystem rename semantics at all. Version files are immutable
+  * In-JVM commits additionally serialize on striped locks so
+  * local-mode concurrency never relies on filesystem rename semantics
+  * at all. Version files are immutable
   * once committed; file names are RELATIVE to the fleet directory so a
   * fleet (with its `_manifest/`) survives a directory rename/move.
   *
@@ -61,7 +61,15 @@ import org.json4s.jackson.JsonMethods
   * contract unchanged (interchange drops, `writeDistributed` output,
   * externally-produced fleets); the first V2 commit into such a
   * directory BOOTSTRAPS the manifest from the raw listing, so legacy
-  * fleets upgrade on their next write with no migration step.
+  * fleets upgrade on their next write with no migration step; that
+  * commit also adopts the directory's `_stats.json` entries and
+  * removes the sidecar.
+  *
+  * Each snapshot holds one ENTRY per data file ([[FileEntry]]): its
+  * length and mtime, and the rows and column stats its writer
+  * captured. Entries are recorded by the commit that adds the file and
+  * inherited until it retires, so planning lists nothing and skips
+  * files with stats from the same generation as the file list.
   */
 /** A manifest commit lost to a CONFLICTING concurrent commit — the
   * base this commit must apply against changed in a way that would
@@ -154,20 +162,38 @@ private[graft] object FleetManifest {
     * INHERITED forward by [[commit]] (minus retired files, plus the
     * commit's own changes) — unlike `props`, which each commit states
     * in full — because a vector binding is part of the data state,
-    * not a per-commit annotation. `sizes` (data-file name →
-    * [[FileSize]]) is inherited the same way: a commit records each
-    * file it ADDS from one status call, and a retired file drops its
-    * entry (see [[statuses]] for how readers use them). */
+    * not a per-commit annotation. `entries` (data-file name →
+    * [[FileEntry]]) is inherited the same way: a commit records an
+    * entry for each file it ADDS, and a retired file drops its entry
+    * (see [[statuses]] and [[FleetView.stats]] for how readers use
+    * them). */
   final case class Snapshot(version: Long, files: Seq[String],
       props: Map[String, String] = Map.empty,
       dvs: Map[String, String] = Map.empty,
       dvMeta: Map[String, DvMeta] = Map.empty,
-      sizes: Map[String, FileSize] = Map.empty)
+      entries: Map[String, FileEntry] = Map.empty) {
 
-  /** A data file's committed byte length and modification time. Data
-    * files are immutable under the claim protocol, so the values the
-    * committer observed stay true for as long as the file exists. */
-  final case class FileSize(len: Long, mtime: Long)
+    /** File `name`'s committed stats; None = read it unskipped. */
+    def statsOf(name: String): Option[FleetStats.PartStats] =
+      entries.get(name).flatMap(_.stats)
+
+    /** The committed stats of every file that has them, by name. */
+    def fileStats: Map[String, FleetStats.PartStats] =
+      files.flatMap(n => statsOf(n).map(n -> _)).toMap
+  }
+
+  /** A data file's manifest entry: its byte length and modification
+    * time from one status call at commit, and — when its writer
+    * captured them — its row count and per-column stats
+    * ([[FleetStats]]; an entry without them is read unskipped). Data
+    * files are immutable under the claim protocol, so the values stay
+    * true for as long as the file exists. */
+  final case class FileEntry(len: Long, mtime: Long,
+      rows: Option[Long] = None,
+      cols: Map[String, FleetStats.ColStat] = Map.empty) {
+    def stats: Option[FleetStats.PartStats] =
+      rows.map(FleetStats.PartStats(len, _, cols))
+  }
 
   /** Per-binding deletion-vector METADATA, carried in the manifest so
     * planning never opens a vector file (r17 verdict #1: the plan-time
@@ -246,16 +272,23 @@ private[graft] object FleetManifest {
   // commit re-reads current, and each commit adds a version, so a
   // long-lived fleet's appends slowed linearly in its commit count:
   // ManifestBench measured 9 ms → 174 ms per 1-file append between
-  // version 1k and 10k, delta encoding already on). Version numbers
-  // are CONTIGUOUS and the head only GROWS (commits claim head+1,
-  // restore advances, retention deletes strictly below the head), so
-  // the head is findable from a JVM-local hint with forward probes:
-  // hit the hinted file, then probe +1 until the first miss — O(1 +
-  // commits landed since we last looked), typically 2 stats. A miss
-  // ON the hint itself (externally reset/recreated fleet) falls back
-  // to the one-time listing and reseeds. Cross-process safe: foreign
-  // commits land ABOVE the hint (probed), foreign retention below it.
+  // version 1k and 10k, delta encoding already on). Commits claim
+  // head+1 and the head only grows, so the head is findable from a
+  // JVM-local hint with forward probes: hit the hinted file, then
+  // probe +1 until the first miss — typically 2 stats. A miss ON the
+  // hint itself (externally reset/recreated fleet) falls back to the
+  // listing and reseeds.
+  //
+  // Version numbers are NOT always contiguous: retention keeps a
+  // TAGGED version and expires the ones around it, so a probe from a
+  // stale hint on that tag stops below the real head — and a commit
+  // from there would claim an expired number and fork history. A head
+  // the probe lands on is therefore trusted only when this JVM
+  // committed it (`ownHeads`); any other head — a foreign commit above
+  // the hint, a hint seeded by a listing — is confirmed by one listing.
   private val headHints =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val ownHeads =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   private def hintKey(fs: FileSystem, vdir: Path): String =
@@ -266,36 +299,41 @@ private[graft] object FleetManifest {
     headHints.merge(hintKey(fs, vdir), java.lang.Long.valueOf(v),
       (a, b) => if (a.longValue() >= b.longValue()) a else b)
 
-  private def dropHint(fs: FileSystem, vdir: Path): Unit =
+  /** Note `v` as a head this JVM committed (or adopted, publishing a
+    * branch). */
+  private def noteCommitted(fs: FileSystem, vdir: Path, v: Long): Unit = {
+    noteHead(fs, vdir, v)
+    ownHeads.put(hintKey(fs, vdir), java.lang.Long.valueOf(v))
+  }
+
+  private def dropHint(fs: FileSystem, vdir: Path): Unit = {
     headHints.remove(hintKey(fs, vdir))
+    ownHeads.remove(hintKey(fs, vdir))
+  }
 
   /** The highest committed version file in `vdir` (a main `_manifest/`
     * or a branch vdir), hint-accelerated. */
   private def headStatus(fs: FileSystem, vdir: Path,
       list: => Seq[(Long, FileStatus)]): Option[FileStatus] = {
     val key = hintKey(fs, vdir)
-    val hint = headHints.get(key)
     def seed(): Option[FileStatus] = {
       val last = list.lastOption
       last.foreach { case (v, _) =>
         headHints.put(key, java.lang.Long.valueOf(v)) }
       last.map(_._2)
     }
-    if (hint == null) seed()
-    else {
-      var v = hint.longValue()
-      if (!fs.exists(new Path(vdir, vname(v)))) { dropHint(fs, vdir); seed() }
-      else {
-        while (fs.exists(new Path(vdir, vname(v + 1L)))) v += 1L
-        if (v != hint.longValue())
-          headHints.put(key, java.lang.Long.valueOf(v))
-        try Some(fs.getFileStatus(new Path(vdir, vname(v))))
-        catch { case _: java.io.FileNotFoundException =>
-          // the dir vanished between probes (external reset/cleanup)
-          dropHint(fs, vdir); seed()
-        }
-      }
-    }
+    def stat(v: Long): Option[FileStatus] =
+      try Some(fs.getFileStatus(new Path(vdir, vname(v))))
+      catch { case _: java.io.FileNotFoundException => None }
+    val hint = headHints.get(key)
+    if (hint == null) return seed()
+    var v = hint.longValue()
+    var head = stat(v)
+    if (head.isEmpty) { dropHint(fs, vdir); return seed() }
+    var up = stat(v + 1L)
+    while (up.isDefined) { head = up; v += 1L; up = stat(v + 1L) }
+    if (Option(ownHeads.get(key)).exists(_.longValue() == v)) head
+    else seed()
   }
 
   /** All committed versions at `dir`, ascending; empty when the fleet
@@ -672,7 +710,7 @@ private[graft] object FleetManifest {
               s"fast_forward '$name' at $dir: main v$v exists with " +
                 "different content — a concurrent commit raced the " +
                 "publish")
-        } else if (!renameClaim(fs, dir, dest, snap))
+        } else if (!renameClaim(fs, dir, dest, render(snap)))
           throw new FleetCommitConflictException(
             s"fast_forward '$name' at $dir: lost the claim on v$v — " +
               "a concurrent main commit raced the publish")
@@ -688,7 +726,7 @@ private[graft] object FleetManifest {
       fs.delete(branchVDir(dir, name), true)
       invalidatePrefix(fs, branchVDir(dir, name))
       dropHint(fs, branchVDir(dir, name))
-      if (staged.nonEmpty) noteHead(fs, mdir(dir), head)
+      if (staged.nonEmpty) noteCommitted(fs, mdir(dir), head)
       head
     }
 
@@ -806,8 +844,16 @@ private[graft] object FleetManifest {
               case other => throw new java.io.IOException(
                 s"malformed manifest $p: files = $other")
             }
+            // a full file repeats its predecessor's entries: share the
+            // equal ones with a cached v-1, so cached checkpoints do not
+            // each hold their own copy of every file's stats
+            val prev = Option(snapCache.get(fs.makeQualified(
+              new Path(p.getParent, vname(v - 1L))).toString))
+              .fold(Map.empty[String, FileEntry])(_._3.entries)
+            val entries = parseEntries(p, obj, files).map { case (n, e) =>
+              n -> prev.get(n).filter(_ == e).getOrElse(e) }
             Snapshot(v, files, parseProps(p, obj), parseDvs(p, obj),
-              parseDvMeta(p, obj), parseSizes(p, obj))
+              parseDvMeta(p, obj), entries)
         }
       case other => throw new java.io.IOException(
         s"malformed manifest $p: $other")
@@ -819,18 +865,22 @@ private[graft] object FleetManifest {
   // A FULL version file states the whole snapshot:
   //
   //   {"version": N, "files": [...], "props": {...}, "dvs": {...},
-  //    "dvmeta": {...}, "sizes": {"<file>": [len, mtime], ...}}
+  //    "dvmeta": {...}, "entries": [...]}
   //
-  // (`dvmeta` and `sizes` are omitted when empty). A full-snapshot
-  // version file costs O(total fleet files) to render and write on
-  // EVERY commit — the one remaining O(table) driver cost per append,
-  // the thing that makes a 10k-file fleet's appends slower than its
-  // first. A commit whose change is small relative to the base now
-  // writes a DELTA file instead:
+  // (`dvmeta` and `entries` are omitted when empty). `entries` is
+  // aligned with `files`, one element per file, so a file's name is
+  // written once: {"len": L, "mtime": M} plus, when its writer
+  // captured them, "rows" and "cols" in the [[FleetStats]] codec
+  // (min, max, nulls, bloom per column); null for a file without one.
+  // A full-snapshot version file costs O(total fleet files) to render
+  // and write on EVERY commit — the one remaining O(table) driver cost
+  // per append, the thing that makes a 10k-file fleet's appends slower
+  // than its first. A commit whose change is small relative to the
+  // base now writes a DELTA file instead:
   //
   //   {"version": N, "base": N-1, "removed": [...], "added": [...],
   //    "props": {...full...}, "dvs_set": {...}, "dvs_del": [...],
-  //    "dvmeta_set": {...}, "dvmeta_del": [...], "sizes_set": {...}}
+  //    "dvmeta_set": {...}, "dvmeta_del": [...], "entries": [...]}
   //
   // Reconstruction: base.files minus `removed` (order preserved) plus
   // `added` appended — chosen at WRITE time only when that replay
@@ -839,14 +889,17 @@ private[graft] object FleetManifest {
   // with what the committer computed. Props stay full per commit
   // (bounded by schema/checks/txn-ledger size, never by fleet size);
   // dv bindings and their metadata delta the same way as files.
-  // `sizes_set` names the sizes this commit added; a removed file's
-  // size goes with it, so sizes need no delete list.
+  // A delta's `entries` is aligned with `added`: only an added file
+  // gets an entry, and a removed file's entry goes with it, so entries
+  // need no delete list.
   //
-  // Sizes are what let a reader plan without listing the data
-  // directory ([[statuses]]). Version files written before sizes were
-  // recorded carry none, and a snapshot with ANY file lacking a size
-  // falls back to one listing — old fleets keep reading unchanged,
-  // and their files gain sizes as commits rewrite them.
+  // Entries are what let a reader plan without listing the data
+  // directory ([[statuses]]) and skip files without a sidecar
+  // ([[FleetView.stats]]). Version files written before entries were
+  // recorded carry none: a snapshot with ANY file lacking one falls
+  // back to one listing, and such files are read unskipped — old
+  // fleets keep reading correctly, and their files gain entries as
+  // commits rewrite them.
   //
   // Bounds and interplay:
   //  - every CheckpointEvery-th version writes full, so a cold
@@ -895,26 +948,40 @@ private[graft] object FleetManifest {
     val dvs = (base.dvs -- names("dvs_del")) ++ parseDvs(p, obj, "dvs_set")
     val dvMeta = (base.dvMeta -- names("dvmeta_del")) ++
       parseDvMeta(p, obj, "dvmeta_set")
-    val sizes = (base.sizes -- removed) ++ parseSizes(p, obj, "sizes_set")
-    Snapshot(v, files, parseProps(p, obj), dvs, dvMeta, sizes)
+    val entries = (base.entries -- removed) ++
+      parseEntries(p, obj, names("added"))
+    Snapshot(v, files, parseProps(p, obj), dvs, dvMeta, entries)
   }
 
-  private def parseSizes(p: Path, obj: JObject,
-      key: String = "sizes"): Map[String, FileSize] =
-    (obj \ key) match {
-      case o: JObject => o.obj.map {
-        case (f, JArray(List(JInt(len), JInt(mtime)))) =>
-          f -> FileSize(len.toLong, mtime.toLong)
-        case (f, other) => throw new java.io.IOException(
-          s"malformed manifest $p: $key[$f] = $other")
-      }.toMap
-      case _ => Map.empty[String, FileSize]
+  /** The `entries` array of a version file, aligned with `names` (the
+    * full file's `files`, a delta's `added`). */
+  private def parseEntries(p: Path, obj: JObject,
+      names: Seq[String]): Map[String, FileEntry] =
+    (obj \ "entries") match {
+      case JNothing => Map.empty
+      case JArray(es) if es.size == names.size =>
+        names.iterator.zip(es.iterator).collect { case (n, e: JObject) =>
+          val m = e.obj.toMap
+          def long(k: String): Long = m.get(k) match {
+            case Some(JInt(x)) => x.toLong
+            case other => throw new java.io.IOException(
+              s"malformed manifest $p: entries[$n].$k = $other")
+          }
+          n -> FileEntry(long("len"), long("mtime"),
+            m.get("rows").map(_ => long("rows")),
+            FleetStats.parseCols(m.getOrElse("cols", JNothing)))
+        }.toMap
+      case other => throw new java.io.IOException(
+        s"malformed manifest $p: entries = $other")
     }
 
-  private def sizesJson(sizes: Map[String, FileSize]): org.json4s.JValue =
-    JObject(sizes.toList.sortBy(_._1).map { case (f, z) =>
-      f -> (JArray(List(JInt(z.len), JInt(z.mtime))): org.json4s.JValue)
-    })
+  private def entriesJson(names: Seq[String],
+      entries: Map[String, FileEntry]): JValue =
+    JArray(names.map(n => entries.get(n).fold[JValue](JNull) { e =>
+      JObject(List[(String, JValue)]("len" -> JInt(e.len),
+        "mtime" -> JInt(e.mtime)) ++
+        e.rows.toList.flatMap(FleetStats.statsFields(_, e.cols)))
+    }).toList)
 
   private def parseProps(p: Path, obj: JObject): Map[String, String] =
     (obj \ "props") match {
@@ -1000,10 +1067,10 @@ private[graft] object FleetManifest {
     val meta =
       if (s.dvMeta.isEmpty) Nil
       else List[(String, org.json4s.JValue)]("dvmeta" -> dvMetaJson(s.dvMeta))
-    val sizes =
-      if (s.sizes.isEmpty) Nil
-      else List[(String, org.json4s.JValue)]("sizes" -> sizesJson(s.sizes))
-    JsonMethods.compact(JsonMethods.render(JObject(base ++ meta ++ sizes)))
+    val entries =
+      if (s.entries.isEmpty) Nil
+      else List[(String, JValue)]("entries" -> entriesJson(s.files, s.entries))
+    JsonMethods.compact(JsonMethods.render(JObject(base ++ meta ++ entries)))
   }
 
   /** The delta encoding of `next` against `base`, when sound and
@@ -1032,9 +1099,8 @@ private[graft] object FleetManifest {
       .toSeq.sorted
     val metaSet = next.dvMeta.filter { case (k, m) =>
       !base.dvMeta.get(k).contains(m) }
-    // [[commit]] builds next.sizes as exactly this replay: the base
-    // sizes minus the removed files plus the added files' sizes
-    val sizesSet = added.flatMap(f => next.sizes.get(f).map(f -> _)).toMap
+    // [[commit]] builds next.entries as exactly this replay: the base
+    // entries minus the removed files plus the added files' entries
     val fields = List[(String, org.json4s.JValue)](
       "version" -> JInt(next.version),
       "base" -> JInt(base.version),
@@ -1052,8 +1118,9 @@ private[graft] object FleetManifest {
         "dvmeta_set" -> dvMetaJson(metaSet))) ++
       (if (metaDel.isEmpty) Nil else List[(String, org.json4s.JValue)](
         "dvmeta_del" -> JArray(metaDel.map(JString(_)).toList))) ++
-      (if (sizesSet.isEmpty) Nil else List[(String, org.json4s.JValue)](
-        "sizes_set" -> sizesJson(sizesSet)))
+      (if (!added.exists(next.entries.contains)) Nil
+       else List[(String, JValue)](
+         "entries" -> entriesJson(added, next.entries)))
     Some(JsonMethods.compact(JsonMethods.render(JObject(fields))))
   }
 
@@ -1100,8 +1167,8 @@ private[graft] object FleetManifest {
   }
 
   // serialize same-JVM commits per fleet dir (stripes, not a per-path
-  // map — the FleetStats rationale: bounded memory, collisions only
-  // serialize unrelated commits)
+  // map: bounded memory, and a collision only serializes two unrelated
+  // commits)
   private val commitStripes = Array.fill(64)(new Object)
   private val linklessWarned = new java.util.concurrent.atomic.AtomicBoolean
 
@@ -1142,8 +1209,8 @@ private[graft] object FleetManifest {
 
   /** True when the writer-idempotence ledger already holds (appId,
     * ≥ version) — the cheap pre-check [[AvroFleetCommits.commitFleet]]
-    * runs under the commit lock BEFORE any side effect (sidecar-stats
-    * merge, layout-marker write, reset's schema-marker clear), so a
+    * runs under the commit lock BEFORE any side effect (layout-marker
+    * write, reset's schema-marker clear), so a
     * same-JVM replay skips with zero residue. The authoritative check
     * lives inside [[commit]]'s retry loop (exact across processes). */
   private[sources] def txnApplied(fs: FileSystem, dir: Path,
@@ -1209,7 +1276,8 @@ private[graft] object FleetManifest {
       dvMetaUpdate: Map[String, DvMeta] = Map.empty,
       txn: Option[(String, Long)] = None,
       requireChecks: Option[Map[String, String]] = None,
-      requireSchema: Option[Option[String]] = None): Snapshot = {
+      requireSchema: Option[Option[String]] = None,
+      stats: Map[String, FleetStats.PartStats] = Map.empty): Snapshot = {
     val key = fs.makeQualified(dir).toString
     // a PINNED session is a read cut ([[FleetPin]]): committing to a
     // fleet inside the pin vector would mean this session planned its
@@ -1358,22 +1426,28 @@ private[graft] object FleetManifest {
           val baseMeta = cur.map(_.dvMeta).getOrElse(Map.empty)
           val nextMeta = ((baseMeta -- dvUpdate.keys) ++ dvMetaUpdate)
             .filter { case (f, _) => nextDvs.contains(f) }
-          // sizes follow their file: inherited while it stays listed,
-          // one status call for each file this commit adds (a name
-          // that does not exist gets no entry), dropped on retire; the
-          // first commit at a fleet adds every file
+          // entries follow their file: inherited while it stays
+          // listed, dropped on retire, and built for each file this
+          // commit adds from one status call (a name with no file gets
+          // none) plus the stats its writer captured, when their
+          // length matches. The first commit at a fleet adds every
+          // file and adopts a manifest-less directory's `_stats.json`.
           val curFiles = cur.map(_.files).getOrElse(Seq.empty)
           val curSet = curFiles.toSet
-          val addedSizes = nextFiles.filterNot(curSet).flatMap { f =>
+          val known =
+            if (cur.isEmpty) FleetStats.read(fs, dir) ++ stats else stats
+          val addedEntries = nextFiles.filterNot(curSet).flatMap { f =>
             try {
               val st = fs.getFileStatus(new Path(dir, f))
-              Some(f -> FileSize(st.getLen, st.getModificationTime))
+              val ps = known.get(f).filter(_.len == st.getLen)
+              Some(f -> FileEntry(st.getLen, st.getModificationTime,
+                ps.map(_.rows), ps.map(_.cols).getOrElse(Map.empty)))
             } catch { case _: java.io.FileNotFoundException => None }
           }
-          val nextSizes = (cur.map(_.sizes).getOrElse(Map.empty) --
-            curFiles.filterNot(nextFileSet)) ++ addedSizes
+          val nextEntries = (cur.map(_.entries).getOrElse(Map.empty) --
+            curFiles.filterNot(nextFileSet)) ++ addedEntries
           val next = Snapshot(cur.map(_.version + 1L).getOrElse(1L),
-            nextFiles, stamped, nextDvs, nextMeta, nextSizes)
+            nextFiles, stamped, nextDvs, nextMeta, nextEntries)
           // an active branch that EXISTS at this fleet routes the
           // claim into the branch's own version sequence (base
           // resolution above already read the branch head via
@@ -1394,54 +1468,12 @@ private[graft] object FleetManifest {
             .filter(_ => fs.exists(
               new Path(destDir, vname(next.version - 1L))))
             .getOrElse(render(next))
-          if (!fs.exists(dest)) {
-            localNio(fs, dest) match {
-              case Some(nioDest) =>
-                // local FS: rename clobbers, so the atomic claim is a
-                // HARD LINK (createLink fails-if-exists at the OS
-                // level, and the linked content is already complete —
-                // no torn-write window, no read-back needed). A
-                // filesystem WITHOUT link(2) (FAT/some FUSE mounts)
-                // throws without creating the destination — that is
-                // NOT a lost claim: fall through to the rename +
-                // read-back path for this attempt instead of burning
-                // the retry budget on an impossible primitive.
-                val nioTmp = nioDest.resolveSibling(
-                  s".${vname(next.version)}." +
-                    s"${java.util.UUID.randomUUID()}.tmp")
-                java.nio.file.Files.write(nioTmp,
-                  encoded.getBytes("UTF-8"))
-                val claimed =
-                  try { java.nio.file.Files.createLink(nioDest, nioTmp)
-                        true }
-                  catch { case NonFatal(_) => false }
-                java.nio.file.Files.deleteIfExists(nioTmp)
-                if (claimed) {
-                  noteHead(fs, destDir, next.version)
-                  return next
-                }
-                if (!java.nio.file.Files.exists(nioDest)) {
-                  // link(2) unsupported here: cross-PROCESS atomicity
-                  // degrades to rename + read-back (clobber-rename
-                  // TOCTOU returns) — surface it once instead of
-                  // failing a filesystem that worked pre-hard-link
-                  if (linklessWarned.compareAndSet(false, true))
-                    org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                      s"local filesystem at $dir lacks hard links; " +
-                        "manifest commits fall back to rename + " +
-                        "read-back (cross-process race window on " +
-                        "clobbering renames)")
-                  if (renameClaim(fs, dir, dest, next, Some(encoded))) {
-                    noteHead(fs, destDir, next.version)
-                    return next
-                  }
-                }
-              case None =>
-                if (renameClaim(fs, dir, dest, next, Some(encoded))) {
-                  noteHead(fs, destDir, next.version)
-                  return next
-                }
-            }
+          if (!fs.exists(dest) && claim(fs, dir, dest, encoded)) {
+            noteCommitted(fs, destDir, next.version)
+            // the adopted sidecar's entries now ride the manifest
+            if (cur.isEmpty)
+              fs.delete(new Path(dir, FleetStats.FileName), false)
+            return next
           }
           // lost the claim: loop re-reads the new current and retries
         }
@@ -1451,23 +1483,62 @@ private[graft] object FleetManifest {
       }
   }
 
+  /** Claim `dest` with the version file `encoded`; false = lost. */
+  private def claim(fs: FileSystem, dir: Path, dest: Path,
+      encoded: String): Boolean =
+    localNio(fs, dest) match {
+      case Some(nioDest) =>
+        // local FS: rename clobbers, so the atomic claim is a HARD
+        // LINK (createLink fails-if-exists at the OS level, and the
+        // linked content is already complete — no torn-write window,
+        // no read-back needed). A filesystem WITHOUT link(2) (FAT/some
+        // FUSE mounts) throws without creating the destination — that
+        // is NOT a lost claim: fall through to the rename + read-back
+        // path instead of burning the retry budget on an impossible
+        // primitive.
+        val nioTmp = nioDest.resolveSibling(
+          s".${dest.getName}.${java.util.UUID.randomUUID()}.tmp")
+        java.nio.file.Files.write(nioTmp, encoded.getBytes("UTF-8"))
+        val linked =
+          try { java.nio.file.Files.createLink(nioDest, nioTmp); true }
+          catch { case NonFatal(_) => false }
+        java.nio.file.Files.deleteIfExists(nioTmp)
+        linked || (!java.nio.file.Files.exists(nioDest) && {
+          // link(2) unsupported here: cross-PROCESS atomicity degrades
+          // to rename + read-back (clobber-rename TOCTOU returns) —
+          // surface it once instead of failing a filesystem that
+          // worked pre-hard-link
+          if (linklessWarned.compareAndSet(false, true))
+            org.slf4j.LoggerFactory.getLogger(getClass).warn(
+              s"local filesystem at $dir lacks hard links; manifest " +
+                "commits fall back to rename + read-back (cross-process " +
+                "race window on clobbering renames)")
+          renameClaim(fs, dir, dest, encoded)
+        })
+      case None => renameClaim(fs, dir, dest, encoded)
+    }
+
   /** Temp + rename claim with read-back verification — the
     * HDFS/object-store path (rename-if-absent refuses an existing
     * destination atomically), and the fallback when the local FS
-    * lacks hard links. */
+    * lacks hard links. The read-back compares the bytes, so the claim
+    * is ours only if the file holds exactly what we wrote. */
   private def renameClaim(fs: FileSystem, dir: Path, dest: Path,
-      next: Snapshot, encoded: Option[String] = None): Boolean = {
+      encoded: String): Boolean = {
     val tmp = new Path(mdir(dir),
-      s".${vname(next.version)}.${java.util.UUID.randomUUID()}.tmp")
+      s".${dest.getName}.${java.util.UUID.randomUUID()}.tmp")
     val out = fs.create(tmp, true)
-    try out.write(encoded.getOrElse(render(next)).getBytes("UTF-8"))
+    try out.write(encoded.getBytes("UTF-8"))
     finally out.close()
     val renamed =
       try fs.rename(tmp, dest)
       catch { case NonFatal(_) => false }
     if (!renamed) fs.delete(tmp, false)
-    renamed && (try readFile(fs, dest) == next
-                catch { case NonFatal(_) => false })
+    renamed && (try {
+      val in = fs.open(dest)
+      try new String(in.readAllBytes(), "UTF-8") == encoded
+      finally in.close()
+    } catch { case NonFatal(_) => false })
   }
 
   /** The file set of the [[select]]ed snapshot as LIVE `FileStatus`es
@@ -1484,21 +1555,21 @@ private[graft] object FleetManifest {
   /** One snapshot's files as `FileStatus`es for query planning,
     * qualified under `dir`.
     *
-    * When every file carries its committed [[FileSize]] (every fleet
-    * written since sizes were recorded), the statuses are BUILT from
+    * When every file carries its committed [[FileEntry]] (every fleet
+    * written since entries were recorded), the statuses are BUILT from
     * the snapshot: no listing, no stat, so planning cost is independent
     * of the directory's size and of orphans in it. A file that has
     * since gone missing then fails when a reader opens it
-    * ([[missingFile]]). Otherwise (version files written before sizes,
-    * or names committed without a file behind them) they come from
+    * ([[missingFile]]). Otherwise (version files written before
+    * entries, or names committed without a file behind them) they come from
     * [[listed]]. */
   def statuses(fs: FileSystem, dir: Path, sn: Snapshot): Seq[FileStatus] =
-    if (!sn.files.forall(sn.sizes.contains)) listed(fs, dir, sn)
+    if (!sn.files.forall(sn.entries.contains)) listed(fs, dir, sn)
     else {
       val qdir = fs.makeQualified(dir)
       val block = fs.getDefaultBlockSize(qdir)
       sn.files.map { n =>
-        val z = sn.sizes(n)
+        val z = sn.entries(n)
         new FileStatus(z.len, false, 1, block, z.mtime, new Path(qdir, n))
       }
     }

@@ -12,12 +12,12 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * file byte-identical on disk.
   *
   * Mechanics (all through the existing fleet contracts):
-  *  1. Every part file's `_stats.json` sidecar carries the merge key's
-  *     [min, max]. The file-extent table (one row per file — thousands,
+  *  1. Every part file's stats (its manifest entry, or a manifest-less
+  *     directory's `_stats.json`) carry the merge key's [min, max]. The file-extent table (one row per file — thousands,
   *     not billions) is BROADCAST against the feed keys and a file is
   *     "touched" iff at least one feed key lands inside its extent —
   *     one semi-join pass over the feed, output bounded by the file
-  *     count. A file without a usable sidecar entry is conservatively
+  *     count. A file without usable stats is conservatively
   *     touched; a rows=0 file is untouched.
   *  2. Only the touched files are loaded — via the connector's
   *     comma-separated multi-path listing, so pruning/pushdown/commit
@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *     UNTOUCHED file's extent is touched by definition, so no insert
   *     or update can belong to a file the rewrite skips).
   *  3. The merged result is APPENDED through the V2 committer (attempt
-  *     temps, job-tagged names, sidecar stats), with the touched
+  *     temps, job-tagged names, per-file stats), with the touched
   *     originals passed as the commit's MANIFEST SWAP
   *     (`manifestSwapRemove`): one [[FleetManifest]] commit adds the
   *     rewritten generation and retires the replaced one, so a
@@ -63,7 +63,8 @@ object FleetMerge {
       retainOld: Boolean = false): CowResult = {
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val fs = dirPath.getFileSystem(s.sessionState.newHadoopConf())
-    val fleet = Avro.listFleet(s, dir)
+    val view = FleetView.resolve(s, dir)
+    val fleet = view.files
     val schema = Avro.toSparkSchema(Avro.peekSchema(s, dir))
     require(schema.fieldNames.contains(key),
       s"merge key '$key' not in fleet schema ${schema.fieldNames.toSeq}")
@@ -74,7 +75,7 @@ object FleetMerge {
       s"merge key '$key' must be a non-temporal trackable scalar, " +
         s"got ${keyDt.simpleString}")
 
-    val stats = FleetStats.forFleet(fs, fleet)
+    val stats = view.stats(fs)
     // classify: provable files carry (path, kmin, kmax); the rest are
     // conservatively touched (except provably-empty files)
     val (provable, rest) = fleet.partition { st =>

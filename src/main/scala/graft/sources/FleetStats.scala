@@ -8,19 +8,27 @@ import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-/** Per-part-file column statistics for avro fleets — the data-skipping
-  * layer parquet gets from footers, recreated for the fleet codec.
+/** Per-part-file column statistics for the fleets — the data-skipping
+  * layer parquet gets from footers, recreated for the fleet codecs.
   *
   * The avro WRITERS (the `graft-avro` V2 writer and
   * `Avro.writeDistributed`) already stream every value through a task;
-  * a [[FleetStats.Collector]] folds min/max/null-count per column as
-  * they pass, and the job commit writes one `_stats.json` sidecar per
-  * fleet directory BEFORE `_SUCCESS`. The SCAN consults the sidecar
-  * only when filters were pushed: a part file whose recorded
-  * [min, max]/null profile proves a pushed conjunct can never match is
-  * dropped at PLANNING time — no task, no open, no header read. At
-  * 100 TB this is the difference between "filter evaluated at decode
-  * speed" and "most of the fleet never scheduled".
+  * a [[FleetStats.Collector]] folds rows and min/max/null-count (plus a
+  * bloom) per column as they pass, and [[ParquetFleetStats]] reads the
+  * same profile from parquet footers. Where the profiles live:
+  *
+  *  - a MANIFEST fleet records each file's [[PartStats]] in the entry
+  *    of the commit that adds it ([[FleetManifest.FileEntry]]), so a
+  *    scan plans its files and their stats from one snapshot
+  *    ([[FleetView.stats]]) and the stats version with the files;
+  *  - a manifest-less directory (`writeDistributed` output) carries one
+  *    write-once `_stats.json` sidecar.
+  *
+  * The SCAN consults stats only when filters were pushed: a part file
+  * whose recorded [min, max]/null profile proves a pushed conjunct can
+  * never match is dropped at PLANNING time — no task, no open, no
+  * header read. At 100 TB this is the difference between "filter
+  * evaluated at decode speed" and "most of the fleet never scheduled".
   *
   * Soundness rules:
   *  - stats cover only the types `FleetFilters` can push (integral /
@@ -35,13 +43,9 @@ import org.json4s.jackson.JsonMethods
   *    recorded at commit (part files are immutable under the
   *    rename-if-absent protocol; the check guards out-of-contract
   *    in-place edits);
-  *  - the sidecar is ADVISORY: unreadable, missing, or torn stats
-  *    degrade to "no skipping", never to an error;
-  *  - the parsed sidecar is memoized per directory, validated by the
-  *    base file's (mtime, len) and the shard names, and refreshed by
-  *    the writers with the map they rendered; sound because an entry
-  *    never changes for an immutable, length-checked file name, so a
-  *    stale memo can only lack entries (read unskipped).
+  *  - stats are ADVISORY: a file without them (a version file written
+  *    without stats, a missing or unreadable sidecar) is read
+  *    unskipped, never an error.
   */
 private[graft] object FleetStats {
 
@@ -284,7 +288,7 @@ private[graft] object FleetStats {
     st.cols.get(c).exists(cs => cs.min.isEmpty ||
       (comparable(cs.min.get, v) && noRow(cs.min.get)))
 
-  // ---- sidecar IO ----------------------------------------------------
+  // ---- JSON codec ----------------------------------------------------
 
   /** Stat-value JSON codec, shared with the manifest's deletion-vector
     * metadata ([[FleetManifest.DvMeta]]) so both speak the same carrier
@@ -309,183 +313,90 @@ private[graft] object FleetStats {
     case other => throw new IllegalArgumentException(s"bad stat: $other")
   }
 
-  private def filesObj(files: Map[String, PartStats]): JObject =
-    JObject(files.toList.sortBy(_._1).map {
-      case (name, ps) =>
-        name -> JObject(
-          "len" -> JLong(ps.len),
-          "rows" -> JLong(ps.rows),
-          "cols" -> JObject(ps.cols.toList.sortBy(_._1).map {
-            case (c, cs) =>
-              val base = List[(String, JValue)]("nulls" -> JLong(cs.nulls))
-              val mm = (cs.min, cs.max) match {
-                case (Some(mn), Some(mx)) =>
-                  List("min" -> toJson(mn), "max" -> toJson(mx))
-                case _ => Nil
+  /** One file's rows and column profiles as JSON fields — the entry
+    * codec shared by the `_stats.json` sidecar and the manifest's
+    * per-file entries ([[FleetManifest.FileEntry]]), which add the
+    * file's `len` beside them. */
+  private[sources] def statsFields(rows: Long, cols: Map[String, ColStat])
+      : List[(String, JValue)] =
+    List("rows" -> JLong(rows),
+      "cols" -> JObject(cols.toList.sortBy(_._1).map { case (c, cs) =>
+        val base = List[(String, JValue)]("nulls" -> JLong(cs.nulls))
+        val mm = (cs.min, cs.max) match {
+          case (Some(mn), Some(mx)) =>
+            List("min" -> toJson(mn), "max" -> toJson(mx))
+          case _ => Nil
+        }
+        val bl = cs.bloom.toList.map(b => "bloom" -> JObject(
+          "tag" -> JString(b.tag.toString),
+          "k" -> JLong(b.k.toLong),
+          "b64" -> JString(FleetBloom.encode(b))))
+        c -> JObject(mm ++ base ++ bl: _*)
+      }: _*))
+
+  /** The column profiles of one entry's `cols` object. */
+  private[sources] def parseCols(j: JValue): Map[String, ColStat] = j match {
+    case JObject(cs) => cs.map { case (c, cj) =>
+      val m = cj.asInstanceOf[JObject].obj.toMap
+      val bloom = m.get("bloom").flatMap {
+        case JObject(bf) =>
+          val bm = bf.toMap
+          (bm.get("tag"), bm.get("k"), bm.get("b64")) match {
+            case (Some(JString(t)), Some(k: JValue), Some(JString(b64))) =>
+              val kk = fromJson(k) match {
+                case l: java.lang.Long => l.intValue(); case _ => -1
               }
-              val bl = cs.bloom.toList.map(b => "bloom" -> JObject(
-                "tag" -> JString(b.tag.toString),
-                "k" -> JLong(b.k.toLong),
-                "b64" -> JString(FleetBloom.encode(b))))
-              c -> JObject(mm ++ base ++ bl: _*)
-          }: _*))
-    }: _*)
-
-  private def render(files: Map[String, PartStats]): String =
-    JsonMethods.compact(JsonMethods.render(
-      JObject("files" -> filesObj(files))))
-
-  private def parse(text: String): Map[String, PartStats] =
-    parseFiles(JsonMethods.parse(text))
-
-  private def parseFiles(top: JValue): Map[String, PartStats] = {
-    val files = top \ "files" match {
-      case JObject(fs) => fs
-      case _ => Nil
-    }
-    files.map { case (name, j) =>
-      val f = j.asInstanceOf[JObject].obj.toMap
-      val len = fromJson(f("len")).asInstanceOf[Long]
-      val rows = fromJson(f("rows")).asInstanceOf[Long]
-      val cols = f.get("cols") match {
-        case Some(JObject(cs)) => cs.map { case (c, cj) =>
-          val m = cj.asInstanceOf[JObject].obj.toMap
-          val bloom = m.get("bloom").flatMap {
-            case JObject(bf) =>
-              val bm = bf.toMap
-              (bm.get("tag"), bm.get("k"), bm.get("b64")) match {
-                case (Some(JString(t)), Some(k: JValue),
-                    Some(JString(b64))) =>
-                  val kk = fromJson(k) match {
-                    case l: java.lang.Long => l.intValue(); case _ => -1
-                  }
-                  FleetBloom.decode(t, kk, b64)
-                case _ => None
-              }
+              FleetBloom.decode(t, kk, b64)
             case _ => None
           }
-          c -> ColStat(m.get("min").map(fromJson),
-            m.get("max").map(fromJson),
-            fromJson(m("nulls")).asInstanceOf[Long], bloom)
-        }.toMap
-        case _ => Map.empty[String, ColStat]
+        case _ => None
       }
-      name -> PartStats(len, rows, cols)
+      c -> ColStat(m.get("min").map(fromJson), m.get("max").map(fromJson),
+        fromJson(m("nulls")).asInstanceOf[Long], bloom)
     }.toMap
+    case _ => Map.empty
   }
 
-  // serializes the read-merge-write below per sidecar path within this
-  // JVM — two same-session jobs committing into one fleet dir (the
-  // local-mode reality: one driver) can no longer interleave the merge
-  // and drop each other's entries. Lock STRIPES, not a per-path map: a
-  // long-lived driver writing many distinct directories would grow an
-  // unbounded path→lock map forever, while a stripe collision merely
-  // serializes two unrelated commits (advisory metadata — correctness
-  // unaffected). Cross-JVM writers remain unlocked by design: the worst
-  // interleaving loses sidecar ENTRIES, never data — readers degrade to
-  // scanning unskipped files.
-  private val writeLockStripes = Array.fill(64)(new Object)
+  private def render(files: Map[String, PartStats]): String =
+    JsonMethods.compact(JsonMethods.render(JObject("files" -> JObject(
+      files.toList.sortBy(_._1).map { case (name, ps) =>
+        name -> JObject(("len" -> JLong(ps.len)) ::
+          statsFields(ps.rows, ps.cols): _*)
+      }: _*))))
 
-  // ---- DELTA SHARDS (r22, the r21 verdict's #3) --------------------
+  private def parse(text: String): Map[String, PartStats] =
+    JsonMethods.parse(text) \ "files" match {
+      case JObject(fs) => fs.map { case (name, j) =>
+        val f = j.asInstanceOf[JObject].obj.toMap
+        name -> PartStats(fromJson(f("len")).asInstanceOf[Long],
+          fromJson(f("rows")).asInstanceOf[Long],
+          parseCols(f.getOrElse("cols", JNothing)))
+      }.toMap
+      case _ => Map.empty
+    }
+
+  // ---- the manifest-less sidecar -------------------------------------
   //
-  // The sidecar used to be ONE `_stats.json` rewritten read-merge-write
-  // on every commit — O(total fleet files) of JSON per append, the
-  // stats-plane twin of the full-snapshot manifest cost. Past
-  // [[ShardThreshold]] base entries, a commit now appends one SHARD
-  // under `_stats.d/` instead ({"files": {...fresh...}} or
-  // {"drop": [...]}), and every [[CompactAt]]-th shard folds the lot
-  // back into the base — per-commit cost O(commit's own files),
-  // amortized O(total/CompactAt). Readers merge base + shards in name
-  // order (a monotonic per-JVM sequence + uuid, so cross-process
-  // writers can't clobber each other and later entries win). Below the
-  // threshold — every test fixture and bench fleet — the single-file
-  // behavior is byte-identical to r21, including the documented
-  // "delete the sidecar to disable skipping" degrade path.
-
-  private val ShardDirName = "_stats.d"
-  private val ShardThreshold = 512
-  private val CompactAt = 16
-  private val shardSeq = new java.util.concurrent.atomic.AtomicLong
-
-  private def shardDir(dir: Path) = new Path(dir, ShardDirName)
-
-  private def listShards(fs: FileSystem, dir: Path)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    val d = shardDir(dir)
-    try {
-      if (!fs.exists(d)) Seq.empty
-      else fs.listStatus(d).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".json") &&
-          !st.getPath.getName.startsWith("."))
-        .sortBy(_.getPath.getName)
-    } catch { case NonFatal(_) => Seq.empty }
-  }
-
-  private def writeAtomic(fs: FileSystem, dest: Path, text: String): Unit = {
-    val tmp = new Path(dest.getParent, s".${dest.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(text.getBytes("UTF-8")) finally out.close()
-    fs.delete(dest, false)
-    if (!fs.rename(tmp, dest)) { fs.delete(tmp, false); () }
-  }
-
-  private def writeShard(fs: FileSystem, dir: Path,
-      fresh: Map[String, PartStats], dropNames: Seq[String]): Unit = {
-    fs.mkdirs(shardDir(dir))
-    val name = f"s${System.currentTimeMillis()}%013d-" +
-      f"${shardSeq.incrementAndGet()}%06d-" +
-      s"${java.util.UUID.randomUUID().toString.take(8)}.json"
-    val fields = List[(String, JValue)]("files" -> filesObj(fresh)) ++
-      (if (dropNames.isEmpty) Nil
-       else List[(String, JValue)](
-         "drop" -> JArray(dropNames.sorted.map(JString(_)).toList)))
-    writeAtomic(fs, new Path(shardDir(dir), name),
-      JsonMethods.compact(JsonMethods.render(JObject(fields))))
-  }
-
-  /** Fold base + every shard into one fresh base file and remove the
-    * shards — under the stripe lock; a cross-process racer's shard
-    * landing mid-fold is left in place (not deleted unseen). */
-  private def compactShards(fs: FileSystem, dir: Path,
-      extra: Map[String, PartStats]): Unit = {
-    val shards = listShards(fs, dir)
-    val merged = read(fs, dir) ++ extra
-    writeAtomic(fs, new Path(dir, FileName), render(merged))
-    shards.foreach(st => fs.delete(st.getPath, false))
-  }
-
-  // ---- parsed-sidecar memo ------------------------------------------
+  // A manifest fleet's stats ride its manifest entries. `_stats.json`
+  // remains only for manifest-less directories: `Avro.writeDistributed`
+  // and `Xlsx.writeDistributed` each write one, once, into a freshly
+  // deleted directory before `_SUCCESS`. The first manifest commit into
+  // such a directory adopts its length-matched entries and removes it
+  // ([[FleetManifest.commit]]).
   //
-  // Every fleet scan and every commit below the shard threshold used
-  // to parse the whole sidecar (hundreds of KB of JSON with blooms on a
-  // busy fleet). The parsed map is memoized per directory and
-  // validated by the base file's (mtime, len) plus the shard names, so
-  // a reader costs one status call and the shard-directory probe. The
-  // writers below refresh the memo under the stripe lock with the map
-  // they rendered, so neither lookups nor commits re-parse it.
-  //
-  // Sound because an entry never changes for a given data-file name:
-  // part files are immutable, and an entry applies only while the
-  // file's length matches. A stale memo (a foreign process rewrote the
-  // sidecar within one mtime tick at the same length) can therefore
-  // only LACK entries the disk has, or hold entries of files since
-  // deleted — "read unskipped" and "never looked up", never a wrong
-  // skip. Bounded by ENTRIES, not directories (one parsed sidecar
-  // holds a few KB per entry with its blooms): the memo is cleared
-  // when remembering one more map would pass MemoEntries in total.
+  // The parsed sidecar is memoized per directory, validated by the
+  // file's (mtime, len), so the xlsx scans re-reading one directory
+  // cost one status call. A stale memo (a foreign rewrite within one
+  // mtime tick at the same length) can only pair an entry with a file
+  // of the same name and length; entries are length-checked on use.
+  // Bounded by entries, not directories: cleared when remembering one
+  // more map would pass MemoEntries in total.
 
-  private final case class Memo(stamp: (Long, Long), shards: Seq[String],
+  private final case class Memo(stamp: (Long, Long),
       entries: Map[String, PartStats])
   private val memo = new java.util.concurrent.ConcurrentHashMap[String, Memo]()
   private val MemoEntries = 16384
   private var memoEntries = 0 // guarded by memo's monitor
-
-  /** (mtime, len) of the base sidecar; (-1, -1) when it is absent. */
-  private def baseStamp(fs: FileSystem, dir: Path): (Long, Long) =
-    try {
-      val st = fs.getFileStatus(new Path(dir, FileName))
-      (st.getModificationTime, st.getLen)
-    } catch { case _: java.io.FileNotFoundException => (-1L, -1L) }
 
   private def remember(key: String, m: Memo): Unit = memo.synchronized {
     if (memoEntries + m.entries.size > MemoEntries) {
@@ -495,134 +406,55 @@ private[graft] object FleetStats {
     memoEntries += m.entries.size - (if (prev == null) 0 else prev.entries.size)
   }
 
-  /** Rewrite the base sidecar with `m` and remember `m` as its parse
-    * (callers hold the stripe lock and have seen no shards). */
-  private def writeBase(fs: FileSystem, dir: Path,
-      m: Map[String, PartStats]): Unit = {
-    writeAtomic(fs, new Path(dir, FileName), render(m))
-    remember(fs.makeQualified(dir).toString,
-      Memo(baseStamp(fs, dir), Seq.empty, m))
-  }
-
-  /** Merge `fresh` entries into the sidecar at `dir` — called from the
-    * job commit, BEFORE `_SUCCESS`. Single-file read-merge-rewrite
-    * below [[ShardThreshold]] entries; one O(fresh) shard append past
-    * it, folded every [[CompactAt]] shards. All writes temp + rename so
-    * a racing reader sees the old state or the new, never a torn one. */
+  /** Write the sidecar of a manifest-less directory (called before its
+    * `_SUCCESS`): temp + rename, so a reader sees no sidecar or the
+    * whole one. */
   def write(fs: FileSystem, dir: Path,
-      fresh: Map[String, PartStats]): Unit = {
-    val key = fs.makeQualified(dir).toString
-    writeLockStripes(math.floorMod(key.hashCode, writeLockStripes.length))
-      .synchronized {
-      val shards = listShards(fs, dir)
-      if (shards.isEmpty) {
-        // the base merge runs only when no shards exist — once per
-        // CompactAt writes in steady shard mode, every write below
-        // the threshold (where the base is small by definition); the
-        // memo serves its parse
-        val existing = read(fs, dir)
-        if (existing.size <= ShardThreshold)
-          writeBase(fs, dir, existing ++ fresh)
-        else writeShard(fs, dir, fresh, Seq.empty) // shard mode begins
-      }
-      else if (shards.size >= CompactAt) compactShards(fs, dir, fresh)
-      else writeShard(fs, dir, fresh, Seq.empty)
-    }
+      entries: Map[String, PartStats]): Unit = {
+    val dest = new Path(dir, FileName)
+    val tmp = new Path(dir, s".$FileName.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(render(entries).getBytes("UTF-8")) finally out.close()
+    fs.delete(dest, false)
+    if (!fs.rename(tmp, dest)) fs.delete(tmp, false)
+    memo.remove(fs.makeQualified(dir).toString)
+    ()
   }
 
-  /** Remove `names`' entries from the sidecar (retention GC: an
-    * expired generation's deleted files must not accumulate advisory
-    * entries forever). Same stripe lock + atomicity as [[write]]; a
-    * no-op when nothing matches. In shard mode the removal is a DROP
-    * shard (applied by readers in order, folded at compaction). */
-  def drop(fs: FileSystem, dir: Path, names: Set[String]): Unit = {
-    if (names.isEmpty) return
-    val key = fs.makeQualified(dir).toString
-    writeLockStripes(math.floorMod(key.hashCode, writeLockStripes.length))
-      .synchronized {
-      val shards = listShards(fs, dir)
-      if (shards.isEmpty) {
-        val existing = read(fs, dir)
-        val kept = existing -- names
-        if (kept.size == existing.size) return
-        writeBase(fs, dir, kept)
-      } else {
-        val merged = read(fs, dir)
-        val hit = names.filter(merged.contains)
-        if (hit.isEmpty) return
-        if (shards.size >= CompactAt) compactShards(fs, dir, Map.empty)
-        writeShard(fs, dir, Map.empty, hit.toSeq)
-      }
-    }
-  }
-
-  /** The base `_stats.json` alone; empty on any problem. */
-  private def readBase(fs: FileSystem, dir: Path): Map[String, PartStats] = {
-    val p = new Path(dir, FileName)
+  /** The sidecar entries of one manifest-less directory, by file name;
+    * empty when it has none or on any problem (advisory data — never
+    * fail a read over it). */
+  def read(fs: FileSystem, dir: Path): Map[String, PartStats] =
     try {
-      if (!fs.exists(p)) Map.empty
-      else parse(readText(fs, p))
-    } catch { case NonFatal(_) => Map.empty }
-  }
-
-  private def readText(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      bytes.toString("UTF-8")
-    } finally in.close()
-  }
-
-  /** Existing sidecar entries of one fleet directory — base plus any
-    * delta shards in name order; empty on any problem (advisory data —
-    * never fail a read over it; one unreadable shard degrades to
-    * "those entries absent", never to an error). Served from the
-    * parsed-sidecar memo while the base's (mtime, len) and the shard
-    * names are unchanged. */
-  def read(fs: FileSystem, dir: Path): Map[String, PartStats] = {
-    try {
+      val p = new Path(dir, FileName)
+      val st = fs.getFileStatus(p)
       val key = fs.makeQualified(dir).toString
-      val stamp = baseStamp(fs, dir)
-      val shards = listShards(fs, dir)
-      val names = shards.map(_.getPath.getName)
+      val stamp = (st.getModificationTime, st.getLen)
       val hit = memo.get(key)
-      if (hit != null && hit.stamp == stamp && hit.shards == names)
-        return hit.entries
-      var acc = readBase(fs, dir)
-      shards.foreach { st =>
-        try {
-          val top = JsonMethods.parse(readText(fs, st.getPath))
-          acc = acc ++ parseFiles(top)
-          top \ "drop" match {
-            case JArray(vs) =>
-              acc = acc -- vs.collect { case JString(s) => s }
-            case _ => ()
-          }
-        } catch { case NonFatal(_) => () }
-      }
-      remember(key, Memo(stamp, names, acc))
-      acc
-    } catch { case NonFatal(_) => Map.empty }
-  }
-
-  /** Stats for a listed fleet, keyed by the files' full path strings.
-    * One sidecar read per distinct parent directory. */
-  def forFleet(fs: FileSystem, fleet: Seq[FileStatus])
-      : Map[String, PartStats] = {
-    val byDir = fleet.groupBy(_.getPath.getParent)
-    byDir.iterator.flatMap { case (dir, files) =>
-      if (dir == null) Iterator.empty
+      if (hit != null && hit.stamp == stamp) hit.entries
       else {
+        val in = fs.open(p)
+        val text = try new String(in.readAllBytes(), "UTF-8")
+          finally in.close()
+        val entries = parse(text)
+        remember(key, Memo(stamp, entries))
+        entries
+      }
+    } catch { case NonFatal(_) => Map.empty }
+
+  /** Sidecar stats for files of manifest-less directories, keyed by the
+    * files' full path strings: one sidecar read per distinct parent
+    * directory, and an entry applies only while its length matches. */
+  def forFleet(fs: FileSystem, fleet: Seq[FileStatus])
+      : Map[String, PartStats] =
+    fleet.groupBy(_.getPath.getParent).iterator.flatMap {
+      case (null, _) => Iterator.empty
+      case (dir, files) =>
         val entries = read(fs, dir)
         files.iterator.flatMap { st =>
           entries.get(st.getPath.getName)
             .filter(_.len == st.getLen)
             .map(st.getPath.toString -> _)
         }
-      }
     }.toMap
-  }
 }

@@ -20,13 +20,13 @@ import org.apache.spark.sql.SparkSession
   *    explicit-path load that needs one passes `dvSpec`; the change
   *    feed plans its files from [[FleetCDC.plan]], never a view).
   *
-  * INVARIANT: every number a scan plans from — its file list, vector
-  * bindings, deleted-row counts and meta, the copy-on-write
+  * INVARIANT: every number a scan plans from — its file list, per-file
+  * stats, vector bindings, deleted-row counts and meta, the copy-on-write
   * compare-and-set report (`dvRelByName`), the COUNT(*) correction —
   * comes from the one manifest read per directory part held here. A
   * commit landing while the query plans (a `rewrite_files` retiring
   * vectored files, a merge-on-read delete rebinding one) can never
-  * pair one generation's files with another's vectors. A scan builder
+  * pair one generation's files with another's stats or vectors. A scan builder
   * resolves its view lazily, once, so a new query resolves afresh and
   * the streaming and change-feed paths, which plan from offsets and
   * version spans, never force it. */
@@ -36,6 +36,13 @@ private[graft] final case class FleetView(parts: Seq[FleetView.Part]) {
     * one load may match the same file). */
   lazy val files: Seq[FileStatus] =
     parts.flatMap(_.files).distinctBy(_.getPath.toString)
+
+  /** Per-file stats of [[files]], keyed by qualified path: a manifest
+    * part's from its snapshot's entries — the generation its files
+    * came from — and a manifest-less part's from its directory's
+    * `_stats.json`. A file without stats is absent (read unskipped). */
+  def stats(fs: FileSystem): Map[String, FleetStats.PartStats] =
+    parts.flatMap(p => FleetView.statsOf(fs, p.snapshot, p.files)).toMap
 
   /** Deletion-vector bindings of every manifest part: qualified data
     * path → (qualified vector path, the binding's manifest meta; None
@@ -104,6 +111,19 @@ private[graft] object FleetView {
     require(view.files.nonEmpty, s"no avro files match: $glob")
     view
   }
+
+  /** Stats of `files` (one directory's statuses): from `snapshot`'s
+    * entries when the directory has a manifest, else from its
+    * `_stats.json`; keyed by path, and only while the length matches. */
+  def statsOf(fs: FileSystem, snapshot: Option[FleetManifest.Snapshot],
+      files: Seq[FileStatus]): Map[String, FleetStats.PartStats] =
+    snapshot match {
+      case Some(sn) => files.iterator.flatMap { st =>
+        sn.statsOf(st.getPath.getName).filter(_.len == st.getLen)
+          .map(st.getPath.toString -> _)
+      }.toMap
+      case None => FleetStats.forFleet(fs, files)
+    }
 
   // ---- AS OF addressing -------------------------------------------
 

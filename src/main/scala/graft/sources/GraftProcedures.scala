@@ -52,8 +52,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    renamed to final names but never manifest-committed, so never
   *    reader-visible), via [[FleetCompact.removeOrphans]]. `grace_ms`
   *    guards in-flight jobs — only files older than (now − grace)
-  *    qualify. Both retention verbs drop the deleted files' sidecar
-  *    entries.
+  *    qualify.
   *
   * Results surface as `LocalScan` rows — driver-side by design: every
   * procedure is a METADATA operation (the one distributed step,
@@ -261,8 +260,10 @@ private[sources] object GraftProcedures {
         bootstrap = Seq.empty,
         dvUpdate = target.files.map(f => f -> target.dvs.get(f)).toMap,
         // bindings restore WITH their metadata — the restored
-        // generation's counts/stats are v's, not the current one's
-        dvMetaUpdate = target.dvMeta)
+        // generation's counts/stats are v's, not the current one's —
+        // and files re-added by the restore carry v's file stats
+        dvMetaUpdate = target.dvMeta,
+        stats = target.fileStats)
       result(out, new GenericInternalRow(Array[Any](
         v, committed.version, committed.files.size)))
     }
@@ -283,9 +284,8 @@ private[sources] object GraftProcedures {
     * immutable: every mutation path writes NEW files and retires old
     * names); filesystems without link(2) fall back to a copy (at
     * object-store scale that is the store's server-side copy).
-    * The stats sidecar is written fresh from the source's entries for
-    * the cloned files. Vector bindings and their manifest meta carry
-    * into the clone's v1 snapshot, as do the declared-schema marker,
+    * The cloned files' stats, vector bindings and their manifest meta
+    * carry into the clone's v1 snapshot, as do the declared-schema marker,
     * layout marker, and CHECK constraints. Tags, branches, and
     * retained history do NOT clone — the clone is one generation, not
     * a mirror (use the change feed for mirrors). */
@@ -352,17 +352,13 @@ private[sources] object GraftProcedures {
         }
       }
       (names ++ vectors ++ markers).foreach(bring)
-      // the cloned files' entries of the source's merged sidecar (base
-      // plus `_stats.d/` shards), never a link of the base alone
-      val cloned = names.toSet
-      val stats = FleetStats.read(fs, sp).filter { case (n, _) => cloned(n) }
-      if (stats.nonEmpty) FleetStats.write(fs, dp, stats)
-      // the clone's v1: the linked names under the source's bindings
-      // and meta; the declared-schema prop carries so VERSION AS OF 1
-      // of the clone resolves the schema the source had now, and the
-      // CHECK-constraint props carry so the clone enforces the
+      // the clone's v1: the linked names under the source's bindings,
+      // meta and file stats (a manifest-less source's from its
+      // `_stats.json`); the declared-schema prop carries so VERSION AS
+      // OF 1 of the clone resolves the schema the source had now, and
+      // the CHECK-constraint props carry so the clone enforces the
       // source's governance from its first write (r20 — checks are
-      // manifest props; the sidecar link above covers legacy fleets)
+      // manifest props; the marker link above covers legacy fleets)
       FleetManifest.commit(fs, dp, _ => names, bootstrap = names,
         props = snap.flatMap(_.props.get(FleetManifest.SchemaProp))
           .map(v => Map(FleetManifest.SchemaProp -> v))
@@ -371,16 +367,17 @@ private[sources] object GraftProcedures {
             FleetManifest.CheckPropPrefix))).getOrElse(Map.empty),
         dvUpdate = snap.map(_.dvs.map { case (k, v) =>
           k -> Option(v) }).getOrElse(Map.empty),
-        dvMetaUpdate = snap.map(_.dvMeta).getOrElse(Map.empty))
+        dvMetaUpdate = snap.map(_.dvMeta).getOrElse(Map.empty),
+        stats = snap.fold(FleetStats.read(fs, sp))(_.fileStats))
       fs.create(new Path(dp, "_SUCCESS"), true).close()
       result(out, new GenericInternalRow(Array[Any](str(dstName),
         names.size, linked)))
     }
   }
 
-  /** Per-file audit of the CURRENT generation — name, bytes, sidecar
+  /** Per-file audit of the CURRENT generation — name, bytes, committed
     * row count, vector binding, exact vectored-row count — all from
-    * the manifest, one listing, and the stats sidecar: ZERO data-file
+    * the manifest and one listing: ZERO data-file
     * I/O at any fleet size. The 100 TB operator questions ("how bad is
     * my small-file problem", "what fraction is vectored — time to
     * purge_vectors?") answer from SQL. */
@@ -404,8 +401,7 @@ private[sources] object GraftProcedures {
         .map(st => st.getPath.getName -> st).toMap
       val names = snap.map(_.files.sorted)
         .getOrElse(statuses.keys.toSeq.sorted)
-      val stats = FleetStats.forFleet(fs,
-        names.flatMap(statuses.get))
+      val stats = FleetView.statsOf(fs, snap, names.flatMap(statuses.get))
       val rows = names.map { n =>
         val st = statuses.getOrElse(n, throw new java.io.IOException(
           s"manifest-listed file $n missing at $dir — a retained " +
@@ -1004,8 +1000,8 @@ private[sources] object GraftProcedures {
   /** `CALL remove_orphans(table, grace_ms)` — the shared orphan sweep
     * ([[FleetCompact.removeOrphans]], the one implementation both
     * codecs run): unreferenced data files, `.staging-*` leftovers and
-    * vector strays older than (now − grace), with their sidecar
-    * entries. Reports how many paths it deleted. */
+    * vector strays older than (now − grace). Reports how many paths
+    * it deleted. */
   private final class RemoveOrphans(dirFor: String => String)
       extends Base("remove_orphans") {
     override def description: String =

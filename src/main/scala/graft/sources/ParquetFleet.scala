@@ -31,15 +31,15 @@ import org.apache.spark.sql.functions._
   *  - TIME TRAVEL for free: `read(…, versionAsOf)` resolves any
   *    retained generation with its as-of bindings.
   *  - FILE SKIPPING from FOOTER stats: every commit captures each new
-  *    file's parquet-footer min/max/null-counts into the same
-  *    `_stats.json` sidecar the avro tier uses
+  *    file's parquet-footer min/max/null-counts into that file's
+  *    manifest entry, as the avro tier does
   *    ([[ParquetFleetStats]] — zero data reads, the Iceberg design),
   *    and [[scan]] prunes the snapshot's file list through the shared
   *    [[FleetStats.neverMatches]] proofs BEFORE the vectorized read —
   *    at 100 TB a selective predicate touches the files it must and
-  *    no others, without opening a single pruned footer. Stats are
-  *    version-independent (files are immutable and never renamed), so
-  *    time-travel scans prune too; deletes only shrink a file, so DV
+  *    no others, without opening a single pruned footer. Each
+  *    snapshot carries its files' stats, so time-travel scans prune
+  *    with the as-of entries; deletes only shrink a file, so DV
   *    commits never invalidate a bound.
   *
   * SCOPE (deliberate): a LIBRARY-LEVEL data plane, not a second DSv2
@@ -183,15 +183,11 @@ private[graft] object ParquetFleet {
           s"cannot stage ${st.getPath} as $n in $dir")
       n
     }
-    // footer stats land BEFORE the manifest commit: a committed
-    // generation always has its entries (a crash between strands
-    // files + stats together, invisible either way)
-    ParquetFleetStats.capture(s, dir, names)
+    // footer stats ride the manifest commit with their files
+    val stats = ParquetFleetStats.capture(s, dir, names)
     // zero-residue unlink of this call's staged files (lost races)
-    def unstage(): Unit = {
+    def unstage(): Unit =
       names.foreach(n => fs.delete(new Path(p, n), false))
-      FleetStats.drop(fs, p, names.toSet)
-    }
     // the .staging dir is empty once the parts rename out — delete it
     // on EVERY exit (a throw used to leak it, contradicting the
     // zero-residue contract; ADVICE r21)
@@ -213,13 +209,14 @@ private[graft] object ParquetFleet {
               bootstrap = Seq.empty,
               props = schemaProp,
               txn = txn,
-              requireSchema = if (reset) None else Some(observedSchema))
+              requireSchema = if (reset) None else Some(observedSchema),
+              stats = stats)
             done = true
           } catch {
             case e: FleetCommitConflictException =>
               // attempt exhaustion abandons the append: unlink the
-              // staged-but-never-referenced files + their advisory
-              // stats first (ADVICE r21 — they leaked before)
+              // staged-but-never-referenced files first (ADVICE r21 —
+              // they leaked before)
               if (attempts >= 16) { unstage(); throw e }
               val re =
                 try validateSchema()
@@ -233,7 +230,7 @@ private[graft] object ParquetFleet {
         case _: FleetTxnAlreadyAppliedException =>
           // the token landed between pre-check and commit (a racing
           // replay): unlink this call's staged-but-unreferenced files
-          // and their advisory entries — zero residue
+          // — zero residue
           unstage()
           false
       } finally fs.delete(staging, true)
@@ -350,9 +347,9 @@ private[graft] object ParquetFleet {
     }.reduce(_ union _)
   }
 
-  /** The snapshot's files split by the sidecar skip proofs under
-    * `pred`: (survivors, pruned). Files without a usable sidecar entry
-    * always survive (advisory stats). */
+  /** The snapshot's files split by their committed stats' skip proofs
+    * under `pred`: (survivors, pruned). Files without stats always
+    * survive (advisory stats). */
   private[graft] def pruneFiles(s: SparkSession, dir: String,
       snap: FleetManifest.Snapshot, pred: Column)
       : (Seq[String], Seq[String]) = {
@@ -360,21 +357,19 @@ private[graft] object ParquetFleet {
     // an untranslatable conjunct proves nothing; the caller re-applies
     // the full predicate, so a missing translation costs a read, never
     // a row). Resolution runs against the DECLARED schema, so evolved
-    // columns resolve too — a file predating the column has no sidecar
-    // entry for it and never proves a skip (null-fill is conservative)
+    // columns resolve too — a file predating the column has no stats
+    // for it and never proves a skip (null-fill is conservative)
     val filters = org.apache.spark.sql.GraftPushdownShim
       .pushableFilters(s, declaredSchema(s, dir, snap), pred)
     if (filters.isEmpty) return (snap.files.sorted, Seq.empty)
-    val (fs, p) = fsp(s, dir)
-    val stats = FleetStats.read(fs, p)
     snap.files.sorted.partition { n =>
-      stats.get(n).forall(st =>
+      snap.statsOf(n).forall(st =>
         !filters.exists(f => FleetStats.neverMatches(f, st)))
     }
   }
 
   /** The PRUNED scan: resolve the snapshot, drop every file whose
-    * footer-derived sidecar stats PROVE the predicate matches none of
+    * footer-derived stats PROVE the predicate matches none of
     * its rows ([[FleetStats.neverMatches]] — min/max bounds,
     * null-count proofs, prefix ranges, the same algebra the avro tier
     * pushes), vector-read only the survivors, re-apply the full
@@ -548,15 +543,15 @@ private[graft] object ParquetFleet {
     FleetView.versionAt(fs, p, FleetView.AtOrBefore("timestampAsOf", raw))
   }
 
-  /** METADATA-TIER COUNT(*): the snapshot's row count from sidecar
-    * footer stats minus its deletion vectors' cardinalities — NO data
-    * file is opened when every file has a sidecar entry (a missing
+  /** METADATA-TIER COUNT(*): the snapshot's row count from its
+    * entries' footer stats minus its deletion vectors' cardinalities —
+    * NO data file is opened when every file has stats (a missing
     * entry falls back to that one file's footer; vector cardinalities
     * are footer row counts of the small vector files). Exact by
-    * construction: sidecar rows are the parquet footer's row count,
+    * construction: committed rows are the parquet footer's row count,
     * and a vector holds DISTINCT in-file ordinals (deduped at write).
     * The 100 TB posture: `SELECT count(*)` on a petabyte fleet is a
-    * sidecar read plus O(bound files) small-footer reads — the
+    * manifest read plus O(bound files) small-footer reads — the
     * parquet-tier analog of the avro tier's zero-task COUNT pushdown.
     * Falls back to the full vectored read only if metadata is
     * unreadable (advisory-stats posture: never wrong, at worst slow). */
@@ -566,9 +561,8 @@ private[graft] object ParquetFleet {
     val (fs, p) = fsp(s, dir)
     try {
       val hconf = s.sessionState.newHadoopConf()
-      val stats = FleetStats.read(fs, p)
       val live = snap.files.map { n =>
-        stats.get(n).map(_.rows).getOrElse(
+        snap.statsOf(n).map(_.rows).getOrElse(
           ParquetFleetStats.fileStats(hconf, new Path(p, n))
             .map(_._2.rows)
             .getOrElse(throw new java.io.IOException(
@@ -608,7 +602,7 @@ private[graft] object ParquetFleet {
   def delete(s: SparkSession, dir: String, condition: Column): Unit = {
     val (fs, p) = fsp(s, dir)
     val snap = resolve(s, dir, None)
-    // stats-pruned candidates: a file whose sidecar PROVES the
+    // stats-pruned candidates: a file whose stats PROVE the
     // condition matches no row holds no hits — a surgical delete at
     // 100 TB scans the files it might touch, not the fleet
     val (cands, _) = pruneFiles(s, dir, snap, condition)
@@ -714,26 +708,25 @@ private[graft] object ParquetFleet {
       n
     }
     val oldFiles = snap.files.toSet
-    // fresh dense files get fresh footer stats; retired names' stale
-    // sidecar entries are unreachable (names are never reused) and
-    // still serve retained-version time travel
-    ParquetFleetStats.capture(s, dir, names)
+    // fresh dense files get fresh footer stats; the retired files'
+    // entries stay in the retained versions for time travel
     FleetManifest.commit(fs, p,
       update = base => base.filterNot(oldFiles) ++ names,
       bootstrap = Seq.empty,
       requireInBase = oldFiles,
-      requireDvs = snap.files.map(f => f -> snap.dvs.get(f)).toMap)
+      requireDvs = snap.files.map(f => f -> snap.dvs.get(f)).toMap,
+      stats = ParquetFleetStats.capture(s, dir, names))
     fs.delete(staging, true)
     ()
   }
 
   /** METADATA-TIER global MIN/MAX of one column: files WITHOUT a
-    * deletion vector answer from their sidecar bounds (no read at
+    * deletion vector answer from their committed bounds (no read at
     * all); files WITH a vector re-scan — a deleted row may have BEEN
     * the extremum, so their bounds are outer, not exact — as do files
-    * missing a usable sidecar entry. At 100 TB: MIN/MAX over a
+    * without usable stats. At 100 TB: MIN/MAX over a
     * petabyte fleet reads exactly the DV-bound files, usually a
-    * surgical-delete handful. Returns the bounds in the sidecar's
+    * surgical-delete handful. Returns the bounds in the stats'
     * carrier spelling (integrals as Long, floats as Double, temporals
     * as their epoch-µs/epoch-day longs, String/Boolean as-is);
     * `(None, None)` means every row of the column is NULL (SQL MIN/MAX
@@ -741,17 +734,17 @@ private[graft] object ParquetFleet {
   def minMax(s: SparkSession, dir: String, colName: String,
       versionAsOf: Option[Long] = None): (Option[Any], Option[Any]) = {
     val snap = resolve(s, dir, versionAsOf)
-    val (fs, p) = fsp(s, dir)
-    val stats = FleetStats.read(fs, p)
-    // proven = DV-free AND a sidecar entry carrying THIS column (an
+    // proven = DV-free AND committed stats carrying THIS column (an
     // entry without it means the column's stats were dropped — NaN,
     // unsound type — so that file re-scans; an all-null column is a
     // present entry with absent bounds and contributes nothing, the
     // SQL null semantics)
     val (proven, scanFiles) = snap.files.sorted.partition { n =>
-      !snap.dvs.contains(n) && stats.get(n).exists(_.cols.contains(colName))
+      !snap.dvs.contains(n) &&
+        snap.statsOf(n).exists(_.cols.contains(colName))
     }
-    val sidecarBounds = proven.flatMap(n => stats(n).cols.get(colName))
+    val sidecarBounds = proven.flatMap(n =>
+      snap.statsOf(n).get.cols.get(colName))
       .flatMap(cs => cs.min.zip(cs.max))
     // scanned extrema normalize to the sidecar's carrier spelling so
     // callers see ONE type family regardless of which tier answered

@@ -19,13 +19,13 @@ import org.apache.spark.util.SerializableConfiguration
   * file footer, so capturing file-level skip stats costs ZERO data
   * reads — only a footer read per new file, distributed over the
   * cluster when an append lands many files. The captured
-  * [[FleetStats.PartStats]] land in the SAME `_stats.json` sidecar the
-  * avro tier uses, so the planning-time skip proofs
+  * [[FleetStats.PartStats]] ride the commit into the files' manifest
+  * entries, as the avro tier's do, so the planning-time skip proofs
   * ([[FleetStats.neverMatches]]) and the record-level comparator
   * ([[FleetFilters.cmp]]) are shared verbatim — one ordering, two
   * data-file tiers.
   *
-  * Soundness of the footer→sidecar translation (each case degrades to
+  * Soundness of the footer→stats translation (each case degrades to
   * "no stat ⇒ no skip proof" rather than to a wrong bound):
   *
   *  - STRINGS: parquet-mr ≥1.8 orders BINARY/UTF8 chunk statistics by
@@ -38,7 +38,7 @@ import org.apache.spark.util.SerializableConfiguration
   *    it wrote with the bundled 1.16 writer anyway.)
   *  - TEMPORALS: DATE (INT32/days) and TIMESTAMP(MICROS|MILLIS,
   *    adjustedToUTC) (INT64) normalize to the epoch-day / epoch-µs
-  *    carrier longs the sidecar records for the avro tier —
+  *    carrier longs the avro tier records —
   *    [[FleetFilters.temporalLong]]'s exact units. NANOS would floor
   *    the max (unsound upper bound) and INT96 has no valid footer
   *    stats: both are skipped, as are NTZ timestamps (their literals
@@ -55,36 +55,31 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Blooms are an avro-tier feature (observed row-by-row in the
   * writer); the footer path records none — `EqualTo` skips stand on
-  * min/max alone. Advisory like every sidecar: a lost or stale entry
+  * min/max alone. Advisory like all fleet stats: a lost or stale entry
   * costs a read, never a row. */
 private[graft] object ParquetFleetStats {
 
-  /** Capture footer stats for `names` (fresh, immutable, uniquely-named
-    * part files under `dir`) into the fleet's `_stats.json`. Driver-side
-    * for a handful of files; one executor wave beyond that. Never
-    * throws: stats are advisory, a capture failure costs pruning, not
-    * correctness. */
-  def capture(s: SparkSession, dir: String, names: Seq[String]): Unit =
+  /** Footer stats of `names` (fresh, immutable, uniquely-named part
+    * files under `dir`) by name, for the commit that adds them.
+    * Driver-side for a handful of files; one executor wave beyond
+    * that. Never throws: stats are advisory, a capture failure costs
+    * pruning, not correctness. */
+  def capture(s: SparkSession, dir: String, names: Seq[String])
+      : Map[String, FleetStats.PartStats] =
     try {
-      if (names.isEmpty) return
       val hconf = s.sessionState.newHadoopConf()
-      val entries: Seq[(String, FleetStats.PartStats)] =
-        if (names.size <= 16)
-          names.flatMap(n => fileStats(hconf, new Path(dir, n)))
-        else {
-          val ser = new SerializableConfiguration(hconf)
-          s.sparkContext
-            .parallelize(names, math.min(names.size, 32))
-            .flatMap(n => fileStats(ser.value, new Path(dir, n)))
-            .collect().toSeq
-        }
-      if (entries.nonEmpty) {
-        val p = new Path(dir)
-        FleetStats.write(p.getFileSystem(hconf), p, entries.toMap)
+      if (names.size <= 16)
+        names.flatMap(n => fileStats(hconf, new Path(dir, n))).toMap
+      else {
+        val ser = new SerializableConfiguration(hconf)
+        s.sparkContext
+          .parallelize(names, math.min(names.size, 32))
+          .flatMap(n => fileStats(ser.value, new Path(dir, n)))
+          .collect().toMap
       }
-    } catch { case NonFatal(_) => () }
+    } catch { case NonFatal(_) => Map.empty }
 
-  /** One file's footer → sidecar entry; None on any read problem. */
+  /** One file's footer → stats entry; None on any read problem. */
   private[sources] def fileStats(conf: Configuration, path: Path)
       : Option[(String, FleetStats.PartStats)] = try {
     val inFile = HadoopInputFile.fromPath(path, conf)
@@ -131,7 +126,7 @@ private[graft] object ParquetFleetStats {
     Some(FleetStats.ColStat(Some(mn), Some(mx), nulls))
   }
 
-  /** The footer-value → sidecar-carrier conversion for one column, or
+  /** The footer-value → stats-carrier conversion for one column, or
     * None when the physical/logical pair has no sound carrier. */
   private def carrier(f: PrimitiveType): Option[Any => Option[Any]] = {
     def finiteD(v: Any): Option[Any] = v match {

@@ -11,10 +11,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Pure driver-side measurement (manifest commits launch no jobs):
   * grows one fleet to `files` via 1-file append commits of real empty
-  * files (so each commit records the file's size, as production
-  * commits do) and reports the mean, p50 and p99 commit latency per
-  * 1k-file window, plus the bytes of the newest version file; the
-  * stats-sidecar curve reports the same three per window. At 1k, 5k
+  * files, each carrying the stats a writer would capture for 100 rows
+  * of (id BIGINT, name STRING, score DOUBLE) — min, max, null count
+  * and a bloom per column — so the entries priced are the ones
+  * production commits record. It reports the mean, p50 and p99 commit
+  * latency per 1k-file window, plus the bytes of the newest version
+  * file and of the newest full (checkpoint) version file. At 1k, 5k
   * and 10k files it also reports the p50/p99 of `FleetView.resolve`
   * (the read-side planning step) over the fleet, without and with
   * 1,000 orphan `.avro` files in the data directory:
@@ -22,7 +24,7 @@ import org.apache.spark.sql.SparkSession
   *   sbt "runMain graft.tools.ManifestBench 10000"
   *
   * (Window means are robust to GC blips at these sub-ms scales; the
-  * p99 is where a blip, or a periodic checkpoint/shard fold, shows.) */
+  * p99 is where a blip, or a periodic checkpoint, shows.) */
 object ManifestBench {
   /** "mean_<what>_ms=… p50_ms=… p99_ms=…" over one window's samples
     * (nearest-rank percentiles). */
@@ -70,21 +72,39 @@ object ManifestBench {
       println(f"[manifestbench] resolve files=$n%6d orphans=0    $clean")
       println(f"[manifestbench] resolve files=$n%6d orphans=1000 $dirty")
     }
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("name", StringType), StructField("score", DoubleType)))
+    // the stats a writer captures for file i's 100 rows (len 0: the
+    // bench's files are empty, and an entry applies at its length)
+    def statsOf(i: Int): graft.sources.FleetStats.PartStats = {
+      val c = new graft.sources.FleetStats.Collector(schema)
+      (0 until 100).foreach { r =>
+        val id = i * 100L + r
+        c.startRow()
+        c.observe(0, Long.box(id))
+        c.observe(1, s"name-$id")
+        c.observe(2, if (r % 10 == 0) null else Double.box(id * 0.5))
+      }
+      c.result(0L)
+    }
+    def vbytes(v: Long): Long = fs.getFileStatus(
+      graft.sources.FleetManifest.versionFilePath(dir, v)).getLen
     var i = 0
     while (i < files) {
       val name = f"part-$i%08d.avro"
       touch(name)
+      val stats = Map(name -> statsOf(i))
       val t0 = System.nanoTime()
       graft.sources.FleetManifest.commit(fs, dir,
-        base => base :+ name, bootstrap = Seq.empty)
+        base => base :+ name, bootstrap = Seq.empty, stats = stats)
       winNanos(i % windowSize) = System.nanoTime() - t0
       i += 1
-      if (i % windowSize == 0) {
-        val vf = graft.sources.FleetManifest.versionFilePath(dir, i.toLong)
+      if (i % windowSize == 0)
         println(f"[manifestbench] files=$i%6d " +
-          windowStats("commit", winNanos) + " newest_vfile_bytes=" +
-          f"${fs.getFileStatus(vf).getLen}%8d")
-      }
+          windowStats("commit", winNanos) +
+          f" newest_vfile_bytes=${vbytes(i.toLong)}%8d" +
+          f" checkpoint_bytes=${vbytes(i / 16 * 16L)}%9d")
       if (i == 1000 || i == 5000 || i == 10000) resolveCurve(i)
     }
     // one cold full-history probe: the reconstruction cost a fresh
@@ -97,29 +117,6 @@ object ManifestBench {
       f"${(System.nanoTime() - t0) / 1e6}%.2f ms " +
       f"(v${cur.version}, ${cur.files.size} files)")
 
-    // the stats-plane twin: sidecar write cost per 1-file commit as
-    // the entry count grows (pre-r22: read-merge-rewrite of ONE
-    // _stats.json, O(total) per commit; now sharded past 512 entries)
-    val sdir = new org.apache.hadoop.fs.Path(s"$root/stats")
-    fs.mkdirs(sdir)
-    i = 0
-    while (i < files) {
-      val entry = Map(f"part-$i%08d.avro" ->
-        graft.sources.FleetStats.PartStats(i.toLong, 1L, Map(
-          "id" -> graft.sources.FleetStats.ColStat(
-            Some(i.toLong), Some(i.toLong), 0L))))
-      val t1 = System.nanoTime()
-      graft.sources.FleetStats.write(fs, sdir, entry)
-      winNanos(i % windowSize) = System.nanoTime() - t1
-      i += 1
-      if (i % windowSize == 0)
-        println(f"[manifestbench] stats entries=$i%6d " +
-          windowStats("write", winNanos))
-    }
-    val t2 = System.nanoTime()
-    val n = graft.sources.FleetStats.read(fs, sdir).size
-    println(f"[manifestbench] stats full read: " +
-      f"${(System.nanoTime() - t2) / 1e6}%.2f ms ($n entries)")
     spark.stop()
   }
 }

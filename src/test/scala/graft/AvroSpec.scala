@@ -390,9 +390,8 @@ class AvroSpec extends SparkSpec {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     assert(graft.sources.FleetManifest.current(fs, p).get.dvs.size >= 20)
-    // no sidecar: COUNT(*) takes the block-header tier, not metadata
-    fs.delete(new org.apache.hadoop.fs.Path(p,
-      graft.sources.FleetStats.FileName), false)
+    // no stats: COUNT(*) takes the block-header tier, not metadata
+    FleetStatsKit.stripStats(dir)
     val single = spark.newSession()
     single.conf.set("spark.sql.files.maxPartitionBytes", "1")
     def both[T](q: org.apache.spark.sql.DataFrame => T): (T, T) =
@@ -598,12 +597,9 @@ class AvroSpec extends SparkSpec {
       .select($"id", concat(lit("v"), $"id").as("s"),
         when($"id" % 10 === 0, null).otherwise($"id").as("maybe"))
     df.repartition(3).write.format("graft-avro").mode("overwrite").save(dir)
-    // this test pins the BLOCK-HEADER tier: drop the stats sidecar so
-    // the metadata tier (own test in FleetStatsSpec) can't answer
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(dir,
-      graft.sources.FleetStats.FileName), false)
+    // this test pins the BLOCK-HEADER tier: strip the committed stats
+    // so the metadata tier (own test in FleetStatsSpec) can't answer
+    FleetStatsKit.stripStats(dir)
     val fleet = spark.read.format("graft-avro").load(dir)
 
     val agg = fleet.groupBy().count()

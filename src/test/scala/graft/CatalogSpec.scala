@@ -951,9 +951,9 @@ class CatalogSpec extends SparkSpec {
     assert(!ids("w").exists(Set(30L, 31L, 32L, 33L)))
   }
 
-  test("CALL clone carries the source's shard-held stats and only the cloned files'") {
+  test("CALL clone carries the source's manifest stats for its files") {
     import spark.implicits._
-    import graft.sources.{FleetManifest, FleetStats}
+    import graft.sources.FleetManifest
     val root = graft.util.Scratch.dir("clone_stats")
     val fleet = s"$root/t.avro"
     spark.range(100).select($"id", ($"id" * 2).as("v"))
@@ -961,30 +961,29 @@ class CatalogSpec extends SparkSpec {
       .mode("overwrite").save(fleet)
     val p = new org.apache.hadoop.fs.Path(fleet)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // past the shard threshold: the next commit's entries land in a
-    // `_stats.d/` shard, not the base `_stats.json`
-    FleetStats.write(fs, p, (0 until 600).map(i =>
-      f"gone-$i%05d.avro" -> FleetStats.PartStats(1L, 1L, Map.empty)).toMap)
     val s2 = catSession(root)
     val before = FleetManifest.current(fs, p).get.files.toSet
     s2.sql("INSERT INTO graft.t VALUES (500, 1000)")
     val inserted = FleetManifest.current(fs, p).get.files.toSet -- before
     assert(inserted.size == 1, inserted.toString)
-    assert(FleetStats.read(fs, p).contains(inserted.head))
+    val source = FleetStatsKit.committedStats(spark, fleet)
+    assert(source.contains(inserted.head))
     s2.sql("CALL graft.system.clone('t', 'u')").collect()
-    val up = new org.apache.hadoop.fs.Path(s"$root/u.avro")
-    val cloned = FleetStats.read(fs, up)
-    assert(cloned.contains(inserted.head),
-      s"the inserted file's shard-held stats must carry: ${cloned.keySet}")
-    assert(cloned.keySet == FleetManifest.current(fs, up).get.files.toSet,
-      s"the clone's sidecar must name exactly its files: ${cloned.keySet}")
+    val up = s"$root/u.avro"
+    val cloned = FleetStatsKit.committedStats(spark, up)
+    assert(cloned == source,
+      s"the clone's v1 must carry the source's stats: ${cloned.keySet}")
+    assert(cloned.keySet == FleetManifest.current(fs,
+      new org.apache.hadoop.fs.Path(up)).get.files.toSet,
+      s"the clone's entries must name exactly its files: ${cloned.keySet}")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(up, "_stats.json")))
     assert(s2.sql("SELECT count(*) FROM graft.u WHERE id = 500")
       .as[Long].head() == 1L)
   }
 
   test("retention on a merge-on-read fleet retires the stats entries of every file it deletes") {
     import spark.implicits._
-    import graft.sources.{FleetManifest, FleetStats}
+    import graft.sources.FleetManifest
     val root = graft.util.Scratch.dir("retire_stats")
     val fleet = s"$root/t.avro"
     spark.range(100).select($"id", ($"id" * 2).as("v"))
@@ -999,28 +998,31 @@ class CatalogSpec extends SparkSpec {
     s2.sql("INSERT INTO graft.t VALUES (502, 1004)")
     val p = new org.apache.hadoop.fs.Path(fleet)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val allFiles = FleetManifest.versions(fs, p).flatMap(v =>
-      FleetManifest.snapshotAt(fs, p, v).get.files).toSet
+    def snaps = FleetManifest.versions(fs, p).map(v =>
+      FleetManifest.snapshotAt(fs, p, v).get)
+    val allFiles = snaps.flatMap(_.files).toSet
     val r = s2.sql("CALL graft.system.expire_versions('t', 2)").head
     assert(r.getInt(0) > 0 && r.getInt(1) > 0, s"nothing expired: $r")
-    val retained = FleetManifest.versions(fs, p).flatMap(v =>
-      FleetManifest.snapshotAt(fs, p, v).get.files).toSet
+    val retained = snaps.flatMap(_.files).toSet
     assert(retained.size < allFiles.size)
-    assert(FleetStats.read(fs, p).keySet == retained,
-      s"sidecar ${FleetStats.read(fs, p).keySet} vs retained $retained")
-    // an orphan sweep retires a stale stray's entry with the file
-    val stats = FleetStats.read(fs, p)
+    // a file's stats live in the entries of the versions that list it,
+    // so they retire with those versions: the retained entries name
+    // exactly the retained files, each with stats
+    def withStats = snaps.flatMap(sn =>
+      sn.files.filter(sn.statsOf(_).isDefined)).toSet
+    assert(withStats == retained,
+      s"entries with stats $withStats vs retained $retained")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(p, "_stats.json")))
+    // an orphan sweep deletes a stale stray and leaves the entries
     val donor = retained.head
     val stray = new java.io.File(s"$fleet/part-99998-deadbeef.avro")
     java.nio.file.Files.copy(new java.io.File(s"$fleet/$donor").toPath,
       stray.toPath)
-    FleetStats.write(fs, p, Map(stray.getName -> stats(donor)))
     assert(stray.setLastModified(System.currentTimeMillis() - 7200000L))
     val gone = s2.sql("CALL graft.system.remove_orphans('t', 3600000)").head
     assert(gone.getInt(0) == 1, s"expected exactly the stale stray: $gone")
     assert(!stray.exists())
-    assert(FleetStats.read(fs, p).keySet == retained,
-      "the stray's sidecar entry must go with it")
+    assert(withStats == retained)
     assert(s2.sql("SELECT count(*) FROM graft.t").as[Long].head() == 98L)
   }
 

@@ -112,7 +112,7 @@ class FleetStatsSpec extends SparkSpec {
     assert(!never(StringContains("k", "x")))
   }
 
-  test("sidecar roundtrips, merges, and degrades to advisory on damage") {
+  test("sidecar roundtrips and degrades to advisory on damage") {
     val fs = localFs
     val dir = new Path(tmp("stats_io"))
     fs.mkdirs(dir)
@@ -121,11 +121,8 @@ class FleetStatsSpec extends SparkSpec {
       "s" -> FleetStats.ColStat(Some("a"), Some("b"), 0L),
       "b" -> FleetStats.ColStat(Some(false), Some(true), 0L),
       "f" -> FleetStats.ColStat(Some(0.5), Some(2.5), 0L)))
-    FleetStats.write(fs, dir, Map("p1.avro" -> a))
-    assert(FleetStats.read(fs, dir) == Map("p1.avro" -> a))
-    // merge keeps prior entries (append-mode jobs)
     val b = FleetStats.PartStats(20L, 4L, Map.empty)
-    FleetStats.write(fs, dir, Map("p2.avro" -> b))
+    FleetStats.write(fs, dir, Map("p1.avro" -> a, "p2.avro" -> b))
     assert(FleetStats.read(fs, dir) == Map("p1.avro" -> a, "p2.avro" -> b))
     // forFleet keys by full path and drops length-mismatched entries
     val f1 = fs.create(new Path(dir, "p1.avro"), true)
@@ -143,50 +140,6 @@ class FleetStatsSpec extends SparkSpec {
     assert(FleetStats.read(fs, dir).isEmpty)
   }
 
-  test("sidecar shard mode: O(delta) appends past the threshold, reads merge, drops apply") {
-    // r22 (verdict #3): past 512 base entries a commit appends one
-    // shard under _stats.d/ instead of rewriting the whole sidecar;
-    // every 16th shard folds back into the base. Logical content must
-    // be indistinguishable from the single-file mode at every step.
-    val fs = localFs
-    val dir = new Path(tmp("stats_shards"))
-    fs.mkdirs(dir)
-    def ps(i: Int) = FleetStats.PartStats(i.toLong, 1L, Map(
-      "x" -> FleetStats.ColStat(Some(i.toLong), Some(i.toLong), 0L)))
-    def entries(r: Range) = r.map(i => f"p$i%05d.avro" -> ps(i)).toMap
-    val shardDir = new Path(dir, "_stats.d")
-    // below the threshold: single file, no shard dir
-    FleetStats.write(fs, dir, entries(0 until 500))
-    assert(!fs.exists(shardDir), "no shards below the threshold")
-    // crossing it: base rewritten once more, then shards accumulate
-    FleetStats.write(fs, dir, entries(500 until 600))
-    FleetStats.write(fs, dir, entries(600 until 610))
-    assert(fs.exists(shardDir) && fs.listStatus(shardDir).nonEmpty,
-      "past the threshold a commit must append a shard")
-    val expect1 = entries(0 until 610)
-    assert(FleetStats.read(fs, dir) == expect1)
-    // drop in shard mode: applied by readers, missing names a no-op
-    FleetStats.drop(fs, dir, Set("p00605.avro", "nope.avro"))
-    val expect2 = expect1 - "p00605.avro"
-    assert(FleetStats.read(fs, dir) == expect2)
-    val shardsNow = fs.listStatus(shardDir).length
-    FleetStats.drop(fs, dir, Set("absent.avro"))
-    assert(fs.listStatus(shardDir).length == shardsNow,
-      "a no-match drop must not write a shard")
-    // compaction folds everything back into one base at the 16th shard
-    (0 until 20).foreach(k =>
-      FleetStats.write(fs, dir, entries(700 + k until 701 + k)))
-    assert(fs.listStatus(shardDir).length < 16,
-      s"compaction must bound the shard count")
-    assert(FleetStats.read(fs, dir) == expect2 ++ entries(700 until 720))
-    // forFleet still keys by path and honors the length gate
-    val f1 = fs.create(new Path(dir, "p00001.avro"), true)
-    f1.write(Array.fill[Byte](1)(0)); f1.close()
-    val hit = FleetStats.forFleet(fs,
-      Seq(fs.getFileStatus(new Path(dir, "p00001.avro"))))
-    assert(hit.values.toSeq == Seq(ps(1)))
-  }
-
   test("V2 writer emits stats; filtered scans skip whole files") {
     import spark.implicits._
     val dir = tmp("stats_v2") + "/t.avro"
@@ -196,9 +149,9 @@ class FleetStatsSpec extends SparkSpec {
       .repartitionByRange(4, $"id")
       .write.format("graft-avro").mode("overwrite").save(dir)
     val fs = localFs
-    // sidecar written at job commit, alongside the _SUCCESS marker
-    assert(fs.exists(new Path(dir, FleetStats.FileName)))
-    assert(FleetStats.read(fs, new Path(dir)).size == 4)
+    // stats ride the job's manifest commit; no sidecar is written
+    assert(!fs.exists(new Path(dir, FleetStats.FileName)))
+    assert(FleetStatsKit.committedStats(spark, dir).size == 4)
 
     val fleet = spark.read.format("graft-avro").load(dir)
     // no filter → all 4 files planned
@@ -222,8 +175,9 @@ class FleetStatsSpec extends SparkSpec {
     val nn = fleet.filter($"half".isNotNull)
     assert(nn.count() == 50)
     assert(plannedParts(nn) < 4)
-    // deleting the sidecar degrades to scanning everything, same rows
-    fs.delete(new Path(dir, FleetStats.FileName), false)
+    // version files without stats degrade to scanning everything,
+    // same rows
+    FleetStatsKit.stripStats(dir)
     val unskipped = spark.read.format("graft-avro").load(dir)
       .filter($"id" > 90)
     assert(plannedParts(unskipped) == 4)
@@ -305,8 +259,9 @@ class FleetStatsSpec extends SparkSpec {
     assert(inAbsent.count() == 0)
     val inMixed = fleet.filter($"id".isin(8L, 1001L))
     assert(inMixed.count() == 1)
-    // deleting the sidecar degrades to reading everything, same rows
-    localFs.delete(new Path(dir, FleetStats.FileName), false)
+    // version files without stats degrade to reading everything,
+    // same rows
+    FleetStatsKit.stripStats(dir)
     val un = spark.read.format("graft-avro").load(dir).filter($"id" === 1001L)
     assert(plannedParts(un) == 8 && un.count() == 0)
   }
@@ -364,7 +319,7 @@ class FleetStatsSpec extends SparkSpec {
           $"ts_s".cast("timestamp").as("ts"), $"d_s".cast("date").as("d")))
     withNulls.repartitionByRange(4, $"ts")
       .write.format("graft-avro").mode("overwrite").save(dir)
-    assert(FleetStats.read(localFs, new Path(dir)).size == 4)
+    assert(FleetStatsKit.committedStats(spark, dir).size == 4)
 
     val fleet = spark.read.format("graft-avro").load(dir)
     // one day of four → a strict subset of files planned; the ts
@@ -602,8 +557,9 @@ class FleetStatsSpec extends SparkSpec {
     assert(plannedParts(wide) >= 2 && plannedParts(wide) <= 4)
     assert(wide.collect().toSeq ==
       df.orderBy($"k".desc, $"id").limit(60).collect().toSeq)
-    // deleting the sidecar degrades to reading everything, same rows
-    localFs.delete(new Path(dir, FleetStats.FileName), false)
+    // version files without stats degrade to reading everything,
+    // same rows
+    FleetStatsKit.stripStats(dir)
     val un = spark.read.format("graft-avro").load(dir)
       .orderBy($"k".desc, $"id").limit(5)
     assert(plannedParts(un) == 4)
@@ -808,9 +764,9 @@ class FleetStatsSpec extends SparkSpec {
     assert(!fleet.groupBy($"s").agg(min($"id")).queryExecution
       .executedPlan.toString.contains("PushedAggregation(metadata)"))
 
-    // without full sidecar coverage: COUNT(*) falls to block headers,
+    // without full stats coverage: COUNT(*) falls to block headers,
     // min/max to the row path — values unchanged
-    localFs.delete(new Path(dir, FleetStats.FileName), false)
+    FleetStatsKit.stripStats(dir)
     val fleet2 = spark.read.format("graft-avro").load(dir)
     val c2 = fleet2.groupBy().count()
     assert(c2.queryExecution.executedPlan.toString

@@ -174,11 +174,8 @@ class ParquetFleetSpec extends SparkSpec {
 
   // ---- footer stats + file skipping (r20) ---------------------------
 
-  private def sidecar(dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    graft.sources.FleetStats.read(
-      p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
+  // the current snapshot's committed stats by file name
+  private def sidecar(dir: String) = FleetStatsKit.committedStats(spark, dir)
 
   test("every commit captures footer stats: zero data reads, exact bounds and null counts") {
     import spark.implicits._
@@ -269,9 +266,7 @@ class ParquetFleetSpec extends SparkSpec {
   test("stats are advisory: a lost sidecar disables pruning, never correctness") {
     import spark.implicits._
     val dir = stage("advisory")
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(p, "_stats.json"), false)
+    FleetStatsKit.stripStats(dir)
     val snap = manifest(dir)
     val (kept, pruned) =
       ParquetFleet.pruneFiles(spark, dir, snap, $"id" <= 10L)
@@ -354,9 +349,7 @@ class ParquetFleetSpec extends SparkSpec {
       "sidecar-tier count must not open data files")
     // and with the sidecar gone, the footer fallback is still exact
     val dir3 = stage("metacount3")
-    val p3 = new org.apache.hadoop.fs.Path(dir3)
-    val fs3 = p3.getFileSystem(spark.sessionState.newHadoopConf())
-    fs3.delete(new org.apache.hadoop.fs.Path(p3, "_stats.json"), false)
+    FleetStatsKit.stripStats(dir3)
     assert(ParquetFleet.count(spark, dir3) == 100L)
   }
 
@@ -443,10 +436,16 @@ class ParquetFleetSpec extends SparkSpec {
     val dvRoot = new org.apache.hadoop.fs.Path(p, ParquetFleet.DvDir)
     assert(!fs.exists(dvRoot) || fs.listStatus(dvRoot).isEmpty,
       "expired deletion-vector directories must be unlinked")
-    // sidecar entries for deleted files dropped; current files keep theirs
+    // the retained versions' entries name exactly the live files, each
+    // with its stats, and no sidecar lies beside them
+    val retained = graft.sources.FleetManifest.versions(fs, p)
+      .flatMap(v => graft.sources.FleetManifest.snapshotAt(fs, p, v))
+    assert(retained.flatMap(_.entries.keys).toSet == manifest(dir).files.toSet,
+      s"retained entries: ${retained.map(_.entries.keySet)}")
     val stats = sidecar(dir)
     assert(stats.keySet == manifest(dir).files.toSet,
-      s"sidecar must hold exactly the live files: ${stats.keySet}")
+      s"every live file must carry its stats: ${stats.keySet}")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(p, "_stats.json")))
     // the current generation still reads, counts, and prunes
     assert(ParquetFleet.read(spark, dir).count() == expected)
     assert(ParquetFleet.count(spark, dir) == expected)

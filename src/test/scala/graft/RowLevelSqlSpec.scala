@@ -109,8 +109,8 @@ class RowLevelSqlSpec extends SparkSpec {
     // pick a real file boundary so every file is sidecar-decidable
     val p = new org.apache.hadoop.fs.Path(s"$root/cust.avro")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val fleet = graft.sources.Avro.listFleet(spark, s"$root/cust.avro")
-    val stats = graft.sources.FleetStats.forFleet(fs, fleet)
+    val stats = graft.sources.FleetView.resolve(spark, s"$root/cust.avro")
+      .stats(fs)
     val boundary = stats.values.map(_.cols("c_custkey").max.get
       .asInstanceOf[Long]).toSeq.sorted.head
     s2.sql(s"DELETE FROM graft.cust WHERE c_custkey <= $boundary")

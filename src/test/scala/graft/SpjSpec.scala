@@ -106,8 +106,9 @@ class SpjSpec extends SparkSpec {
     writeClustered(ev, s"$root/ev.avro")
     val p = new org.apache.hadoop.fs.Path(s"$root/ev.avro")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val fleet = graft.sources.Avro.listFleet(spark, s"$root/ev.avro")
-    val stats = graft.sources.FleetStats.forFleet(fs, fleet)
+    val view = graft.sources.FleetView.resolve(spark, s"$root/ev.avro")
+    val fleet = view.files
+    val stats = view.stats(fs)
     assert(fleet.nonEmpty)
     // an empty task still commits one schema-bearing rows=0 container
     // (the ensureOpen guarantee); the read side excludes rows=0 files

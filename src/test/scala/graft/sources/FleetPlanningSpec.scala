@@ -7,10 +7,12 @@ import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, LocalFileSystem, Pat
 import org.apache.spark.sql.{Row, SparkSession}
 
 /** Fleet query planning reads the cached manifest: a fleet written
-  * with committed file sizes plans with no data-directory listing, no
-  * repeated writer-schema header read and no sidecar re-parse; older
-  * version files without sizes and externally deleted files keep
-  * their behaviour. Filesystem calls are counted through
+  * with committed file entries plans with no data-directory listing,
+  * no repeated writer-schema header read and no stats sidecar — each
+  * file's stats ride its entry, from the same generation as the file
+  * list; older version files without entries and externally deleted
+  * files keep their behaviour, and the manifest head stays sound
+  * across retention gaps. Filesystem calls are counted through
   * [[CountingFs]], bound for one session only. */
 class FleetPlanningSpec extends graft.SparkSpec {
 
@@ -64,22 +66,23 @@ class FleetPlanningSpec extends graft.SparkSpec {
     }
     FleetManifest.commit(fs, p, b => b.filterNot(_ == "f5"), Seq.empty,
       requireInBase = Set("f5"))                                     // v21
-    assert(raw(2).contains("\"sizes_set\":{\"f2\":[2,"), raw(2))
-    assert(raw(16).contains("\"sizes\":{\"a0\":[3,"), raw(16))
+    assert(raw(2).contains("\"entries\":[{\"len\":2,\"mtime\":"), raw(2))
+    assert(raw(16).contains("\"entries\":[{\"len\":3,\"mtime\":"), raw(16))
+    assert(raw(16).contains("},null,{"), "the ghost's entry is null: " + raw(16))
     val warm = (1L to 21L).map(v => FleetManifest.snapshotAt(fs, p, v).get)
     FleetManifest.clearSnapshotCache()
     val cold = (1L to 21L).map(v => FleetManifest.snapshotAt(fs, p, v).get)
-    assert(warm == cold, "sizes diverged between warm and cold reads")
+    assert(warm == cold, "entries diverged between warm and cold reads")
     val v21 = cold(20)
-    assert(v21.sizes.keySet == v21.files.toSet - "ghost")
-    assert(v21.sizes("f7").len == 7L && !v21.sizes.contains("f5"))
-    assert(cold(19).sizes("f5").len == 5L)
+    assert(v21.entries.keySet == v21.files.toSet - "ghost")
+    assert(v21.entries("f7").len == 7L && !v21.entries.contains("f5"))
+    assert(cold(19).entries("f5").len == 5L)
     // a file without a size sends statuses to the listing, where the
     // missing name is the planning-time error it always was
     val e = intercept[java.io.FileNotFoundException](
       FleetManifest.statuses(fs, p, v21))
     assert(e.getMessage.contains("references missing file ghost"), e.getMessage)
-    // retention's materialized full form keeps the sizes
+    // retention's materialized full form keeps the entries
     FleetManifest.materializeIfChainBroken(fs, p, Set(18L, 19L, 20L, 21L), 18L)
     assert(!raw(18).contains("\"base\""), raw(18))
     FleetManifest.clearSnapshotCache()
@@ -136,20 +139,20 @@ class FleetPlanningSpec extends graft.SparkSpec {
       val rows = s.sql("SELECT k, v FROM graft.t").collect().toSet
       val sized = FleetView.resolve(s, dir).files
         .map(st => (st.getPath.toString, st.getLen))
-      // rewrite every version file as a writer without sizes left it
+      // rewrite every version file as a writer without entries left it
       val mdir = new java.io.File(localDir(dir), FleetManifest.DirName)
       val versions = mdir.listFiles().filter(f =>
         f.getName.startsWith("v") && f.getName.endsWith(".json"))
       assert(versions.exists(f => new String(
         java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        .contains("\"sizes")), "this change's commits record sizes")
+        .contains("\"entries")), "this change's commits record entries")
       import org.json4s._
       import org.json4s.jackson.JsonMethods
       versions.foreach { f =>
         val j = JsonMethods.parse(new String(
           java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
         val stripped = j.removeField {
-          case ("sizes", _) | ("sizes_set", _) => true
+          case ("entries", _) => true
           case _ => false
         }
         java.nio.file.Files.write(f.toPath, JsonMethods.compact(
@@ -218,21 +221,164 @@ class FleetPlanningSpec extends graft.SparkSpec {
     assert(FleetCDC.changesKeyed(spark, dir, 1L, 2L, Seq("id"))
       .where("_change_type = 'insert'").count() == 10L)
   }
+
+  /** A session with a graft catalog at `root` (plain local filesystem). */
+  private def catalog(root: String): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    s.conf.set("spark.sql.catalog.graft.root", root)
+    s
+  }
+
+  /** The distinct data files the one V2 scan in `df` plans. */
+  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan
+    }.get.toBatch.planInputPartitions().toSeq.flatMap {
+      case g: AvroFileGroup => g.splits.map(sp => new Path(sp.file).getName)
+      case other => fail(s"unexpected partition $other")
+    }.distinct
+
+  test("a catalog point lookup and a filtered GROUP BY touch no stats sidecar") {
+    val root = graft.util.Scratch.dir("planning_nosidecar")
+    withCounting(root) { s =>
+      seed(s)
+      assert(lookup(s, 42L) == Seq(Row(42L, "v42")))
+      CountingFs.reset()
+      assert(lookup(s, 57L) == Seq(Row(57L, "v57")))
+      val groups = s.sql(
+        "SELECT v, count(*) FROM graft.t WHERE k < 50 GROUP BY v").collect()
+      assert(groups.length == 50 && groups.forall(_.getLong(1) == 1L))
+      val sidecar = CountingFs.callsWhere(p =>
+        p.endsWith("/_stats.json") || p.contains("/_stats.d"))
+      assert(sidecar == 0, s"stats sidecar calls: ${CountingFs.calls}")
+    }
+  }
+
+  test("the first catalog commit into a writeDistributed directory adopts its stats") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{concat, lit}
+    val root = graft.util.Scratch.dir("planning_adopt")
+    val dir = s"$root/t.avro"
+    Avro.writeDistributed(spark, dir, spark.range(0, 400)
+      .select($"id".as("k"), concat(lit("v"), $"id").as("v"))
+      .repartitionByRange(4, $"k").toDF())
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val legacy = FleetStats.read(fs, p)
+    assert(legacy.size == 4 && FleetManifest.current(fs, p).isEmpty)
+    val s = catalog(root)
+    s.sql("INSERT INTO graft.t VALUES (1000, 'v1000')")
+    val snap = FleetManifest.current(fs, p).get
+    assert(snap.files.size == 5)
+    legacy.foreach { case (n, ps) =>
+      assert(snap.statsOf(n).contains(ps), s"$n lost its stats") }
+    assert(!fs.exists(new Path(p, FleetStats.FileName)),
+      "the adopted sidecar must go")
+    // a point lookup still skips the adopted files
+    val q = s.sql("SELECT k, v FROM graft.t WHERE k = 123")
+    assert(q.collect().toSeq == Seq(Row(123L, "v123")))
+    assert(plannedFiles(q).size == 1, plannedFiles(q).toString)
+  }
+
+  test("a versionAsOf scan skips with the as-of stats after its files were rewritten") {
+    import spark.implicits._
+    val root = graft.util.Scratch.dir("planning_asof")
+    val dir = s"$root/t.avro"
+    spark.range(400).select(($"id" % 4).as("k"), $"id".as("x"))
+      .repartition(4, $"k")
+      .write.format("graft-avro").mode("overwrite").save(dir)      // v1
+    catalog(root).sql("CALL graft.system.rewrite_files('t', 16777216, '')")
+      .collect()                                                    // v2
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val v1 = FleetManifest.snapshotAt(fs, p, 1L).get.files.toSet
+    assert(FleetManifest.current(fs, p).get.files.toSet.intersect(v1).isEmpty)
+    val asOf = spark.read.format("graft-avro").option("versionAsOf", "1")
+      .load(dir).filter($"k" === 2L)
+    val files = plannedFiles(asOf)
+    assert(files.size == 1 && v1(files.head), files.toString)
+    assert(asOf.count() == 100L)
+  }
+
+  test("no stats sidecar is ever created inside a manifest fleet's directory") {
+    import spark.implicits._
+    val root = graft.util.Scratch.dir("planning_nofile")
+    val s = catalog(root)
+    s.sql("CREATE TABLE graft.t (k BIGINT, v STRING)")
+    s.sql("INSERT INTO graft.t VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    s.sql("INSERT INTO graft.t VALUES (4, 'd')")
+    s.sql("UPDATE graft.t SET v = 'z' WHERE k = 1")
+    s.conf.set("spark.graft.rowLevelMode", "merge-on-read")
+    s.sql("UPDATE graft.t SET v = 'y' WHERE k = 2")
+    s.sql("DELETE FROM graft.t WHERE k = 3")
+    s.sql("CALL graft.system.rewrite_files('t', 16777216, '')").collect()
+    s.sql("CALL graft.system.expire_versions('t', 1)").collect()
+    s.sql("CALL graft.system.clone('t', 'u')").collect()
+    ParquetFleet.append(spark.range(10).select($"id".as("k")),
+      s"$root/p.parquet")
+    val sidecars = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      .filter(f => f.getFileName.toString.startsWith("_stats"))
+      .toArray.toSeq
+    assert(sidecars.isEmpty, sidecars.toString)
+    assert(s.sql("SELECT k, v FROM graft.u ORDER BY k").collect().toSeq ==
+      Seq(Row(1L, "z"), Row(2L, "y"), Row(4L, "d")))
+  }
+
+  test("a stale head hint on a tagged version cannot fork history across a retention gap") {
+    val a = new Path(graft.util.Scratch.dir("planning_gap_a") + "/t.avro")
+    val fs = a.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.mkdirs(a)
+    (1 to 10).foreach(i =>
+      FleetManifest.commit(fs, a, b => b :+ s"f$i", Seq.empty))
+    FleetManifest.createTag(fs, a, "keep", 5L)
+    FleetCompact.expireVersions(spark, a.toString, keepLast = 2)
+    assert(FleetManifest.versions(fs, a) == Seq(5L, 9L, 10L))
+    // the same history as another process finds it: this JVM holds no
+    // hint for the copy until one is seeded on the tagged version
+    val broot = graft.util.Scratch.dir("planning_gap_b")
+    val b = new Path(broot + "/t.avro")
+    org.apache.hadoop.fs.FileUtil.copy(fs, a, fs, b, false,
+      spark.sessionState.newHadoopConf())
+    FleetManifest.noteHead(fs, new Path(b, FleetManifest.DirName), 5L)
+    assert(FleetManifest.current(fs, b).get.version == 10L)
+    val next = FleetManifest.commit(fs, b, f => f :+ "g", Seq.empty)
+    assert(next.version == 11L)
+    assert(FleetManifest.current(fs, b).get.files ==
+      (1 to 10).map(i => s"f$i") :+ "g")
+    // a head this JVM committed is a hint hit plus probes: no listing
+    withCounting(broot) { s =>
+      val cfs = b.getFileSystem(s.sessionState.newHadoopConf())
+      CountingFs.reset()
+      assert(FleetManifest.current(cfs, b).get.version == 11L)
+      assert(CountingFs.listsOf(new Path(b, FleetManifest.DirName)
+        .toUri.getPath) == 0, CountingFs.describe())
+    }
+  }
 }
 
-/** The sessions' local filesystem, counting `listStatus` per directory
-  * and every `open` made outside an executor task thread (the driver's
-  * planning reads). Counters are JVM-wide: Hadoop instantiates the
+/** The sessions' local filesystem, counting `listStatus` per directory,
+  * every `open` made outside an executor task thread (the driver's
+  * planning reads), and every status, listing or open call per path
+  * from any thread. Counters are JVM-wide: Hadoop instantiates the
   * class per `getFileSystem` call when its cache is disabled. */
 class CountingFs extends LocalFileSystem(new graft.util.NioRawLocalFileSystem) {
   override def listStatus(f: Path): Array[FileStatus] = {
     CountingFs.note(CountingFs.lists, f)
+    CountingFs.note(CountingFs.calls, f)
     super.listStatus(f)
+  }
+
+  override def getFileStatus(f: Path): FileStatus = {
+    CountingFs.note(CountingFs.calls, f)
+    super.getFileStatus(f)
   }
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     if (!Thread.currentThread.getName.startsWith("Executor task launch"))
       CountingFs.note(CountingFs.opens, f)
+    CountingFs.note(CountingFs.calls, f)
     super.open(f, bufferSize)
   }
 }
@@ -240,6 +386,7 @@ class CountingFs extends LocalFileSystem(new graft.util.NioRawLocalFileSystem) {
 object CountingFs {
   private[sources] val lists = new ConcurrentHashMap[String, AtomicInteger]()
   private[sources] val opens = new ConcurrentHashMap[String, AtomicInteger]()
+  private[sources] val calls = new ConcurrentHashMap[String, AtomicInteger]()
 
   private[sources] def note(m: ConcurrentHashMap[String, AtomicInteger],
       f: Path): Unit = {
@@ -248,7 +395,7 @@ object CountingFs {
     ()
   }
 
-  def reset(): Unit = { lists.clear(); opens.clear() }
+  def reset(): Unit = { lists.clear(); opens.clear(); calls.clear() }
 
   def listsOf(dir: String): Int =
     Option(lists.get(dir.stripSuffix("/"))).fold(0)(_.get)
@@ -256,6 +403,13 @@ object CountingFs {
   def driverOpensWhere(p: String => Boolean): Int = {
     var n = 0
     opens.forEach((k, v) => if (p(k)) n += v.get)
+    n
+  }
+
+  /** Status, listing and open calls on paths matching `p`. */
+  def callsWhere(p: String => Boolean): Int = {
+    var n = 0
+    calls.forEach((k, v) => if (p(k)) n += v.get)
     n
   }
 

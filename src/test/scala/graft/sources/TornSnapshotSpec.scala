@@ -6,24 +6,31 @@ import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggr
 import org.apache.spark.sql.connector.read.Scan
 import org.apache.spark.sql.functions._
 
-/** The aggregate scans plan from ONE snapshot: a commit that retires
-  * vectored files (`rewrite_files`) landing between a scan's pushdown
-  * or size estimate and its partition planning must not pair the old
+/** The scans plan from ONE snapshot: a commit that retires files
+  * (`rewrite_files`) landing between a scan's pushdown or size
+  * estimate and its partition planning must not pair the old
   * generation's files with the new generation's (absent) vector
-  * bindings. In-package: drives each scan directly to land the commit
-  * at the exact point between the two. */
+  * bindings or its stats. In-package: drives each scan directly to
+  * land the commit at the exact point between the two. */
 class TornSnapshotSpec extends graft.SparkSpec {
 
-  /** Four files, one per `k`; rows x=2 and x=6 (group 2) deleted by a
-    * deletion vector; the advisory sidecar dropped so the count takes
-    * the block-header tier and every group file decodes. */
-  private def vectoredFleet(tag: String): (String, String) = {
+  /** Four files, one per `k`, each with its committed stats. */
+  private def fourFiles(tag: String): (String, String) = {
     import spark.implicits._
     val root = graft.util.Scratch.dir(s"torn_$tag")
     val dir = s"$root/t.avro"
     spark.range(400).select(($"id" % 4).as("k"), $"id".as("x"))
       .repartition(4, $"k")
       .write.format("graft-avro").mode("overwrite").save(dir)
+    (root, dir)
+  }
+
+  /** [[fourFiles]] with rows x=2 and x=6 (group 2) deleted by a
+    * deletion vector, and the advisory stats stripped so the count
+    * takes the block-header tier and every group file decodes. */
+  private def vectoredFleet(tag: String): (String, String) = {
+    val (root, dir) = fourFiles(tag)
+    import spark.implicits._
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val rows = spark.read.format("graft-avro").load(dir)
@@ -34,8 +41,7 @@ class TornSnapshotSpec extends graft.SparkSpec {
       FleetDv.Deleted.of(rows.map(r => (r.getLong(1), r.getLong(2)))))
     FleetManifest.commit(fs, p, identity, Nil,
       dvUpdate = Map(victim -> Some(dv)))
-    fs.listStatus(p).filter(_.getPath.getName.startsWith("_stats"))
-      .foreach(st => fs.delete(st.getPath, true))
+    graft.FleetStatsKit.stripStats(dir)
     (root, dir)
   }
 
@@ -92,5 +98,31 @@ class TornSnapshotSpec extends graft.SparkSpec {
       .map { case (k, rs) => k -> rs.map(_.getLong(1)).sum }
     assert(counts == Map(0L -> 100L, 1L -> 100L, 2L -> 98L, 3L -> 100L),
       counts.toString)
+  }
+
+  test("a filtered scan prunes its planned files with their own generation's stats") {
+    val (root, dir) = fourFiles("stats")
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val planned = FleetManifest.current(fs, p).get.files.toSet
+    val b = builder(dir)
+    assert(b.pushFilters(Array[org.apache.spark.sql.sources.Filter](
+      org.apache.spark.sql.sources.EqualTo("k", 2L))).isEmpty)
+    val scan = b.build()
+    // the planner prices the scan before it plans the partitions
+    scan.asInstanceOf[AvroFleetScan].estimateStatistics().sizeInBytes()
+    // one rewritten file now holds every k, with stats to match
+    rewriteFiles(root)
+    assert(FleetManifest.current(fs, p).get.files.toSet.intersect(planned)
+      .isEmpty)
+    val files = scan.toBatch.planInputPartitions().toSeq.flatMap {
+      case g: AvroFileGroup => g.splits.map(_.file)
+      case other => fail(s"unexpected partition $other")
+    }.map(f => new org.apache.hadoop.fs.Path(f).getName).distinct
+    assert(files.size == 1 && planned(files.head),
+      s"expected the one planned-generation file holding k = 2: $files")
+    val rows = evaluate(scan)
+    assert(rows.size == 100 && rows.forall(_.getLong(0) == 2L),
+      s"${rows.size} rows")
   }
 }
