@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions.col
   * It is also the ONE retention core of every manifest fleet, Avro and
   * Parquet tiers alike: [[expireVersions]], [[removeOrphans]] and the
   * copy-on-write merge's sweep all retire files through [[unlink]]
-  * (a file's stats live in the manifest entries of the versions that
-  * list it, so they expire with those versions).
+  * (a file's stats live in the manifest segments of the versions
+  * that list it, so they expire with those versions).
   */
 object FleetCompact {
 
@@ -110,8 +110,8 @@ object FleetCompact {
 
   /** Snapshot retention for a TRANSACTIONAL fleet ([[FleetManifest]]),
     * either codec: keep the newest `keepLast` manifest versions, drop
-    * the older version files, and unlink every data file and deletion
-    * vector that only expired generations referenced. `versionAsOf` reads of retained versions keep
+    * the older version files, and unlink every data file, vector and
+    * segment only expired generations referenced. `versionAsOf` reads of retained versions keep
     * working; reads of expired ones fail with the documented
     * missing-version error. Deletion is precise, not a sweep —
     * candidates are (∪ expired generations' files) − (∪ retained
@@ -141,6 +141,8 @@ object FleetCompact {
         val (expirable, keptTail) = vs.splitAt(vs.size - keepLast)
         val (pinned, expired) = expirable.partition(tagged)
         val kept = pinned ++ keptTail
+        // a retained legacy delta may base on an expiring version
+        FleetManifest.rewriteLegacy(fs, dirPath, kept)
         // BRANCH versions pin their references like tags: a staged
         // write-audit-publish pass must survive main retention until
         // published or dropped
@@ -164,19 +166,13 @@ object FleetCompact {
         val dvCandidates = FleetDv.expandRefs(fs, dirPath,
           expiredSnaps.flatMap(_.dvs.values).toSet)
           .toSeq.filterNot(keptDvs)
-        // DELTA-chain repair first (r22): a retained version file may
-        // be a delta whose base is about to expire — rewrite those as
-        // full snapshots (same logical content) BEFORE any deletion,
-        // ascending so a kept base materializes before its dependents
-        // are examined. Still under the commit lock; a cross-process
-        // reader racing this retries its version file once and sees
-        // the materialized form.
-        val keptSet = kept.toSet
-        kept.sorted.foreach(v =>
-          FleetManifest.materializeIfChainBroken(fs, dirPath, keptSet, v))
+        // and so do segments (an in-flight commit's are listed nowhere)
+        val segCandidates = segmentsOf(expiredSnaps).distinct
+          .filterNot(segmentsOf(keptSnaps).toSet)
         expired.foreach { v =>
           fs.delete(FleetManifest.versionFilePath(dirPath, v), false)
         }
+        unlink(fs, dirPath, segCandidates)
         ExpireResult(expired, unlink(fs, dirPath, candidates ++ dvCandidates))
       }
     }
@@ -184,15 +180,19 @@ object FleetCompact {
     r
   }
 
+  private def segmentsOf(snaps: Seq[FleetManifest.Snapshot]): Seq[String] =
+    snaps.flatMap(_.segments.map(ls =>
+      s"${FleetManifest.SegmentsRel}/${ls.name}"))
+
   /** ORPHAN SWEEP for a manifest fleet, either codec: unlink what NO
     * retained generation (main or branch) references and is older than
     * `graceMs` — a task-committed top-level `.avro`/`.parquet` part
     * whose manifest commit never landed, a `.staging-*` dir from a
     * killed writer, a `_dv/` vector file or `_dv_parquet` vector
-    * partition from a crashed or conflicted delete. The grace guard
-    * keeps an in-flight job's just-staged files safe: a stray must
-    * predate any plausibly-running job. Returns the deleted paths
-    * (fleet-relative). */
+    * partition from a crashed or conflicted delete, a manifest segment
+    * of a lost claim or a dropped branch. The grace guard keeps an
+    * in-flight job's just-staged files safe: a stray must predate any
+    * plausibly-running job. Returns the deleted paths (fleet-relative). */
   def removeOrphans(s: SparkSession, dir: String, graceMs: Long)
       : Seq[String] = {
     require(graceMs >= 0, "grace_ms must be >= 0")
@@ -211,7 +211,7 @@ object FleetCompact {
         FleetManifest.branchSnapshots(fs, p)
       // chain vectors reference their parent files transitively —
       // a leaf reached only through a live chain node is LIVE
-      snaps.flatMap(_.files).toSet ++
+      snaps.flatMap(_.files).toSet ++ segmentsOf(snaps) ++
         FleetDv.expandRefs(fs, p, snaps.flatMap(_.dvs.values).toSet)
     }
     def list(rel: String): Seq[(String, FileStatus)] = {
@@ -230,7 +230,9 @@ object FleetCompact {
     val dvGens = list(ParquetFleet.DvDir).filter(_._2.isDirectory)
     val dvStrays = list(FleetDv.DirName).filter(_._2.isFile) ++
       dvGens.flatMap(g => list(g._1).filter(_._2.isDirectory))
-    val gone = unlink(fs, p, (topStrays ++ dvStrays).collect {
+    val segStrays = list(FleetManifest.SegmentsRel)
+      .filter { case (n, st) => st.isFile && !n.contains("/.") }
+    val gone = unlink(fs, p, (topStrays ++ dvStrays ++ segStrays).collect {
       case (n, st) if st.getModificationTime < cutoff && !live(n) => n })
     // a gen dir with no live partition left holds only write markers —
     // sweep it, but never a fresh one (an in-flight delete may still be

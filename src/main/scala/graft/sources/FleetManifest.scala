@@ -171,7 +171,10 @@ private[graft] object FleetManifest {
       props: Map[String, String] = Map.empty,
       dvs: Map[String, String] = Map.empty,
       dvMeta: Map[String, DvMeta] = Map.empty,
-      entries: Map[String, FileEntry] = Map.empty) {
+      entries: Map[String, FileEntry] = Map.empty)(
+      /** The live segments `files` and `entries` come from; empty for
+        * a legacy version file. Not part of equality. */
+      private[graft] val segments: Seq[LiveSegment]) {
 
     /** File `name`'s committed stats; None = read it unskipped. */
     def statsOf(name: String): Option[FleetStats.PartStats] =
@@ -180,6 +183,19 @@ private[graft] object FleetManifest {
     /** The committed stats of every file that has them, by name. */
     def fileStats: Map[String, FleetStats.PartStats] =
       files.flatMap(n => statsOf(n).map(n -> _)).toMap
+  }
+
+  /** A write-once segment file: the entries of the files one commit
+    * added or one merge combined, in order; `key` is its qualified path. */
+  private[graft] final case class Segment(key: String,
+      files: Vector[String], entries: Map[String, FileEntry])
+
+  /** A segment as a version lists it: its name and the names removed
+    * from it since it was written. */
+  private[graft] final case class LiveSegment(name: String,
+      removed: Set[String], seg: Segment) {
+    def live: Vector[String] = seg.files.filterNot(removed)
+    def liveCount: Int = seg.files.size - removed.size
   }
 
   /** A data file's manifest entry: its byte length and modification
@@ -249,6 +265,9 @@ private[graft] object FleetManifest {
     * unlink expired versions through this). */
   def versionFilePath(dir: Path, v: Long): Path = vpath(dir, v)
 
+  /** Fleet-relative directory of every main and branch segment. */
+  val SegmentsRel = s"$DirName/seg"
+
   private def parseVersion(name: String): Option[Long] =
     if (name.startsWith("v") && name.endsWith(".json"))
       name.stripPrefix("v").stripSuffix(".json").toLongOption
@@ -267,17 +286,12 @@ private[graft] object FleetManifest {
 
   // ---- HEAD-version hint (r22, the r21 verdict's #3) ---------------
   //
-  // `current()` used to FULL-LIST `_manifest/` on every call — one
-  // stat per retained version file, O(history) per COMMIT (every
-  // commit re-reads current, and each commit adds a version, so a
-  // long-lived fleet's appends slowed linearly in its commit count:
-  // ManifestBench measured 9 ms → 174 ms per 1-file append between
-  // version 1k and 10k, delta encoding already on). Commits claim
-  // head+1 and the head only grows, so the head is findable from a
-  // JVM-local hint with forward probes: hit the hinted file, then
-  // probe +1 until the first miss — typically 2 stats. A miss ON the
-  // hint itself (externally reset/recreated fleet) falls back to the
-  // listing and reseeds.
+  // Listing `_manifest/` costs O(history) per `current()`, and every
+  // commit reads current. Commits claim head+1 and the head only
+  // grows, so the head is findable from a JVM-local hint with forward
+  // probes: hit the hinted file, then probe +1 until the first miss —
+  // typically 2 stats. A miss ON the hint itself (externally
+  // reset/recreated fleet) falls back to the listing and reseeds.
   //
   // Version numbers are NOT always contiguous: retention keeps a
   // TAGGED version and expires the ones around it, so a probe from a
@@ -350,47 +364,63 @@ private[graft] object FleetManifest {
     * retention, never by fleet size. */
   def versionsWithTimes(fs: FileSystem, dir: Path): Seq[(Long, Long)] =
     versionStatuses(fs, dir).map { case (v, st) =>
-      val stamped = readCached(fs, st).props
+      val stamped = readCached(fs, dir, st).props
         .get(CommitTsProp).flatMap(_.toLongOption)
       v -> stamped.getOrElse(st.getModificationTime)
     }
 
-  // ---- snapshot cache ----------------------------------------------
+  // ---- snapshot and segment caches --------------------------------
   //
-  // Committed version files are IMMUTABLE (the claim protocol never
-  // rewrites one; the only writer of an existing version file is the
-  // restamp TEST hook, which invalidates explicitly), so their parsed
-  // snapshots cache process-wide, validated against the (mtime, len)
-  // of the live FileStatus the caller already holds — a staged
-  // multi-commit transaction re-reads `current` on every attempt and
-  // a TIMESTAMP AS OF walks every retained version; both collapsed to
-  // O(1) JSON parses per version per process (r16 bench: the
-  // commit-protocol tax on manifest-heavy queries). The claim
-  // READ-BACK deliberately bypasses this cache (renameClaim verifies
-  // raw disk content).
+  // Version files are immutable (the legacy rewrite and the restamp
+  // TEST hook invalidate explicitly), so parsed snapshots cache
+  // process-wide, validated against the (mtime, len) of the caller's
+  // FileStatus. Segments never change (unique names), so they cache by
+  // name unvalidated. Both caches clear together when their weight —
+  // files across snapshots plus entries across segments — would pass
+  // [[CacheWeight]]. The claim READ-BACK bypasses them.
+  private[graft] val CacheWeight = 1L << 20
   private val snapCache = new java.util.concurrent.ConcurrentHashMap[
     String, (Long, Long, Snapshot)]()
+  private val segCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Segment]()
 
-  private def readCached(fs: FileSystem, st: FileStatus): Snapshot = {
+  /** The caches' weight, cached snapshots and cached segments. */
+  private[graft] def cacheStats: (Long, Int, Int) = {
+    var w = 0L
+    snapCache.values.forEach(h => w += h._3.files.size)
+    segCache.values.forEach(sg => w += sg.files.size)
+    (w, snapCache.size, segCache.size)
+  }
+
+  private def readCached(fs: FileSystem, dir: Path,
+      st: FileStatus): Snapshot = {
     val key = fs.makeQualified(st.getPath).toString
     val hit = snapCache.get(key)
     if (hit != null && hit._1 == st.getModificationTime &&
         hit._2 == st.getLen) hit._3
     else {
-      val snap = readFile(fs, st.getPath)
-      if (snapCache.size > 4096) snapCache.clear() // tiny entries; rare
-      snapCache.put(key, (st.getModificationTime, st.getLen, snap))
+      val snap = readParsed(fs, dir, st.getPath, retried = false)
+      cache(key, st, snap)
       snap
     }
   }
 
+  private def cache(key: String, st: FileStatus, snap: Snapshot): Unit =
+    snapCache.synchronized {
+      if (cacheStats._1 + snap.files.size +
+          snap.segments.map(_.seg.files.size).sum > CacheWeight)
+        clearSnapshotCache()
+      snap.segments.foreach(ls => segCache.putIfAbsent(ls.seg.key, ls.seg))
+      snapCache.put(key, (st.getModificationTime, st.getLen, snap))
+    }
+
   private def invalidate(fs: FileSystem, p: Path): Unit =
     snapCache.remove(fs.makeQualified(p).toString)
 
-  /** TEST/BENCH hook: drop every cached snapshot so the next read
-    * parses (and, for delta files, reconstructs) from disk — the
-    * cold-process shape the delta-chain specs must pin. */
-  private[graft] def clearSnapshotCache(): Unit = snapCache.clear()
+  /** TEST/BENCH hook: drop every cached snapshot and, unless told to
+    * keep them, segment — the cold-process shape. */
+  private[graft] def clearSnapshotCache(segments: Boolean = true): Unit =
+    snapCache.synchronized { snapCache.clear(); if (segments) segCache.clear() }
 
   /** Drop every cached snapshot under `dir` — BRANCH version files are
     * the one place the (mtime, len) validation is insufficient:
@@ -400,8 +430,7 @@ private[graft] object FleetManifest {
     * stores), silently serving the dropped branch's snapshot. */
   private def invalidatePrefix(fs: FileSystem, dir: Path): Unit = {
     val prefix = fs.makeQualified(dir).toString + "/"
-    val it = snapCache.keySet.iterator
-    while (it.hasNext) if (it.next().startsWith(prefix)) it.remove()
+    snapCache.keySet.removeIf(_.startsWith(prefix))
   }
 
   /** STAGING/TEST hook: rewrite an already-committed version's
@@ -410,15 +439,13 @@ private[graft] object FleetManifest {
     * committed version files are immutable there. */
   private[graft] def restampCommitTs(fs: FileSystem, dir: Path, v: Long,
       ts: Long): Unit = {
-    val snap = snapshotAt(fs, dir, v).getOrElse(
-      throw new IllegalArgumentException(s"no manifest version $v at $dir"))
-    val restamped = snap.copy(props =
-      snap.props + (CommitTsProp -> ts.toString))
+    val snap = withSegments(fs, dir, snapshotAt(fs, dir, v).getOrElse(
+      throw new IllegalArgumentException(s"no manifest version $v at $dir")))
     val p = vpath(dir, v)
-    val out = fs.create(p, true)
-    try out.write(render(restamped).getBytes("UTF-8"))
-    finally out.close()
-    invalidate(fs, p) // the one in-place rewrite anywhere — test-only
+    writeText(fs, p, render(Snapshot(v, snap.files, snap.props +
+      (CommitTsProp -> ts.toString), snap.dvs, snap.dvMeta, snap.entries)(
+      snap.segments)), overwrite = true)
+    invalidate(fs, p) // test-only in-place rewrite
   }
 
   def snapshotAt(fs: FileSystem, dir: Path, v: Long): Option[Snapshot] = {
@@ -430,7 +457,7 @@ private[graft] object FleetManifest {
       .filter(b => branchBase(fs, dir, b).isDefined)
       .flatMap { b =>
         val p = new Path(branchVDir(dir, b), vname(v))
-        try Some(readCached(fs, fs.getFileStatus(p)))
+        try Some(readCached(fs, dir, fs.getFileStatus(p)))
         catch { case _: java.io.FileNotFoundException => None }
       }
     branchHit.orElse(snapshotAtMain(fs, dir, v))
@@ -445,7 +472,7 @@ private[graft] object FleetManifest {
   def snapshotAtMain(fs: FileSystem, dir: Path, v: Long)
       : Option[Snapshot] = {
     val p = vpath(dir, v)
-    try Some(readCached(fs, fs.getFileStatus(p)))
+    try Some(readCached(fs, dir, fs.getFileStatus(p)))
     catch { case _: java.io.FileNotFoundException => None }
   }
 
@@ -542,10 +569,7 @@ private[graft] object FleetManifest {
   def branchBase(fs: FileSystem, dir: Path, name: String): Option[Long] = {
     val p = branchRef(dir, name)
     if (!fs.exists(p)) None
-    else JsonMethods.parse({
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }) \ "base" match {
+    else readJson(fs, p) \ "base" match {
       case JInt(v) => Some(v.toLong)
       case other => throw new java.io.IOException(
         s"malformed branch ref $p: base = $other")
@@ -572,8 +596,8 @@ private[graft] object FleetManifest {
     branchBase(fs, dir, name).flatMap { base =>
       headStatus(fs, branchVDir(dir, name),
         branchVersionStatuses(fs, dir, name))
-        .map(st => readCached(fs, st))
-        .orElse(if (base == 0L) Some(Snapshot(0L, Seq.empty))
+        .map(st => readCached(fs, dir, st))
+        .orElse(if (base == 0L) Some(Snapshot(0L, Seq.empty)(Nil))
                 else snapshotAtMain(fs, dir, base))
     }
 
@@ -587,7 +611,7 @@ private[graft] object FleetManifest {
     case Some(b) =>
       val hit = branchBase(fs, dir, b).filter(_ < v).flatMap { _ =>
         val p = new Path(branchVDir(dir, b), vname(v))
-        try Some(readCached(fs, fs.getFileStatus(p)))
+        try Some(readCached(fs, dir, fs.getFileStatus(p)))
         catch { case _: java.io.FileNotFoundException => None }
       }
       hit.orElse(snapshotAtMain(fs, dir, v))
@@ -606,10 +630,8 @@ private[graft] object FleetManifest {
           s"create_branch: fleet at $dir has no manifest history — " +
             "only transactionally-committed fleets branch"))
       fs.mkdirs(branchesDir(dir))
-      val out = fs.create(p, false)
-      try out.write(JsonMethods.compact(JsonMethods.render(JObject(
-        "base" -> JInt(base)))).getBytes("UTF-8"))
-      finally out.close()
+      writeText(fs, p, JsonMethods.compact(JsonMethods.render(JObject(
+        "base" -> JInt(base)))), overwrite = false)
     }
 
   /** Delete a branch: its ref, its version files, and nothing else —
@@ -652,7 +674,7 @@ private[graft] object FleetManifest {
     branchBase(fs, dir, name).map { _ =>
       branchVersionStatuses(fs, dir, name).lastOption.map {
         case (_, st) =>
-          readCached(fs, st).props.get(CommitTsProp)
+          readCached(fs, dir, st).props.get(CommitTsProp)
             .flatMap(_.toLongOption).getOrElse(st.getModificationTime)
       }.getOrElse(
         fs.getFileStatus(branchRef(dir, name)).getModificationTime)
@@ -665,15 +687,15 @@ private[graft] object FleetManifest {
     else fs.listStatus(d).toSeq.filter(_.isDirectory).flatMap { bd =>
       fs.listStatus(bd.getPath).toSeq
         .filter(st => parseVersion(st.getPath.getName).isDefined)
-        .map(st => readCached(fs, st))
+        .map(st => readCached(fs, dir, st))
     }
   }
 
   /** PUBLISH a branch: strict fast-forward of main onto the branch
     * head. Validates main is still AT the fork base (any intervening
     * main commit conflicts — re-branch and re-stage), then adopts the
-    * branch's version files into main's sequence verbatim (their
-    * numbering already continues from the base) with the same
+    * branch's snapshots, over the same segments, into main's sequence
+    * (their numbering already continues from the base) with the same
     * claim-if-absent primitive every commit uses, and retires the
     * branch. Readers see main advance monotonically through the
     * staged generations; a crash mid-adopt leaves a shorter, still
@@ -701,16 +723,17 @@ private[graft] object FleetManifest {
             "concurrent main commit landed; re-create the branch " +
             "from the current generation and re-stage the work")
       staged.foreach { case (v, st) =>
-        val snap = readCached(fs, st)
+        val snap = readCached(fs, dir, st)
         val dest = vpath(dir, v)
         if (fs.exists(dest)) {
           // idempotent re-run after a crash mid-adopt: verify ours
-          if (readFile(fs, dest) != snap)
+          if (readParsed(fs, dir, dest, retried = false) != snap)
             throw new FleetCommitConflictException(
               s"fast_forward '$name' at $dir: main v$v exists with " +
                 "different content — a concurrent commit raced the " +
                 "publish")
-        } else if (!renameClaim(fs, dir, dest, render(snap)))
+        } else if (!renameClaim(fs, dir, dest,
+            render(withSegments(fs, dir, snap))))
           throw new FleetCommitConflictException(
             s"fast_forward '$name' at $dir: lost the claim on v$v — " +
               "a concurrent main commit raced the publish")
@@ -780,15 +803,10 @@ private[graft] object FleetManifest {
   def tagVersion(fs: FileSystem, dir: Path, name: String): Option[Long] = {
     val p = tagPath(dir, name)
     if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try new String(in.readAllBytes(), "UTF-8")
-        finally in.close()
-      JsonMethods.parse(text) \ "version" match {
-        case JInt(v) => Some(v.toLong)
-        case other => throw new java.io.IOException(
-          s"malformed tag $p: version = $other")
-      }
+    else readJson(fs, p) \ "version" match {
+      case JInt(v) => Some(v.toLong)
+      case other => throw new java.io.IOException(
+        s"malformed tag $p: version = $other")
     }
   }
 
@@ -819,143 +837,131 @@ private[graft] object FleetManifest {
     * `_manifest/` listing (see [[headStatus]]). */
   def mainCurrent(fs: FileSystem, dir: Path): Option[Snapshot] =
     headStatus(fs, mdir(dir), versionStatuses(fs, dir))
-      .map(st => readCached(fs, st))
+      .map(st => readCached(fs, dir, st))
 
-  private def readFile(fs: FileSystem, p: Path): Snapshot =
-    readParsed(fs, p, retried = false)
-
-  private def readParsed(fs: FileSystem, p: Path,
-      retried: Boolean): Snapshot = {
-    val in = fs.open(p)
-    val text = try new String(in.readAllBytes(), "UTF-8")
-      finally in.close()
-    JsonMethods.parse(text) match {
-      case obj: JObject =>
-        val v = (obj \ "version") match {
-          case JInt(n) => n.toLong
-          case other => throw new java.io.IOException(
-            s"malformed manifest $p: version = $other")
-        }
-        (obj \ "base") match {
-          case JInt(b) => reconstructDelta(fs, p, obj, v, b.toLong, retried)
-          case _ =>
-            val files = (obj \ "files") match {
-              case JArray(vs) => vs.collect { case JString(s) => s }
-              case other => throw new java.io.IOException(
-                s"malformed manifest $p: files = $other")
-            }
-            // a full file repeats its predecessor's entries: share the
-            // equal ones with a cached v-1, so cached checkpoints do not
-            // each hold their own copy of every file's stats
-            val prev = Option(snapCache.get(fs.makeQualified(
-              new Path(p.getParent, vname(v - 1L))).toString))
-              .fold(Map.empty[String, FileEntry])(_._3.entries)
-            val entries = parseEntries(p, obj, files).map { case (n, e) =>
-              n -> prev.get(n).filter(_ == e).getOrElse(e) }
-            Snapshot(v, files, parseProps(p, obj), parseDvs(p, obj),
-              parseDvMeta(p, obj), entries)
-        }
-      case other => throw new java.io.IOException(
-        s"malformed manifest $p: $other")
-    }
+  private def writeText(fs: FileSystem, p: Path, text: String,
+      overwrite: Boolean): Unit = {
+    val out = fs.create(p, overwrite)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
-  // ---- DELTA version files (r22, the r21 verdict's #3) -------------
-  //
-  // A FULL version file states the whole snapshot:
-  //
-  //   {"version": N, "files": [...], "props": {...}, "dvs": {...},
-  //    "dvmeta": {...}, "entries": [...]}
-  //
-  // (`dvmeta` and `entries` are omitted when empty). `entries` is
-  // aligned with `files`, one element per file, so a file's name is
-  // written once: {"len": L, "mtime": M} plus, when its writer
-  // captured them, "rows" and "cols" in the [[FleetStats]] codec
-  // (min, max, nulls, bloom per column); null for a file without one.
-  // A full-snapshot version file costs O(total fleet files) to render
-  // and write on EVERY commit — the one remaining O(table) driver cost
-  // per append, the thing that makes a 10k-file fleet's appends slower
-  // than its first. A commit whose change is small relative to the
-  // base now writes a DELTA file instead:
-  //
-  //   {"version": N, "base": N-1, "removed": [...], "added": [...],
-  //    "props": {...full...}, "dvs_set": {...}, "dvs_del": [...],
-  //    "dvmeta_set": {...}, "dvmeta_del": [...], "entries": [...]}
-  //
-  // Reconstruction: base.files minus `removed` (order preserved) plus
-  // `added` appended — chosen at WRITE time only when that replay
-  // reproduces the new file list EXACTLY (an update that reorders the
-  // base falls back to a full file), so readers can never disagree
-  // with what the committer computed. Props stay full per commit
-  // (bounded by schema/checks/txn-ledger size, never by fleet size);
-  // dv bindings and their metadata delta the same way as files.
-  // A delta's `entries` is aligned with `added`: only an added file
-  // gets an entry, and a removed file's entry goes with it, so entries
-  // need no delete list.
-  //
-  // Entries are what let a reader plan without listing the data
-  // directory ([[statuses]]) and skip files without a sidecar
-  // ([[FleetView.stats]]). Version files written before entries were
-  // recorded carry none: a snapshot with ANY file lacking one falls
-  // back to one listing, and such files are read unskipped — old
-  // fleets keep reading correctly, and their files gain entries as
-  // commits rewrite them.
-  //
-  // Bounds and interplay:
-  //  - every CheckpointEvery-th version writes full, so a cold
-  //    reconstruction walks at most that many deltas (each parse is
-  //    then snapshot-cached; warm cost is unchanged O(1));
-  //  - delta is only chosen when the base version file is in the SAME
-  //    directory (a branch's first own commit — whose base is a main
-  //    file retention doesn't treat as branch-pinned — stays full);
-  //  - retention ([[FleetCompact.expireVersions]]) MATERIALIZES any
-  //    retained version whose chain crosses an expired one before
-  //    deleting (see [[materializeIfChainBroken]]); a reader racing
-  //    that pass retries its own version file once — it re-reads as
-  //    the materialized full file.
+  private def readJson(fs: FileSystem, p: Path): JValue = {
+    val in = fs.open(p)
+    try JsonMethods.parse(new String(in.readAllBytes(), "UTF-8"))
+    finally in.close()
+  }
 
-  /** How often a commit writes a full snapshot regardless of delta
-    * profitability — the reconstruction-depth bound. */
-  private val CheckpointEvery = 16L
+  // ---- VERSION FILES and SEGMENTS ----------------------------------
+  //
+  // Every version file is COMPLETE, and sized by its segment count,
+  // not the fleet: {"version", "props", "dvs", "dvmeta" (if any),
+  // "segments": [{"name": "<v>-<uuid>.json", "removed": [...]}]}. A
+  // segment is a write-once file under `_manifest/seg/`, {"files",
+  // "entries"}, each entry aligned with its file: {"len", "mtime"} plus
+  // the "rows" and "cols" its writer captured ([[FleetStats]] codec),
+  // or null. A snapshot's files are its segments' live names in order,
+  // so a file keeps the place of the commit that first listed it, and
+  // a commit writes only its added files' entries. It then keeps the
+  // list short ([[plan]]): a segment with no live name leaves, one
+  // with more removed than live names is rewritten, the newest merges
+  // into its predecessor while that holds at most [[TierRatio]] times
+  // its live names (so an entry is rewritten O(log files) times), and
+  // past [[MaxSegments]] the smallest adjacent pair merges.
+  //
+  // LEGACY full ("files", "entries") and delta ("base", "removed",
+  // "added", "dvs_set", ...) version files are read, never written:
+  // [[FleetCompact.expireVersions]] rewrites each retained one as
+  // segments before deleting anything ([[rewriteLegacy]]). Files
+  // committed before entries have none: their snapshot plans from one
+  // listing ([[statuses]]) and reads them unskipped.
 
-  private def reconstructDelta(fs: FileSystem, p: Path, obj: JObject,
-      v: Long, b: Long, retried: Boolean): Snapshot = {
-    def names(key: String): Seq[String] = (obj \ key) match {
-      case JArray(vs) => vs.collect { case JString(s) => s }
-      case _ => Seq.empty
-    }
+  private val TierRatio = 2
+  private[graft] val MaxSegments = 16
+
+  private def readParsed(fs: FileSystem, dir: Path, p: Path,
+      retried: Boolean): Snapshot = readJson(fs, p) match {
+    case obj: JObject =>
+      def bad(what: String, x: Any) =
+        new java.io.IOException(s"malformed manifest $p: $what = $x")
+      val v = (obj \ "version") match {
+        case JInt(n) => n.toLong
+        case other => throw bad("version", other)
+      }
+      (obj \ "segments", obj \ "base") match {
+        case (JArray(refs), _) =>
+          val segs = refs.map(r => (r \ "name") match {
+            case JString(n) => LiveSegment(n, names(r \ "removed").toSet,
+              segment(fs, dir, n))
+            case other => throw bad("segment", other)
+          })
+          Snapshot(v, segs.flatMap(_.live), strings(obj \ "props"),
+            strings(obj \ "dvs"), parseDvMeta(p, obj), segs.foldLeft(
+              Map.empty[String, FileEntry])((m, ls) =>
+                m ++ (ls.seg.entries -- ls.removed)))(segs)
+        case (_, JInt(b)) =>
+          reconstructDelta(fs, dir, p, obj, v, b.toLong, retried)
+        case _ =>
+          val files = (obj \ "files") match {
+            case JArray(vs) => vs.collect { case JString(s) => s }
+            case other => throw bad("files", other)
+          }
+          Snapshot(v, files, strings(obj \ "props"), strings(obj \ "dvs"),
+            parseDvMeta(p, obj), parseEntries(p, obj, files))(Nil)
+      }
+    case other => throw new java.io.IOException(
+      s"malformed manifest $p: $other")
+  }
+
+  private def names(j: JValue): Seq[String] = j match {
+    case JArray(vs) => vs.collect { case JString(s) => s }
+    case _ => Seq.empty
+  }
+
+  /** Segment `name` of the fleet at `dir`, cached or read. */
+  private def segment(fs: FileSystem, dir: Path, name: String): Segment = {
+    val p = new Path(dir, s"$SegmentsRel/$name")
+    val key = fs.makeQualified(p).toString
+    Option(segCache.get(key)).getOrElse(parseSegment(key, p,
+      try readJson(fs, p) catch { case e: java.io.FileNotFoundException =>
+        throw new java.io.IOException(s"manifest segment $p is missing — " +
+          "a partially copied fleet, or deleted out-of-band", e)
+      }))
+  }
+
+  private def parseSegment(key: String, p: Path, j: JValue): Segment = {
+    val files = names(j \ "files").toVector
+    Segment(key, files, parseEntries(p, j, files))
+  }
+
+  /** A LEGACY delta version file replayed on its base. */
+  private def reconstructDelta(fs: FileSystem, dir: Path, p: Path,
+      obj: JObject, v: Long, b: Long, retried: Boolean): Snapshot = {
+    // the base lives in the same directory (a delta was only written then)
     val base =
-      try {
-        // the base version file lives in the same directory (commit
-        // only chooses delta then); adopted branch files keep working
-        // because adoption moves the whole numbered chain
-        readCached(fs, fs.getFileStatus(new Path(p.getParent, vname(b))))
-      } catch {
+      try readCached(fs, dir, fs.getFileStatus(new Path(p.getParent, vname(b))))
+      catch {
+        // retention rewrote THIS version and deleted its base since we
+        // read it: re-read once; the fresh content lists segments
         case _: java.io.FileNotFoundException if !retried =>
-          // retention materialized THIS version in place and deleted
-          // the base between our read and the base lookup — re-read
-          // ourselves once; the fresh content is the full snapshot
-          return readParsed(fs, p, retried = true)
+          return readParsed(fs, dir, p, retried = true)
         case _: java.io.FileNotFoundException =>
           throw new java.io.IOException(
             s"manifest delta $p references missing base version $b — " +
-              "the base was expired by retention out-of-band " +
-              "(FleetCompact.expireVersions materializes retained " +
-              "deltas first) or the fleet was partially copied")
+              "expired out-of-band (FleetCompact.expireVersions rewrites " +
+              "retained legacy versions first) or partially copied")
       }
-    val removed = names("removed").toSet
-    val files = base.files.filterNot(removed) ++ names("added")
-    val dvs = (base.dvs -- names("dvs_del")) ++ parseDvs(p, obj, "dvs_set")
-    val dvMeta = (base.dvMeta -- names("dvmeta_del")) ++
-      parseDvMeta(p, obj, "dvmeta_set")
+    val removed = names(obj \ "removed").toSet
     val entries = (base.entries -- removed) ++
-      parseEntries(p, obj, names("added"))
-    Snapshot(v, files, parseProps(p, obj), dvs, dvMeta, entries)
+      parseEntries(p, obj, names(obj \ "added"))
+    Snapshot(v, base.files.filterNot(removed) ++ names(obj \ "added"),
+      strings(obj \ "props"), (base.dvs -- names(obj \ "dvs_del")) ++
+        strings(obj \ "dvs_set"), (base.dvMeta -- names(obj \ "dvmeta_del")) ++
+        parseDvMeta(p, obj, "dvmeta_set"), entries)(Nil)
   }
 
-  /** The `entries` array of a version file, aligned with `names` (the
-    * full file's `files`, a delta's `added`). */
-  private def parseEntries(p: Path, obj: JObject,
+  /** The `entries` array of a segment or legacy version file, aligned
+    * with `names` (its `files`, a legacy delta's `added`). */
+  private def parseEntries(p: Path, obj: JValue,
       names: Seq[String]): Map[String, FileEntry] =
     (obj \ "entries") match {
       case JNothing => Map.empty
@@ -983,24 +989,13 @@ private[graft] object FleetManifest {
         e.rows.toList.flatMap(FleetStats.statsFields(_, e.cols)))
     }).toList)
 
-  private def parseProps(p: Path, obj: JObject): Map[String, String] =
-    (obj \ "props") match {
-      case o: JObject => o.obj.collect {
-        case (k, JString(s)) => k -> s
-      }.toMap
-      case _ => Map.empty[String, String]
-    }
+  /** A JSON object of strings: props, vector bindings. */
+  private def strings(j: JValue): Map[String, String] = j match {
+    case o: JObject => o.obj.collect { case (k, JString(s)) => k -> s }.toMap
+    case _ => Map.empty
+  }
 
-  private def parseDvs(p: Path, obj: JObject,
-      key: String = "dvs"): Map[String, String] =
-    (obj \ key) match {
-      case o: JObject => o.obj.collect {
-        case (k, JString(s)) => k -> s
-      }.toMap
-      case _ => Map.empty[String, String]
-    }
-
-  private def parseDvMeta(p: Path, obj: JObject,
+  private def parseDvMeta(p: Path, obj: JValue,
       key: String = "dvmeta"): Map[String, DvMeta] =
     (obj \ key) match {
       case o: JObject => o.obj.collect {
@@ -1054,117 +1049,116 @@ private[graft] object FleetManifest {
             }): org.json4s.JValue)).toList): org.json4s.JValue)
     })
 
+  /** The one renderer of version files. */
   private def render(s: Snapshot): String = {
-    val base = List[(String, org.json4s.JValue)](
-      "version" -> JInt(s.version),
-      "files" -> JArray(s.files.map(JString(_)).toList),
-      "props" -> JObject(s.props.toList.map {
-        case (k, v) => k -> (JString(v): org.json4s.JValue)
-      }),
-      "dvs" -> JObject(s.dvs.toList.sortBy(_._1).map {
-        case (k, v) => k -> (JString(v): org.json4s.JValue)
-      }))
-    val meta =
-      if (s.dvMeta.isEmpty) Nil
-      else List[(String, org.json4s.JValue)]("dvmeta" -> dvMetaJson(s.dvMeta))
-    val entries =
-      if (s.entries.isEmpty) Nil
-      else List[(String, JValue)]("entries" -> entriesJson(s.files, s.entries))
-    JsonMethods.compact(JsonMethods.render(JObject(base ++ meta ++ entries)))
+    def obj(m: Map[String, String]): JValue =
+      JObject(m.toList.sortBy(_._1).map { case (k, x) => k -> JString(x) })
+    JsonMethods.compact(JsonMethods.render(JObject(List[(String, JValue)](
+      "version" -> JInt(s.version), "props" -> obj(s.props),
+      "dvs" -> obj(s.dvs)) ++
+      (if (s.dvMeta.isEmpty) Nil else List("dvmeta" -> dvMetaJson(s.dvMeta))) :+
+      ("segments" -> JArray(s.segments.map(ls => JObject(
+        List[(String, JValue)]("name" -> JString(ls.name)) ++
+        (if (ls.removed.isEmpty) Nil else List("removed" -> JArray(
+          ls.seg.files.filter(ls.removed).map(JString(_)).toList))))).toList)))))
   }
 
-  /** The delta encoding of `next` against `base`, when sound and
-    * profitable; None means "write a full snapshot". Sound = replaying
-    * (base.files − removed) ++ added reproduces next.files EXACTLY
-    * (order included), so a reader's reconstruction can never diverge
-    * from the committed state. Profitable = the delta names fewer
-    * files than the full list would. Checkpoint versions (every
-    * [[CheckpointEvery]]-th) always write full — the reconstruction
-    * depth bound. */
-  private def renderDelta(next: Snapshot, base: Snapshot): Option[String] = {
-    if (next.version % CheckpointEvery == 0L) return None
-    if (next.version != base.version + 1L) return None
-    val nextSet = next.files.toSet
-    val baseSet = base.files.toSet
-    val removed = base.files.filterNot(nextSet)
-    val added = next.files.filterNot(baseSet)
-    if (removed.size + added.size >= next.files.size) return None
-    val removedSet = removed.toSet
-    if (base.files.filterNot(removedSet) ++ added != next.files) return None
-    val dvsDel = base.dvs.keysIterator.filterNot(next.dvs.contains)
-      .toSeq.sorted
-    val dvsSet = next.dvs.filter { case (k, v) =>
-      !base.dvs.get(k).contains(v) }
-    val metaDel = base.dvMeta.keysIterator.filterNot(next.dvMeta.contains)
-      .toSeq.sorted
-    val metaSet = next.dvMeta.filter { case (k, m) =>
-      !base.dvMeta.get(k).contains(m) }
-    // [[commit]] builds next.entries as exactly this replay: the base
-    // entries minus the removed files plus the added files' entries
-    val fields = List[(String, org.json4s.JValue)](
-      "version" -> JInt(next.version),
-      "base" -> JInt(base.version),
-      "removed" -> JArray(removed.map(JString(_)).toList),
-      "added" -> JArray(added.map(JString(_)).toList),
-      "props" -> JObject(next.props.toList.map {
-        case (k, v) => k -> (JString(v): org.json4s.JValue)
-      })) ++
-      (if (dvsSet.isEmpty) Nil else List[(String, org.json4s.JValue)](
-        "dvs_set" -> JObject(dvsSet.toList.sortBy(_._1).map {
-          case (k, v) => k -> (JString(v): org.json4s.JValue) }))) ++
-      (if (dvsDel.isEmpty) Nil else List[(String, org.json4s.JValue)](
-        "dvs_del" -> JArray(dvsDel.map(JString(_)).toList))) ++
-      (if (metaSet.isEmpty) Nil else List[(String, org.json4s.JValue)](
-        "dvmeta_set" -> dvMetaJson(metaSet))) ++
-      (if (metaDel.isEmpty) Nil else List[(String, org.json4s.JValue)](
-        "dvmeta_del" -> JArray(metaDel.map(JString(_)).toList))) ++
-      (if (!added.exists(next.entries.contains)) Nil
-       else List[(String, JValue)](
-         "entries" -> entriesJson(added, next.entries)))
-    Some(JsonMethods.compact(JsonMethods.render(JObject(fields))))
+  /** `s` over segments: a legacy snapshot's files go into a new one. */
+  private def withSegments(fs: FileSystem, dir: Path, s: Snapshot)
+      : Snapshot =
+    if (s.files.isEmpty || s.segments.nonEmpty) s
+    else plan(fs, dir, None, s, s.entries.get)
+
+  /** `next` planned on `prev`'s segments (format above); files without
+    * an entry in `prev` take `entryOf`. Writes the new segments, each
+    * parsed back from its bytes so every entry has the parsed spelling. */
+  private def plan(fs: FileSystem, dir: Path, prev: Option[Snapshot],
+      next: Snapshot, entryOf: String => Option[FileEntry]): Snapshot = {
+    // a legacy snapshot lists no segments: its files all go into the new one
+    val base = prev.filter(s => s.files.isEmpty || s.segments.nonEmpty)
+    val baseFiles = base.fold(Seq.empty[String])(_.files)
+    // an append (the common commit) needs no set of either list
+    val appended = next.files.startsWith(baseFiles)
+    val gone = if (appended) Set.empty[String]
+      else baseFiles.filterNot(next.files.toSet).toSet
+    val carried = if (gone.isEmpty) baseFiles else baseFiles.filterNot(gone)
+    val added = (if (appended) next.files.drop(baseFiles.size)
+      else next.files.filterNot(carried.toSet)).toVector
+    def entry(n: String) = prev.flatMap(_.entries.get(n)).orElse(entryOf(n))
+    // a part is a listed segment (Left) or names to write (Right)
+    var parts = base.fold(Vector.empty[LiveSegment])(_.segments.toVector)
+      .map(ls => if (gone.isEmpty) ls
+        else ls.copy(removed = ls.removed ++ ls.seg.files.filter(gone)))
+      .filter(_.liveCount > 0).map { ls =>
+        if (ls.removed.size > ls.liveCount) Right(ls.live) else Left(ls)
+      } ++ (if (added.isEmpty) Nil else Seq(Right(added)))
+    def size(i: Int): Int = parts(i).fold(_.liveCount, _.size)
+    def merge(i: Int): Unit = parts = parts.patch(i, Seq(Right(
+      parts(i).fold(_.live, identity) ++ parts(i + 1).fold(_.live, identity))), 2)
+    while (parts.size >= 2 &&
+        size(parts.size - 2) <= TierRatio * size(parts.size - 1))
+      merge(parts.size - 2)
+    while (parts.size > MaxSegments)
+      merge((0 until parts.size - 1).minBy(i => size(i) + size(i + 1)))
+    val segs = parts.map(_.fold(identity, writeSegment(fs, dir, next.version, _, entry)))
+    val written = parts.zip(segs).collect { case (Right(_), ls) => ls }
+    Snapshot(next.version, carried ++ added, next.props, next.dvs, next.dvMeta,
+      written.foldLeft(base.fold(Map.empty[String, FileEntry])(
+        _.entries -- gone))(_ ++ _.seg.entries))(segs)
   }
 
-  /** Rewrite retained version `v` as a FULL snapshot file when its
-    * on-disk form is a delta whose base is about to expire — called by
-    * [[FleetCompact.expireVersions]] under the commit lock, BEFORE any
-    * version file is deleted (every chain is still readable). Content
-    * is the same logical snapshot; process the retained set ascending
-    * so a kept base materializes before a kept dependent is examined.
-    *
-    * Crash-atomic like every other version-file write (the
-    * [[renameClaim]] discipline): the full form goes to a hidden temp
-    * beside the version files and is renamed OVER the delta (POSIX
-    * rename replaces atomically), so a write that fails midway leaves
-    * the retained delta intact and readable — its base is not deleted
-    * yet — instead of a truncated version file. Only a filesystem that
-    * refuses an existing destination falls back to delete-then-rename. */
-  private[sources] def materializeIfChainBroken(fs: FileSystem, dir: Path,
-      kept: Set[Long], v: Long): Unit = {
-    val p = vpath(dir, v)
-    val in = fs.open(p)
-    val text = try new String(in.readAllBytes(), "UTF-8")
-      finally in.close()
-    val baseV = JsonMethods.parse(text) \ "base" match {
-      case JInt(b) => b.toLong
-      case _ => return // already full
-    }
-    if (kept(baseV)) return // base survives this pass — chain intact
-    val snap = snapshotAtMain(fs, dir, v).getOrElse(return)
-    val tmp = new Path(mdir(dir),
-      s".${vname(v)}.${java.util.UUID.randomUUID()}.tmp")
-    try {
-      val out = fs.create(tmp, false)
-      try out.write(render(snap).getBytes("UTF-8"))
-      finally out.close()
-    } catch { case NonFatal(e) => fs.delete(tmp, false); throw e }
-    if (!fs.rename(tmp, p)) {
-      fs.delete(p, false)
-      if (!fs.rename(tmp, p))
-        throw new java.io.IOException(s"cannot materialize retained " +
-          s"version $v at $dir; its full form is left in $tmp")
-    }
-    invalidate(fs, p)
+  /** Write one segment of version `v` under a fresh name — on the local
+    * filesystem directly, like a version claim, with no checksum file.
+    * No version lists it yet, so a failed write leaves at most a stray
+    * for [[FleetCompact.removeOrphans]]. */
+  private def writeSegment(fs: FileSystem, dir: Path, v: Long,
+      files: Vector[String], entry: String => Option[FileEntry])
+      : LiveSegment = {
+    val name = s"$v-${java.util.UUID.randomUUID()}.json"
+    val p = new Path(dir, s"$SegmentsRel/$name")
+    val text = JsonMethods.compact(JsonMethods.render(JObject(
+      "files" -> JArray(files.map(JString(_)).toList), "entries" -> entriesJson(
+        files, files.flatMap(n => entry(n).map(n -> _)).toMap))))
+    try localNio(fs, p) match {
+      case Some(n) =>
+        java.nio.file.Files.createDirectories(n.getParent)
+        java.nio.file.Files.write(n, text.getBytes("UTF-8"),
+          java.nio.file.StandardOpenOption.CREATE_NEW)
+      case None => writeText(fs, p, text, overwrite = false)
+    } catch { case NonFatal(e) => fs.delete(p, false); throw e }
+    LiveSegment(name, Set.empty, parseSegment(fs.makeQualified(p).toString,
+      p, JsonMethods.parse(text)))
   }
+
+  /** Rewrite each retained main version still in a legacy form as the
+    * same snapshot over segments, ascending, each planned on the one
+    * below it — [[FleetCompact.expireVersions]] calls this under the
+    * commit lock BEFORE it deletes any version file. A hidden temp is
+    * renamed OVER the legacy file, so a write failing midway leaves it
+    * intact (only a filesystem refusing the rename deletes first). */
+  private[sources] def rewriteLegacy(fs: FileSystem, dir: Path,
+      kept: Seq[Long]): Unit =
+    kept.sorted.foldLeft(Option.empty[Snapshot]) { (prev, v) =>
+      snapshotAtMain(fs, dir, v).map { s =>
+        if (s.files.isEmpty || s.segments.nonEmpty) s
+        else {
+          val p = vpath(dir, v)
+          val next = plan(fs, dir, prev, s, s.entries.get)
+          val tmp = new Path(mdir(dir),
+            s".${vname(v)}.${java.util.UUID.randomUUID()}.tmp")
+          try writeText(fs, tmp, render(next), overwrite = false)
+          catch { case NonFatal(e) => fs.delete(tmp, false); throw e }
+          if (!fs.rename(tmp, p)) {
+            fs.delete(p, false)
+            if (!fs.rename(tmp, p))
+              throw new java.io.IOException(s"cannot rewrite retained " +
+                s"version $v at $dir; its new form is left in $tmp")
+          }
+          invalidate(fs, p)
+          next
+        }
+      }.orElse(prev)
+    }
 
   // serialize same-JVM commits per fleet dir (stripes, not a per-path
   // map: bounded memory, and a collision only serializes two unrelated
@@ -1413,7 +1407,7 @@ private[graft] object FleetManifest {
             .filterNot { case (k, v) =>
               k.startsWith(CheckPropPrefix) && v.isEmpty }
           val nextFiles = update(base).distinct
-          val nextFileSet = nextFiles.toSet
+          lazy val nextFileSet = nextFiles.toSet
           val nextDvs =
             ((baseDvs ++ dvUpdate.collect { case (f, Some(v)) => f -> v })
               -- dvUpdate.collect { case (f, None) => f })
@@ -1426,28 +1420,20 @@ private[graft] object FleetManifest {
           val baseMeta = cur.map(_.dvMeta).getOrElse(Map.empty)
           val nextMeta = ((baseMeta -- dvUpdate.keys) ++ dvMetaUpdate)
             .filter { case (f, _) => nextDvs.contains(f) }
-          // entries follow their file: inherited while it stays
-          // listed, dropped on retire, and built for each file this
-          // commit adds from one status call (a name with no file gets
-          // none) plus the stats its writer captured, when their
-          // length matches. The first commit at a fleet adds every
-          // file and adopts a manifest-less directory's `_stats.json`.
-          val curFiles = cur.map(_.files).getOrElse(Seq.empty)
-          val curSet = curFiles.toSet
+          // an added file's entry: one status call (a name with no file
+          // gets none) plus the stats its writer captured, when their
+          // length matches; the first commit at a fleet adds every file
+          // and adopts a manifest-less directory's `_stats.json`
           val known =
             if (cur.isEmpty) FleetStats.read(fs, dir) ++ stats else stats
-          val addedEntries = nextFiles.filterNot(curSet).flatMap { f =>
+          def entryOf(f: String): Option[FileEntry] =
             try {
               val st = fs.getFileStatus(new Path(dir, f))
               val ps = known.get(f).filter(_.len == st.getLen)
-              Some(f -> FileEntry(st.getLen, st.getModificationTime,
+              Some(FileEntry(st.getLen, st.getModificationTime,
                 ps.map(_.rows), ps.map(_.cols).getOrElse(Map.empty)))
             } catch { case _: java.io.FileNotFoundException => None }
-          }
-          val nextEntries = (cur.map(_.entries).getOrElse(Map.empty) --
-            curFiles.filterNot(nextFileSet)) ++ addedEntries
-          val next = Snapshot(cur.map(_.version + 1L).getOrElse(1L),
-            nextFiles, stamped, nextDvs, nextMeta, nextEntries)
+          val v = cur.map(_.version + 1L).getOrElse(1L)
           // an active branch that EXISTS at this fleet routes the
           // claim into the branch's own version sequence (base
           // resolution above already read the branch head via
@@ -1457,23 +1443,26 @@ private[graft] object FleetManifest {
             .filter(b => branchBase(fs, dir, b).isDefined)
           val destDir = branch.map(b => branchVDir(dir, b))
             .getOrElse(mdir(dir))
-          val dest = new Path(destDir, vname(next.version))
+          val dest = new Path(destDir, vname(v))
           fs.mkdirs(destDir)
-          // O(delta) encoding when sound, profitable, and the base
-          // version file is in the SAME directory (a branch's first
-          // own commit bases on a main file retention won't pin for
-          // it — that one stays full); else the full snapshot
-          val encoded = cur
-            .flatMap(c => renderDelta(next, c))
-            .filter(_ => fs.exists(
-              new Path(destDir, vname(next.version - 1L))))
-            .getOrElse(render(next))
-          if (!fs.exists(dest) && claim(fs, dir, dest, encoded)) {
-            noteCommitted(fs, destDir, next.version)
-            // the adopted sidecar's entries now ride the manifest
-            if (cur.isEmpty)
-              fs.delete(new Path(dir, FleetStats.FileName), false)
-            return next
+          if (!fs.exists(dest)) {
+            val next = plan(fs, dir, cur, Snapshot(v, nextFiles, stamped,
+              nextDvs, nextMeta)(Nil), entryOf)
+            val encoded = render(next)
+            if (claim(fs, dir, dest, encoded)) {
+              noteCommitted(fs, destDir, v)
+              // the adopted sidecar's entries now ride the manifest
+              if (cur.isEmpty)
+                fs.delete(new Path(dir, FleetStats.FileName), false)
+              // cache what a reader parses: the segments were parsed
+              // back when written, the vector meta is parsed here
+              val parsed = Snapshot(v, next.files, next.props, next.dvs,
+                parseDvMeta(dest, JsonMethods.parse(encoded)),
+                next.entries)(next.segments)
+              cache(fs.makeQualified(dest).toString,
+                fs.getFileStatus(dest), parsed)
+              return parsed
+            }
           }
           // lost the claim: loop re-reads the new current and retries
         }
@@ -1527,9 +1516,7 @@ private[graft] object FleetManifest {
       encoded: String): Boolean = {
     val tmp = new Path(mdir(dir),
       s".${dest.getName}.${java.util.UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(encoded.getBytes("UTF-8"))
-    finally out.close()
+    writeText(fs, tmp, encoded, overwrite = true)
     val renamed =
       try fs.rename(tmp, dest)
       catch { case NonFatal(_) => false }

@@ -2,29 +2,30 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Manifest COMMIT-COST growth curve (r22, the r21 verdict's #3): how
-  * does the cost of one append-commit scale with the number of files
-  * already in the fleet? Pre-r22, every version file was a FULL
-  * snapshot — rendering + writing O(total files) JSON per commit, so a
-  * 10k-file fleet's appends were ~linearly slower than its first.
-  * With delta version files the per-append cost must be FLAT.
+/** Manifest COMMIT-COST growth curve: how does the cost of one
+  * append-commit scale with the number of files already in the fleet?
+  * A commit writes its added files' entries once, into a new segment,
+  * plus a version file listing the live segments, so the per-append
+  * cost must stay FLAT while the fleet grows.
   *
   * Pure driver-side measurement (manifest commits launch no jobs):
   * grows one fleet to `files` via 1-file append commits of real empty
   * files, each carrying the stats a writer would capture for 100 rows
   * of (id BIGINT, name STRING, score DOUBLE) — min, max, null count
   * and a bloom per column — so the entries priced are the ones
-  * production commits record. It reports the mean, p50 and p99 commit
-  * latency per 1k-file window, plus the bytes of the newest version
-  * file and of the newest full (checkpoint) version file. At 1k, 5k
-  * and 10k files it also reports the p50/p99 of `FleetView.resolve`
-  * (the read-side planning step) over the fleet, without and with
-  * 1,000 orphan `.avro` files in the data directory:
+  * production commits record. Per 1k-file window it reports the mean,
+  * p50 and p99 commit latency, the largest version file written and
+  * the live segments' count and bytes. At 1k, 5k and 10k files it also
+  * reports the p50/p99 of `FleetView.resolve` (the read-side planning
+  * step) without and with 1,000 orphan `.avro` files in the data
+  * directory, and at the end two cold reads of the newest snapshot
+  * (median of 9): with every cache cleared, and with only the version
+  * cache cleared:
   *
   *   sbt "runMain graft.tools.ManifestBench 10000"
   *
   * (Window means are robust to GC blips at these sub-ms scales; the
-  * p99 is where a blip, or a periodic checkpoint, shows.) */
+  * p99 is where a blip, or a segment merge, shows.) */
 object ManifestBench {
   /** "mean_<what>_ms=… p50_ms=… p99_ms=…" over one window's samples
     * (nearest-rank percentiles). */
@@ -90,6 +91,7 @@ object ManifestBench {
     }
     def vbytes(v: Long): Long = fs.getFileStatus(
       graft.sources.FleetManifest.versionFilePath(dir, v)).getLen
+    var maxVBytes = 0L
     var i = 0
     while (i < files) {
       val name = f"part-$i%08d.avro"
@@ -100,22 +102,30 @@ object ManifestBench {
         base => base :+ name, bootstrap = Seq.empty, stats = stats)
       winNanos(i % windowSize) = System.nanoTime() - t0
       i += 1
-      if (i % windowSize == 0)
+      maxVBytes = math.max(maxVBytes, vbytes(i.toLong))
+      if (i % windowSize == 0) {
+        val segs = graft.sources.FleetManifest.mainCurrent(fs, dir).get.segments
         println(f"[manifestbench] files=$i%6d " +
-          windowStats("commit", winNanos) +
-          f" newest_vfile_bytes=${vbytes(i.toLong)}%8d" +
-          f" checkpoint_bytes=${vbytes(i / 16 * 16L)}%9d")
+          windowStats("commit", winNanos) + f" max_vfile_bytes=$maxVBytes%6d" +
+          f" live_segments=${segs.size}%3d segment_bytes=" + segs.map(ls =>
+            fs.getFileStatus(new org.apache.hadoop.fs.Path(dir,
+              s"${graft.sources.FleetManifest.SegmentsRel}/${ls.name}")).getLen).sum)
+        maxVBytes = 0L
+      }
       if (i == 1000 || i == 5000 || i == 10000) resolveCurve(i)
     }
-    // one cold full-history probe: the reconstruction cost a fresh
-    // process pays for the newest snapshot (chain length bounded by
-    // the checkpoint cadence)
-    graft.sources.FleetManifest.clearSnapshotCache()
-    val t0 = System.nanoTime()
-    val cur = graft.sources.FleetManifest.mainCurrent(fs, dir).get
-    println(f"[manifestbench] cold current() read: " +
-      f"${(System.nanoTime() - t0) / 1e6}%.2f ms " +
-      f"(v${cur.version}, ${cur.files.size} files)")
+    // the newest snapshot read cold (median of 9): as a fresh process
+    // reads it, and as an unread version over cached segments
+    for ((what, segments) <- Seq("all caches" -> true, "version cache" -> false)) {
+      val ms = Seq.fill(9) {
+        graft.sources.FleetManifest.clearSnapshotCache(segments)
+        val t0 = System.nanoTime()
+        graft.sources.FleetManifest.mainCurrent(fs, dir).get
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      println(f"[manifestbench] cold current() read, $what cleared: " +
+        f"median ${ms(4)}%.2f ms (min ${ms.head}%.2f, max ${ms.last}%.2f)")
+    }
 
     spark.stop()
   }

@@ -47,81 +47,239 @@ class FleetManifestSpec extends SparkSpec {
     assert(spark.read.format("graft-avro").load(dir).count() == 210)
   }
 
-  test("delta version files: exact reconstruction, checkpoints, expiry materialization") {
-    import graft.sources.FleetManifest
-    val root = graft.util.Scratch.dir("manifest_delta")
+  private def rawVersion(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path, v: Long): String = {
+    val in = fs.open(graft.sources.FleetManifest.versionFilePath(p, v))
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  /** The segment files on disk at fleet `p`, fleet-relative. */
+  private def segmentFiles(p: org.apache.hadoop.fs.Path): Set[String] = {
+    val d = new java.io.File(p.toUri.getPath,
+      graft.sources.FleetManifest.SegmentsRel)
+    Option(d.listFiles()).toSeq.flatten
+      .filter(f => f.getName.endsWith(".json"))
+      .map(f => s"${graft.sources.FleetManifest.SegmentsRel}/${f.getName}")
+      .toSet
+  }
+
+  private def segmentsOf(s: graft.sources.FleetManifest.Snapshot): Set[String] =
+    s.segments.map(ls =>
+      s"${graft.sources.FleetManifest.SegmentsRel}/${ls.name}").toSet
+
+  test("segments: 40 mixed commits read the same cold") {
+    import graft.sources.{FleetCompact, FleetManifest, FleetStats}
+    val root = graft.util.Scratch.dir("manifest_segments")
     val dir = s"$root/t.avro"
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = fsOf(dir)
     fs.mkdirs(p)
-    def raw(v: Long): String = {
-      val vp = FleetManifest.versionFilePath(p, v)
-      val in = fs.open(vp)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    def touch(n: String): Unit = {
+      java.nio.file.Files.write(java.nio.file.Paths.get(p.toUri.getPath, n),
+        new Array[Byte](n.length)); ()
     }
-    // a mixed 20-commit history driven through the public commit API:
-    // appends, a COW swap, dv bind/swap/unbind, props — the shapes the
-    // delta encoding must replay exactly
-    FleetManifest.commit(fs, p, _ => Seq("a0", "a1"), Seq.empty)   // v1
-    (2 to 9).foreach(i => FleetManifest.commit(fs, p,
-      base => base :+ s"f$i", Seq.empty,
-      props = Map("who" -> s"append$i")))                          // ..v9
-    FleetManifest.commit(fs, p,                                    // v10
-      base => base.filterNot(_ == "f3") :+ "f3r",
-      Seq.empty, requireInBase = Set("f3"))
-    FleetManifest.commit(fs, p, identity, Seq.empty,               // v11
-      dvUpdate = Map("f4" -> Some("dv_f4_1")),
-      dvMetaUpdate = Map("f4" -> FleetManifest.DvMeta(3L,
-        Some(Map("id" -> FleetManifest.DvColStat(1L, 9L, 3L))),
-        Some(42L))))
-    FleetManifest.commit(fs, p, identity, Seq.empty,               // v12
-      dvUpdate = Map("f4" -> Some("dv_f4_2"), "f5" -> Some("dv_f5_1")),
-      dvMetaUpdate = Map("f4" -> FleetManifest.DvMeta(5L, None, None)))
-    FleetManifest.commit(fs, p, identity, Seq.empty,               // v13
-      dvUpdate = Map("f4" -> None))
-    (14 to 20).foreach(i => FleetManifest.commit(fs, p,
-      base => base :+ s"g$i", Seq.empty))                          // ..v20
-    // shape: deltas everywhere except v1 (bootstrap full) and the
-    // CheckpointEvery-th version (16)
-    assert(!raw(1).contains("\"base\""), "v1 must be full (bootstrap)")
-    assert(raw(2).contains("\"base\":1"), s"v2 must delta on v1: ${raw(2)}")
-    assert(!raw(16).contains("\"base\""), "v16 must be a full checkpoint")
-    assert(raw(17).contains("\"base\":16"))
-    assert(raw(10).contains("\"removed\":[\"f3\"]"), raw(10))
-    // capture every snapshot warm, then force cold-process reads:
-    // reconstruction from disk must agree bit-for-bit
-    val warm = (1L to 20L).map(v =>
-      FleetManifest.snapshotAt(fs, p, v).get)
+    // writer-spelled stats: boxed Int bounds
+    def stats(n: String) = n -> FleetStats.PartStats(n.length.toLong, 10L,
+      Map("id" -> FleetStats.ColStat(Some(Int.box(1)), Some(Int.box(n.length)), 0L)))
+    def swap(out: Set[String], in: String*) = {
+      in.foreach(touch)
+      FleetManifest.commit(fs, p, b => b.filterNot(out) ++ in, Seq.empty,
+        requireInBase = out, stats = in.map(stats).toMap)
+    }
+    def append(in: String*) = swap(Set.empty, in: _*)
+    append("a0", "a1", "a2", "a3")                                 // v1
+    (2 to 12).foreach(i => append(s"b$i"))                         // ..v12
+    swap(Set("a1"), "c13")                                         // v13
+    FleetManifest.commit(fs, p, identity, Seq.empty,               // v14
+      dvUpdate = Map("b2" -> Some("_dv/b2.1.dv")),
+      dvMetaUpdate = Map("b2" -> FleetManifest.DvMeta(2L,
+        Some(Map("id" -> FleetManifest.DvColStat(Int.box(3), Int.box(4), 2L))),
+        Some(7L))))
+    FleetManifest.commit(fs, p, identity, Seq.empty,               // v15
+      dvUpdate = Map("b2" -> Some("_dv/b2.2.dv"), "b3" -> Some("_dv/b3.1.dv")))
+    (16 to 24).foreach(i => append(s"d$i", s"dd$i"))               // ..v24
+    swap(Set("a0", "a2", "a3", "b4", "b5", "b6", "b7"))            // v25
+    val v10 = FleetManifest.snapshotAt(fs, p, 10L).get.files
+    FleetManifest.commit(fs, p, _ => v10, Seq.empty)               // v26: restore
+    (27 to 40).foreach { i =>                                      // ..v40
+      if (i == 30) swap(Set("b8", "b9"), "e30")
+      else if (i == 33)
+        FleetManifest.commit(fs, p, identity, Seq.empty, dvUpdate = Map("b3" -> None))
+      else append(s"e$i")
+    }
+    val warm = (1L to 40L).map(v => FleetManifest.snapshotAt(fs, p, v).get)
+    def at(v: Long) = warm(v.toInt - 1)
+    // an append-only history lists files in commit order
+    assert(at(12).files == Seq("a0", "a1", "a2", "a3") ++ (2 to 12).map(i => s"b$i"))
+    assert(at(26).files.toSet == v10.toSet && at(26).dvs == at(25).dvs)
+    assert(at(14).dvMeta("b2").count == 2L && at(15).dvs.size == 2 &&
+      !at(15).dvMeta.contains("b2") &&
+      at(33).dvs == Map("b2" -> "_dv/b2.2.dv"))
+    warm.foreach { s =>
+      assert(s.entries.keySet == s.files.toSet &&
+        s.files.forall(n => s.entries(n).len == n.length.toLong), s.version)
+      assert(s.segments.nonEmpty && s.segments.size <= FleetManifest.MaxSegments,
+        s"v${s.version}: ${s.segments.size} segments")
+      assert(s.segments.forall(ls =>
+        ls.liveCount > 0 && ls.removed.size <= ls.liveCount), s.version)
+      // a complete version file lists segments, never the files
+      val raw = rawVersion(fs, p, s.version)
+      assert(raw.contains("\"segments\"") && !raw.contains("\"files\"") &&
+        !raw.contains("\"base\"") && raw.length < 2048, raw)
+    }
     FleetManifest.clearSnapshotCache()
-    val cold = (1L to 20L).map(v =>
-      FleetManifest.snapshotAt(fs, p, v).get)
-    assert(warm == cold, "delta reconstruction diverged from warm reads")
-    def at(v: Long) = cold(v.toInt - 1)
-    assert(at(20).files ==
-      Seq("a0", "a1", "f2", "f4", "f5", "f6", "f7", "f8", "f9", "f3r") ++
-        (14 to 20).map(i => s"g$i"),
-      s"file order not preserved: ${at(20).files}")
-    assert(at(11).dvs == Map("f4" -> "dv_f4_1") &&
-      at(12).dvs == Map("f4" -> "dv_f4_2", "f5" -> "dv_f5_1") &&
-      at(12).dvMeta.get("f4").contains(FleetManifest.DvMeta(5L)) &&
-      at(13).dvs == Map("f5" -> "dv_f5_1"),
-      "dv delta chain wrong")
-    // retention across a delta boundary: keepLast=3 retains v18..v20
-    // (all deltas chaining through expired versions) — they must be
-    // materialized, still equal, and readable cold after the chain
-    // below them is gone
-    val res = graft.sources.FleetCompact.expireVersions(spark, dir,
-      keepLast = 3)
-    assert(res.expiredVersions == (1L to 17L))
-    assert(!raw(18).contains("\"base\""),
-      "retained v18 must be materialized full (its base expired)")
-    assert(raw(19).contains("\"base\":18") && raw(20).contains("\"base\":19"),
-      "v19/v20 chain within the retained set and must stay deltas")
+    val cold = (1L to 40L).map(v => FleetManifest.snapshotAt(fs, p, v).get)
+    assert(warm == cold, "segment reads diverged between warm and cold")
+    FleetCompact.expireVersions(spark, dir, keepLast = 5)
     FleetManifest.clearSnapshotCache()
-    val after = (18L to 20L).map(v =>
-      FleetManifest.snapshotAt(fs, p, v).get)
-    assert(after == warm.slice(17, 20),
-      "materialized snapshots diverged from their pre-expiry content")
+    assert((36L to 40L).map(v => FleetManifest.snapshotAt(fs, p, v).get) ==
+      warm.slice(35, 40), "retention changed a retained version")
+    assert(segmentFiles(p) == (36L to 40L).flatMap(v => segmentsOf(at(v))).toSet)
+  }
+
+  test("legacy version files read and migrate on expiry") {
+    import graft.sources.{FleetCompact, FleetManifest}
+    def legacy(tag: String) = {
+      val dir = graft.util.Scratch.dir(tag) + "/t.avro"
+      val p = new org.apache.hadoop.fs.Path(dir)
+      val fs = fsOf(dir)
+      fs.mkdirs(p)
+      (dir, p, fs, LegacyManifests.write(fs, p))
+    }
+    val (dir, p, fs, lists) = legacy("manifest_legacy_a")
+    FleetManifest.clearSnapshotCache()
+    val warm = (1L to 20L).map(v => FleetManifest.snapshotAt(fs, p, v).get)
+    def at(v: Long) = warm(v.toInt - 1)
+    assert(warm.map(_.files) == (1L to 20L).map(lists))
+    assert(at(11).dvMeta("f4").fp.contains(42L) &&
+      at(12).dvs == Map("f4" -> "_dv/f4.2.dv", "f5" -> "_dv/f5.1.dv") &&
+      at(12).dvMeta("f4") == FleetManifest.DvMeta(5L) &&
+      at(13).dvs == Map("f5" -> "_dv/f5.1.dv") && at(13).dvMeta.isEmpty)
+    assert(at(20).entries.keySet == at(20).files.toSet - "a1" &&
+      at(20).statsOf("f7").exists(_.rows == 8L))
+    // new commits land on top of the legacy head
+    FleetManifest.commit(fs, p, b => b :+ "h21", Seq.empty)        // v21
+    FleetManifest.commit(fs, p, b => b.filterNot(_ == "f2"), Seq.empty,
+      requireInBase = Set("f2"))                                   // v22
+    FleetManifest.commit(fs, p, identity, Seq.empty,               // v23
+      dvUpdate = Map("f8" -> Some("_dv/f8.1.dv")))
+    val v21 = FleetManifest.snapshotAt(fs, p, 21L).get
+    assert(v21.files == lists(20L) :+ "h21" && v21.dvs == at(20).dvs &&
+      v21.entries == at(20).entries)
+    assert((21L to 23L).forall(v =>
+      rawVersion(fs, p, v).contains("\"segments\"")))
+    FleetManifest.clearSnapshotCache()
+    assert((1L to 20L).map(v => FleetManifest.snapshotAt(fs, p, v).get) == warm,
+      "a legacy version read differently once new commits landed")
+    val newer = (21L to 23L).map(v => FleetManifest.snapshotAt(fs, p, v).get)
+    // retention rewrites every retained legacy version — a tagged one
+    // here, the delta tail of an untouched legacy history below —
+    // before it deletes the versions below them
+    FleetManifest.createTag(fs, p, "pin", 18L)
+    FleetCompact.expireVersions(spark, dir, keepLast = 3)
+    val (dirB, pB, fsB, _) = legacy("manifest_legacy_b")
+    FleetManifest.clearSnapshotCache()
+    val warmB = (18L to 20L).map(v => FleetManifest.snapshotAt(fsB, pB, v).get)
+    FleetCompact.expireVersions(spark, dirB, keepLast = 3)
+    assert(FleetManifest.versions(fs, p) == Seq(18L, 21L, 22L, 23L))
+    assert(FleetManifest.versions(fsB, pB) == (18L to 20L))
+    FleetManifest.clearSnapshotCache()
+    assert(FleetManifest.snapshotAt(fs, p, 18L).contains(at(18)) &&
+      (21L to 23L).map(v => FleetManifest.snapshotAt(fs, p, v).get) == newer)
+    assert((18L to 20L).map(v => FleetManifest.snapshotAt(fsB, pB, v).get) == warmB)
+    (Seq(fs -> p -> 18L) ++ (18L to 20L).map(fsB -> pB -> _)).foreach {
+      case ((f, q), v) =>
+        val raw = rawVersion(f, q, v)
+        assert(raw.contains("\"segments\"") && !raw.contains("\"base\"") &&
+          !raw.contains("\"files\""), raw)
+    }
+  }
+
+  test("expiry unlinks exactly the segments it orphans") {
+    import graft.sources.{FleetCompact, FleetManifest}
+    val dir = graft.util.Scratch.dir("manifest_seg_gc") + "/t.avro"
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = new HookFs
+    fs.initialize(java.net.URI.create("file:///"),
+      spark.sessionState.newHadoopConf())
+    fs.mkdirs(p)
+    (1 to 8).foreach(i => FleetManifest.commit(fs, p, b => b :+ s"f$i", Seq.empty))
+    FleetManifest.commit(fs, p, b => b.filterNot(Set("f1", "f2", "f3")),
+      Seq.empty)                                                   // v9
+    // a concurrent committer claims v10 after this commit found it free
+    // and before its claim: the commit retries on v11
+    val before = segmentFiles(p)
+    val v10 = FleetManifest.versionFilePath(p, 10L)
+    fs.afterExists = { f =>
+      if (f.getName == v10.getName) {
+        fs.afterExists = _ => ()
+        java.nio.file.Files.write(java.nio.file.Paths.get(v10.toUri.getPath),
+          rawVersion(fs, p, 9L).replace("\"version\":9", "\"version\":10")
+            .getBytes("UTF-8"))
+        ()
+      }
+    }
+    val landed = FleetManifest.commit(fs, p, b => b :+ "f10", Seq.empty)
+    assert(landed.version == 11L && landed.files.last == "f10")
+    val lost = segmentFiles(p) -- before -- segmentsOf(landed)
+    assert(lost.nonEmpty, "the lost claim wrote no segment")
+    // a branch commits, then is dropped
+    FleetManifest.createBranch(fs, p, "wip")
+    val beforeBranch = segmentFiles(p)
+    spark.conf.set("spark.graft.branch", "wip")
+    try FleetManifest.commit(fs, p, b => b :+ "w1", Seq.empty)
+    finally spark.conf.unset("spark.graft.branch")
+    val branchSegs = segmentFiles(p) -- beforeBranch
+    assert(branchSegs.nonEmpty)
+    FleetManifest.dropBranch(fs, p, "wip")
+    (12 to 14).foreach(i => FleetManifest.commit(fs, p, b => b :+ s"f$i", Seq.empty))
+    val snaps = (1L to 14L).map(v => v -> FleetManifest.snapshotAt(fs, p, v).get).toMap
+    val onDisk = segmentFiles(p)
+    val keep = segmentsOf(snaps(13L)) ++ segmentsOf(snaps(14L))
+    val orphaned = (1L to 12L).flatMap(v => segmentsOf(snaps(v))).toSet -- keep
+    assert(orphaned.nonEmpty)
+    FleetCompact.expireVersions(spark, dir, keepLast = 2)
+    assert(segmentFiles(p) == onDisk -- orphaned)
+    assert(lost.subsetOf(segmentFiles(p)) && branchSegs.subsetOf(segmentFiles(p)),
+      "expiry unlinked a segment no expired version listed")
+    // the orphan sweep takes them only once they are older than the grace
+    val grace = 3600000L
+    assert(FleetCompact.removeOrphans(spark, dir, grace).isEmpty)
+    (lost ++ branchSegs).foreach(n => fs.setTimes(new org.apache.hadoop.fs.Path(p, n),
+      System.currentTimeMillis() - 2 * grace, -1L))
+    assert(FleetCompact.removeOrphans(spark, dir, grace).toSet == lost ++ branchSegs)
+    assert(segmentFiles(p) == keep)
+    FleetManifest.clearSnapshotCache()
+    assert(FleetManifest.snapshotAt(fs, p, 13L).contains(snaps(13L)) &&
+      FleetManifest.snapshotAt(fs, p, 14L).contains(snaps(14L)))
+  }
+
+  test("the snapshot cache is bounded by its weight") {
+    import graft.sources.FleetManifest
+    val dir = graft.util.Scratch.dir("manifest_cache_weight") + "/t.avro"
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = fsOf(dir)
+    fs.mkdirs(p)
+    FleetManifest.clearSnapshotCache()
+    // names with no file behind them: each version lists n files
+    val n = (FleetManifest.CacheWeight / 16).toInt
+    def weight = FleetManifest.cacheStats._1
+    FleetManifest.commit(fs, p, _ => (0 until n).map(i => f"x$i%07d"), Seq.empty)
+    (2 to 24).foreach { i =>
+      FleetManifest.commit(fs, p, identity, Seq.empty,
+        props = Map("i" -> i.toString))
+      assert(weight <= FleetManifest.CacheWeight, s"weight $weight at v$i")
+    }
+    val warm = (1L to 24L).map { v =>
+      val s = FleetManifest.snapshotAt(fs, p, v).get
+      assert(weight <= FleetManifest.CacheWeight, s"weight $weight at v$v")
+      s
+    }
+    FleetManifest.clearSnapshotCache()
+    assert((1L to 24L).map(v => FleetManifest.snapshotAt(fs, p, v).get) == warm)
+    assert(warm.forall(_.files.size == n) && warm(23).props("i") == "24")
+    FleetManifest.clearSnapshotCache()
+    assert(FleetManifest.cacheStats == ((0L, 0, 0)))
   }
 
   test("mergeCow swaps generations atomically: no window shows both") {
@@ -813,5 +971,18 @@ class FleetManifestSpec extends SparkSpec {
       !st.getPath.getName.startsWith(".")).map(_.getPath.getName).toSet
     assert(onDisk == snapFiles,
       s"losers left staged files: ${(onDisk -- snapFiles).toSeq.sorted}")
+  }
+}
+
+/** The local filesystem the sessions bind, calling `afterExists` with
+  * each path it has just answered an existence check for. */
+private class HookFs
+    extends org.apache.hadoop.fs.LocalFileSystem(new graft.util.NioRawLocalFileSystem) {
+  @volatile var afterExists: org.apache.hadoop.fs.Path => Unit = _ => ()
+
+  override def exists(f: org.apache.hadoop.fs.Path): Boolean = {
+    val found = super.exists(f)
+    afterExists(f)
+    found
   }
 }

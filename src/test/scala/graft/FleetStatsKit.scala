@@ -20,15 +20,14 @@ object FleetStatsKit {
       .get.fileStats
   }
 
-  /** Rewrite every main version file of the fleet at `dir` as a writer
+  /** Rewrite every manifest segment of the fleet at `dir` as a writer
     * that captured no stats left it: each entry keeps its length and
     * mtime and loses its rows and column stats. Scans then read every
     * file unskipped — the advisory path. */
   def stripStats(dir: String): Unit = {
-    val mdir = new java.io.File(new Path(dir).toUri.getPath,
-      FleetManifest.DirName)
-    mdir.listFiles().filter(f => f.getName.startsWith("v") &&
-      f.getName.endsWith(".json")).foreach { f =>
+    val sdir = new java.io.File(new Path(dir).toUri.getPath,
+      FleetManifest.SegmentsRel)
+    sdir.listFiles().filter(_.getName.endsWith(".json")).foreach { f =>
       val j = JsonMethods.parse(new String(
         java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
       val stripped = j.transformField {

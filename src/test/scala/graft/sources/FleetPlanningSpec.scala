@@ -44,7 +44,7 @@ class FleetPlanningSpec extends graft.SparkSpec {
 
   private def localDir(p: String): String = new Path(p).toUri.getPath
 
-  test("committed sizes ride delta and full version files; a retired file drops its size") {
+  test("entries ride write-once segments and retire") {
     val dir = graft.util.Scratch.dir("planning_sizes") + "/t.avro"
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -53,23 +53,25 @@ class FleetPlanningSpec extends graft.SparkSpec {
       java.nio.file.Files.write(java.nio.file.Paths.get(localDir(dir), n),
         new Array[Byte](bytes)); ()
     }
-    def raw(v: Long): String = {
-      val in = fs.open(FleetManifest.versionFilePath(p, v))
+    def rawSegment(s: FleetManifest.Snapshot, file: String): String = {
+      val ls = s.segments.find(_.seg.files.contains(file)).get
+      val in = fs.open(new Path(p, s"${FleetManifest.SegmentsRel}/${ls.name}"))
       try new String(in.readAllBytes(), "UTF-8") finally in.close()
     }
     touch("a0", 3)
-    // "ghost" names no file: it gets no size
-    FleetManifest.commit(fs, p, _ => Seq("a0", "ghost"), Seq.empty)  // v1
+    // "ghost" names no file: it gets no entry
+    val v1 = FleetManifest.commit(fs, p, _ => Seq("a0", "ghost"), Seq.empty)
     (2 to 20).foreach { i =>
       touch(s"f$i", i)
       FleetManifest.commit(fs, p, b => b :+ s"f$i", Seq.empty)       // ..v20
     }
     FleetManifest.commit(fs, p, b => b.filterNot(_ == "f5"), Seq.empty,
       requireInBase = Set("f5"))                                     // v21
-    assert(raw(2).contains("\"entries\":[{\"len\":2,\"mtime\":"), raw(2))
-    assert(raw(16).contains("\"entries\":[{\"len\":3,\"mtime\":"), raw(16))
-    assert(raw(16).contains("},null,{"), "the ghost's entry is null: " + raw(16))
+    assert(rawSegment(v1, "a0") ==
+      s"""{"files":["a0","ghost"],"entries":[{"len":3,"mtime":""" +
+        s"""${v1.entries("a0").mtime}},null]}""")
     val warm = (1L to 21L).map(v => FleetManifest.snapshotAt(fs, p, v).get)
+    assert(rawSegment(warm(19), "f20").contains("{\"len\":20,\"mtime\":"))
     FleetManifest.clearSnapshotCache()
     val cold = (1L to 21L).map(v => FleetManifest.snapshotAt(fs, p, v).get)
     assert(warm == cold, "entries diverged between warm and cold reads")
@@ -77,16 +79,28 @@ class FleetPlanningSpec extends graft.SparkSpec {
     assert(v21.entries.keySet == v21.files.toSet - "ghost")
     assert(v21.entries("f7").len == 7L && !v21.entries.contains("f5"))
     assert(cold(19).entries("f5").len == 5L)
-    // a file without a size sends statuses to the listing, where the
+    // the snapshot shares its segments' entries
+    assert(v21.segments.forall(ls => ls.live.forall(n =>
+      ls.seg.entries.get(n).forall(_ eq v21.entries(n)))))
+    // a file without an entry sends statuses to the listing, where the
     // missing name is the planning-time error it always was
     val e = intercept[java.io.FileNotFoundException](
       FleetManifest.statuses(fs, p, v21))
     assert(e.getMessage.contains("references missing file ghost"), e.getMessage)
-    // retention's materialized full form keeps the entries
-    FleetManifest.materializeIfChainBroken(fs, p, Set(18L, 19L, 20L, 21L), 18L)
-    assert(!raw(18).contains("\"base\""), raw(18))
-    FleetManifest.clearSnapshotCache()
-    assert(FleetManifest.snapshotAt(fs, p, 18L).contains(warm(17)))
+  }
+
+  test("after an INSERT a lookup opens no manifest file") {
+    val root = graft.util.Scratch.dir("planning_seeded")
+    val mdir = localDir(s"$root/t.avro/${FleetManifest.DirName}")
+    withCounting(root) { s =>
+      seed(s)
+      assert(lookup(s, 42L) == Seq(Row(42L, "v42")))
+      s.sql("INSERT INTO graft.t VALUES (500, 'v500')")
+      CountingFs.reset()
+      assert(lookup(s, 500L) == Seq(Row(500L, "v500")))
+      assert(CountingFs.driverOpensWhere(_.startsWith(mdir + "/")) == 0,
+        s"manifest re-reads: ${CountingFs.describe()}")
+    }
   }
 
   test("a catalog point lookup lists no data directory and opens no header after its first query") {
@@ -139,16 +153,15 @@ class FleetPlanningSpec extends graft.SparkSpec {
       val rows = s.sql("SELECT k, v FROM graft.t").collect().toSet
       val sized = FleetView.resolve(s, dir).files
         .map(st => (st.getPath.toString, st.getLen))
-      // rewrite every version file as a writer without entries left it
-      val mdir = new java.io.File(localDir(dir), FleetManifest.DirName)
-      val versions = mdir.listFiles().filter(f =>
-        f.getName.startsWith("v") && f.getName.endsWith(".json"))
-      assert(versions.exists(f => new String(
+      // rewrite every segment as a writer without entries left it
+      val sdir = new java.io.File(localDir(dir), FleetManifest.SegmentsRel)
+      val segments = sdir.listFiles().filter(_.getName.endsWith(".json"))
+      assert(segments.exists(f => new String(
         java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
         .contains("\"entries")), "this change's commits record entries")
       import org.json4s._
       import org.json4s.jackson.JsonMethods
-      versions.foreach { f =>
+      segments.foreach { f =>
         val j = JsonMethods.parse(new String(
           java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
         val stripped = j.removeField {

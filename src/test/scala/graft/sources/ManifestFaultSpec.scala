@@ -4,49 +4,48 @@ import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
-/** Retention's delta-chain repair under a write that fails midway: the
-  * full form of a retained version must never replace its delta until
-  * it is completely written. In-package: drives
-  * `materializeIfChainBroken` — the step `FleetCompact.expireVersions`
+/** Retention's legacy rewrite under a write that fails midway: a
+  * retained legacy version must never be replaced until its new form
+  * is completely written. In-package:
+  * drives `rewriteLegacy` — the step `FleetCompact.expireVersions`
   * runs before it deletes any version file — over a filesystem that
   * fails on demand. */
 class ManifestFaultSpec extends graft.SparkSpec {
 
-  test("a materialize write that fails midway leaves every retained version readable") {
+  test("a failed legacy rewrite leaves versions readable") {
     val p = new Path(graft.util.Scratch.dir("manifest_fault") + "/t.avro")
     val fs = new FailingWriteFs
     fs.initialize(java.net.URI.create("file:///"),
       spark.sessionState.newHadoopConf())
     fs.mkdirs(p)
-    FleetManifest.commit(fs, p, _ => Seq("a0"), Seq.empty)            // v1
-    (2 to 20).foreach(i => FleetManifest.commit(fs, p,
-      base => base :+ s"f$i", Seq.empty))                             // ..v20
+    graft.LegacyManifests.write(fs, p)                       // v1..v20
     def raw(v: Long): String = {
       val in = fs.open(FleetManifest.versionFilePath(p, v))
       try new String(in.readAllBytes(), "UTF-8") finally in.close()
     }
+    def temps: Seq[String] = fs.listStatus(new Path(p, FleetManifest.DirName))
+      .toSeq.map(_.getPath.getName).filter(_.endsWith(".tmp"))
+    FleetManifest.clearSnapshotCache()
     val warm = (1L to 20L).map(v => FleetManifest.snapshotAt(fs, p, v).get)
-    // keepLast=3 retains v18..v20, and v18 is a delta on v17, which
-    // expires: retention rewrites v18 full — and that write dies
-    // after its first bytes
+    // keepLast=3 retains v18..v20, deltas on v17, which expires: the
+    // rewrite of v18 dies after the first bytes of its version temp
     assert(raw(18).contains("\"base\":17"), raw(18))
-    val kept = Set(18L, 19L, 20L)
+    val kept = Seq(18L, 19L, 20L)
     fs.failAfterBytes = 16
-    intercept[java.io.IOException] {
-      FleetManifest.materializeIfChainBroken(fs, p, kept, 18L)
-    }
+    intercept[java.io.IOException](FleetManifest.rewriteLegacy(fs, p, kept))
     fs.failAfterBytes = -1
     FleetManifest.clearSnapshotCache()
     assert((1L to 20L).map(v => FleetManifest.snapshotAt(fs, p, v)) ==
-      warm.map(Some(_)), "a failed materialize damaged a retained version")
-    assert(!fs.listStatus(new Path(p, FleetManifest.DirName))
-        .exists(_.getPath.getName.endsWith(".tmp")),
-      "a failed materialize left its temp behind")
-    // the retry completes: v18 is full, the same snapshot
-    FleetManifest.materializeIfChainBroken(fs, p, kept, 18L)
-    assert(!raw(18).contains("\"base\""), raw(18))
+      warm.map(Some(_)), "a failed rewrite damaged a retained version")
+    assert(temps.isEmpty, s"a failed rewrite left $temps behind")
+    assert(raw(18).contains("\"base\":17"), raw(18))
+    // the retry completes: v18..v20 list segments, the same snapshots
+    FleetManifest.rewriteLegacy(fs, p, kept)
+    kept.foreach(v => assert(raw(v).contains("\"segments\"") &&
+      !raw(v).contains("\"base\""), raw(v)))
     FleetManifest.clearSnapshotCache()
-    assert(FleetManifest.snapshotAt(fs, p, 18L).contains(warm(17)))
+    assert(kept.map(v => FleetManifest.snapshotAt(fs, p, v).get) ==
+      warm.slice(17, 20))
   }
 }
 
